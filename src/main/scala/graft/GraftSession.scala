@@ -66,6 +66,14 @@ object GraftSession {
       // driver GCs, so trigger one periodically (default is 30min — far
       // too lazy for a bench/pipeline session that submits hundreds of jobs)
       .config("spark.cleaner.periodicGC.interval", "1min")
+      // Every streaming query runs in a cloned session. With artifact
+      // isolation on, each clone gets its own executor class loader, and
+      // CodeGenerator's cache is keyed by loader, so each new query
+      // compiles all of its generated code again (measured: a second
+      // wordcount query ran 15 Janino compilations; none with this off).
+      // The engine adds no session artifacts (no addArtifact/addJar), so
+      // isolation buys nothing here.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     // Log level ERROR, not WARN. Three consecutive driver rounds stalled

@@ -54,19 +54,38 @@ private[graft] object StoreFs {
     }
   }
 
-  /** ATOMIC single-file replace — `FileContext.rename(OVERWRITE)`, which
-    * is namenode-atomic on HDFS and an NIO `ATOMIC_MOVE` locally: the
-    * destination transitions old-content → new-content with no window
-    * where it is absent or partial. The primitive [[StoreSegments]]'
-    * manifest flip is built on.
+  /** ATOMIC single-file replace: the destination transitions old-content →
+    * new-content with no window where it is absent or partial. The
+    * primitive [[StoreSegments]]' manifest flip is built on.
+    *
+    * HDFS and other stores: `FileContext.rename(OVERWRITE)`, which is
+    * namenode-atomic on HDFS. A checksummed FS (the local one) cannot use
+    * it: its `FileContext` OVERWRITE deletes the destination and then
+    * renames, so a reader in between finds no manifest and reads the
+    * classic layout — a silently stale view — and its `FileSystem.rename`
+    * refuses an existing destination. There the raw FS renames, a POSIX
+    * rename(2) that replaces the destination atomically, and the `.crc`
+    * follows in a second rename — so a reader can pair one generation's
+    * bytes with the other's checksum, a torn read it retries
+    * ([[retryTornReads]]).
     */
   def atomicReplaceFile(spark: SparkSession, src: String, dst: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val s = new org.apache.hadoop.fs.Path(src)
     val d = new org.apache.hadoop.fs.Path(dst)
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(d.toUri, conf)
-    fc.rename(fc.makeQualified(s), fc.makeQualified(d),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    d.getFileSystem(conf) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem =>
+        val raw = c.getRawFileSystem
+        require(raw.rename(s, d), s"rename $src -> $dst failed")
+        val (sCrc, dCrc) = (c.getChecksumFile(s), c.getChecksumFile(d))
+        if (raw.exists(sCrc))
+          require(raw.rename(sCrc, dCrc), s"rename $sCrc -> $dCrc failed")
+        else raw.delete(dCrc, false)
+      case _ =>
+        val fc = org.apache.hadoop.fs.FileContext.getFileContext(d.toUri, conf)
+        fc.rename(fc.makeQualified(s), fc.makeQualified(d),
+          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    }
   }
 
   def writeFile(spark: SparkSession, path: String, content: String): Unit = {
@@ -113,30 +132,34 @@ private[graft] object StoreFs {
     * the correct view, because tombstones only disappear when their rows
     * became physically unnecessary. Mutating verbs (delete/compact) do
     * NOT use this: they run under the store write lock, where vanishing
-    * tombstones would be a real corruption to surface.
+    * tombstones would be a real corruption to surface. A torn read is
+    * retried ([[retryTornReads]]), never taken for "no tombstones".
     */
   def tombstoneIds(spark: SparkSession, path: String, idCol: String,
-                   schema: Option[org.apache.spark.sql.types.StructType] = None)
+                   schema: Option[org.apache.spark.sql.types.StructType] = None,
+                   pause: Int => Unit = retryPause)
       : Option[org.apache.spark.sql.DataFrame] =
-    if (!exists(spark, path)) None
-    else try {
-      val ids = schema.fold(spark.read)(s => spark.read.schema(s))
-        .option("ignoreMissingFiles", "true").parquet(path)
-        .select(org.apache.spark.sql.functions.col(idCol).cast("long"))
-        .distinct()
-        .collect().map(_.getLong(0)).toSeq
-      if (ids.isEmpty) None
-      else {
-        val sp = spark
-        import sp.implicits._
-        Some(ids.toDF(idCol))
+    retryTornReads(pause) {
+      if (!exists(spark, path)) None
+      else try {
+        val ids = schema.fold(spark.read)(s => spark.read.schema(s))
+          .option("ignoreMissingFiles", "true").parquet(path)
+          .select(org.apache.spark.sql.functions.col(idCol).cast("long"))
+          .distinct()
+          .collect().map(_.getLong(0)).toSeq
+        if (ids.isEmpty) None
+        else {
+          val sp = spark
+          import sp.implicits._
+          Some(ids.toDF(idCol))
+        }
+      } catch {
+        case e: org.apache.spark.sql.AnalysisException
+            if Seq("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+              .exists(c => String.valueOf(e.getErrorClass).contains(c) ||
+                String.valueOf(e.getMessage).contains(c)) => None
+        case e: Throwable if isMissingFileError(e) => None
       }
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if Seq("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-            .exists(c => String.valueOf(e.getErrorClass).contains(c) ||
-              String.valueOf(e.getMessage).contains(c)) => None
-      case e: Throwable if isMissingFileError(e) => None
     }
 
   /** Whether a failure is a vanished-file race (a maintenance verb's GC
@@ -146,6 +169,40 @@ private[graft] object StoreFs {
     hasCause(t, classOf[java.io.FileNotFoundException]) ||
       String.valueOf(t.getMessage).contains("FileNotFoundException") ||
       String.valueOf(t.getMessage).contains("PATH_NOT_FOUND")
+
+  /** Whether a failure is a read that raced a writer and is worth
+    * re-resolving: a vanished file, or a torn checksummed read — the local
+    * FS replaces a file and its `.crc` in two steps
+    * ([[atomicReplaceFile]]), so a reader can verify one generation's bytes
+    * against the other's checksum. Verification stays on: a checksum that
+    * still fails after the retries surfaces as the real corruption it is.
+    */
+  def isTornReadError(t: Throwable): Boolean =
+    isMissingFileError(t) ||
+      hasCause(t, classOf[org.apache.hadoop.fs.ChecksumException]) ||
+      String.valueOf(t.getMessage).contains("ChecksumException")
+
+  /** Default pause before retry `n` (1-based): 20, 40, 80, 160 ms — long
+    * enough for a concurrent writer to finish a two-step rename.
+    */
+  val retryPause: Int => Unit = n => Thread.sleep(10L << n)
+
+  /** Run a store read, re-running it up to 4 times on a torn read
+    * ([[isTornReadError]]) with `pause(n)` before retry `n`; any other
+    * failure, or a torn read that outlasts the bound, propagates.
+    */
+  def retryTornReads[T](pause: Int => Unit = retryPause)(read: => T): T = {
+    var attempt = 0
+    while (true) {
+      try return read
+      catch {
+        case e: Throwable if attempt < 4 && isTornReadError(e) =>
+          attempt += 1
+          pause(attempt)
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
 
   @annotation.tailrec
   private def hasCause(t: Throwable, c: Class[_ <: Throwable]): Boolean =
@@ -229,27 +286,20 @@ private[graft] object StoreSegments {
     * exists; otherwise the union of the manifest's directories with each
     * one's superseded keys filtered out (partition-pruned, not scanned).
     *
-    * Plan construction retries on vanished-file races: parquet SCHEMA
-    * INFERENCE samples file footers below the partition-pruning radar,
-    * so a reader resolving a manifest just as a maintenance verb GCs the
-    * PREVIOUS cycle's superseded files can lose a footer mid-inference.
-    * Re-resolving the (already-flipped) manifest sees only live files —
-    * one retry settles it; the bound exists so real corruption still
-    * surfaces.
+    * Plan construction retries torn reads ([[StoreFs.retryTornReads]]):
+    * parquet SCHEMA INFERENCE samples file footers below the
+    * partition-pruning radar, so a reader resolving a manifest just as a
+    * maintenance verb GCs the PREVIOUS cycle's superseded files can lose a
+    * footer mid-inference, and a manifest read during its flip can meet
+    * the other generation's `.crc`. Re-resolving the (already-flipped)
+    * manifest sees only live files — one retry settles it; the bound
+    * exists so real corruption still surfaces.
     */
   def read(spark: SparkSession, dir: String, comp: String,
            keyCol: String,
-           schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    var attempt = 0
-    while (true) {
-      try return readOnce(spark, dir, comp, keyCol, schema)
-      catch {
-        case e: Throwable if attempt < 4 && StoreFs.isMissingFileError(e) =>
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+           schema: Option[org.apache.spark.sql.types.StructType] = None,
+           pause: Int => Unit = StoreFs.retryPause): DataFrame =
+    StoreFs.retryTornReads(pause)(readOnce(spark, dir, comp, keyCol, schema))
 
   private def readOnce(spark: SparkSession, dir: String, comp: String,
                        keyCol: String,

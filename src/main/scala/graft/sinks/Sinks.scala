@@ -7,26 +7,34 @@ import org.apache.spark.sql.functions._
   * write small, human-readable result files (`bolt/bolt.go:296-310` word
   * counts, `:398-419` sorted top-50, `:522-541` per-host report). These
   * sinks format with column expressions and write through Spark's text
-  * writer — distributed up to the final coalesce.
+  * writer — distributed up to the final single-partition exchange.
   *
   * Determinism: the reference iterates Go maps, so its files are randomly
   * ordered; every sink here totally orders its output (SURVEY §7.5), which
   * is what makes golden-file testing possible.
   *
-  * Scale note: `coalesce(1)` matches the reference's single-local-file
-  * contract and is correct ONLY because every sink input is post-aggregation
-  * / post-top-K (bounded rows). A 100 TB result table would drop the
-  * coalesce and write partitioned files — the formatting pipeline is
-  * unchanged.
+  * Scale note: the single output partition matches the reference's
+  * single-local-file contract and is correct ONLY because every sink input
+  * is post-aggregation / post-top-K (bounded rows) — the whole sort runs in
+  * one task either way. K1 and K3 sort with `repartition(1)` +
+  * `sortWithinPartitions`, not a global `orderBy`: under `foreachBatch` a
+  * micro-batch is an opaque RDD, and a range sort samples it in a separate
+  * bounds job first, so the stateful stage behind it would run twice per
+  * trigger. One exchange into one partition gives the same total order in
+  * one job. A 100 TB result table would write partitioned files instead —
+  * the formatting pipeline is unchanged.
   */
 object Sinks {
 
-  /** K1 (`bolt/bolt.go:296-310`): `word:count` lines, sorted by word. */
+  /** K1 (`bolt/bolt.go:296-310`): `word:count` lines, sorted by word. One
+    * pass over the input: the single-partition exchange + local sort is one
+    * Spark job, where `orderBy` would add a range-bounds sampling job that
+    * evaluates the input a second time (see the scale note).
+    */
   def writeWordCount(counts: DataFrame, wordCol: String, cntCol: String,
                      path: String): Unit =
-    counts.orderBy(wordCol)
+    counts.repartition(1).sortWithinPartitions(wordCol)
       .select(concat_ws(":", col(wordCol), col(cntCol)).as("value"))
-      .coalesce(1)
       .write.mode("overwrite").text(path)
 
   /** K2 (`bolt/bolt.go:398-419`): sorted top-K `key:count` lines, count
@@ -389,14 +397,14 @@ object Sinks {
 
   /** K3 (`bolt/bolt.go:522-541`): the nasalog report — per host, a
     * `host:count` header line, each distinct route on its own line, then a
-    * `===` separator; hosts sorted, routes sorted within a host.
+    * `===` separator; hosts sorted, routes sorted within a host. Sorted in
+    * one partition for the same one-pass reason as [[writeWordCount]].
     */
   def writeHostReport(perHost: DataFrame, hostCol: String, cntCol: String,
                       routesCol: String, path: String): Unit =
-    perHost.orderBy(hostCol)
+    perHost.repartition(1).sortWithinPartitions(hostCol)
       .select(concat(
         concat_ws(":", col(hostCol), col(cntCol)), lit("\n"),
         array_join(sort_array(col(routesCol)), "\n"), lit("\n===")).as("value"))
-      .coalesce(1)
       .write.mode("overwrite").text(path)
 }

@@ -225,20 +225,8 @@ object ZoneMap {
     * so one retry settles it).
     */
   def zoneStats(spark: SparkSession, path: String): DataFrame =
-    retryOnVanish(spark.read.schema(ZonesSchema).parquet(s"$path/_zones"))
-
-  private def retryOnVanish[T](body: => T): T = {
-    var attempt = 0
-    while (true) {
-      try return body
-      catch {
-        case e: Throwable
-            if attempt < 4 && graft.operators.StoreFs.isMissingFileError(e) =>
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+    graft.operators.StoreFs.retryTornReads()(
+      spark.read.schema(ZonesSchema).parquet(s"$path/_zones"))
 
   /** The store's fsck: every invariant the scan path depends on, checked
     * against the actual data and reported as ONE row — the q147/q149
@@ -327,7 +315,7 @@ object ZoneMap {
                 lo: Long, hi: Long): DataFrame = {
     // the sidecar consult re-plans AND re-collects on a vanished-file
     // race (the swap window is one rename — one retry settles it)
-    val zs = retryOnVanish {
+    val zs = graft.operators.StoreFs.retryTornReads() {
       zoneStats(spark, path)
         .filter(col("max_key") >= lo && col("min_key") <= hi)
         .select("zone").collect().map(_.getLong(0))

@@ -2,9 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Relational
+import graft.sinks.Sinks
+import graft.sources.LogLines
 import graft.streaming.BoundedStream
 
 /** Streaming parity (SURVEY §2.8): the reference's bounded-stream semantics
@@ -130,5 +134,94 @@ class BoundedStreamSpec extends SparkTestBase {
       BoundedStream.textStream(spark, in, maxFilesPerTrigger = Some(1)),
       ident, ckpt, out, outputMode = "append")
     assert(again.collect().map(_.getString(0)).sorted.toSeq == Seq("x", "y", "z"))
+  }
+
+  private def singlePart(dir: String): String = {
+    val parts = Files.list(Paths.get(dir)).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq
+    assert(parts.size == 1, s"expected one part file in $dir, got $parts")
+    new String(Files.readAllBytes(parts.head), "UTF-8")
+  }
+
+  test("Crane sinks under foreachBatch: one job per micro-batch, files byte-equal to the batch path") {
+    val words = tmpDir("graft-1job-words")
+    writeLines(words, "a.txt", Seq("to be or not", "to be"))
+    writeLines(words, "b.txt", Seq("be be", "or not or"))
+    val logs = tmpDir("graft-1job-logs")
+    writeLines(logs, "a.log", Seq(
+      """h1 - - [01/Jul/1995:00:00:01 -0400] "GET /a HTTP/1.0" 200 100""",
+      """h2 - - [01/Jul/1995:00:00:02 -0400] "GET /z HTTP/1.0" 404 0"""))
+    writeLines(logs, "b.log", Seq(
+      """h1 - - [01/Jul/1995:00:00:03 -0400] "GET /b HTTP/1.0" 200 100""",
+      """h2 - - [01/Jul/1995:00:00:04 -0400] "GET /y HTTP/1.0" 200 50"""))
+    val hosts: DataFrame => DataFrame = df =>
+      Relational.countAndDistinct(Relational.routeProjection(
+          LogLines.parseClf(df, "line")
+            .filter(Relational.equalsFilter(col("status"), "200")),
+          "host", "url"), "host", "route")
+        .withColumn("routes", split(col("routes"), ","))
+    val topologies: Seq[(String, DataFrame => DataFrame,
+        (DataFrame, String) => Unit)] = Seq(
+      (words, wordcount, (df, p) => Sinks.writeWordCount(df, "word", "cnt", p)),
+      (logs, hosts,
+        (df, p) => Sinks.writeHostReport(df, "host", "cnt", "routes", p)))
+    val sc = spark.sparkContext
+    topologies.foreach { case (in, transform, sink) =>
+      // (query id, batch id) of every job a streaming batch submits
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(e.properties).foreach { p =>
+            Option(p.getProperty("streaming.sql.batchId")).foreach(b =>
+              jobs.add((p.getProperty("sql.streaming.queryId"), b)))
+          }
+      }
+      sc.addSparkListener(listener)
+      val out = tmpDir("graft-1job-out")
+      var queryId = ""
+      var batches = Seq.empty[Long]
+      try {
+        BoundedStream.runForeachBatch(
+          BoundedStream.textStream(spark, in, maxFilesPerTrigger = Some(1)),
+          transform, tmpDir("graft-1job-ckpt"), "complete") { (df, id) =>
+          queryId = df.sparkSession.sparkContext
+            .getLocalProperty("sql.streaming.queryId")
+          sink(df, s"$out/b$id")
+          batches :+= id
+        }
+        org.apache.spark.TestListenerBus.drain(sc)
+      } finally sc.removeSparkListener(listener)
+      assert(batches.size == 2, batches)
+      val perBatch = jobs.asScala.toSeq.filter(_._1 == queryId)
+        .groupBy(_._2).map { case (b, js) => b.toLong -> js.size }
+      assert(perBatch == batches.map(_ -> 1).toMap,
+        s"jobs per batch ($in): $perBatch")
+      // complete mode: the last batch's file is the whole answer
+      val batchOut = tmpDir("graft-1job-batch") + "/out"
+      sink(transform(spark.read.text(in).withColumnRenamed("value", "line")),
+        batchOut)
+      assert(singlePart(s"$out/b${batches.last}") == singlePart(batchOut))
+    }
+  }
+
+  test("a second query of the same topology compiles no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val in = tmpDir("graft-codegen-in")
+    writeLines(in, "a.txt", Seq("to be or not", "to be"))
+    writeLines(in, "b.txt", Seq("be be", "or not or"))
+    def drain(): Unit = {
+      val out = tmpDir("graft-codegen-out")
+      BoundedStream.runForeachBatch(
+        BoundedStream.textStream(spark, in, maxFilesPerTrigger = Some(1)),
+        wordcount, tmpDir("graft-codegen-ckpt"), "complete") { (df, id) =>
+        Sinks.writeWordCount(df, "word", "cnt", s"$out/b$id")
+      }
+    }
+    drain() // the first query compiles what this topology needs
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    drain() // a fresh checkpoint: a new query in a new cloned session
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "the second query re-compiled generated classes")
   }
 }
