@@ -4199,7 +4199,8 @@ object SparkEntry {
 
     // The maintenance DECISION RECEIPT through the SQL front door (r15:
     // the maintain TVFs return (store, action, n_tombstones,
-    // n_live_legs) instead of the generic write receipt — RowsVerbPlan).
+    // n_live_legs) instead of the generic (verb, store, ok) receipt —
+    // StoreMaintenance.receiptSchema through graft.plans.StoreVerb).
     // q232's chain construction; the receipts themselves are the gate:
     // firing 1 sees chain 2 > maxChain 1 and compacts, firing 2 sees the
     // fresh compaction point (chain 0) and cleanly decides none — the

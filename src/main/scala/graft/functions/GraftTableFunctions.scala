@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.plans.StoreVerb
+
 /** SQL-callable TABLE functions over the persisted index stores — the
   * front door that makes the on-disk indexes reachable WITHOUT Scala
   * (q60-q62's treatment extended from scalar functions to relations):
@@ -25,12 +27,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Registered in the session's `TableFunctionRegistry` (the same registry
   * `range(...)` lives in), so the calls parse as ordinary FROM-clause
-  * table functions and plan through the operator library's exact
-  * DataFrames — the SQL surface adds zero execution machinery, only
-  * resolution. Arguments must be literals (a path and knobs — the same
-  * contract as `range`); the builder folds them at analysis time and
-  * splices in the operator's logical plan, so pruning/pushdown see
-  * through the call like any subquery.
+  * table functions. Arguments must be literals (a path and knobs — the
+  * same contract as `range`). A read function folds them at analysis time
+  * and splices in the operator's logical plan, so pruning/pushdown see
+  * through the call like any subquery. A store verb (build, append,
+  * maintain, sync, export …) returns a [[graft.plans.StoreVerb]] leaf
+  * instead, which runs the operator's verb at execution time.
   */
 object GraftTableFunctions {
 
@@ -80,7 +82,7 @@ object GraftTableFunctions {
 
   private def active: SparkSession = SparkSession.active
 
-  /** (name, class-for-usage-doc, builder to a logical plan). */
+  /** (name, builder to a logical plan). */
   private val tableFunctions
       : Seq[(String, Seq[Expression] => LogicalPlan)] = Seq(
     // graft_bm25_search(indexDir, 'space separated terms', k[, buckets])
@@ -399,31 +401,15 @@ object GraftTableFunctions {
           lambdaPct = int("graft_mmr", args(6)))
         .queryExecution.analyzed
     }),
-
-    // ------------------------------------------------------------------
-    // STORE WRITE VERBS — procedure-style table functions, so the SQL
-    // surface can MAINTAIN every store it can already query (the r12
-    // judge's "SQL front door is read-only" gap). Each call returns a
-    // 1-row receipt plan (verb, store, ok) whose mutation runs at
-    // EXECUTION time — the first action on the statement performs the
-    // write exactly once ([[graft.plans.WriteVerbPlan]]; the r13
-    // advisory's fix: EXPLAIN and re-analysis are side-effect-free).
-    // Call them as standalone statements
-    // (`SELECT * FROM graft_ivf_build(...)` + collect), the same
-    // procedure shape as `CALL system.rewrite_data_files(...)` in
-    // Iceberg; a temp view over a write verb re-runs the procedure per
-    // EXECUTION of a query over it — INSERT semantics, don't wrap writes
-    // in views. The verbs are the operator library's own (locks, frozen
-    // models, tombstones — nothing re-implemented), so a store built
-    // from SQL text is bit-identical to the Scala-built one; gated by
-    // q206-q210 hash-matching the Scala lifecycles' oracles.
-    // ------------------------------------------------------------------
+    // Store verbs: the operator library's own verbs behind a deferred
+    // [[graft.plans.StoreVerb]] leaf; q206-q210 gate the SQL-built stores
+    // against the Scala-built ones.
     // graft_text_index_build(dir, corpusView, idCol, textCol[, buckets])
     ("graft_text_index_build", { args =>
       require(args.length == 4 || args.length == 5,
         "graft_text_index_build(dir, corpusView, idCol, textCol[, buckets]) " +
           s"got ${args.length} args")
-      writeVerb("text_index_build", str("graft_text_index_build", args.head)) {
+      StoreVerb.ok("text_index_build", str("graft_text_index_build", args.head)) {
         graft.operators.TextAnalysis.buildTextIndex(
           view("graft_text_index_build", args(1)),
           str("graft_text_index_build", args(2)),
@@ -437,7 +423,7 @@ object GraftTableFunctions {
       require(args.length == 4 || args.length == 5,
         "graft_text_index_append(dir, batchView, idCol, textCol[, buckets]) " +
           s"got ${args.length} args")
-      writeVerb("text_index_append", str("graft_text_index_append", args.head)) {
+      StoreVerb.ok("text_index_append", str("graft_text_index_append", args.head)) {
         graft.operators.TextAnalysis.appendTextIndex(active,
           str("graft_text_index_append", args.head),
           view("graft_text_index_append", args(1)),
@@ -451,7 +437,7 @@ object GraftTableFunctions {
       require(args.length == 3 || args.length == 4,
         "graft_text_index_delete(dir, idsView, idCol[, buckets]) " +
           s"got ${args.length} args")
-      writeVerb("text_index_delete", str("graft_text_index_delete", args.head)) {
+      StoreVerb.ok("text_index_delete", str("graft_text_index_delete", args.head)) {
         graft.operators.TextAnalysis.deleteFromTextIndex(active,
           str("graft_text_index_delete", args.head),
           view("graft_text_index_delete", args(1)),
@@ -463,7 +449,7 @@ object GraftTableFunctions {
     ("graft_text_index_compact", { args =>
       require(args.length == 1 || args.length == 2,
         s"graft_text_index_compact(dir[, buckets]) got ${args.length} args")
-      writeVerb("text_index_compact", str("graft_text_index_compact", args.head)) {
+      StoreVerb.ok("text_index_compact", str("graft_text_index_compact", args.head)) {
         graft.operators.TextAnalysis.compactTextIndex(active,
           str("graft_text_index_compact", args.head),
           buckets = if (args.length == 2) int("graft_text_index_compact", args(1)) else 64)
@@ -477,7 +463,7 @@ object GraftTableFunctions {
       require(args.length >= 4 && args.length <= 6,
         "graft_ivf_build(dir, corpusView, idCol, vecCol[, centStep[, " +
           s"maxCentroids]]) got ${args.length} args")
-      writeVerb("ivf_build", str("graft_ivf_build", args.head)) {
+      StoreVerb.ok("ivf_build", str("graft_ivf_build", args.head)) {
         val centStep = if (args.length >= 5) int("graft_ivf_build", args(4)) else 25
         val maxCents = if (args.length == 6) int("graft_ivf_build", args(5)) else 4096
         if (centStep == 0)
@@ -497,7 +483,7 @@ object GraftTableFunctions {
     ("graft_ivf_append", { args =>
       require(args.length == 4,
         s"graft_ivf_append(dir, batchView, idCol, vecCol) got ${args.length} args")
-      writeVerb("ivf_append", str("graft_ivf_append", args.head)) {
+      StoreVerb.ok("ivf_append", str("graft_ivf_append", args.head)) {
         graft.operators.Similarity.appendIvfIndex(active,
           str("graft_ivf_append", args.head), view("graft_ivf_append", args(1)),
           str("graft_ivf_append", args(2)), str("graft_ivf_append", args(3)))
@@ -507,7 +493,7 @@ object GraftTableFunctions {
     ("graft_ivf_delete", { args =>
       require(args.length == 3,
         s"graft_ivf_delete(dir, idsView, idCol) got ${args.length} args")
-      writeVerb("ivf_delete", str("graft_ivf_delete", args.head)) {
+      StoreVerb.ok("ivf_delete", str("graft_ivf_delete", args.head)) {
         graft.operators.Similarity.deleteFromIvfIndex(active,
           str("graft_ivf_delete", args.head), view("graft_ivf_delete", args(1)),
           str("graft_ivf_delete", args(2)))
@@ -517,7 +503,7 @@ object GraftTableFunctions {
     ("graft_ivf_compact", { args =>
       require(args.length == 1,
         s"graft_ivf_compact(dir) got ${args.length} args")
-      writeVerb("ivf_compact", str("graft_ivf_compact", args.head)) {
+      StoreVerb.ok("ivf_compact", str("graft_ivf_compact", args.head)) {
         graft.operators.Similarity.compactIvfIndex(active,
           str("graft_ivf_compact", args.head))
       }
@@ -530,7 +516,7 @@ object GraftTableFunctions {
       require(args.length == 4 || args.length == 6 || args.length == 8,
         "graft_ivfpq_build(dir, corpusView, idCol, vecCol[, m, ksub[, " +
           s"ivfStep, pqStep]]) got ${args.length} args")
-      writeVerb("ivfpq_build", str("graft_ivfpq_build", args.head)) {
+      StoreVerb.ok("ivfpq_build", str("graft_ivfpq_build", args.head)) {
         val m = if (args.length >= 6) int("graft_ivfpq_build", args(4)) else 8
         val ksub = if (args.length >= 6) int("graft_ivfpq_build", args(5)) else 16
         val ivfStep = if (args.length == 8) int("graft_ivfpq_build", args(6)) else 25
@@ -553,7 +539,7 @@ object GraftTableFunctions {
     ("graft_ivfpq_append", { args =>
       require(args.length == 4,
         s"graft_ivfpq_append(dir, batchView, idCol, vecCol) got ${args.length} args")
-      writeVerb("ivfpq_append", str("graft_ivfpq_append", args.head)) {
+      StoreVerb.ok("ivfpq_append", str("graft_ivfpq_append", args.head)) {
         graft.operators.Similarity.appendIvfPqIndex(active,
           str("graft_ivfpq_append", args.head), view("graft_ivfpq_append", args(1)),
           str("graft_ivfpq_append", args(2)), str("graft_ivfpq_append", args(3)))
@@ -563,7 +549,7 @@ object GraftTableFunctions {
     ("graft_ivfpq_delete", { args =>
       require(args.length == 3,
         s"graft_ivfpq_delete(dir, idsView, idCol) got ${args.length} args")
-      writeVerb("ivfpq_delete", str("graft_ivfpq_delete", args.head)) {
+      StoreVerb.ok("ivfpq_delete", str("graft_ivfpq_delete", args.head)) {
         graft.operators.Similarity.deleteFromIvfPqIndex(active,
           str("graft_ivfpq_delete", args.head), view("graft_ivfpq_delete", args(1)),
           str("graft_ivfpq_delete", args(2)))
@@ -573,7 +559,7 @@ object GraftTableFunctions {
     ("graft_ivfpq_compact", { args =>
       require(args.length == 1,
         s"graft_ivfpq_compact(dir) got ${args.length} args")
-      writeVerb("ivfpq_compact", str("graft_ivfpq_compact", args.head)) {
+      StoreVerb.ok("ivfpq_compact", str("graft_ivfpq_compact", args.head)) {
         graft.operators.Similarity.compactIvfPqIndex(active,
           str("graft_ivfpq_compact", args.head))
       }
@@ -582,7 +568,7 @@ object GraftTableFunctions {
     ("graft_zonemap_write", { args =>
       require(args.length == 4,
         s"graft_zonemap_write(dir, view, keyCol, zones) got ${args.length} args")
-      writeVerb("zonemap_write", str("graft_zonemap_write", args.head)) {
+      StoreVerb.ok("zonemap_write", str("graft_zonemap_write", args.head)) {
         graft.sinks.ZoneMap.writeZoneMapped(
           view("graft_zonemap_write", args(1)),
           str("graft_zonemap_write", args.head),
@@ -594,7 +580,7 @@ object GraftTableFunctions {
     ("graft_zonemap_append", { args =>
       require(args.length == 3,
         s"graft_zonemap_append(dir, batchView, keyCol) got ${args.length} args")
-      writeVerb("zonemap_append", str("graft_zonemap_append", args.head)) {
+      StoreVerb.ok("zonemap_append", str("graft_zonemap_append", args.head)) {
         graft.sinks.ZoneMap.appendZoneMapped(active,
           str("graft_zonemap_append", args.head),
           view("graft_zonemap_append", args(1)),
@@ -605,7 +591,7 @@ object GraftTableFunctions {
     ("graft_snapshot_write", { args =>
       require(args.length == 3,
         s"graft_snapshot_write(dir, view, version) got ${args.length} args")
-      writeVerb("snapshot_write", str("graft_snapshot_write", args.head)) {
+      StoreVerb.ok("snapshot_write", str("graft_snapshot_write", args.head)) {
         graft.operators.Curation.writeSnapshot(
           view("graft_snapshot_write", args(1)),
           str("graft_snapshot_write", args.head),
@@ -616,7 +602,7 @@ object GraftTableFunctions {
     ("graft_snapshot_prune", { args =>
       require(args.length == 2,
         s"graft_snapshot_prune(dir, keepLast) got ${args.length} args")
-      writeVerb("snapshot_prune", str("graft_snapshot_prune", args.head)) {
+      StoreVerb.ok("snapshot_prune", str("graft_snapshot_prune", args.head)) {
         graft.operators.Curation.pruneSnapshots(
           str("graft_snapshot_prune", args.head),
           int("graft_snapshot_prune", args(1)))
@@ -665,7 +651,7 @@ object GraftTableFunctions {
       require(args.length == 5,
         "graft_snapshot_delta(dir, version, upsertsView, deletesView, " +
           s"idCol) got ${args.length} args")
-      writeVerb("snapshot_delta", str("graft_snapshot_delta", args.head)) {
+      StoreVerb.ok("snapshot_delta", str("graft_snapshot_delta", args.head)) {
         graft.operators.Curation.writeSnapshotDelta(active,
           str("graft_snapshot_delta", args.head),
           lng("graft_snapshot_delta", args(1)),
@@ -680,7 +666,7 @@ object GraftTableFunctions {
     ("graft_ivf_vacuum", { args =>
       require(args.length == 1,
         s"graft_ivf_vacuum(dir) got ${args.length} args")
-      writeVerb("ivf_vacuum", str("graft_ivf_vacuum", args.head)) {
+      StoreVerb.ok("ivf_vacuum", str("graft_ivf_vacuum", args.head)) {
         graft.operators.Similarity.vacuumIvfIndex(active,
           str("graft_ivf_vacuum", args.head))
       }
@@ -688,7 +674,7 @@ object GraftTableFunctions {
     ("graft_ivfpq_vacuum", { args =>
       require(args.length == 1,
         s"graft_ivfpq_vacuum(dir) got ${args.length} args")
-      writeVerb("ivfpq_vacuum", str("graft_ivfpq_vacuum", args.head)) {
+      StoreVerb.ok("ivfpq_vacuum", str("graft_ivfpq_vacuum", args.head)) {
         graft.operators.Similarity.vacuumIvfPqIndex(active,
           str("graft_ivfpq_vacuum", args.head))
       }
@@ -696,7 +682,7 @@ object GraftTableFunctions {
     ("graft_text_index_vacuum", { args =>
       require(args.length == 1 || args.length == 2,
         s"graft_text_index_vacuum(dir[, buckets]) got ${args.length} args")
-      writeVerb("text_index_vacuum", str("graft_text_index_vacuum", args.head)) {
+      StoreVerb.ok("text_index_vacuum", str("graft_text_index_vacuum", args.head)) {
         graft.operators.TextAnalysis.vacuumTextIndex(active,
           str("graft_text_index_vacuum", args.head),
           buckets = if (args.length == 2) int("graft_text_index_vacuum", args(1)) else 64)
@@ -728,7 +714,8 @@ object GraftTableFunctions {
     ("graft_ivf_maintain", { args =>
       require(args.length == 1 || args.length == 3,
         s"graft_ivf_maintain(dir[, maxSegments, maxTombstones]) got ${args.length} args")
-      maintainVerb("ivf_maintain", str("graft_ivf_maintain", args.head)) {
+      StoreVerb("ivf_maintain", str("graft_ivf_maintain", args.head),
+          graft.operators.StoreMaintenance.receiptSchema) {
         graft.operators.StoreMaintenance.maintainIvfIndex(active,
           str("graft_ivf_maintain", args.head),
           maxSegments =
@@ -740,7 +727,8 @@ object GraftTableFunctions {
     ("graft_ivfpq_maintain", { args =>
       require(args.length == 1 || args.length == 3,
         s"graft_ivfpq_maintain(dir[, maxSegments, maxTombstones]) got ${args.length} args")
-      maintainVerb("ivfpq_maintain", str("graft_ivfpq_maintain", args.head)) {
+      StoreVerb("ivfpq_maintain", str("graft_ivfpq_maintain", args.head),
+          graft.operators.StoreMaintenance.receiptSchema) {
         graft.operators.StoreMaintenance.maintainIvfPqIndex(active,
           str("graft_ivfpq_maintain", args.head),
           maxSegments =
@@ -755,7 +743,7 @@ object GraftTableFunctions {
     ("graft_export_manifest", { args =>
       require(args.length == 3,
         s"graft_export_manifest(path, keyColsCsv, idCol) got ${args.length} args")
-      writeVerb("export_manifest", str("graft_export_manifest", args.head)) {
+      StoreVerb.ok("export_manifest", str("graft_export_manifest", args.head)) {
         graft.sinks.Sinks.exportManifest(active,
           str("graft_export_manifest", args.head),
           str("graft_export_manifest", args(1)).split(",").map(_.trim)
@@ -770,7 +758,8 @@ object GraftTableFunctions {
     ("graft_snapshot_maintain", { args =>
       require(args.length == 2 || args.length == 3,
         s"graft_snapshot_maintain(dir, idCol[, maxChain]) got ${args.length} args")
-      maintainVerb("snapshot_maintain", str("graft_snapshot_maintain", args.head)) {
+      StoreVerb("snapshot_maintain", str("graft_snapshot_maintain", args.head),
+          graft.operators.StoreMaintenance.receiptSchema) {
         graft.operators.StoreMaintenance.maintainSnapshotStore(active,
           str("graft_snapshot_maintain", args.head),
           str("graft_snapshot_maintain", args(1)),
@@ -783,8 +772,8 @@ object GraftTableFunctions {
       require(args.length == 1 || args.length == 2 || args.length == 4,
         "graft_text_index_maintain(dir[, buckets, maxSegments, " +
           s"maxTombstones]) got ${args.length} args")
-      maintainVerb("text_index_maintain",
-          str("graft_text_index_maintain", args.head)) {
+      StoreVerb("text_index_maintain",
+          str("graft_text_index_maintain", args.head), graft.operators.StoreMaintenance.receiptSchema) {
         graft.operators.StoreMaintenance.maintainTextIndex(active,
           str("graft_text_index_maintain", args.head),
           buckets =
@@ -809,7 +798,7 @@ object GraftTableFunctions {
       require(args.length == 6 || args.length == 7,
         "graft_text_index_sync(indexDir, storeDir, oldV, newV, idCol, " +
           s"textCol[, buckets]) got ${args.length} args")
-      syncVerb("text_index_sync", str("graft_text_index_sync", args.head)) {
+      StoreVerb("text_index_sync", str("graft_text_index_sync", args.head), graft.operators.IndexSync.receiptSchema) {
         graft.operators.IndexSync.syncTextIndexFromSnapshots(active,
           str("graft_text_index_sync", args.head),
           str("graft_text_index_sync", args(1)),
@@ -830,7 +819,7 @@ object GraftTableFunctions {
       require(args.length == 6,
         "graft_ivf_sync(indexDir, storeDir, oldV, newV, idCol, vecCol) " +
           s"got ${args.length} args")
-      syncVerb("ivf_sync", str("graft_ivf_sync", args.head)) {
+      StoreVerb("ivf_sync", str("graft_ivf_sync", args.head), graft.operators.IndexSync.receiptSchema) {
         graft.operators.IndexSync.syncIvfIndexFromSnapshots(active,
           str("graft_ivf_sync", args.head),
           str("graft_ivf_sync", args(1)),
@@ -844,7 +833,7 @@ object GraftTableFunctions {
       require(args.length == 6,
         "graft_ivfpq_sync(indexDir, storeDir, oldV, newV, idCol, vecCol) " +
           s"got ${args.length} args")
-      syncVerb("ivfpq_sync", str("graft_ivfpq_sync", args.head)) {
+      StoreVerb("ivfpq_sync", str("graft_ivfpq_sync", args.head), graft.operators.IndexSync.receiptSchema) {
         graft.operators.IndexSync.syncIvfPqIndexFromSnapshots(active,
           str("graft_ivfpq_sync", args.head),
           str("graft_ivfpq_sync", args(1)),
@@ -863,9 +852,9 @@ object GraftTableFunctions {
       require(args.length == 6 || args.length == 8,
         "graft_export_delta(exportDir, storeDir, oldV, newV, idCol, " +
           s"contentCol[, numShards, seed]) got ${args.length} args")
-      graft.plans.RowsVerbPlan("export_delta",
-        str("graft_export_delta", args.head), () => {
-          graft.sinks.Sinks.exportDelta(active,
+      StoreVerb("export_delta", str("graft_export_delta", args.head),
+          graft.sinks.Sinks.exportReceiptSchema) {
+        graft.sinks.Sinks.exportDelta(active,
             str("graft_export_delta", args(1)),
             lng("graft_export_delta", args(2)),
             lng("graft_export_delta", args(3)),
@@ -878,13 +867,7 @@ object GraftTableFunctions {
             seed =
               if (args.length == 8) lng("graft_export_delta", args(7))
               else 5L)
-          .collect().toSeq.map { r =>
-            org.apache.spark.sql.catalyst.InternalRow(
-              UTF8String.fromString(r.getString(0)),
-              UTF8String.fromString(r.getString(1)),
-              r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))
-          }
-        }, graft.plans.RowsVerbPlan.deltaExportSchema)
+      }
     }),
     // graft_plan_audit(sqlText) — the 100 TB-readiness linter as a TVF:
     // plan the statement (never execute it) and return its hazard rows
@@ -905,9 +888,9 @@ object GraftTableFunctions {
       require(args.length == 4 || args.length == 6,
         "graft_export_snapshot(exportDir, storeDir, version, idCol[, " +
           s"numShards, seed]) got ${args.length} args")
-      graft.plans.RowsVerbPlan("export_snapshot",
-        str("graft_export_snapshot", args.head), () => {
-          graft.sinks.Sinks.exportSnapshot(active,
+      StoreVerb("export_snapshot", str("graft_export_snapshot", args.head),
+          graft.sinks.Sinks.exportReceiptSchema) {
+        graft.sinks.Sinks.exportSnapshot(active,
             str("graft_export_snapshot", args(1)),
             lng("graft_export_snapshot", args(2)),
             str("graft_export_snapshot", args(3)),
@@ -918,13 +901,7 @@ object GraftTableFunctions {
             seed =
               if (args.length == 6) lng("graft_export_snapshot", args(5))
               else 5L)
-          .collect().toSeq.map { r =>
-            org.apache.spark.sql.catalyst.InternalRow(
-              UTF8String.fromString(r.getString(0)),
-              UTF8String.fromString(r.getString(1)),
-              r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))
-          }
-        }, graft.plans.RowsVerbPlan.deltaExportSchema)
+      }
     }),
     // graft_export_apply(outDir, copyDir, deltaDir, idCol[, numShards,
     // seed]) — execute the delete-then-add apply contract on a consumer
@@ -934,9 +911,9 @@ object GraftTableFunctions {
       require(args.length == 4 || args.length == 6,
         "graft_export_apply(outDir, copyDir, deltaDir, idCol[, " +
           s"numShards, seed]) got ${args.length} args")
-      graft.plans.RowsVerbPlan("export_apply",
-        str("graft_export_apply", args.head), () => {
-          graft.sinks.Sinks.applyDelta(active,
+      StoreVerb("export_apply", str("graft_export_apply", args.head),
+          graft.sinks.Sinks.applyReceiptSchema) {
+        graft.sinks.Sinks.applyDelta(active,
             str("graft_export_apply", args(1)),
             str("graft_export_apply", args(2)),
             str("graft_export_apply", args.head),
@@ -947,14 +924,7 @@ object GraftTableFunctions {
             seed =
               if (args.length == 6) lng("graft_export_apply", args(5))
               else 5L)
-          .collect().toSeq.map { r =>
-            org.apache.spark.sql.catalyst.InternalRow(
-              UTF8String.fromString(r.getString(0)),
-              UTF8String.fromString(r.getString(1)),
-              r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
-              r.getLong(6))
-          }
-        }, graft.plans.RowsVerbPlan.deltaApplySchema)
+      }
     }),
     // graft_composite_begin(manifestDir, textDir, vecDir) — declare a
     // RAG composition (text index + IVF-PQ) BEFORE its member builds, so
@@ -976,7 +946,7 @@ object GraftTableFunctions {
       require(args.length == 2 || args.length == 3,
         "graft_composite_begin(manifestDir, textDir, vecDir) or " +
           "(manifestDir, membersSpec) got " + args.length + " args")
-      writeVerb("composite_begin", str("graft_composite_begin", args.head)) {
+      StoreVerb.ok("composite_begin", str("graft_composite_begin", args.head)) {
         val members =
           if (args.length == 3)
             graft.operators.Composite.ragMembers(
@@ -994,7 +964,7 @@ object GraftTableFunctions {
     ("graft_composite_commit", { args =>
       require(args.length == 1,
         s"graft_composite_commit(manifestDir) got ${args.length} args")
-      writeVerb("composite_commit", str("graft_composite_commit", args.head)) {
+      StoreVerb.ok("composite_commit", str("graft_composite_commit", args.head)) {
         graft.operators.Composite.commit(active,
           str("graft_composite_commit", args.head))
       }
@@ -1025,7 +995,7 @@ object GraftTableFunctions {
     ("graft_composite_abandon", { args =>
       require(args.length == 1,
         s"graft_composite_abandon(manifestDir) got ${args.length} args")
-      writeVerb("composite_abandon", str("graft_composite_abandon", args.head)) {
+      StoreVerb.ok("composite_abandon", str("graft_composite_abandon", args.head)) {
         graft.operators.Composite.abandon(active,
           str("graft_composite_abandon", args.head))
       }
@@ -1041,61 +1011,11 @@ object GraftTableFunctions {
         .queryExecution.analyzed
     }))
 
-  /** A write verb's logical plan: the mutation DEFERRED to execution
-    * time inside a [[graft.plans.WriteVerbPlan]] (the r13 advisory's
-    * analysis-time-side-effect fix — EXPLAIN and re-analysis no longer
-    * write; the first action on the statement does, exactly once per
-    * execution). Arg-count requires stay eager (analysis-time errors);
-    * the body — including its str/int/view extractions — runs when the
-    * statement executes, like any other lazy plan leaf.
-    */
-  private def writeVerb(verb: String, dir: String)(body: => Unit)
-      : LogicalPlan =
-    graft.plans.WriteVerbPlan(verb, dir, () => body)
-
-  /** [[writeVerb]] whose result is the MAINTENANCE RECEIPT: the thunk
-    * runs the policy at execution time and the statement's rows are the
-    * decision `(store, action, n_tombstones, n_live_legs)` — so a
-    * scheduled SQL job can observe which verb actually ran (r14 advice:
-    * the Unit-bodied form discarded it).
-    */
-  private def maintainVerb(verb: String, dir: String)
-                          (body: => org.apache.spark.sql.DataFrame)
-      : LogicalPlan =
-    graft.plans.RowsVerbPlan(verb, dir, () => {
-      body.collect().toSeq.map { r =>
-        org.apache.spark.sql.catalyst.InternalRow(
-          UTF8String.fromString(r.getString(0)),
-          UTF8String.fromString(r.getString(1)),
-          r.getLong(2), r.getLong(3))
-      }
-    }, graft.plans.RowsVerbPlan.maintainSchema)
-
-  /** [[maintainVerb]]'s sibling for [[graft.operators.IndexSync]]'s
-    * receipt shape `(verb, store, action, old_version, new_version,
-    * n_added, n_changed, n_removed, compacted)`.
-    */
-  private def syncVerb(verb: String, dir: String)
-                      (body: => org.apache.spark.sql.DataFrame)
-      : LogicalPlan =
-    graft.plans.RowsVerbPlan(verb, dir, () => {
-      body.collect().toSeq.map { r =>
-        org.apache.spark.sql.catalyst.InternalRow(
-          UTF8String.fromString(r.getString(0)),
-          UTF8String.fromString(r.getString(1)),
-          UTF8String.fromString(r.getString(2)),
-          r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
-          r.getLong(7), r.getBoolean(8))
-      }
-    }, graft.plans.RowsVerbPlan.syncSchema)
-
   /** Idempotent per-session registration — same contract as
     * [[GraftExtensions.ensureRegistered]], for the table registry.
     */
   def ensureRegistered(spark: SparkSession): Unit = {
-    // the write verbs' deferred-mutation leaves need their planner rules
-    graft.plans.WriteVerbStrategy.ensureInjected(spark)
-    graft.plans.RowsVerbStrategy.ensureInjected(spark)
+    graft.plans.StoreVerbStrategy.ensureInjected(spark)
     val registry = spark.sessionState.tableFunctionRegistry
     tableFunctions.foreach { case (name, builder) =>
       val ident = FunctionIdentifier(name)

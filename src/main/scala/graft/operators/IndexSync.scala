@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CHURN-PROPORTIONAL index freshness: apply a CDC snapshot-store range
@@ -61,6 +61,14 @@ import org.apache.spark.sql.functions._
   * maintenance is the capability a 100 TB pipeline needs on top.
   */
 object IndexSync {
+
+  /** The sync receipt's schema, also the `graft_*_sync` TVFs' output. */
+  val receiptSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "verb STRING NOT NULL, store STRING NOT NULL, action STRING NOT NULL, " +
+        "old_version BIGINT NOT NULL, new_version BIGINT NOT NULL, " +
+        "n_added BIGINT NOT NULL, n_changed BIGINT NOT NULL, " +
+        "n_removed BIGINT NOT NULL, compacted BOOLEAN NOT NULL")
 
   private def pendingPath(indexDir: String) = s"$indexDir/_sync/pending"
   private def appliedPath(indexDir: String) = s"$indexDir/_sync/applied"
@@ -219,14 +227,10 @@ object IndexSync {
     require(newVersion > oldVersion,
       s"$verb needs oldVersion < newVersion: $oldVersion >= $newVersion")
     def receipt(action: String, nAdded: Long, nChanged: Long,
-                nRemoved: Long, compacted: Boolean): DataFrame = {
-      val sp = spark
-      import sp.implicits._
-      Seq((verb, indexDir, action, oldVersion, newVersion,
-        nAdded, nChanged, nRemoved, compacted))
-        .toDF("verb", "store", "action", "old_version", "new_version",
-          "n_added", "n_changed", "n_removed", "compacted")
-    }
+                nRemoved: Long, compacted: Boolean): DataFrame =
+      spark.createDataFrame(java.util.List.of(Row(verb, indexDir, action,
+        oldVersion, newVersion, nAdded, nChanged, nRemoved, compacted)),
+        receiptSchema)
     // marker transition under the _sync lock: decide, then either bail
     // (noop/refuse) or claim the range with the pending marker before
     // any mutation

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** THRESHOLD-DRIVEN maintenance for the persisted stores — the policy
   * loop an operator schedules instead of babysitting compaction by hand
@@ -49,13 +50,15 @@ object StoreMaintenance {
         .map(_.count(!_.dropAll).toLong).getOrElse(1L)
     }.max
 
+  /** The receipt's schema, also the `graft_*_maintain` TVFs' output. */
+  val receiptSchema: StructType = StructType.fromDDL(
+    "store STRING NOT NULL, action STRING NOT NULL, " +
+      "n_tombstones BIGINT NOT NULL, n_live_legs BIGINT NOT NULL")
+
   private def receipt(spark: SparkSession, store: String, action: String,
-                      nTomb: Long, nLegs: Long): DataFrame = {
-    val sp = spark
-    import sp.implicits._
-    Seq((store, action, nTomb, nLegs))
-      .toDF("store", "action", "n_tombstones", "n_live_legs")
-  }
+                      nTomb: Long, nLegs: Long): DataFrame =
+    spark.createDataFrame(
+      java.util.List.of(Row(store, action, nTomb, nLegs)), receiptSchema)
 
   private def decide(nLegs: Long, maxSegments: Int, nTomb: Long,
                      maxTombstones: Long): String =

@@ -185,6 +185,19 @@ object Sinks {
       .withColumn("healthy", lit(healthy))
   }
 
+  /** The [[exportDelta]] / [[exportSnapshot]] receipt's schema, also the
+    * `graft_export_delta` / `graft_export_snapshot` TVFs' output. */
+  val exportReceiptSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "verb STRING NOT NULL, store STRING NOT NULL, " +
+        "old_version BIGINT NOT NULL, new_version BIGINT NOT NULL, " +
+        "n_adds BIGINT NOT NULL, n_removes BIGINT NOT NULL")
+
+  /** [[exportReceiptSchema]] plus the applied copy's row count: the
+    * [[applyDelta]] / `graft_export_apply` receipt. */
+  val applyReceiptSchema: org.apache.spark.sql.types.StructType =
+    exportReceiptSchema.add("n_rows", "BIGINT", nullable = false)
+
   /** INCREMENTAL delivery — the trainer-side leg of the CDC freshness
     * plane ([[graft.operators.IndexSync]] keeps the ENGINE's indexes
     * fresh; this ships the same churn to the consumer): export snapshot
@@ -254,12 +267,9 @@ object Sinks {
       graft.operators.Par.run(legs.toSeq: _*)
       graft.operators.StoreFs.writeFile(spark, s"$exportDir/_delta_range",
         s"$oldVersion\t$newVersion\t$nAdds\t$nRemoves")
-      val sp = spark
-      import sp.implicits._
-      Seq(("export_delta", exportDir, oldVersion, newVersion, nAdds,
-        nRemoves))
-        .toDF("verb", "store", "old_version", "new_version", "n_adds",
-          "n_removes")
+      spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(
+        "export_delta", exportDir, oldVersion, newVersion, nAdds, nRemoves)),
+        exportReceiptSchema)
     }
   }
 
@@ -282,11 +292,9 @@ object Sinks {
     graft.operators.StoreFs.writeFile(spark, s"$exportDir/_corpus_version",
       version.toString)
     val n = manifestRowCount(spark, exportDir)
-    val sp = spark
-    import sp.implicits._
-    Seq(("export_snapshot", exportDir, version, version, n, 0L))
-      .toDF("verb", "store", "old_version", "new_version", "n_adds",
-        "n_removes")
+    spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(
+      "export_snapshot", exportDir, version, version, n, 0L)),
+      exportReceiptSchema)
   }
 
   /** Receipt row count from the export's OWN just-written manifest (a
@@ -388,11 +396,9 @@ object Sinks {
     graft.operators.StoreFs.writeFile(spark, s"$outDir/_corpus_version",
       newV.toString)
     val n = manifestRowCount(spark, outDir)
-    val sp = spark
-    import sp.implicits._
-    Seq(("export_apply", outDir, oldV, newV, nAdds, nRemoves, n))
-      .toDF("verb", "store", "old_version", "new_version", "n_adds",
-        "n_removes", "n_rows")
+    spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(
+      "export_apply", outDir, oldV, newV, nAdds, nRemoves, n)),
+      applyReceiptSchema)
   }
 
   /** K3 (`bolt/bolt.go:522-541`): the nasalog report — per host, a

@@ -1,5 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.api.SqlFrontDoor
@@ -220,5 +223,143 @@ class SqlFrontDoorSpec extends SparkTestBase {
     val r2 = spark.sql(s"SELECT * FROM graft_ivf_maintain('$root')").collect()
     assert(r2.head.getAs[String]("action") == "none", r2.head.toString)
     assert(r2.head.getAs[Long]("n_tombstones") == 0L, r2.head.toString)
+  }
+
+  /** One vector per id on axis `id % 3`, the fixture of the IVF tests above. */
+  private def ivfVectors(ids: Seq[Long]) = {
+    import TestSpark.spark.implicits._
+    ids.map { i =>
+      val base = Array.fill(4)(0.0); base((i % 3).toInt) = 1.0
+      base(3) = 0.01 * i
+      (i, base.toSeq)
+    }.toDF("vec_id", "embedding")
+  }
+
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.TestListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  /** Every file under `root` with its size and modification time. */
+  private def tree(root: String): Map[String, (Long, Long)] = {
+    val dir = java.nio.file.Paths.get(root)
+    if (!java.nio.file.Files.exists(dir)) Map.empty
+    else {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => dir.relativize(f).toString ->
+          (java.nio.file.Files.size(f),
+            java.nio.file.Files.getLastModifiedTime(f).toMillis))
+        .toMap
+      finally walk.close()
+    }
+  }
+
+  test("a store verb runs once per analyzed statement: derived Datasets share the receipt") {
+    import TestSpark.spark.implicits._
+    graft.functions.GraftTableFunctions.ensureRegistered(spark)
+    val root = java.nio.file.Files.createTempDirectory("graft-once").toString
+    graft.operators.Similarity.buildIvfIndex(ivfVectors(0L until 30L),
+      "vec_id", "embedding", root, centStep = 3)
+    ivfVectors(30L until 33L).createOrReplaceTempView("once_batch")
+    val append = spark.sql(
+      s"SELECT * FROM graft_ivf_append('$root', 'once_batch', 'vec_id', 'embedding')")
+    assert(append.collect().map(_.getBoolean(2)).toSeq == Seq(true))
+    // count and show plan new Datasets over the same analyzed statement
+    assert(append.count() == 1L)
+    append.show()
+    val audit = graft.operators.Similarity.ivfIndexAudit(spark, root).head
+    assert(audit.getAs[Long]("n_vectors") == 33L, audit.toString)
+    assert(audit.getAs[Long]("n_dup_ids") == 0L, audit.toString)
+
+    graft.operators.Similarity.deleteFromIvfIndex(spark, root,
+      Seq(1L, 4L).toDF("vec_id"), "vec_id")
+    val maintain = spark.sql(s"SELECT * FROM graft_ivf_maintain('$root')")
+    assert(maintain.collect().head.getAs[String]("action") == "compact")
+    assert(maintain.limit(1).collect().head.getAs[String]("action") ==
+      "compact")
+    // a fresh statement is a new execution: the drained store decides none
+    assert(spark.sql(s"SELECT * FROM graft_ivf_maintain('$root')")
+      .limit(1).collect().head.getAs[String]("action") == "none")
+  }
+
+  test("temp views over a store verb: a SQL view re-runs it per query, a Dataset view shares the statement's run") {
+    graft.functions.GraftTableFunctions.ensureRegistered(spark)
+    val root = java.nio.file.Files.createTempDirectory("graft-view").toString
+    graft.operators.Similarity.buildIvfIndex(ivfVectors(0L until 30L),
+      "vec_id", "embedding", root, centStep = 3)
+    def nVectors = graft.operators.Similarity.ivfIndexAudit(spark, root)
+      .head.getAs[Long]("n_vectors")
+    ivfVectors(30L until 31L).createOrReplaceTempView("view_batch1")
+    val verb = s"graft_ivf_append('$root', 'view_batch1', 'vec_id', 'embedding')"
+    spark.sql(s"CREATE OR REPLACE TEMP VIEW sql_append AS SELECT * FROM $verb")
+    assert(nVectors == 30L, "creating the view ran the verb")
+    spark.table("sql_append").collect()
+    spark.table("sql_append").collect()
+    assert(nVectors == 32L)
+    spark.catalog.dropTempView("sql_append")
+
+    ivfVectors(40L until 41L).createOrReplaceTempView("view_batch2")
+    spark.sql(s"SELECT * FROM graft_ivf_append('$root', 'view_batch2', 'vec_id', 'embedding')")
+      .createOrReplaceTempView("df_append")
+    spark.table("df_append").collect()
+    spark.table("df_append").collect()
+    assert(nVectors == 33L)
+    spark.catalog.dropTempView("df_append")
+  }
+
+  test("sync and export verbs: analysis and EXPLAIN submit no job and touch nothing; collect returns the operator's receipt") {
+    import TestSpark.spark.implicits._
+    graft.functions.GraftTableFunctions.ensureRegistered(spark)
+    def tmp(tag: String) = java.nio.file.Files.createTempDirectory(tag).toString
+    val vecStore = tmp("graft-sync-store")
+    val idx = tmp("graft-sync-idx")
+    graft.operators.Curation.writeSnapshot(ivfVectors(0L until 9L), vecStore,
+      version = 1)
+    graft.operators.Curation.writeSnapshotDelta(spark, vecStore, version = 2,
+      upserts = ivfVectors(Seq(9L)), deleteIds = Seq(4L).toDF("vec_id"),
+      idCol = "vec_id")
+    graft.operators.Similarity.buildIvfIndex(
+      graft.operators.Curation.readSnapshotAt(spark, vecStore, 1, "vec_id"),
+      "vec_id", "embedding", idx, centStep = 3)
+    val docStore = tmp("graft-export-store")
+    graft.operators.Curation.writeSnapshot(
+      Seq(1L -> "alpha", 2L -> "bravo", 3L -> "charlie").toDF("doc_id", "text"),
+      docStore, version = 1)
+    val exportDir = s"${tmp("graft-export")}/copy"
+
+    // (statement, directory it writes, receipt schema, expected receipt)
+    val cases = Seq(
+      (s"graft_ivf_sync('$idx', '$vecStore', 1, 2, 'vec_id', 'embedding')",
+        idx, graft.operators.IndexSync.receiptSchema,
+        Row("sync_ivf_index", idx, "applied", 1L, 2L, 1L, 0L, 1L, false)),
+      (s"graft_export_snapshot('$exportDir', '$docStore', 1, 'doc_id', 4, 9)",
+        exportDir, graft.sinks.Sinks.exportReceiptSchema,
+        Row("export_snapshot", exportDir, 1L, 1L, 3L, 0L)))
+    for ((call, dir, schema, expected) <- cases) {
+      val before = tree(dir)
+      var stmt: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsDuring {
+        stmt = spark.sql(s"SELECT * FROM $call")
+        stmt.explain()
+      }
+      assert(jobs == 0, s"$call: analysis + EXPLAIN submitted $jobs jobs")
+      assert(tree(dir) == before, s"$call: analysis or EXPLAIN wrote $dir")
+      assert(stmt.schema == schema, call)
+      assert(stmt.collect().toSeq == Seq(expected), call)
+      assert(tree(dir) != before, s"$call: collect did not run the verb")
+    }
   }
 }
