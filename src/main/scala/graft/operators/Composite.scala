@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** CROSS-STORE consistency for composed pipelines — the r13 judge's
@@ -44,14 +43,14 @@ object Composite {
                           components: Seq[String])
 
   /** The standard members for the filtered-RAG stack: a text index and
-    * an IVF-PQ index — the q220/q221 composition. The text essentials
-    * include `docs` (the delete verb and the fsck need it, not just the
-    * search path).
+    * an IVF-PQ index — the q220/q221 composition. Each member's
+    * components are its family's essentials ([[TextAnalysis.textIndex]],
+    * [[Similarity.ivfPqIndex]]): the text essentials include `docs` (the
+    * delete verb and the fsck need it, not just the search path).
     */
   def ragMembers(textDir: String, vecDir: String): Seq[Member] = Seq(
-    Member("text", textDir, Seq("stats", "terms", "postings", "docs")),
-    Member("vectors", vecDir,
-      Seq("centroids", "pq_codebook", "pq_meta", "postings")))
+    Member("text", textDir, TextAnalysis.textIndex.essentials),
+    Member("vectors", vecDir, Similarity.ivfPqIndex.essentials))
 
   /** Parse the SQL front door's member spec —
     * `name|dir|comp1,comp2;name2|dir2|comp3` (`;` between members, `|`
@@ -73,33 +72,6 @@ object Composite {
 
   private val PendingName = "_composite/pending"
   private val CommittedName = "_composite/committed"
-
-  private def fs(spark: SparkSession, path: String) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def writeFile(spark: SparkSession, path: String,
-                        content: String): Unit = {
-    val (f, p) = fs(spark, path)
-    val parent = p.getParent
-    if (parent != null && !f.exists(parent)) f.mkdirs(parent)
-    val out = f.create(p, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def readFile(spark: SparkSession, path: String): String = {
-    val (f, p) = fs(spark, path)
-    val in = f.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-  }
 
   /** One member per line: `name\tdir\tcomp1,comp2` — a format the audit
     * can parse without a JSON library (and a human can read in a crash
@@ -128,14 +100,13 @@ object Composite {
     require(members.nonEmpty, "a composition needs at least one member")
     require(members.map(_.name).distinct.size == members.size,
       s"duplicate member names: ${members.map(_.name).mkString(", ")}")
-    val (f, pending) = fs(spark, s"$manifestDir/$PendingName")
-    if (f.exists(pending))
+    if (StoreFs.exists(spark, s"$manifestDir/$PendingName"))
       throw new IllegalStateException(
         s"composite build at $manifestDir is already pending — a prior " +
           "build crashed or is in flight; run Composite.audit, then " +
           "Composite.abandon(dir) before beginning again")
     StoreFs.delete(spark, s"$manifestDir/$CommittedName")
-    writeFile(spark, s"$manifestDir/$PendingName", render(members))
+    StoreFs.writeFile(spark, s"$manifestDir/$PendingName", render(members))
   }
 
   /** Mark the composition complete: every member build landed. Verifies
@@ -144,18 +115,18 @@ object Composite {
     * then swaps pending → committed.
     */
   def commit(spark: SparkSession, manifestDir: String): Unit = {
-    val (f, pending) = fs(spark, s"$manifestDir/$PendingName")
-    require(f.exists(pending),
+    val pending = s"$manifestDir/$PendingName"
+    require(StoreFs.exists(spark, pending),
       s"no pending composite build at $manifestDir — begin() first")
-    val members = parse(readFile(spark, s"$manifestDir/$PendingName"))
+    val members = parse(StoreFs.readFileUtf8(spark, pending))
     val missing = members.flatMap(m =>
       m.components.filterNot(c => StoreFs.exists(spark, s"${m.dir}/$c"))
         .map(c => s"${m.name}:${m.dir}/$c"))
     require(missing.isEmpty,
       s"refusing to commit composite at $manifestDir — missing: " +
         missing.mkString(", "))
-    writeFile(spark, s"$manifestDir/$CommittedName", render(members))
-    f.delete(pending, false)
+    StoreFs.writeFile(spark, s"$manifestDir/$CommittedName", render(members))
+    StoreFs.delete(spark, pending)
   }
 
   /** Drop a pending manifest after a crash investigation (the member
@@ -190,8 +161,8 @@ object Composite {
       else if (StoreFs.exists(spark, pendingPath)) "pending"
       else "absent"
     val members = state match {
-      case "committed" => parse(readFile(spark, committedPath))
-      case "pending" => parse(readFile(spark, pendingPath))
+      case "committed" => parse(StoreFs.readFileUtf8(spark, committedPath))
+      case "pending" => parse(StoreFs.readFileUtf8(spark, pendingPath))
       case _ => Seq.empty
     }
     val rows = members.sortBy(_.name).map { m =>

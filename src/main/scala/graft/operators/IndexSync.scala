@@ -15,19 +15,21 @@ import org.apache.spark.sql.functions._
   *     `(oldVersion, newVersion]` — computed per chain LEG over the
   *     deltas' own touched ids, so a 100 TB corpus with 0.1% churn diffs
   *     at 0.1% cost;
-  *  2. `removed` and `changed` ids leave through
-  *     [[TextAnalysis.deleteFromTextIndex]] (tombstone-append — pruned
-  *     reads, no rewrite);
-  *  3. if any id about to be (re-)appended is currently TOMBSTONED —
-  *     every `changed` id is, by step 2; a re-birth (deleted in one
-  *     version, re-added later — `added` in the diff) can be from an
-  *     earlier sync — [[TextAnalysis.compactTextIndex]] drains the
+  *  2. `removed` and `changed` ids leave through ONE [[Tombstones.delete]]
+  *     — the store family's delete verb. With `changed` ids present the
+  *     drain must follow (each would be shadowed by its own tombstone when
+  *     re-appended), so the delete runs with `drain = true`: the deletion
+  *     and any prior tombstones are compacted away in one pass and no
+  *     tombstone is written. A pure removal runs `drain = false`
+  *     (tombstone-append — pruned reads, no rewrite);
+  *  3. otherwise, if an id about to be (re-)appended is still TOMBSTONED —
+  *     a re-birth (deleted in one version, re-added later — `added` in
+  *     the diff) from an earlier sync — [[Tombstones.compact]] drains the
   *     tombstones first. The search-time tombstone anti-join is absolute
-  *     on `doc_id` (`TextAnalysis.searchTextIndexImpl` — a tombstone
-  *     shadows NEW postings too), so the drain is what makes re-adding a
-  *     doc_id sound; compaction rewrites only the tombstone-touched
-  *     buckets, so this too tracks churn's bucket footprint, not the
-  *     corpus;
+  *     on the id (`TextAnalysis.searchTextIndexImpl` — a tombstone
+  *     shadows NEW postings too), so the drain is what makes re-adding an
+  *     id sound; it rewrites only the tombstone-touched buckets/cells, so
+  *     this too tracks churn's footprint, not the corpus;
   *  4. `added` and `changed` docs' NEW content enters through
   *     [[TextAnalysis.appendTextIndex]], reconstructed at `newVersion`
   *     SCOPED to those ids (the same hand-pushed per-leg semi-join the
@@ -151,17 +153,9 @@ object IndexSync {
                                  idCol: String, textCol: String,
                                  buckets: Int = 64): DataFrame =
     syncStore(spark, indexDir, storeDir, oldVersion, newVersion,
-      idCol, contentCol = textCol,
-      verb = "sync_text_index", tombstoneIdCol = "doc_id",
-      deleteFn = ids =>
-        TextAnalysis.deleteFromTextIndex(spark, indexDir, ids, idCol,
-          buckets),
-      compactFn = () => TextAnalysis.compactTextIndex(spark, indexDir,
-        buckets),
-      deleteAndCompactFn = ids =>
-        TextAnalysis.deleteAndCompactTextIndex(spark, indexDir, ids, idCol,
-          buckets),
-      appendFn = batch =>
+      idCol, contentCol = textCol, verb = "sync_text_index",
+      store = () => TextAnalysis.textStore(spark, indexDir, buckets),
+      append = batch =>
         TextAnalysis.appendTextIndex(spark, indexDir, batch, idCol,
           textCol, buckets))
 
@@ -180,14 +174,9 @@ object IndexSync {
                                 oldVersion: Long, newVersion: Long,
                                 idCol: String, vecCol: String): DataFrame =
     syncStore(spark, indexDir, storeDir, oldVersion, newVersion,
-      idCol, contentCol = vecCol,
-      verb = "sync_ivf_index", tombstoneIdCol = "id",
-      deleteFn = ids =>
-        Similarity.deleteFromIvfIndex(spark, indexDir, ids, idCol),
-      compactFn = () => Similarity.compactIvfIndex(spark, indexDir),
-      deleteAndCompactFn = ids =>
-        Similarity.deleteAndCompactIvfIndex(spark, indexDir, ids, idCol),
-      appendFn = batch =>
+      idCol, contentCol = vecCol, verb = "sync_ivf_index",
+      store = () => Similarity.ivfStore(spark, indexDir),
+      append = batch =>
         Similarity.appendIvfIndex(spark, indexDir, batch, idCol, vecCol))
 
   /** [[syncIvfIndexFromSnapshots]] for the IVF-PQ store (frozen coarse
@@ -199,31 +188,23 @@ object IndexSync {
                                   oldVersion: Long, newVersion: Long,
                                   idCol: String, vecCol: String): DataFrame =
     syncStore(spark, indexDir, storeDir, oldVersion, newVersion,
-      idCol, contentCol = vecCol,
-      verb = "sync_ivfpq_index", tombstoneIdCol = "id",
-      deleteFn = ids =>
-        Similarity.deleteFromIvfPqIndex(spark, indexDir, ids, idCol),
-      compactFn = () => Similarity.compactIvfPqIndex(spark, indexDir),
-      deleteAndCompactFn = ids =>
-        Similarity.deleteAndCompactIvfPqIndex(spark, indexDir, ids, idCol),
-      appendFn = batch =>
+      idCol, contentCol = vecCol, verb = "sync_ivfpq_index",
+      store = () => Similarity.ivfStore(spark, indexDir),
+      append = batch =>
         Similarity.appendIvfPqIndex(spark, indexDir, batch, idCol, vecCol))
 
   /** The shared sync skeleton: marker discipline, churn diff, and the
-    * delete → drain-if-shadowed → scoped-append composition, with the
-    * store-specific verbs injected. `tombstoneIdCol` is the id column
-    * name INSIDE the store's `tombstones/` component (the text index
-    * writes `doc_id`, the vector stores write `id`).
+    * delete(-and-drain) → drain-if-shadowed → scoped-append composition.
+    * `store` opens the index for one [[Tombstones]] verb (each verb gets
+    * a fresh one — a verb's reads must not outlive its write lock); the
+    * family it declares names the `tombstones/` id column.
     */
   private def syncStore(spark: SparkSession,
                         indexDir: String, storeDir: String,
                         oldVersion: Long, newVersion: Long,
-                        idCol: String, contentCol: String,
-                        verb: String, tombstoneIdCol: String,
-                        deleteFn: DataFrame => Unit,
-                        compactFn: () => Unit,
-                        deleteAndCompactFn: DataFrame => Unit,
-                        appendFn: DataFrame => Unit): DataFrame = {
+                        idCol: String, contentCol: String, verb: String,
+                        store: () => Tombstones.Store,
+                        append: DataFrame => Unit): DataFrame = {
     require(newVersion > oldVersion,
       s"$verb needs oldVersion < newVersion: $oldVersion >= $newVersion")
     def receipt(action: String, nAdded: Long, nChanged: Long,
@@ -266,21 +247,16 @@ object IndexSync {
       val nAdded = counts.getOrElse("added", 0L)
       val nChanged = counts.getOrElse("changed", 0L)
       val nRemoved = counts.getOrElse("removed", 0L)
-      var compacted = false
       // nChanged > 0 guarantees the drain must follow the delete (every
       // `changed` id is about to be re-appended and would be shadowed by
-      // its own tombstone), so delete+compact runs as ONE fused verb —
-      // the intermediate tombstone component is never written or read
-      // back (r16 job-count diet; was: deleteFn, then compactFn draining
-      // what deleteFn just wrote)
-      if (nChanged > 0) {
-        deleteAndCompactFn(
+      // its own tombstone), so the delete drains in the same pass — the
+      // intermediate tombstone component is never written or read back
+      // (r16 job-count diet)
+      var compacted = nChanged > 0
+      if (nChanged + nRemoved > 0)
+        Tombstones.delete(store(),
           diff.filter(col("status").isin("changed", "removed"))
-            .select(col("id").as(idCol)))
-        compacted = true
-      } else if (nRemoved > 0)
-        deleteFn(diff.filter(col("status") === "removed")
-          .select(col("id").as(idCol)))
+            .select(col("id").as(idCol)), idCol, drain = compacted)
       if (nAdded + nChanged > 0) {
         val toAppend = diff.filter(col("status").isin("added", "changed"))
           .select(col("id").as(idCol))
@@ -291,21 +267,22 @@ object IndexSync {
         // pure-addition case, where a re-birth could still hit an old
         // tombstone (r15: skips the probe's two jobs on every
         // churn-with-changes sync)
+        val tombIdCol = store().family.idCol
         val shadowed = !compacted &&
           Par.described(spark, s"$verb: shadow probe") {
             StoreFs
-              .tombstoneIds(spark, s"$indexDir/tombstones", tombstoneIdCol)
+              .tombstoneIds(spark, s"$indexDir/tombstones", tombIdCol)
               .exists(t => !toAppend
-                .join(t.select(col(tombstoneIdCol).as(idCol)), Seq(idCol),
+                .join(t.select(col(tombIdCol).as(idCol)), Seq(idCol),
                   "left_semi")
                 .isEmpty)
           }
         if (shadowed) {
-          compactFn()
+          Tombstones.compact(store())
           compacted = true
         }
         Par.described(spark, s"$verb: scoped append") {
-          appendFn(Curation.readSnapshotAt(spark, storeDir, newVersion,
+          append(Curation.readSnapshotAt(spark, storeDir, newVersion,
             idCol, scope = toAppend))
         }
       }

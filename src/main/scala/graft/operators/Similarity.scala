@@ -423,8 +423,46 @@ object Similarity {
       StructField("dim", IntegerType)))
     val tombstones: StructType = StructType(Seq(
       StructField("id", LongType), StructField("cell", LongType)))
-    val tombIdOnly: StructType =
-      StructType(Seq(StructField("id", LongType)))
+  }
+
+  /** The vector stores' [[Tombstones]] declaration: postings keyed by
+    * cell, drained by id; the frozen codebooks are the model. IVF-PQ keeps
+    * the same postings contract and differs only in its model files.
+    */
+  private[graft] val ivfIndex: Tombstones.Family = Tombstones.Family(
+    "ivf", idCol = "id", keyCol = "cell", model = Seq("centroids"),
+    components = Seq(
+      Tombstones.Component("postings", "cell", Tombstones.DropById)))
+
+  private[graft] val ivfPqIndex: Tombstones.Family =
+    ivfIndex.copy(model = Seq("centroids", "pq_codebook", "pq_meta"))
+
+  /** A vector store opened for one [[Tombstones]] verb; the postings read
+    * infers (raw and PQ payloads differ), once per verb.
+    */
+  private[graft] def ivfStore(sp: SparkSession,
+                              root: String): Tombstones.Store =
+      new Tombstones.Store {
+    val spark = sp
+    val dir = root
+    val family = ivfIndex
+    private lazy val postings =
+      StoreSegments.read(spark, dir, "postings", "cell")
+    def tombSchema = Model.tombstones
+    def read(name: String, key: String): DataFrame = postings
+
+    /** postings → (id, cell), which are also the tombstone rows. */
+    def resolve(ids: DataFrame, idCol: String,
+                exclude: Option[DataFrame]): Option[Tombstones.Deletion] = {
+      val del0 = ids.select(col(idCol).cast("long").as("id")).distinct()
+      val del = exclude.fold(del0)(del0.join(_, Seq("id"), "left_anti"))
+      val delPost = CacheScope.persisted(postings
+        .join(broadcast(del), "id")
+        .select(col("id"), col("cell").cast("long").as("cell")))
+      Some(Tombstones.Deletion(ids = delPost.select("id"), touched = delPost,
+        rows = delPost, negatives = Map.empty,
+        materialize = () => !delPost.isEmpty))
+    }
   }
 
   def buildIvfIndexAdaptive(df: DataFrame, idCol: String, vecCol: String,
@@ -504,152 +542,43 @@ object Similarity {
     * cell partitions to rewrite. Centroids are untouched: the codebook
     * is the frozen model (same argument as [[appendIvfIndex]]); enough
     * deletion to warrant re-centering is a rebuild decision made from
-    * [[cellOccupancy]] evidence. Ids absent from the index or already
-    * tombstoned are no-ops, so a replayed delete batch is idempotent.
-    *
-    * Cost: one postings scan filtered to the delete set, at DELETE time
-    * only. Gated: q133 (delete → search ≡ from-scratch build over the
-    * survivors).
+    * [[cellOccupancy]] evidence. Absent or already-tombstoned ids are
+    * no-ops. Cost: one postings scan filtered to the delete set. Gated:
+    * q133 (≡ a from-scratch build over the survivors).
     */
   def deleteFromIvfIndex(spark: SparkSession, dir: String, ids: DataFrame,
                          idCol: String): Unit =
-      StoreLock.withWriteLock(dir) {
-        Par.described(spark, s"ivf delete $dir") {
-    val del0 = ids.select(col(idCol).cast("long").as("id")).distinct()
-    val del =
-      if (graft.operators.StoreFs.exists(spark, s"$dir/tombstones"))
-        del0.join(
-          spark.read.schema(Model.tombIdOnly)
-            .parquet(s"$dir/tombstones").select("id").distinct(),
-          Seq("id"), "left_anti")
-      else del0
-    // single evaluation (the StoreSegments.appendPlain discipline): the
-    // emptiness probe and the write otherwise each run the postings scan
-    // + delete-set join — persist so the probe's work feeds the write
-    val delPost = StoreSegments.read(spark, dir, "postings", "cell")
-      .join(broadcast(del), "id")
-      .select(col("id"), col("cell").cast("long").as("cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (!delPost.isEmpty)
-        delPost.write.mode("append").parquet(s"$dir/tombstones")
-    } finally delPost.unpersist(blocking = false)
-  }}
+    Tombstones.delete(ivfStore(spark, dir), ids, idCol, drain = false)
 
-  /** COMPACTION of a tombstoned [[buildIvfIndex]] index: physically
-    * rewrite ONLY the cell partitions the tombstones name (a bounded
-    * driver list — cells ≤ maxCentroids by construction) and clear the
-    * tombstones. Untouched cells' files are never read or rewritten, so
-    * compaction cost tracks the deleted vectors' cell footprint, not the
-    * corpus. Post-compaction searches answer identically with zero
-    * tombstone overhead (gated: q134 hash-equals q133's oracle).
+  /** COMPACTION of a tombstoned [[buildIvfIndex]] index: rewrite ONLY
+    * the cells the tombstones name and clear them; untouched cells' files
+    * are never read. Answers are unchanged (gated: q134 ≡ q133).
     */
   def compactIvfIndex(spark: SparkSession, dir: String): Unit =
-      StoreLock.withWriteLock(dir) {
-        Par.described(spark, s"ivf compact $dir") {
-    import graft.operators.StoreFs
-    if (StoreFs.exists(spark, s"$dir/tombstones")) {
-      val tomb = spark.read.schema(Model.tombstones)
-        .parquet(s"$dir/tombstones")
-      val tombIds = tomb.select("id").distinct()
-      val affected = tomb.select("cell").distinct().collect()
-        .map(_.getLong(0)).toSeq
-      if (affected.isEmpty) StoreFs.delete(spark, s"$dir/tombstones")
-      else {
-        // reader-safe publish (r14): survivors land in a NEW immutable
-        // segment and ONE atomic manifest flip supersedes the affected
-        // cells — no live directory is swapped, so a concurrent search
-        // holding either manifest version sees a complete store
-        val survivors = StoreSegments.read(spark, dir, "postings", "cell")
-          .filter(col("cell").isin(affected: _*))
-          .join(tombIds, Seq("id"), "left_anti")
-        StoreSegments.compact(spark, dir, "postings", "cell", affected,
-          survivors)
-        StoreFs.delete(spark, s"$dir/tombstones")
-      }
-    }
-  }}
+    Tombstones.compact(ivfStore(spark, dir))
 
-  /** FUSED [[deleteFromIvfIndex]] + [[compactIvfIndex]] — the CDC-sync
-    * fast path ([[IndexSync]] calls it when the churn guarantees a drain
-    * must follow the delete, i.e. whenever `changed` ids will be
-    * re-appended). Produces the identical end state to running the two
-    * verbs back to back — affected cells rewritten with the survivors of
-    * (new delete set ∪ any prior tombstones), tombstones cleared — but
-    * never materializes the intermediate tombstone component: the
-    * tombstone write, its read-back, and the two verbs' separate
-    * emptiness probes disappear (r16 job-count diet; guide §2: fewer
-    * passes beats overlapping redundant ones). One postings∩delete scan
-    * feeds both the affected-cell list and (unioned with prior
-    * tombstones) the drain set.
+  /** FUSED [[deleteFromIvfIndex]] + [[compactIvfIndex]] (the CDC-sync
+    * path): the same end state with no tombstone ever written
+    * ([[Tombstones]], `drain = true`).
     */
   def deleteAndCompactIvfIndex(spark: SparkSession, dir: String,
                                ids: DataFrame, idCol: String): Unit =
-      StoreLock.withWriteLock(dir) {
-        Par.described(spark, s"ivf delete+compact $dir") {
-    import graft.operators.StoreFs
-    val del0 = ids.select(col(idCol).cast("long").as("id")).distinct()
-    val oldTomb: Option[DataFrame] =
-      if (StoreFs.exists(spark, s"$dir/tombstones"))
-        Some(spark.read.schema(Model.tombstones)
-          .parquet(s"$dir/tombstones")
-          .select(col("id"), col("cell").cast("long").as("cell")))
-      else None
-    // ids already tombstoned need no new drain rows of their own — they
-    // arrive via oldTomb; including them twice would only duplicate rows
-    // the distinct below collapses, so no anti-join is needed here.
-    // ONE postings frame serves both the delete probe and the compaction
-    // survivors below (r16: was two reads — two schema-inference jobs,
-    // two listings)
-    val postingsBase = StoreSegments.read(spark, dir, "postings", "cell")
-    val delPost = postingsBase
-      .join(broadcast(del0), "id")
-      .select(col("id"), col("cell").cast("long").as("cell"))
-    val drain = CacheScope.persisted(
-      oldTomb.fold(delPost)(delPost.unionByName(_)))
-    val affected = drain.select("cell").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    if (affected.nonEmpty) {
-      val tombIds = drain.select("id").distinct()
-      val survivors = postingsBase
-        .filter(col("cell").isin(affected: _*))
-        .join(tombIds, Seq("id"), "left_anti")
-      StoreSegments.compact(spark, dir, "postings", "cell", affected,
-        survivors)
-    }
-    StoreFs.delete(spark, s"$dir/tombstones")
-  }}
+    Tombstones.delete(ivfStore(spark, dir), ids, idCol, drain = true)
 
-  /** [[deleteAndCompactIvfIndex]] for the compressed store — identical
-    * mechanics (the verbs never read the payload column; see
-    * [[deleteFromIvfPqIndex]]).
-    */
+  /** [[deleteAndCompactIvfIndex]] for the compressed store. */
   def deleteAndCompactIvfPqIndex(spark: SparkSession, dir: String,
                                  ids: DataFrame, idCol: String): Unit =
     deleteAndCompactIvfIndex(spark, dir, ids, idCol)
 
-  /** VACUUM — the vector stores' MAJOR compaction: drain any tombstones
-    * ([[compactIvfIndex]]'s affected-cell rewrite) and then consolidate
-    * every live postings segment into one
-    * ([[StoreSegments.vacuum]] — each append since the first manifest
-    * added a segment; a search plan unions that many scans, fine at
-    * tens, pointless at thousands). Reader-safe end to end: both steps
-    * publish by manifest flip, superseded directories survive one more
-    * maintenance cycle. Cost: one full postings rewrite — the LSM
-    * major-compaction trade, paid on operator decision, never silently.
-    * Shared by the IVF and IVF-PQ stores (same postings contract).
+  /** VACUUM — the MAJOR compaction: drain tombstones, then consolidate
+    * every live postings segment into one ([[StoreSegments.vacuum]]; a
+    * search unions one scan per segment). Reader-safe (manifest flips);
+    * one full postings rewrite, paid on operator decision.
     */
-  def vacuumIvfIndex(spark: SparkSession, dir: String): Unit = {
-    compactIvfIndex(spark, dir)
-    StoreLock.withWriteLock(dir) {
-      StoreSegments.vacuum(spark, dir, "postings", "cell")
-    }
-  }
+  def vacuumIvfIndex(spark: SparkSession, dir: String): Unit =
+    Tombstones.vacuum(ivfStore(spark, dir))
 
-  /** [[vacuumIvfIndex]] for the compressed store — identical mechanics,
-    * 16-byte rows (the layout-sharing argument of
-    * [[deleteFromIvfPqIndex]]).
-    */
+  /** [[vacuumIvfIndex]] for the compressed store. */
   def vacuumIvfPqIndex(spark: SparkSession, dir: String): Unit =
     vacuumIvfIndex(spark, dir)
 
@@ -714,36 +643,8 @@ object Similarity {
     */
   def searchIvfIndex(spark: SparkSession, dir: String, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int,
-                     nprobe: Int = 2): DataFrame = {
-    graft.functions.CosineSim.ensureRegistered(spark)
-    val centDf = spark.read.schema(Model.centroids)
-      .parquet(s"$dir/centroids")
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qv"))
-    val wProbe = Window.partitionBy("query_id").orderBy(col("pcos").desc, col("cid").asc)
-    val probes = q.crossJoin(broadcast(centDf))
-      .withColumn("pcos", cosineFast(col("qv"), col("cv")))
-      .withColumn("prk", row_number().over(wProbe))
-      .filter(col("prk") <= nprobe)
-      .select(col("query_id"), col("qv"), col("cid").as("cell"))
-    val postings0 = StoreSegments.read(spark, dir, "postings", "cell")
-    // tombstoned vectors are invisible to search (broadcast anti-join —
-    // tombstones stay delete-batch-sized because compactIvfIndex drains
-    // them into physical cell rewrites)
-    val postings =
-      graft.operators.StoreFs.tombstoneIds(spark, s"$dir/tombstones", "id",
-        schema = Some(Model.tombstones))
-        .map(t => postings0.join(broadcast(t), Seq("id"), "left_anti"))
-        .getOrElse(postings0)
-    val wTop = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    postings.select(col("id").as("neighbor_id"), col("v"), col("cell"))
-      .join(broadcast(probes), "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosineFast(col("qv"), col("v")))
-      .withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
-  }
+                     nprobe: Int = 2): DataFrame =
+    searchIvfIndexImpl(spark, dir, queries, idCol, vecCol, None, k, nprobe)
 
   /** FILTERED vector search — [[searchIvfIndex]] under a metadata
     * predicate: top-k among only the vectors whose ids appear in
@@ -769,10 +670,23 @@ object Similarity {
   def searchIvfIndexFiltered(spark: SparkSession, dir: String,
                              queries: DataFrame, idCol: String,
                              vecCol: String, allowed: DataFrame,
-                             k: Int, nprobe: Int = 2): DataFrame = {
+                             k: Int, nprobe: Int = 2): DataFrame =
+    searchIvfIndexImpl(spark, dir, queries, idCol, vecCol,
+      Some(eligibleIds(allowed)), k, nprobe)
+
+  /** A filtered search's one-column eligibility frame as distinct `id`s. */
+  private def eligibleIds(allowed: DataFrame): DataFrame = {
     require(allowed.columns.length == 1,
       s"allowed must be a single-column frame of eligible ids; got " +
         s"${allowed.columns.length} columns (${allowed.columns.mkString(", ")})")
+    allowed.select(allowed.columns.head).toDF("id").distinct()
+  }
+
+  /** `allow`: the eligible ids ([[eligibleIds]]), None for every id. */
+  private def searchIvfIndexImpl(spark: SparkSession, dir: String,
+                                 queries: DataFrame, idCol: String,
+                                 vecCol: String, allow: Option[DataFrame],
+                                 k: Int, nprobe: Int): DataFrame = {
     graft.functions.CosineSim.ensureRegistered(spark)
     val centDf = spark.read.schema(Model.centroids)
       .parquet(s"$dir/centroids")
@@ -785,21 +699,25 @@ object Similarity {
       .withColumn("prk", row_number().over(wProbe))
       .filter(col("prk") <= nprobe)
       .select(col("query_id"), col("qv"), col("cid").as("cell"))
-    val allow = allowed.select(allowed.columns.head).toDF("id").distinct()
     val postings0 = StoreSegments.read(spark, dir, "postings", "cell")
+    // tombstoned vectors are invisible to search (broadcast anti-join —
+    // tombstones stay delete-batch-sized because compactIvfIndex drains
+    // them into physical cell rewrites)
     val postings =
-      graft.operators.StoreFs.tombstoneIds(spark, s"$dir/tombstones", "id",
+      StoreFs.tombstoneIds(spark, s"$dir/tombstones", "id",
         schema = Some(Model.tombstones))
         .map(t => postings0.join(broadcast(t), Seq("id"), "left_anti"))
         .getOrElse(postings0)
+    val probed = postings
+      .select(col("id").as("neighbor_id"), col("v"), col("cell"))
+      .join(broadcast(probes), "cell")
+    // eligibility AFTER the cell cut (semantics identical — both are
+    // pre-rank filters), no broadcast hint: AQE picks by actual size
+    val eligible = allow.fold(probed)(a => probed.join(
+      a.select(col("id").as("neighbor_id")), Seq("neighbor_id"), "left_semi"))
     val wTop = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("neighbor_id").asc)
-    postings.select(col("id").as("neighbor_id"), col("v"), col("cell"))
-      .join(broadcast(probes), "cell")
-      // eligibility AFTER the cell cut (semantics identical — both are
-      // pre-rank filters), no broadcast hint: AQE picks by actual size
-      .join(allow.select(col("id").as("neighbor_id")), Seq("neighbor_id"),
-        "left_semi")
+    eligible
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", cosineFast(col("qv"), col("v")))
       .withColumn("rk", row_number().over(wTop))
@@ -1988,30 +1906,21 @@ object Similarity {
     * the COMPRESSED index, so a removal request against the store a
     * billion-vector corpus actually serves from never means a full
     * rebuild (the reference's SDFS `delete`, daemon/daemon.go:116-133,
-    * applied to the store that matters most at scale). The implementation
-    * IS [[deleteFromIvfIndex]]: the PQ postings keep the raw index's
-    * exact (id, …, cell-partition) layout contract, and the delete verb
-    * only ever touches (id, cell) — it never reads the payload column, so
-    * whether a posting carries a vector or a 4-byte code word is
-    * invisible to it. Tombstones append (cost ∝ delete set);
-    * [[searchIvfPqIndex]]/[[searchIvfPqIndexFiltered]] anti-join them, so
-    * a deleted vector stops matching immediately; both codebooks stay
-    * frozen. Gated: q205 (delete → search ≡ from-scratch build over the
-    * survivors).
+    * applied to the store that matters most at scale). The same
+    * [[Tombstones]] verb as [[deleteFromIvfIndex]]: [[ivfPqIndex]] shares
+    * [[ivfIndex]]'s component table, and the lifecycle only touches
+    * (id, cell), never the payload column. Tombstones append (cost ∝
+    * delete set) and the searches anti-join them; both codebooks stay
+    * frozen. Gated: q205 (≡ a from-scratch build over the survivors).
     */
   def deleteFromIvfPqIndex(spark: SparkSession, dir: String,
                            ids: DataFrame, idCol: String): Unit =
     deleteFromIvfIndex(spark, dir, ids, idCol)
 
-  /** COMPACTION of a tombstoned [[buildIvfPqIndex]] store: physically
-    * rewrite ONLY the cell partitions the tombstones name and clear the
-    * tombstones — [[compactIvfIndex]] verbatim, for the same reason as
-    * [[deleteFromIvfPqIndex]]: compaction moves rows by (id, cell) and
-    * copies every other column opaquely, so the 4-byte code words ride
-    * through untouched. Post-compaction searches answer identically with
-    * zero tombstone overhead (gated: q159 composes build + append +
-    * delete + THIS onto one store and must hash-equal q205's
-    * tombstone-era answer).
+  /** COMPACTION of a tombstoned [[buildIvfPqIndex]] store — the same
+    * [[Tombstones]] drain as [[compactIvfIndex]]: it moves rows by
+    * (id, cell) and copies the 4-byte code words opaquely (gated: q159 ≡
+    * q205's tombstone-era answer).
     */
   def compactIvfPqIndex(spark: SparkSession, dir: String): Unit =
     compactIvfIndex(spark, dir)
@@ -2026,7 +1935,13 @@ object Similarity {
     */
   def searchIvfPqIndex(spark: SparkSession, dir: String, queries: DataFrame,
                        idCol: String, vecCol: String, k: Int,
-                       nprobe: Int = 2): DataFrame = {
+                       nprobe: Int = 2): DataFrame =
+    searchIvfPqIndexImpl(spark, dir, queries, idCol, vecCol, None, k, nprobe)
+
+  private def searchIvfPqIndexImpl(spark: SparkSession, dir: String,
+                                   queries: DataFrame, idCol: String,
+                                   vecCol: String, allow: Option[DataFrame],
+                                   k: Int, nprobe: Int): DataFrame = {
     graft.functions.CosineSim.ensureRegistered(spark)
     graft.functions.GraftExtensions.ensureRegistered(spark, "graft_matvec_dots")
     // the model preamble and the tombstone snapshot are independent
@@ -2035,8 +1950,7 @@ object Similarity {
     var tomb: Option[DataFrame] = None
     Par.run(
       () => model = readIvfPqModel(spark, dir),
-      () => tomb = graft.operators.StoreFs
-        .tombstoneIds(spark, s"$dir/tombstones", "id",
+      () => tomb = StoreFs.tombstoneIds(spark, s"$dir/tombstones", "id",
         schema = Some(Model.tombstones)))
     val (cents, full, m) = model
     val postings0 = StoreSegments.read(spark, dir, "postings", "cell")
@@ -2045,7 +1959,8 @@ object Similarity {
         .getOrElse(postings0)
     val codes = postings.select(col("id").as("neighbor_id"),
       col("cell").cast("long").as("cell"), col("code_word"))
-    ivfPqScan(spark, codes, queries, idCol, vecCol, cents, full, k, nprobe, m)
+    ivfPqScan(spark, codes, queries, idCol, vecCol, cents, full, k, nprobe, m,
+      allow)
   }
 
   /** Deterministic variance-BALANCING dimension permutation — the
@@ -2155,32 +2070,9 @@ object Similarity {
   def searchIvfPqIndexFiltered(spark: SparkSession, dir: String,
                                queries: DataFrame, idCol: String,
                                vecCol: String, allowed: DataFrame,
-                               k: Int, nprobe: Int = 2): DataFrame = {
-    require(allowed.columns.length == 1,
-      s"allowed must be a single-column frame of eligible ids; got " +
-        s"${allowed.columns.length} columns (${allowed.columns.mkString(", ")})")
-    graft.functions.CosineSim.ensureRegistered(spark)
-    graft.functions.GraftExtensions.ensureRegistered(spark, "graft_matvec_dots")
-    // model preamble ∥ tombstone snapshot (§2.6, r16 — searchIvfPqIndex's
-    // treatment)
-    var model: (Seq[(Long, Array[Double])], Seq[Array[Double]], Int) = null
-    var tomb: Option[DataFrame] = None
-    Par.run(
-      () => model = readIvfPqModel(spark, dir),
-      () => tomb = graft.operators.StoreFs
-        .tombstoneIds(spark, s"$dir/tombstones", "id",
-        schema = Some(Model.tombstones)))
-    val (cents, full, m) = model
-    val allow = allowed.select(allowed.columns.head).toDF("id").distinct()
-    val postings0 = StoreSegments.read(spark, dir, "postings", "cell")
-    val postings =
-      tomb.map(t => postings0.join(broadcast(t), Seq("id"), "left_anti"))
-        .getOrElse(postings0)
-    val codes = postings.select(col("id").as("neighbor_id"),
-      col("cell").cast("long").as("cell"), col("code_word"))
-    ivfPqScan(spark, codes, queries, idCol, vecCol, cents, full, k, nprobe,
-      m, allow = Some(allow))
-  }
+                               k: Int, nprobe: Int = 2): DataFrame =
+    searchIvfPqIndexImpl(spark, dir, queries, idCol, vecCol,
+      Some(eligibleIds(allowed)), k, nprobe)
 
   /** PQ-code COLLISION buckets — the 4-byte semantic-dedup candidate
     * generator: two vectors sharing the full `m`-subspace code word

@@ -485,34 +485,20 @@ private[graft] object StoreSegments {
     * the cost of one full component rewrite, the same trade every
     * LSM/lakehouse major compaction makes. Reader-safe like compact:
     * the consolidated segment publishes with one manifest flip, the
-    * superseded directories survive until the next verb's GC.
+    * superseded directories survive until the next verb's GC. `live` is
+    * the consolidated frame when it is not a plain copy (the text index's
+    * terms net out negative delete rows through their `sum(df) > 0`
+    * merge); without it the live rows are re-read after the GC.
     */
   def vacuum(spark: SparkSession, dir: String, comp: String,
-             keyCol: String,
-             schema: Option[org.apache.spark.sql.types.StructType] = None): Unit =
-    vacuumWith(spark, dir, comp, keyCol, postGc = true, live = null,
-      known = schema)
-
-  /** [[vacuum]] with a caller-supplied consolidated frame (the text
-    * index's terms pass their `sum(df) > 0` merge — consolidation must
-    * net out negative delete rows, not copy them).
-    */
-  def vacuumWith(spark: SparkSession, dir: String, comp: String,
-                 keyCol: String, live: DataFrame): Unit =
-    vacuumWith(spark, dir, comp, keyCol, postGc = false, live = live,
-      known = None)
-
-  private def vacuumWith(spark: SparkSession, dir: String, comp: String,
-                         keyCol: String, postGc: Boolean,
-                         live: DataFrame,
-                         known: Option[org.apache.spark.sql.types.StructType]): Unit =
+             keyCol: String, live: Option[DataFrame] = None): Unit =
     entries(spark, dir, comp) match {
       case None => () // classic layout — nothing to consolidate
       case Some(_) =>
         gcSuperseded(spark, dir, comp, keyCol) // clear prior grace debt
         entries(spark, dir, comp).foreach { es =>
           val rows =
-            if (postGc) readOnce(spark, dir, comp, keyCol, known) else live
+            live.getOrElse(readOnce(spark, dir, comp, keyCol, None))
           val seg = newSegment(spark, dir, comp, keyCol, rows)
           // same refusal as [[compact]]: consolidating to ZERO live rows
           // would publish an all-superseded manifest no read can satisfy

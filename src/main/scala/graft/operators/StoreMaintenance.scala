@@ -35,21 +35,6 @@ import org.apache.spark.sql.types.StructType
   */
 object StoreMaintenance {
 
-  private def tombstoneCount(spark: SparkSession, dir: String,
-                             idCol: String): Long =
-    StoreFs.tombstoneIds(spark, s"$dir/tombstones", idCol)
-      .map(_.count()).getOrElse(0L)
-
-  /** Max live directory legs across the store's segmented components —
-    * the union-width a reader's plan pays. Classic layout = one leg.
-    */
-  private def liveLegs(spark: SparkSession, dir: String,
-                       comps: Seq[String]): Long =
-    comps.map { c =>
-      StoreSegments.entries(spark, dir, c)
-        .map(_.count(!_.dropAll).toLong).getOrElse(1L)
-    }.max
-
   /** The receipt's schema, also the `graft_*_maintain` TVFs' output. */
   val receiptSchema: StructType = StructType.fromDDL(
     "store STRING NOT NULL, action STRING NOT NULL, " +
@@ -60,32 +45,44 @@ object StoreMaintenance {
     spark.createDataFrame(
       java.util.List.of(Row(store, action, nTomb, nLegs)), receiptSchema)
 
-  private def decide(nLegs: Long, maxSegments: Int, nTomb: Long,
-                     maxTombstones: Long): String =
-    if (nLegs > maxSegments) "vacuum"
-    else if (nTomb > maxTombstones) "compact"
-    else "none"
-
-  /** Maintain a [[Similarity.buildIvfIndex]] store (raw or PQ — shared
-    * postings layout). Defaults: any tombstone is worth a (cell-scoped)
-    * drain; more than 8 live legs is worth a consolidation.
+  /** Probe and maintain one index store. The signals: tombstoned ids (the
+    * family's `tombstones/` id column) and the max live directory legs
+    * across its component table — the union width a reader's plan pays;
+    * a classic-layout (or absent, optional) component is one leg.
     */
-  def maintainIvfIndex(spark: SparkSession, dir: String,
-                       maxSegments: Int = 8,
-                       maxTombstones: Long = 0): DataFrame = {
-    val nTomb = tombstoneCount(spark, dir, "id")
-    val nLegs = liveLegs(spark, dir, Seq("postings"))
-    val action = decide(nLegs, maxSegments, nTomb, maxTombstones)
+  private def maintain(store: Tombstones.Store, maxSegments: Int,
+                       maxTombstones: Long): DataFrame = {
+    val (spark, dir, f) = (store.spark, store.dir, store.family)
+    val nTomb = StoreFs.tombstoneIds(spark, s"$dir/tombstones", f.idCol)
+      .map(_.count()).getOrElse(0L)
+    val nLegs = f.components.map { c =>
+      StoreSegments.entries(spark, dir, c.name)
+        .map(_.count(!_.dropAll).toLong).getOrElse(1L)
+    }.max
+    val action =
+      if (nLegs > maxSegments) "vacuum"
+      else if (nTomb > maxTombstones) "compact"
+      else "none"
     action match {
-      case "vacuum" => Similarity.vacuumIvfIndex(spark, dir)
-      case "compact" => Similarity.compactIvfIndex(spark, dir)
+      case "vacuum" => Tombstones.vacuum(store)
+      case "compact" => Tombstones.compact(store)
       case _ => ()
     }
     receipt(spark, dir, action, nTomb, nLegs)
   }
 
-  /** [[maintainIvfIndex]] for the compressed store — same postings
-    * contract, same verbs ([[Similarity.vacuumIvfPqIndex]] delegates).
+  /** Maintain a [[Similarity.buildIvfIndex]] store: its one postings
+    * component ([[Similarity.ivfIndex]]'s table), drained by cell.
+    * Defaults: any tombstone is worth a (cell-scoped) drain; more than 8
+    * live legs is worth a consolidation.
+    */
+  def maintainIvfIndex(spark: SparkSession, dir: String,
+                       maxSegments: Int = 8,
+                       maxTombstones: Long = 0): DataFrame =
+    maintain(Similarity.ivfStore(spark, dir), maxSegments, maxTombstones)
+
+  /** [[maintainIvfIndex]] for the compressed store — the same postings
+    * contract and table, the same verbs.
     */
   def maintainIvfPqIndex(spark: SparkSession, dir: String,
                          maxSegments: Int = 8,
@@ -130,24 +127,14 @@ object StoreMaintenance {
     receipt(spark, rootDir, action, chain, chain + 1)
   }
 
-  /** Maintain a [[TextAnalysis.buildTextIndex]] store. `buckets` is the
-    * store's layout constant (the compact/vacuum verbs need it, exactly
-    * as at build time).
+  /** Maintain a [[TextAnalysis.buildTextIndex]] store: stats, terms,
+    * postings, docs and (when built) positions — [[TextAnalysis.textIndex]]'s
+    * table. `buckets` is the store's layout constant (the compact/vacuum
+    * verbs need it, exactly as at build time).
     */
   def maintainTextIndex(spark: SparkSession, dir: String,
                         buckets: Int = 64, maxSegments: Int = 8,
-                        maxTombstones: Long = 0): DataFrame = {
-    val nTomb = tombstoneCount(spark, dir, "doc_id")
-    val comps = Seq("postings", "terms", "docs", "stats") ++
-      (if (StoreFs.exists(spark, s"$dir/positions")) Seq("positions")
-       else Nil)
-    val nLegs = liveLegs(spark, dir, comps)
-    val action = decide(nLegs, maxSegments, nTomb, maxTombstones)
-    action match {
-      case "vacuum" => TextAnalysis.vacuumTextIndex(spark, dir, buckets)
-      case "compact" => TextAnalysis.compactTextIndex(spark, dir, buckets)
-      case _ => ()
-    }
-    receipt(spark, dir, action, nTomb, nLegs)
-  }
+                        maxTombstones: Long = 0): DataFrame =
+    maintain(TextAnalysis.textStore(spark, dir, buckets), maxSegments,
+      maxTombstones)
 }

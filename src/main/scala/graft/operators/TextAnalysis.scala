@@ -785,331 +785,127 @@ object TextAnalysis {
     * The merged answer is bit-identical to a from-scratch build over the
     * surviving docs (gated: q131). Cost: one pruned read of the deleted
     * ids' `docs/` dbuckets plus one postings scan filtered to the delete
-    * set — paid at DELETE time, amortized across every later query.
-    *
-    * Ids not present in the index, or already tombstoned, are no-ops
-    * (the delete set is anti-joined against prior tombstones first), so
-    * a replayed delete batch cannot double-subtract.
+    * set. Absent or already-tombstoned ids are no-ops, so a replayed
+    * delete cannot double-subtract ([[Tombstones]], `drain = false`).
     */
   def deleteFromTextIndex(spark: org.apache.spark.sql.SparkSession,
                           dir: String, ids: DataFrame, idCol: String,
                           buckets: Int = 64): Unit =
-      StoreLock.withWriteLock(dir) {
-        Par.described(spark, s"text-index delete $dir") {
-    require(buckets >= 1, s"buckets must be >= 1: $buckets")
-    // ONE schema inference for the verb (r16 job diet): docs/ infers,
-    // its doc_id field types every other component read
-    val docsBase = StoreSegments.read(spark, dir, "docs", "dbucket")
-    val docId = docsBase.schema("doc_id")
-    val del0 = ids.select(col(idCol).as("doc_id")).distinct()
-    val del =
-      if (StoreFs.exists(spark, s"$dir/tombstones"))
-        del0.join(
-          spark.read.schema(Comp.tombstoneIdsOnly(docId))
-            .parquet(s"$dir/tombstones").select("doc_id").distinct(),
-          Seq("doc_id"), "left_anti")
-      else del0
-    // dbucket pruning: the delete set's own id hashes name the docs/
-    // partitions to read (≤ `buckets` values — a bounded driver list)
-    val dbuckets = del.select(
-        termBucket(col("doc_id").cast("string"), buckets).as("dbucket"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    if (dbuckets.isEmpty) return // nothing new to delete
-    val deleted = CacheScope.persisted(
-      docsBase
-        .filter(col("dbucket").isin(dbuckets: _*))
-        .join(broadcast(del), "doc_id")
-        .select(col("doc_id"), col("dl")))
-    if (deleted.isEmpty) return // ids absent from the index entirely
-    val delPost = CacheScope.persisted(
-      StoreSegments.read(spark, dir, "postings", "bucket",
-          schema = Some(Comp.postings(docId)))
-        .join(broadcast(deleted.select("doc_id")), "doc_id"))
-    // materialize delPost once (its broadcast side fully populates the
-    // `deleted` cache too), then overlap the three independent appends —
-    // stats, negative-df terms and the tombstone list share no output
-    // and read only the two caches (§2.6 overlap; r15)
-    delPost.count()
-    Par.run(
-      () => StoreSegments.appendPlain(spark, dir, "stats",
-        deleted.agg((lit(0L) - count(lit(1))).cast("long").as("n_docs"),
-            (lit(0L) - coalesce(sum("dl"), lit(0L))).cast("long")
-              .as("sum_dl"))
-          .coalesce(1), knownNonEmpty = true),
-      () => StoreSegments.append(spark, dir, "terms", "bucket",
-        delPost.groupBy("term", "bucket")
-          .agg((lit(0L) - count(lit(1))).cast("long").as("df"))
-          .repartition(math.min(buckets,
-            spark.sparkContext.defaultParallelism), col("bucket"))),
-      // tombstones carry the touched postings buckets (compaction's work
-      // list); a postings-less doc tombstones with bucket = -1
-      () => delPost.select(col("doc_id"), col("bucket").cast("int").as("bucket"))
-        .distinct()
-        .unionByName(deleted.select("doc_id")
-          .join(delPost.select("doc_id").distinct(), Seq("doc_id"),
-            "left_anti")
-          .withColumn("bucket", lit(-1)))
-        .write.mode("append").parquet(s"$dir/tombstones"))
-  }}
+    Tombstones.delete(textStore(spark, dir, buckets), ids, idCol,
+      drain = false)
 
-  /** FUSED [[deleteFromTextIndex]] + [[compactTextIndex]] — the CDC-sync
-    * fast path ([[IndexSync]] calls it when the churn guarantees the
-    * drain must follow the delete, i.e. whenever `changed` ids will be
-    * re-appended). Identical end state to running the two verbs back to
-    * back, with the intermediate tombstone component never materialized:
-    * the delete's three appends (negative stats row, negative df rows,
-    * tombstone list) and the compaction's tombstone read-back all
-    * disappear (r16 job-count diet; guide §2: fewer passes). The
-    * negative df rows the delete would have appended are instead unioned
-    * into the terms merge directly, and the negative stats row into the
-    * stats collapse — the same input data the two-verb composition feeds
-    * those rewrites, one materialization earlier.
+  /** FUSED [[deleteFromTextIndex]] + [[compactTextIndex]] (the CDC-sync
+    * path): the same end state with no tombstone ever written — the
+    * compaction's drain with the delete's negative rows netted in
+    * ([[Tombstones]], `drain = true`).
     */
   def deleteAndCompactTextIndex(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, ids: DataFrame, idCol: String,
                                 buckets: Int = 64): Unit =
-      StoreLock.withWriteLock(dir) {
-        Par.described(spark, s"text-index delete+compact $dir") {
-    require(buckets >= 1, s"buckets must be >= 1: $buckets")
-    // ONE schema inference for the fused verb (r16 job diet): docs/
-    // infers, its doc_id field types every other component read
-    val docsBase = StoreSegments.read(spark, dir, "docs", "dbucket")
-    val docId = docsBase.schema("doc_id")
-    val del0 = ids.select(col(idCol).as("doc_id")).distinct()
-    val oldTomb: Option[DataFrame] =
-      if (StoreFs.exists(spark, s"$dir/tombstones"))
-        Some(spark.read.schema(Comp.tombstones(docId))
-          .parquet(s"$dir/tombstones"))
-      else None
-    val oldIds = oldTomb.map(t =>
-      CacheScope.persisted(t.select("doc_id").distinct()))
-    // NEW deletions only (already-tombstoned ids drain via oldTomb; their
-    // negative stats/df contributions were written at THEIR delete time)
-    val delNew = oldIds.fold(del0)(t => del0.join(t, Seq("doc_id"),
-      "left_anti"))
-    val dbucketsNew = delNew.select(
-        termBucket(col("doc_id").cast("string"), buckets).as("dbucket"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    if (dbucketsNew.isEmpty && oldTomb.isEmpty) return // nothing to do
-    val deleted = CacheScope.persisted(
-      docsBase
-        .filter(col("dbucket").isin(dbucketsNew: _*))
-        .join(broadcast(delNew), "doc_id")
-        .select(col("doc_id"), col("dl")))
-    // ids absent from the index AND no prior tombstones: pure no-op (the
-    // two-verb composition would have early-returned the same way)
-    if (oldTomb.isEmpty && deleted.isEmpty) return
-    // one postings frame serves BOTH the delete probe and the compaction
-    // survivors below (was two reads — two schema inferences, two
-    // listings)
-    val postingsBase = StoreSegments.read(spark, dir, "postings", "bucket",
-      schema = Some(Comp.postings(docId)))
-    val delPost = CacheScope.persisted(
-      postingsBase
-        .join(broadcast(deleted.select("doc_id")), "doc_id"))
-    // the drain set: new deletions ∪ whatever was already tombstoned
-    val tombIds = CacheScope.persisted(
-      oldIds.fold(deleted.select("doc_id"))(
-        deleted.select("doc_id").unionByName(_)).distinct())
-    val affected = (delPost.select(col("bucket").cast("int"))
-      .distinct().collect().map(_.getInt(0)) ++
-      oldTomb.toSeq.flatMap(_.filter(col("bucket") >= 0)
-        .select(col("bucket").cast("int")).distinct()
-        .collect().map(_.getInt(0)))).distinct.toSeq
-    val affectedD = tombIds.select(
-        termBucket(col("doc_id").cast("string"), buckets).as("dbucket"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val affectedP: Seq[Int] =
-      if (StoreFs.exists(spark, s"$dir/positions")) affected else Seq.empty
-    val work = scala.collection.mutable.ArrayBuffer[() => Unit]()
-    if (affected.nonEmpty) {
-      work += (() => StoreSegments.compact(spark, dir, "postings", "bucket",
-        affected.map(_.toLong),
-        postingsBase
-          .filter(col("bucket").isin(affected: _*))
-          .join(tombIds, Seq("doc_id"), "left_anti")))
-      // the delete's negative df rows, merged in directly instead of
-      // appended first — byte-identical input to the two-verb merge
-      work += (() => StoreSegments.compact(spark, dir, "terms", "bucket",
-        affected.map(_.toLong),
-        StoreSegments.read(spark, dir, "terms", "bucket",
-            schema = Some(Comp.terms))
-          .filter(col("bucket").isin(affected: _*))
-          .select(col("term"), col("bucket"), col("df").cast("long").as("df"))
-          .unionByName(delPost.groupBy("term", "bucket")
-            .agg((lit(0L) - count(lit(1))).cast("long").as("df"))
-            .select(col("term"), col("bucket").cast("int").as("bucket"),
-              col("df")))
-          .groupBy("term", "bucket").agg(sum("df").cast("long").as("df"))
-          .filter(col("df") > 0)))
-    }
-    if (affectedP.nonEmpty) {
-      work += (() => StoreSegments.compact(spark, dir, "positions", "bucket",
-        affectedP.map(_.toLong),
-        StoreSegments.read(spark, dir, "positions", "bucket",
-            schema = Some(Comp.positions(docId)))
-          .filter(col("bucket").isin(affectedP: _*))
-          .join(tombIds, Seq("doc_id"), "left_anti")))
-    }
-    work += (() => StoreSegments.compact(spark, dir, "docs", "dbucket",
-      affectedD.map(_.toLong),
-      docsBase
-        .filter(col("dbucket").isin(affectedD: _*))
-        .join(tombIds, Seq("doc_id"), "left_anti")))
-    // stats: the usual collapse, with the delete's negative row unioned
-    // in directly (−n_deleted, −Σdl_deleted over the NEW deletions only)
-    work += (() => StoreSegments.replaceAll(spark, dir, "stats",
-      StoreSegments.read(spark, dir, "stats", "", schema = Some(Comp.stats))
-        .select(col("n_docs").cast("long").as("n_docs"),
-          col("sum_dl").cast("long").as("sum_dl"))
-        .unionByName(deleted.agg(
-          (lit(0L) - count(lit(1))).cast("long").as("n_docs"),
-          (lit(0L) - coalesce(sum("dl"), lit(0L))).cast("long")
-            .as("sum_dl")))
-        .agg(sum("n_docs").cast("long").as("n_docs"),
-          sum("sum_dl").cast("long").as("sum_dl"))
-        .coalesce(1)))
-    Par.run(work.toSeq: _*)
-    StoreFs.delete(spark, s"$dir/tombstones")
-  }}
+    Tombstones.delete(textStore(spark, dir, buckets), ids, idCol,
+      drain = true)
 
-  /** COMPACTION of a tombstoned [[buildTextIndex]] index: physically
-    * rewrite ONLY the postings/terms buckets (and docs/ dbuckets) the
-    * tombstones touch — merging segment df rows and dropping negative
-    * pairs as it goes — collapse the stats segments to one exact total
-    * row, and clear the tombstones. Untouched buckets' files are never
-    * read or rewritten (spec-asserted), so compaction cost tracks the
-    * DELETED data's bucket footprint, not the corpus. After compaction a
-    * search answers identically with zero tombstone overhead (gated:
-    * q132 hash-equals q131's oracle). Single-writer contract, same as
-    * build/append.
+  /** COMPACTION of a tombstoned [[buildTextIndex]] index: rewrite ONLY
+    * the buckets (and docs/ dbuckets) the tombstones touch — merging df
+    * rows, dropping non-positive ones — collapse stats to one exact row,
+    * and clear the tombstones; untouched buckets' files are never read
+    * (spec-asserted). Answers are unchanged (gated: q132 ≡ q131).
     */
   def compactTextIndex(spark: org.apache.spark.sql.SparkSession,
                        dir: String, buckets: Int = 64): Unit =
-      StoreLock.withWriteLock(dir) {
-    if (!StoreFs.exists(spark, s"$dir/tombstones")) ()
-    else compactTextIndexLocked(spark, dir, buckets)
-  }
+    Tombstones.compact(textStore(spark, dir, buckets))
 
-  /** VACUUM — the text index's MAJOR compaction
-    * ([[graft.operators.Similarity.vacuumIvfIndex]]'s contract): drain
-    * tombstones, then consolidate each segmented component back to one
-    * segment — postings/terms/positions/docs via
-    * [[StoreSegments.vacuum]], stats collapsed to its one exact total
-    * row (only when already segmented — a classic-layout store is left
-    * classic). The terms consolidation ALSO nets out any remaining
-    * negative delete rows (same `sum(df) > 0` merge the search performs
-    * per query — after vacuum no query pays it again). Reader-safe:
-    * every publish is a manifest flip.
+  /** VACUUM — the MAJOR compaction: drain tombstones, then consolidate
+    * each segmented component to one segment; terms net out negative
+    * delete rows (the search's `sum(df) > 0` merge), stats collapse to
+    * one total row. Reader-safe: every publish is a manifest flip.
     */
   def vacuumTextIndex(spark: org.apache.spark.sql.SparkSession,
-                      dir: String, buckets: Int = 64): Unit = {
-    compactTextIndex(spark, dir, buckets)
-    StoreLock.withWriteLock(dir) {
-      Par.described(spark, s"text-index vacuum $dir") {
-      // the five component consolidations are independent (disjoint
-      // directories, per-component manifests) — overlap them (§2.6; r15)
-      val work = scala.collection.mutable.ArrayBuffer[() => Unit]()
-      // terms carry mergeable (possibly negative) df rows — consolidate
-      // through the same merge the search runs, not a raw row copy
-      if (StoreSegments.entries(spark, dir, "terms").isDefined) {
-        work += (() => {
-          val merged = StoreSegments.read(spark, dir, "terms", "bucket",
-              schema = Some(Comp.terms))
-            .groupBy("term", "bucket").agg(sum("df").cast("long").as("df"))
-            .filter(col("df") > 0)
-            .repartition(math.min(buckets,
-              spark.sparkContext.defaultParallelism), col("bucket"))
-          StoreSegments.vacuumWith(spark, dir, "terms", "bucket", merged)
-        })
-      }
-      Seq("postings" -> "bucket", "positions" -> "bucket",
-          "docs" -> "dbucket").foreach { case (comp, key) =>
-        if (StoreFs.exists(spark, s"$dir/$comp"))
-          work += (() => StoreSegments.vacuum(spark, dir, comp, key))
-      }
-      if (StoreSegments.entries(spark, dir, "stats").isDefined)
-        work += (() => StoreSegments.replaceAll(spark, dir, "stats",
-          StoreSegments.read(spark, dir, "stats", "",
-              schema = Some(Comp.stats))
-            .agg(sum("n_docs").cast("long").as("n_docs"),
-              sum("sum_dl").cast("long").as("sum_dl"))
-            .coalesce(1)))
-      Par.run(work.toSeq: _*)
-      }
-    }
+                      dir: String, buckets: Int = 64): Unit =
+    Tombstones.vacuum(textStore(spark, dir, buckets))
+
+  /** The text index's [[Tombstones]] declaration (in the composite
+    * manifest's order). `positions/` shares the postings' buckets (both
+    * key [[termBucket]] over the same tokens); `docs/` is keyed by each
+    * id's own md5 bucket.
+    */
+  private[graft] val textIndex: Tombstones.Family = {
+    import Tombstones._
+    Family("text-index", idCol = "doc_id", keyCol = "bucket", model = Nil,
+      components = Seq(
+        Component("stats", "", CollapseTotals),
+        Component("terms", "bucket", SumKeepPositive("df")),
+        Component("postings", "bucket", DropById),
+        Component("docs", "dbucket", DropById, byId = true),
+        Component("positions", "bucket", DropById, optional = true)))
   }
 
-  private def compactTextIndexLocked(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String, buckets: Int): Unit =
-      Par.described(spark, s"text-index compact $dir") {
-    val tomb = spark.read.parquet(s"$dir/tombstones")
-    // the tombstone read's inference types every component read below
-    // (r16 job diet — was one footer-sampling job per component)
-    val docId = tomb.schema("doc_id")
-    val tombIds = CacheScope.persisted(tomb.select("doc_id").distinct())
-    val affected = tomb.filter(col("bucket") >= 0)
-      .select("bucket").distinct().collect().map(_.getInt(0)).toSeq
-    val affectedD = tombIds.select(
-        termBucket(col("doc_id").cast("string"), buckets).as("dbucket"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    // positions/ (when present) shares the postings' bucket space — a
-    // doc's position rows live in exactly the buckets its postings rows
-    // do (both key termBucket over the same non-empty tokens) — so the
-    // tombstones' postings-bucket list IS the positions work list
-    val affectedP: Seq[Int] =
-      if (StoreFs.exists(spark, s"$dir/positions")) affected else Seq.empty
-    // reader-safe publish per component (r14): survivors land in NEW
-    // immutable segments, each component flips its manifest atomically —
-    // no live bucket directory is swapped, so a concurrent search
-    // holding either manifest version sees a complete index
-    // the per-component rewrites are independent (per-component segment
-    // manifests, disjoint directories; the shared tombIds cache is fully
-    // materialized by the affectedD collect above) — overlap them, then
-    // clear the tombstones only after EVERY component has flipped
-    // (§2.6 overlap; r15)
-    val work = scala.collection.mutable.ArrayBuffer[() => Unit]()
-    if (affected.nonEmpty) {
-      work += (() => StoreSegments.compact(spark, dir, "postings", "bucket",
-        affected.map(_.toLong),
-        StoreSegments.read(spark, dir, "postings", "bucket",
-            schema = Some(Comp.postings(docId)))
-          .filter(col("bucket").isin(affected: _*))
-          .join(tombIds, Seq("doc_id"), "left_anti")))
-      work += (() => StoreSegments.compact(spark, dir, "terms", "bucket",
-        affected.map(_.toLong),
-        StoreSegments.read(spark, dir, "terms", "bucket",
-            schema = Some(Comp.terms))
-          .filter(col("bucket").isin(affected: _*))
-          .groupBy("term", "bucket").agg(sum("df").cast("long").as("df"))
-          .filter(col("df") > 0)))
+  /** A text index opened for one [[Tombstones]] verb. `docs/` is the
+    * verb's ONE schema inference (r16 job diet): its doc_id field types
+    * every other component and the tombstones.
+    */
+  private[graft] def textStore(sp: org.apache.spark.sql.SparkSession,
+                               root: String,
+                               buckets: Int): Tombstones.Store =
+      new Tombstones.Store {
+    require(buckets >= 1, s"buckets must be >= 1: $buckets")
+    val spark = sp
+    val dir = root
+    val family = textIndex
+    private lazy val docs = StoreSegments.read(spark, dir, "docs", "dbucket")
+    private lazy val docId = docs.schema("doc_id")
+    def tombSchema = Comp.tombstones(docId)
+    def read(name: String, key: String): DataFrame =
+      if (name == "docs") docs
+      else StoreSegments.read(spark, dir, name, key,
+        schema = Some(Comp.of(name, docId)))
+    override def parts: Int =
+      math.min(buckets, spark.sparkContext.defaultParallelism)
+    override def idKey(id: Column): Column =
+      termBucket(id.cast("string"), buckets)
+
+    /** `docs/` → (doc_id, dl) over the ids' own dbuckets, then the
+      * postings they touch; negatives: one (−n, −Σdl) stats row and a
+      * −count df row per touched (term, bucket). A postings-less doc
+      * tombstones with bucket = -1.
+      */
+    def resolve(ids: DataFrame, idCol: String,
+                exclude: Option[DataFrame]): Option[Tombstones.Deletion] = {
+      val del0 = ids.select(col(idCol).as("doc_id")).distinct()
+      val del = exclude.fold(del0)(del0.join(_, Seq("doc_id"), "left_anti"))
+      val dbuckets = del.select(idKey(col("doc_id")).as("dbucket"))
+        .distinct().collect().map(_.getInt(0)).toSeq
+      if (dbuckets.isEmpty) return None // nothing new to delete
+      val deleted = CacheScope.persisted(
+        docs.filter(col("dbucket").isin(dbuckets: _*))
+          .join(broadcast(del), "doc_id")
+          .select(col("doc_id"), col("dl")))
+      val delPost = CacheScope.persisted(
+        read("postings", "bucket")
+          .join(broadcast(deleted.select("doc_id")), "doc_id"))
+      Some(Tombstones.Deletion(
+        ids = deleted.select("doc_id"),
+        touched = delPost,
+        rows = delPost.select(col("doc_id"),
+            col("bucket").cast("int").as("bucket"))
+          .distinct()
+          .unionByName(deleted.select("doc_id")
+            .join(delPost.select("doc_id").distinct(), Seq("doc_id"),
+              "left_anti")
+            .withColumn("bucket", lit(-1))),
+        negatives = Map(
+          "stats" -> deleted.agg(
+            (lit(0L) - count(lit(1))).cast("long").as("n_docs"),
+            (lit(0L) - coalesce(sum("dl"), lit(0L))).cast("long")
+              .as("sum_dl")),
+          "terms" -> delPost.groupBy("term", "bucket")
+            .agg((lit(0L) - count(lit(1))).cast("long").as("df"))
+            .select(col("term"), col("bucket").cast("int").as("bucket"),
+              col("df"))),
+        // materialize delPost once (its broadcast side fully populates
+        // the `deleted` cache too) before the appends overlap
+        materialize = () => !deleted.isEmpty && { delPost.count(); true }))
     }
-    if (affectedP.nonEmpty) {
-      work += (() => StoreSegments.compact(spark, dir, "positions", "bucket",
-        affectedP.map(_.toLong),
-        StoreSegments.read(spark, dir, "positions", "bucket",
-            schema = Some(Comp.positions(docId)))
-          .filter(col("bucket").isin(affectedP: _*))
-          .join(tombIds, Seq("doc_id"), "left_anti")))
-    }
-    work += (() => StoreSegments.compact(spark, dir, "docs", "dbucket",
-      affectedD.map(_.toLong),
-      StoreSegments.read(spark, dir, "docs", "dbucket",
-          schema = Some(Comp.docs(docId)))
-        .filter(col("dbucket").isin(affectedD: _*))
-        .join(tombIds, Seq("doc_id"), "left_anti")))
-    // stats: collapse every segment row (build + appends + negative
-    // delete rows) to ONE exact total row — whole-component replace,
-    // same manifest flip
-    work += (() => StoreSegments.replaceAll(spark, dir, "stats",
-      StoreSegments.read(spark, dir, "stats", "", schema = Some(Comp.stats))
-        .agg(sum("n_docs").cast("long").as("n_docs"),
-          sum("sum_dl").cast("long").as("sum_dl"))
-        .coalesce(1)))
-    Par.run(work.toSeq: _*)
-    StoreFs.delete(spark, s"$dir/tombstones")
-    tombIds.unpersist()
   }
 
   /** The OPT-IN positional component (`positions/`): one row per
@@ -1160,12 +956,7 @@ object TextAnalysis {
                         buckets: Int = 64): DataFrame = {
     require(phrase.nonEmpty && phrase.forall(_.nonEmpty),
       s"phrase must be non-empty terms: $phrase")
-    val wanted = phrase.map { t =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map(b => f"$b%02x").mkString
-      (java.lang.Long.parseLong(hex.substring(0, 15), 16) % buckets).toInt
-    }.distinct
+    val wanted = phrase.map(termBucketOf(_, buckets)).distinct
     val pos0 = StoreSegments.read(spark, dir, "positions", "bucket")
       .filter(col("bucket").isin(wanted: _*))
       .filter(col("term").isin(phrase.distinct: _*))
@@ -1272,6 +1063,16 @@ object TextAnalysis {
     (conv(substring(md5(term), 1, 15), 16, 10).cast("long") % buckets)
       .cast("int")
 
+  /** Driver-side mirror of [[termBucket]] — the buckets a handful of query
+    * terms prune a search to.
+    */
+  private def termBucketOf(term: String, buckets: Int): Int = {
+    val hex = java.security.MessageDigest.getInstance("MD5")
+      .digest(term.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"$b%02x").mkString
+    (java.lang.Long.parseLong(hex.substring(0, 15), 16) % buckets).toInt
+  }
+
   /** KNOWN component schemas — r16 job diet: every schema-less
     * spark.read.parquet pays one footer-sampling driver JOB before any
     * data moves, and the store verbs/searches were paying it per
@@ -1299,8 +1100,14 @@ object TextAnalysis {
       StructField("bucket", IntegerType)))
     def tombstones(docId: StructField): StructType = StructType(Seq(
       docId.copy(name = "doc_id"), StructField("bucket", IntegerType)))
-    def tombstoneIdsOnly(docId: StructField): StructType =
-      StructType(Seq(docId.copy(name = "doc_id")))
+    /** `docId` is only forced for the components that carry it. */
+    def of(comp: String, docId: => StructField): StructType = comp match {
+      case "terms" => terms
+      case "stats" => stats
+      case "postings" => postings(docId)
+      case "docs" => docs(docId)
+      case "positions" => positions(docId)
+    }
   }
 
   /** Query a [[buildTextIndex]] index: same scoring as [[bm25Search]]
@@ -1363,13 +1170,7 @@ object TextAnalysis {
                                   requireAll: Boolean): DataFrame = {
     require(terms.nonEmpty, "need at least one query term")
     require(k >= 1, s"k must be >= 1: $k")
-    // driver-side mirror of [[termBucket]] (a handful of query terms)
-    val wanted = terms.map { t =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map(b => f"$b%02x").mkString
-      (java.lang.Long.parseLong(hex.substring(0, 15), 16) % buckets).toInt
-    }.distinct
+    val wanted = terms.map(termBucketOf(_, buckets)).distinct
     // merge segment rows: totals sum exactly (Longs), and avgdl derives
     // with the IDENTICAL `sum · 1.0 / count` expression shape bm25Search
     // uses, so a one-segment index and an appended one score the same
