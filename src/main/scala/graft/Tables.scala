@@ -40,8 +40,12 @@ object Tables {
     * metadata that cannot change. This is the catalog treatment a
     * production table gets from its metastore: METADATA only — never
     * rows, never query results — keyed on the resolved path, surviving
-    * session recycles exactly as a metastore would. Data/result caching
-    * across runs stays forbidden (and absent).
+    * session recycles exactly as a metastore would. Caching table data or
+    * query results across runs stays forbidden (and absent). The one
+    * other cross-run driver memo, [[graft.operators.StoreFs.frozen]], is
+    * a validated MODEL memo, not a result cache: it holds a store's
+    * bounded frozen codebooks and tombstone ids, checked against the
+    * files' identity on every use and re-read when they change.
     */
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()

@@ -515,17 +515,15 @@ object Similarity {
     * silently inside the append.
     *
     * The centroid read is the same bounded driver scalar as everywhere
-    * else (≤ `maxCentroids` rows by construction of the build).
+    * else (≤ `maxCentroids` rows by construction of the build), reused
+    * across appends while the file is unchanged ([[StoreFs.frozen]]).
     */
   def appendIvfIndex(spark: SparkSession, dir: String, batch: DataFrame,
                      idCol: String, vecCol: String): Unit =
       StoreLock.withWriteLock(dir) {
         Par.described(spark, s"ivf append $dir") {
-    val cents = spark.read.schema(Model.centroids)
-      .parquet(s"$dir/centroids")
-      .orderBy("cid").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-    require(cents.nonEmpty, s"no centroids at $dir/centroids — build first")
+    val cents = StoreFs.frozen(spark, "ivf centroids",
+      ivfIndex.model.map(c => s"$dir/$c"))(centroidRows(spark, dir))
     StoreSegments.append(spark, dir, "postings", "cell",
       ivfAssign(batch, idCol, vecCol, cents)
         .repartition(math.min(cents.size,
@@ -1852,33 +1850,46 @@ object Similarity {
         .parquet(s"$dir/postings"))
   }}
 
+  /** The IVF codebook sorted by `cid` — one bounded driver collect,
+    * sorted on the driver (an `orderBy` would add a sampling and a
+    * shuffle job for ≤ maxCentroids rows).
+    */
+  private def centroidRows(spark: SparkSession,
+                           dir: String): Seq[(Long, Array[Double])] = {
+    val cents = spark.read.schema(Model.centroids)
+      .parquet(s"$dir/centroids").collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1).toSeq
+    require(cents.nonEmpty, s"no centroids at $dir/centroids — build first")
+    cents
+  }
+
   /** Both frozen models + the build shape off disk — the bounded driver
-    * reads every IVF-PQ maintenance/search call starts with.
+    * reads every IVF-PQ maintenance/search call starts with, reused while
+    * the three model files are unchanged ([[StoreFs.frozen]]).
     */
   private def readIvfPqModel(spark: SparkSession, dir: String)
-      : (Seq[(Long, Array[Double])], Seq[Array[Double]], Int) = {
-    // three INDEPENDENT bounded driver reads (different component files)
-    // — overlapped (§2.6, r16): every IVF-PQ maintenance/search call pays
-    // this preamble, and sequentially it is three full job latencies of
-    // pure wait on kilobyte files
-    var cents: Seq[(Long, Array[Double])] = null
-    var full: Seq[Array[Double]] = null
-    var m = -1
-    Par.run(
-      () => cents = spark.read.schema(Model.centroids)
-        .parquet(s"$dir/centroids")
-        .orderBy("cid").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq,
-      () => full = spark.read.schema(Model.pqCodebook)
-        .parquet(s"$dir/pq_codebook")
-        .orderBy("j").collect()
-        .map(_.getSeq[Double](1).toArray).toSeq,
-      () => m = spark.read.schema(Model.pqMeta)
-        .parquet(s"$dir/pq_meta").select("m").head.getInt(0))
-    require(cents.nonEmpty, s"no centroids at $dir/centroids — build first")
-    require(full.nonEmpty, s"no PQ codebook at $dir/pq_codebook — build first")
-    (cents, full, m)
-  }
+      : (Seq[(Long, Array[Double])], Seq[Array[Double]], Int) =
+    StoreFs.frozen(spark, "ivfpq model",
+        ivfPqIndex.model.map(c => s"$dir/$c")) {
+      // three INDEPENDENT bounded driver reads (different component
+      // files) — overlapped (§2.6, r16): sequentially a cold read is
+      // three full job latencies of pure wait on kilobyte files
+      var cents: Seq[(Long, Array[Double])] = null
+      var full: Seq[Array[Double]] = null
+      var m = -1
+      Par.run(
+        () => cents = centroidRows(spark, dir),
+        () => full = spark.read.schema(Model.pqCodebook)
+          .parquet(s"$dir/pq_codebook").collect()
+          .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+          .sortBy(_._1).map(_._2).toSeq,
+        () => m = spark.read.schema(Model.pqMeta)
+          .parquet(s"$dir/pq_meta").select("m").head.getInt(0))
+      require(full.nonEmpty,
+        s"no PQ codebook at $dir/pq_codebook — build first")
+      (cents, full, m)
+    }
 
   /** INCREMENTAL IVF-PQ maintenance — [[appendIvfIndex]]'s contract for
     * the compressed store: assign the batch to the FROZEN IVF codebook,

@@ -121,6 +121,75 @@ private[graft] object StoreFs {
     if (f.exists(p)) f.listStatus(p).foreach(s => f.delete(s.getPath, true))
   }
 
+  /** The identity of every file under `paths`, from driver listings:
+    * (qualified path, length, mtime), sorted; an absent path contributes
+    * nothing. A rewrite through Spark always changes it — writers name
+    * each new file uniquely, and a delete drops its entries. A checksummed
+    * FS is listed raw, so a replaced `.crc` counts as a change too (its
+    * listing hides them). Plain `listStatus`: a located listing would
+    * stat each file's permissions, which the local FS does by forking
+    * `ls` per file and fails on a file a concurrent GC removed. A
+    * directory that vanishes while listed contributes nothing, like an
+    * absent one.
+    */
+  private def fileIdentity(spark: SparkSession,
+                           paths: Seq[String]): Seq[(String, Long, Long)] = {
+    def walk(f: org.apache.hadoop.fs.FileSystem,
+             p: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] =
+      (try f.listStatus(p).toSeq
+       catch { case _: java.io.IOException if !f.exists(p) => Nil })
+        .flatMap { s =>
+          if (s.isDirectory) walk(f, s.getPath)
+          else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
+        }
+    paths.flatMap { path =>
+      val (f, p) = fs(spark, path) match {
+        case (c: org.apache.hadoop.fs.ChecksumFileSystem, p) =>
+          (c.getRawFileSystem, p)
+        case other => other
+      }
+      if (f.exists(p)) walk(f, f.makeQualified(p)) else Nil
+    }.sorted
+  }
+
+  /** At most this many [[frozen]] values stay on the driver. */
+  private val FrozenEntries = 16
+
+  private val frozenMemo =
+    new java.util.LinkedHashMap[String, (Seq[(String, Long, Long)], Any)](
+        FrozenEntries, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          String, (Seq[(String, Long, Long)], Any)]): Boolean =
+        size() > FrozenEntries
+    }
+
+  /** A VALIDATED driver memo for a store's frozen components: `read`'s
+    * value (tagged `what`, one per call site and value type) is reused
+    * while every file under `paths` keeps its identity ([[fileIdentity]]:
+    * one listing, no Spark job); any change reads again. The identity is
+    * taken BEFORE the read, so a value read while a writer was mid-flight
+    * is paired with the older identity and re-read on the next call.
+    *
+    * Only values bounded by construction belong here: the IVF/IVF-PQ
+    * codebooks (≤ maxCentroids·dim and ksub·dim doubles) and tombstone id
+    * sets (drained by compaction) — never postings, terms, docs,
+    * positions, query inputs or results. Least-recently-used entries
+    * beyond [[FrozenEntries]] are dropped. A failed read memoizes nothing.
+    * A value is shared by every caller, so none may mutate it.
+    */
+  def frozen[T](spark: SparkSession, what: String,
+                paths: Seq[String])(read: => T): T = {
+    val key = (what +: paths).mkString("\n")
+    val id = fileIdentity(spark, paths)
+    frozenMemo.synchronized(Option(frozenMemo.get(key))) match {
+      case Some((`id`, v)) => v.asInstanceOf[T]
+      case _ =>
+        val v = read
+        frozenMemo.synchronized(frozenMemo.put(key, (id, v)))
+        v
+    }
+  }
+
   /** The SEARCH paths' tombstone read: distinct ids SNAPSHOTTED to the
     * driver (a LocalRelation), or None when the store carries none.
     * Tombstones are delete-batch-bounded by contract (compaction drains
@@ -133,32 +202,36 @@ private[graft] object StoreFs {
     * became physically unnecessary. Mutating verbs (delete/compact) do
     * NOT use this: they run under the store write lock, where vanishing
     * tombstones would be a real corruption to surface. A torn read is
-    * retried ([[retryTornReads]]), never taken for "no tombstones".
+    * retried ([[retryTornReads]]), never taken for "no tombstones"; the
+    * [[frozen]] listing runs inside the retry too.
     */
   def tombstoneIds(spark: SparkSession, path: String, idCol: String,
                    schema: Option[org.apache.spark.sql.types.StructType] = None,
                    pause: Int => Unit = retryPause)
       : Option[org.apache.spark.sql.DataFrame] =
     retryTornReads(pause) {
-      if (!exists(spark, path)) None
-      else try {
-        val ids = schema.fold(spark.read)(s => spark.read.schema(s))
-          .option("ignoreMissingFiles", "true").parquet(path)
-          .select(org.apache.spark.sql.functions.col(idCol).cast("long"))
-          .distinct()
-          .collect().map(_.getLong(0)).toSeq
-        if (ids.isEmpty) None
-        else {
-          val sp = spark
-          import sp.implicits._
-          Some(ids.toDF(idCol))
+      val ids = frozen(spark, s"tombstone ids $idCol", Seq(path)) {
+        if (!exists(spark, path)) Seq.empty[Long]
+        else try {
+          // deduplicated on the driver: the list is bounded, and a
+          // distinct() costs two more jobs under AQE
+          schema.fold(spark.read)(s => spark.read.schema(s))
+            .option("ignoreMissingFiles", "true").parquet(path)
+            .select(org.apache.spark.sql.functions.col(idCol).cast("long"))
+            .collect().map(_.getLong(0)).distinct.toSeq
+        } catch {
+          case e: org.apache.spark.sql.AnalysisException
+              if Seq("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+                .exists(c => String.valueOf(e.getErrorClass).contains(c) ||
+                  String.valueOf(e.getMessage).contains(c)) => Seq.empty[Long]
+          case e: Throwable if isMissingFileError(e) => Seq.empty[Long]
         }
-      } catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if Seq("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-              .exists(c => String.valueOf(e.getErrorClass).contains(c) ||
-                String.valueOf(e.getMessage).contains(c)) => None
-        case e: Throwable if isMissingFileError(e) => None
+      }
+      if (ids.isEmpty) None
+      else {
+        val sp = spark
+        import sp.implicits._
+        Some(ids.toDF(idCol))
       }
     }
 
