@@ -3172,7 +3172,7 @@ object SparkEntry {
     // DELETION from the persisted text index (the storage verb a crawl
     // pipeline needs — takedowns, dedup-loser purges): build even +
     // append odd + tombstone-delete doc_id % 7 == 3 (negative df/stats
-    // rows + anti-joined tombstones, no rewrite), then search. Must
+    // rows + filtered-out tombstones, no rewrite), then search. Must
     // hash-equal q88's from-scratch scoring over the SURVIVORS.
     "q131_text_index_delete" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
@@ -4245,9 +4245,9 @@ object SparkEntry {
     // CDC-DRIVEN index freshness (IndexSync): a text index built at
     // snapshot v1 follows the store to v3 through ONE sync — diff names
     // the churn, removed/changed ids leave as tombstones, the re-append
-    // of changed ids triggers the tombstone drain (the search anti-join
-    // is absolute on doc_id, so re-adding without draining would shadow
-    // the new postings — exercised here under the hash), added/changed
+    // of changed ids triggers the tombstone drain (the search's tombstone
+    // filter is absolute on doc_id, so re-adding without draining would
+    // shadow the new postings — exercised here under the hash), added/changed
     // content enters via the scoped reconstruction. The synced index
     // must answer the from-scratch BM25 oracle over the corpus
     // RECONSTRUCTED at v3 — rebuild-equivalence at churn cost. Driven
@@ -5594,7 +5594,7 @@ object SparkEntry {
     // q88's BM25 scoring recomputed from scratch over the SURVIVORS of
     // the delete (doc_id % 7 == 3 removed): the engine side answers from
     // build(even) + append(odd) + tombstone-delete — negative df/stats
-    // segment rows and the anti-joined tombstone set must reproduce this
+    // segment rows and the filtered-out tombstone set must reproduce this
     // exactly (and q132's post-compaction files must too)
     "q131_text_index_delete" ->
       """WITH d AS (SELECT * FROM documents WHERE doc_id % 7 <> 3),
@@ -5629,7 +5629,7 @@ object SparkEntry {
     // derives from the PRE-DELETE even corpus (the frozen model), only
     // corpus MEMBERSHIP (asg over `keep`) loses the deleted ids —
     // assignment is per-vector, so filtering before assignment equals
-    // the engine's anti-join after it
+    // the engine's tombstone filter after it
     "q133_ivf_delete" ->
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |corp AS (SELECT * FROM e WHERE vec_id % 2 = 0),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.operators.StoreFs
 import graft.plans.StoreVerb
 
 /** SQL-callable TABLE functions over the persisted index stores — the
@@ -125,7 +126,7 @@ object GraftTableFunctions {
       val k = int("graft_ivf_search", args(2))
       val nprobe = int("graft_ivf_search", args(3))
       graft.operators.Similarity
-        .searchIvfIndex(active, dir, active.read.parquet(queries),
+        .searchIvfIndex(active, dir, StoreFs.readParquet(active, queries),
           "vec_id", "embedding", k = k, nprobe = nprobe)
         .queryExecution.analyzed
     }),
@@ -140,7 +141,7 @@ object GraftTableFunctions {
       val k = int("graft_ivfpq_search", args(2))
       val nprobe = int("graft_ivfpq_search", args(3))
       graft.operators.Similarity
-        .searchIvfPqIndex(active, dir, active.read.parquet(queries),
+        .searchIvfPqIndex(active, dir, StoreFs.readParquet(active, queries),
           "vec_id", "embedding", k = k, nprobe = nprobe)
         .queryExecution.analyzed
     }),
@@ -153,7 +154,8 @@ object GraftTableFunctions {
           s"allowedView) got ${args.length} args")
       graft.operators.Similarity.searchIvfPqIndexFiltered(active,
           str("graft_ivfpq_filtered", args.head),
-          active.read.parquet(str("graft_ivfpq_filtered", args(1))),
+          StoreFs.readParquet(active,
+            str("graft_ivfpq_filtered", args(1))),
           "vec_id", "embedding",
           view("graft_ivfpq_filtered", args(4)),
           k = int("graft_ivfpq_filtered", args(2)),

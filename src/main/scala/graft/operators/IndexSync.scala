@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *  3. otherwise, if an id about to be (re-)appended is still TOMBSTONED —
   *     a re-birth (deleted in one version, re-added later — `added` in
   *     the diff) from an earlier sync — [[Tombstones.compact]] drains the
-  *     tombstones first. The search-time tombstone anti-join is absolute
+  *     tombstones first. The search-time tombstone filter is absolute
   *     on the id (`TextAnalysis.searchTextIndexImpl` — a tombstone
   *     shadows NEW postings too), so the drain is what makes re-adding an
   *     id sound; it rewrites only the tombstone-touched buckets/cells, so
@@ -267,15 +267,13 @@ object IndexSync {
         // pure-addition case, where a re-birth could still hit an old
         // tombstone (r15: skips the probe's two jobs on every
         // churn-with-changes sync)
-        val tombIdCol = store().family.idCol
         val shadowed = !compacted &&
           Par.described(spark, s"$verb: shadow probe") {
-            StoreFs
-              .tombstoneIds(spark, s"$indexDir/tombstones", tombIdCol)
-              .exists(t => !toAppend
-                .join(t.select(col(tombIdCol).as(idCol)), Seq(idCol),
-                  "left_semi")
-                .isEmpty)
+            val s = store()
+            val tomb = StoreFs.tombstoneIds(spark, s"$indexDir/tombstones",
+              s.family.idCol, s.tombSchema)
+            tomb.nonEmpty && !toAppend.filter(col(idCol).isin(tomb: _*))
+              .isEmpty
           }
         if (shadowed) {
           Tombstones.compact(store())

@@ -355,18 +355,9 @@ object Similarity {
     graft.functions.CosineSim.ensureRegistered(df.sparkSession)
     val cents = sampleCentroids(df, idCol, vecCol, centStep, maxCentroids)
     val assigned = ivfAssign(df, idCol, vecCol, cents)
-    val centDf = {
-      val sp = df.sparkSession
-      import sp.implicits._
-      cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv")
-    }
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-    val wProbe = Window.partitionBy("query_id").orderBy(col("pcos").desc, col("cid").asc)
-    val probes = q.crossJoin(broadcast(centDf))
-      .withColumn("pcos", cosineFast(col("qv"), col("cv")))
-      .withColumn("prk", row_number().over(wProbe))
-      .filter(col("prk") <= nprobe)
-      .select(col("query_id"), col("qv"), col("cid").as("cell"))
+    val probes = probeCells(q, cents, nprobe)
+      .select(col("query_id"), col("qv"), col("cell"))
     val wTop = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
     assigned.select(col("id").as("neighbor_id"), col("v"), col("cell"))
       .join(broadcast(probes), "cell")
@@ -404,9 +395,10 @@ object Similarity {
     * treatment for the vector stores: a schema-less spark.read.parquet
     * pays one footer-sampling driver JOB per call, and these layouts are
     * pinned by this object's writers (model files by `toDF` of typed
-    * tuples, tombstones by the delete's explicit casts). Postings stay
-    * inferred — their id column keeps the caller's type and the payload
-    * differs between the raw (vector) and PQ (code-word) stores.
+    * tuples, tombstones by the delete's explicit casts). The postings'
+    * data columns come from their footer — the id column keeps the
+    * caller's type and the payload differs between the raw (vector) and
+    * PQ (code-word) stores — and their `cell` partition is declared here.
     */
   private object Model {
     import org.apache.spark.sql.types._
@@ -423,6 +415,11 @@ object Similarity {
       StructField("dim", IntegerType)))
     val tombstones: StructType = StructType(Seq(
       StructField("id", LongType), StructField("cell", LongType)))
+    /** The postings' footer `data` columns plus the `cell` partition,
+      * typed as directory discovery types the cell ids.
+      */
+    def postings(data: StructType): StructType =
+      data.add(StructField("cell", IntegerType))
   }
 
   /** The vector stores' [[Tombstones]] declaration: postings keyed by
@@ -478,8 +475,10 @@ object Similarity {
     val cents = sampleCentroids(df, idCol, vecCol, centStep, maxCentroids)
     val sp = df.sparkSession
     import sp.implicits._
-    // a rebuild returns to the classic layout: no stale segment manifest
+    // a rebuild returns to the classic layout: no stale segment manifest,
+    // and no tombstones — they name ids of the store being replaced
     StoreSegments.reset(sp, dir, "postings")
+    StoreFs.delete(sp, s"$dir/tombstones")
     // both writes depend only on the driver-side codebook — independent
     // directories, overlap them (§2.6; r15)
     Par.run(
@@ -522,8 +521,7 @@ object Similarity {
                      idCol: String, vecCol: String): Unit =
       StoreLock.withWriteLock(dir) {
         Par.described(spark, s"ivf append $dir") {
-    val cents = StoreFs.frozen(spark, "ivf centroids",
-      ivfIndex.model.map(c => s"$dir/$c"))(centroidRows(spark, dir))
+    val cents = ivfCentroids(spark, dir)
     StoreSegments.append(spark, dir, "postings", "cell",
       ivfAssign(batch, idCol, vecCol, cents)
         .repartition(math.min(cents.size,
@@ -535,7 +533,7 @@ object Similarity {
     * the vector store (the reference's SDFS `delete`,
     * daemon/daemon.go:116-133): append the delete set as TOMBSTONES
     * (id, cell) — never a corpus rewrite — and [[searchIvfIndex]]
-    * anti-joins them, so a deleted vector stops matching immediately.
+    * filters them out, so a deleted vector stops matching immediately.
     * The cell rides along so [[compactIvfIndex]] knows exactly which
     * cell partitions to rewrite. Centroids are untouched: the codebook
     * is the frozen model (same argument as [[appendIvfIndex]]); enough
@@ -599,18 +597,14 @@ object Similarity {
     * recomputed in SQL).
     */
   def ivfIndexAudit(spark: SparkSession, dir: String): DataFrame = {
-    val tombIds = graft.operators.StoreFs
-      .tombstoneIds(spark, s"$dir/tombstones", "id",
-        schema = Some(Model.tombstones))
-      .getOrElse(spark.range(0).select(col("id")))
-    val nTomb = tombIds.count()
+    val tombIds = StoreFs.tombstoneIds(spark, s"$dir/tombstones", "id",
+      Model.tombstones)
     // postings feeds both the per-id inventory and the cell census of
     // the one returned plan — persist so the single audit action scans
     // the postings once (r15; release owned by the caller's clearCache /
     // withCaches scope, the CacheScope idiom)
-    val postings = CacheScope.persisted(
-      StoreSegments.read(spark, dir, "postings", "cell")
-        .join(broadcast(tombIds), Seq("id"), "left_anti"))
+    val postings = CacheScope.persisted(StoreFs.hideIds(
+      StoreSegments.read(spark, dir, "postings", "cell"), "id", tombIds))
     val cents = spark.read.schema(Model.centroidIdOnly)
       .parquet(s"$dir/centroids").select(col("cid"))
     val perId = postings.groupBy("id").agg(count(lit(1)).as("n"))
@@ -630,7 +624,7 @@ object Similarity {
     inv.crossJoin(nCents).crossJoin(cells)
       .select(col("n_vectors"), col("n_dup_ids"), col("n_centroids"),
         col("n_cells_used"), col("n_orphan_cells"),
-        lit(nTomb).cast("long").as("n_tombstones"))
+        lit(tombIds.size.toLong).as("n_tombstones"))
   }
 
   /** Query a [[buildIvfIndex]] index: same probe + rank semantics as
@@ -686,27 +680,14 @@ object Similarity {
                                  vecCol: String, allow: Option[DataFrame],
                                  k: Int, nprobe: Int): DataFrame = {
     graft.functions.CosineSim.ensureRegistered(spark)
-    val centDf = spark.read.schema(Model.centroids)
-      .parquet(s"$dir/centroids")
     val q = queries.select(col(idCol).as("query_id"),
       col(vecCol).cast("array<double>").as("qv"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("pcos").desc, col("cid").asc)
-    val probes = q.crossJoin(broadcast(centDf))
-      .withColumn("pcos", cosineFast(col("qv"), col("cv")))
-      .withColumn("prk", row_number().over(wProbe))
-      .filter(col("prk") <= nprobe)
-      .select(col("query_id"), col("qv"), col("cid").as("cell"))
-    val postings0 = StoreSegments.read(spark, dir, "postings", "cell")
-    // tombstoned vectors are invisible to search (broadcast anti-join —
+    val probes = probeCells(q, ivfCentroids(spark, dir), nprobe)
+      .select(col("query_id"), col("qv"), col("cell"))
+    // tombstoned vectors are invisible to search (livePostings' filter —
     // tombstones stay delete-batch-sized because compactIvfIndex drains
     // them into physical cell rewrites)
-    val postings =
-      StoreFs.tombstoneIds(spark, s"$dir/tombstones", "id",
-        schema = Some(Model.tombstones))
-        .map(t => postings0.join(broadcast(t), Seq("id"), "left_anti"))
-        .getOrElse(postings0)
-    val probed = postings
+    val probed = livePostings(spark, dir)
       .select(col("id").as("neighbor_id"), col("v"), col("cell"))
       .join(broadcast(probes), "cell")
     // eligibility AFTER the cell cut (semantics identical — both are
@@ -722,6 +703,41 @@ object Similarity {
       .filter(col("rk") <= k)
       .select(col("query_id"), col("neighbor_id"),
         round(col("cos"), 4).as("cos"))
+  }
+
+  /** A search's live postings of a vector store: [[StoreSegments.live]]
+    * with the `cell` partition declared ([[Model.postings]]) and the
+    * data columns typed by one footer.
+    */
+  private def livePostings(spark: SparkSession, dir: String): DataFrame =
+    StoreSegments.live(spark, dir, "postings", "cell", "id",
+      declare = Model.postings, tombSchema = _ => Model.tombstones)
+
+  /** The IVF codebook of the store at `dir`, reused while the file is
+    * unchanged ([[StoreFs.frozen]]).
+    */
+  private def ivfCentroids(spark: SparkSession,
+                           dir: String): Seq[(Long, Array[Double])] =
+    StoreFs.frozen(spark, "ivf centroids",
+      ivfIndex.model.map(c => s"$dir/$c"))(centroidRows(spark, dir))
+
+  /** Each query's `nprobe` best cells, picked in ONE projection over the
+    * codebook carried as a plan literal (≤ maxCentroids·dim doubles):
+    * every centroid's cosine, sorted by (cosine desc, cid asc) — the order
+    * a per-query probe window ranks by, nulls last — then cut and
+    * exploded. No broadcast of the codebook and no shuffle by query.
+    * `q` carries (query_id, qv); output: (query_id, qv, cell, cv).
+    */
+  private def probeCells(q: DataFrame, cents: Seq[(Long, Array[Double])],
+                         nprobe: Int): DataFrame = {
+    val book = typedLit(cents.map { case (cid, cv) => (cid, cv.toSeq) })
+    val ranked = sort_array(transform(book, c => struct(
+      cosineFast(col("qv"), c("_2")).as("pcos"), (-c("_1")).as("ncid"),
+      c("_1").as("cid"), c("_2").as("cv"))), asc = false)
+    q.select(col("query_id"), col("qv"),
+        explode(slice(ranked, 1, math.max(nprobe, 0))).as("p"))
+      .select(col("query_id"), col("qv"), col("p.cid").as("cell"),
+        col("p.cv").as("cv"))
   }
 
   /** Embedding OUTLIER report — the embedding-space QUALITY signal: a
@@ -1677,7 +1693,7 @@ object Similarity {
     val codes = withRes
       .select(col("id").as("neighbor_id"), col("cell"),
         pqCodeWord(col("r"), full, m).as("code_word"))
-    ivfPqScan(sp, codes, queries, idCol, vecCol, cents, full, k, nprobe, m)
+    ivfPqScan(codes, queries, idCol, vecCol, cents, full, k, nprobe, m)
   }
 
   /** Residuals of a corpus against a centroid codebook — one map-side
@@ -1729,25 +1745,16 @@ object Similarity {
     * the query RESIDUAL, and take the integer-ADC top-k over the probed
     * cells' codes. `codes` must carry (neighbor_id, cell, code_word).
     */
-  private def ivfPqScan(sp: SparkSession, codes: DataFrame,
-                        queries: DataFrame, idCol: String, vecCol: String,
+  private def ivfPqScan(codes: DataFrame, queries: DataFrame,
+                        idCol: String, vecCol: String,
                         cents: Seq[(Long, Array[Double])],
                         full: Seq[Array[Double]], k: Int, nprobe: Int,
                         m: Int, allow: Option[DataFrame] = None): DataFrame = {
-    val centDf = {
-      import sp.implicits._
-      cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv")
-    }
     val q = queries.select(col(idCol).as("query_id"),
       col(vecCol).cast("array<double>").as("qv"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("pcos").desc, col("cid").asc)
-    val probes = q.crossJoin(broadcast(centDf))
-      .withColumn("pcos", cosineFast(col("qv"), col("cv")))
-      .withColumn("prk", row_number().over(wProbe))
-      .filter(col("prk") <= nprobe)
+    val probes = probeCells(q, cents, nprobe)
       .withColumn("qr", zip_with(col("qv"), col("cv"), (x, c) => x - c))
-      .select(col("query_id"), col("cid").as("cell"),
+      .select(col("query_id"), col("cell"),
         pqLut(col("qr"), full, m).as("lut"))
     val wTop = Window.partitionBy("query_id")
       .orderBy(col("adc_micro").asc, col("neighbor_id").asc)
@@ -1829,8 +1836,10 @@ object Similarity {
     val dim = full.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     import sp.implicits._
-    // a rebuild returns to the classic layout: no stale segment manifest
+    // a rebuild returns to the classic layout: no stale segment manifest,
+    // and no tombstones — they name ids of the store being replaced
     StoreSegments.reset(sp, dir, "postings")
+    StoreFs.delete(sp, s"$dir/tombstones")
     // all four component writes depend only on the two driver-side
     // codebooks — independent directories, overlap them (§2.6; r15)
     Par.run(
@@ -1921,7 +1930,7 @@ object Similarity {
     * [[Tombstones]] verb as [[deleteFromIvfIndex]]: [[ivfPqIndex]] shares
     * [[ivfIndex]]'s component table, and the lifecycle only touches
     * (id, cell), never the payload column. Tombstones append (cost ∝
-    * delete set) and the searches anti-join them; both codebooks stay
+    * delete set) and the searches filter them out; both codebooks stay
     * frozen. Gated: q205 (≡ a from-scratch build over the survivors).
     */
   def deleteFromIvfPqIndex(spark: SparkSession, dir: String,
@@ -1941,7 +1950,7 @@ object Similarity {
     * 4-byte code file — the broadcast probe join's cell keys prune the
     * partitioned read to `nprobe` cells, and what those cells' files
     * yield per candidate is 16 bytes, not a vector. Tombstoned ids
-    * ([[deleteFromIvfIndex]] — shared layout) are anti-joined out exactly
+    * ([[deleteFromIvfIndex]] — shared layout) are filtered out exactly
     * as [[searchIvfIndex]] does.
     */
   def searchIvfPqIndex(spark: SparkSession, dir: String, queries: DataFrame,
@@ -1955,22 +1964,10 @@ object Similarity {
                                    k: Int, nprobe: Int): DataFrame = {
     graft.functions.CosineSim.ensureRegistered(spark)
     graft.functions.GraftExtensions.ensureRegistered(spark, "graft_matvec_dots")
-    // the model preamble and the tombstone snapshot are independent
-    // bounded driver reads — overlapped (§2.6, r16)
-    var model: (Seq[(Long, Array[Double])], Seq[Array[Double]], Int) = null
-    var tomb: Option[DataFrame] = None
-    Par.run(
-      () => model = readIvfPqModel(spark, dir),
-      () => tomb = StoreFs.tombstoneIds(spark, s"$dir/tombstones", "id",
-        schema = Some(Model.tombstones)))
-    val (cents, full, m) = model
-    val postings0 = StoreSegments.read(spark, dir, "postings", "cell")
-    val postings =
-      tomb.map(t => postings0.join(broadcast(t), Seq("id"), "left_anti"))
-        .getOrElse(postings0)
-    val codes = postings.select(col("id").as("neighbor_id"),
+    val (cents, full, m) = readIvfPqModel(spark, dir)
+    val codes = livePostings(spark, dir).select(col("id").as("neighbor_id"),
       col("cell").cast("long").as("cell"), col("code_word"))
-    ivfPqScan(spark, codes, queries, idCol, vecCol, cents, full, k, nprobe, m,
+    ivfPqScan(codes, queries, idCol, vecCol, cents, full, k, nprobe, m,
       allow)
   }
 
@@ -2073,10 +2070,10 @@ object Similarity {
   /** [[searchIvfIndexFiltered]] for the compressed store: the eligible-id
     * semi-join applied to the probed-cell 4-byte code candidates before
     * the ADC rank window — same pre-rank semantics (k survivors are k
-    * ELIGIBLE survivors), same tombstone anti-join, ~1/16th the scan
+    * ELIGIBLE survivors), same tombstone filter, ~1/16th the scan
     * bytes. The eligibility join carries NO broadcast hint (the allowed
-    * set is unbounded by contract — AQE sizes it); tombstones stay
-    * broadcast (bounded by compaction cadence).
+    * set is unbounded by contract — AQE sizes it); tombstones stay a
+    * driver-constant filter (bounded by compaction cadence).
     */
   def searchIvfPqIndexFiltered(spark: SparkSession, dir: String,
                                queries: DataFrame, idCol: String,

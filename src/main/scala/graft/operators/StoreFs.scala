@@ -171,8 +171,9 @@ private[graft] object StoreFs {
     * is paired with the older identity and re-read on the next call.
     *
     * Only values bounded by construction belong here: the IVF/IVF-PQ
-    * codebooks (≤ maxCentroids·dim and ksub·dim doubles) and tombstone id
-    * sets (drained by compaction) — never postings, terms, docs,
+    * codebooks (≤ maxCentroids·dim and ksub·dim doubles), tombstone id
+    * sets (drained by compaction) and the text index's corpus totals
+    * (`n_docs`, `sum_dl`: two Longs) — never postings, terms, docs,
     * positions, query inputs or results. Least-recently-used entries
     * beyond [[FrozenEntries]] are dropped. A failed read memoizes nothing.
     * A value is shared by every caller, so none may mutate it.
@@ -190,50 +191,99 @@ private[graft] object StoreFs {
     }
   }
 
-  /** The SEARCH paths' tombstone read: distinct ids SNAPSHOTTED to the
-    * driver (a LocalRelation), or None when the store carries none.
-    * Tombstones are delete-batch-bounded by contract (compaction drains
-    * them) and every search already broadcasts them — the eager snapshot
-    * costs what the broadcast would, and buys reader safety against a
-    * concurrent compaction CLEARING the files: once captured, no plan
-    * references tombstone files at execution time, and a dir that
-    * vanishes or empties mid-capture resolves to None — which is exactly
+  /** A store's tombstoned ids, SNAPSHOTTED to the driver: deduplicated
+    * Longs, empty when the store carries none. Tombstones are
+    * delete-batch-bounded by contract (compaction drains them), so the
+    * snapshot is a bounded driver value, and it buys reader safety
+    * against a concurrent compaction CLEARING the files: once captured,
+    * no plan references tombstone files at execution time, and a dir that
+    * vanishes or empties mid-capture resolves to no ids — which is exactly
     * the correct view, because tombstones only disappear when their rows
     * became physically unnecessary. Mutating verbs (delete/compact) do
     * NOT use this: they run under the store write lock, where vanishing
     * tombstones would be a real corruption to surface. A torn read is
     * retried ([[retryTornReads]]), never taken for "no tombstones"; the
-    * [[frozen]] listing runs inside the retry too.
+    * [[frozen]] listing runs inside the retry too. `schema` is the
+    * tombstone layout the family declares, so a cold read infers nothing.
     */
   def tombstoneIds(spark: SparkSession, path: String, idCol: String,
-                   schema: Option[org.apache.spark.sql.types.StructType] = None,
-                   pause: Int => Unit = retryPause)
-      : Option[org.apache.spark.sql.DataFrame] =
+                   schema: org.apache.spark.sql.types.StructType,
+                   pause: Int => Unit = retryPause): Seq[Long] =
     retryTornReads(pause) {
-      val ids = frozen(spark, s"tombstone ids $idCol", Seq(path)) {
+      frozen(spark, s"tombstone ids $idCol", Seq(path)) {
         if (!exists(spark, path)) Seq.empty[Long]
         else try {
           // deduplicated on the driver: the list is bounded, and a
           // distinct() costs two more jobs under AQE
-          schema.fold(spark.read)(s => spark.read.schema(s))
+          spark.read.schema(schema)
             .option("ignoreMissingFiles", "true").parquet(path)
             .select(org.apache.spark.sql.functions.col(idCol).cast("long"))
             .collect().map(_.getLong(0)).distinct.toSeq
         } catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if Seq("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-                .exists(c => String.valueOf(e.getErrorClass).contains(c) ||
-                  String.valueOf(e.getMessage).contains(c)) => Seq.empty[Long]
           case e: Throwable if isMissingFileError(e) => Seq.empty[Long]
         }
       }
-      if (ids.isEmpty) None
-      else {
-        val sp = spark
-        import sp.implicits._
-        Some(ids.toDF(idCol))
-      }
     }
+
+  /** `df` without the rows whose `idCol` is one of `ids`: a
+    * driver-constant `NOT IN` filter below the scan (an `InSet` past the
+    * optimizer's conversion threshold) instead of a broadcast anti-join,
+    * so it costs no job. It keeps the anti-join's semantics: ids compare
+    * under the same type coercion as the join's equality, and a row with
+    * a null id is kept (a null never equals a tombstone). The plan carries
+    * the ids — 8 B each per task — which compaction keeps bounded.
+    */
+  def hideIds(df: org.apache.spark.sql.DataFrame, idCol: String,
+              ids: Seq[Long]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, not}
+    if (ids.isEmpty) df
+    else df.filter(col(idCol).isNull || not(col(idCol).isin(ids: _*)))
+  }
+
+  /** The Spark schema of the parquet data under `path`, from the footer
+    * of its first data file in sorted listing order — the footer reading
+    * and conversion Spark's schema inference does, without the job that
+    * inference submits even for one file. The walk skips hidden entries
+    * (`_SUCCESS`, `.crc`, `_metadata`, as Spark's listing does) and
+    * subdirectories named in `skip`; None when it finds no data file.
+    */
+  def footerSchema(spark: SparkSession, path: String,
+                   skip: Set[String] = Set.empty)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.hadoop.fs.FileStatus
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val (f, p) = fs(spark, path)
+    def first(s: FileStatus): Option[FileStatus] =
+      if (!s.isDirectory) Some(s)
+      else f.listStatus(s.getPath).toSeq
+        .filterNot { c =>
+          val n = c.getPath.getName
+          n.startsWith("_") || n.startsWith(".") ||
+            (c.isDirectory && skip.contains(n))
+        }
+        .sortBy(_.getPath.getName).iterator.flatMap(first).nextOption()
+    first(f.getFileStatus(p)).map { file =>
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        spark.sparkContext.hadoopConfiguration, file,
+        org.apache.parquet.format.converter.ParquetMetadataConverter
+          .SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(file.getPath, footer),
+        new ParquetToSparkSchemaConverter(
+          org.apache.spark.sql.internal.SQLConf.get))
+    }
+  }
+
+  /** `spark.read.parquet(path)` typed by [[footerSchema]]: no inference
+    * job. Partition columns of a `key=value` tree are still discovered
+    * from the directory names, as inference does.
+    */
+  def readParquet(spark: SparkSession,
+                  path: String): org.apache.spark.sql.DataFrame =
+    spark.read.schema(footerSchema(spark, path).getOrElse(
+      throw new IllegalArgumentException(s"no parquet data file under $path")))
+      .parquet(path)
 
   /** Whether a failure is a vanished-file race (a maintenance verb's GC
     * beat a reader's plan construction) rather than real corruption.
@@ -359,47 +409,93 @@ private[graft] object StoreSegments {
     * exists; otherwise the union of the manifest's directories with each
     * one's superseded keys filtered out (partition-pruned, not scanned).
     *
-    * Plan construction retries torn reads ([[StoreFs.retryTornReads]]):
-    * parquet SCHEMA INFERENCE samples file footers below the
-    * partition-pruning radar, so a reader resolving a manifest just as a
-    * maintenance verb GCs the PREVIOUS cycle's superseded files can lose a
-    * footer mid-inference, and a manifest read during its flip can meet
-    * the other generation's `.crc`. Re-resolving the (already-flipped)
-    * manifest sees only live files — one retry settles it; the bound
-    * exists so real corruption still surfaces.
+    * Plan construction retries torn reads ([[StoreFs.retryTornReads]]): a
+    * reader resolving a manifest just as a maintenance verb GCs the
+    * PREVIOUS cycle's superseded files can lose the footer it types the
+    * read with, and a manifest read during its flip can meet the other
+    * generation's `.crc`. Re-resolving the (already-flipped) manifest
+    * sees only live files — one retry settles it; the bound exists so
+    * real corruption still surfaces.
     */
   def read(spark: SparkSession, dir: String, comp: String,
            keyCol: String,
            schema: Option[org.apache.spark.sql.types.StructType] = None,
            pause: Int => Unit = StoreFs.retryPause): DataFrame =
-    StoreFs.retryTornReads(pause)(readOnce(spark, dir, comp, keyCol, schema))
+    StoreFs.retryTornReads(pause) {
+      val live = liveEntries(spark, dir, comp)
+      scan(spark, dir, keyCol, live,
+        schema.getOrElse(dataSchema(spark, dir, keyCol, live)))
+    }
 
-  private def readOnce(spark: SparkSession, dir: String, comp: String,
-                       keyCol: String,
-                       known: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+  /** A SEARCH's view of one component, the resolution every store search
+    * shares: the live segments under the declared layout
+    * `declare(footer schema)` — the footer types the caller's id column —
+    * with the store's tombstoned ids hidden below the scan
+    * ([[StoreFs.hideIds]]; `tombSchema(layout)` types the tombstone
+    * read). Analysis runs no Spark job once the ids are memoized.
+    */
+  def live(spark: SparkSession, dir: String, comp: String, keyCol: String,
+           idCol: String,
+           declare: org.apache.spark.sql.types.StructType =>
+             org.apache.spark.sql.types.StructType,
+           tombSchema: org.apache.spark.sql.types.StructType =>
+             org.apache.spark.sql.types.StructType): DataFrame = {
+    val rows = StoreFs.retryTornReads() {
+      val live = liveEntries(spark, dir, comp)
+      scan(spark, dir, keyCol, live,
+        declare(dataSchema(spark, dir, keyCol, live)))
+    }
+    StoreFs.hideIds(rows, idCol, StoreFs.tombstoneIds(spark,
+      s"$dir/tombstones", idCol, tombSchema(rows.schema)))
+  }
+
+  /** Every path a component's live view depends on: the base directory,
+    * its segments and its manifest — what a [[StoreFs.frozen]] value
+    * derived from the component is validated against.
+    */
+  def paths(dir: String, comp: String): Seq[String] =
+    Seq(s"$dir/$comp", s"$dir/${comp}_seg", manifestPath(dir, comp))
+
+  /** The directories a read unions: the manifest's live entries, or the
+    * classic base directory when there is no manifest.
+    */
+  private def liveEntries(spark: SparkSession, dir: String,
+                          comp: String): Seq[Entry] =
     entries(spark, dir, comp) match {
-      case None =>
-        known.fold(spark.read)(s => spark.read.schema(s))
-          .parquet(s"$dir/$comp")
+      case None => Seq(Entry(comp, Nil))
       case Some(es) =>
         val live = es.filterNot(_.dropAll)
         require(live.nonEmpty, s"empty segment manifest for $dir/$comp")
-        // ONE schema inference for the whole union (r16): every segment
-        // of a component shares its schema, but a plain per-segment
-        // spark.read.parquet pays one footer-sampling JOB per directory —
-        // N live legs cost N driver jobs before any data moves. A
-        // caller-supplied schema skips even the first; otherwise the
-        // first leg infers and the rest reuse it.
-        var schema: org.apache.spark.sql.types.StructType = known.orNull
-        live.map { e =>
-          val reader =
-            if (schema == null) spark.read else spark.read.schema(schema)
-          val df = reader.parquet(s"$dir/${e.rel}")
-          if (schema == null) schema = df.schema
-          if (e.excluded.isEmpty) df
-          else df.filter(not(col(keyCol).isin(e.excluded: _*)))
-        }.reduce(_ unionByName _)
+        live
     }
+
+  /** The component's DATA schema (partition columns excluded) from the
+    * footer of its first live data file, superseded keys skipped
+    * ([[StoreFs.footerSchema]]); every segment shares it.
+    */
+  private def dataSchema(spark: SparkSession, dir: String, keyCol: String,
+                         live: Seq[Entry]): org.apache.spark.sql.types.StructType =
+    live.iterator.flatMap(e => StoreFs.footerSchema(spark, s"$dir/${e.rel}",
+        e.excluded.map(k => s"$keyCol=$k").toSet))
+      .nextOption()
+      .getOrElse(throw new IllegalStateException(
+        s"no live data file under $dir in ${live.map(_.rel).mkString(", ")}"))
+
+  /** The union of the live directories under `schema`, each one's
+    * superseded keys filtered out. A data-only schema leaves the partition
+    * column to discovery on the first leg, whose full schema the rest reuse.
+    */
+  private def scan(spark: SparkSession, dir: String, keyCol: String,
+                   live: Seq[Entry],
+                   schema0: org.apache.spark.sql.types.StructType): DataFrame = {
+    var schema = schema0
+    live.map { e =>
+      val df = spark.read.schema(schema).parquet(s"$dir/${e.rel}")
+      schema = df.schema
+      if (e.excluded.isEmpty) df
+      else df.filter(not(col(keyCol).isin(e.excluded: _*)))
+    }.reduce(_ unionByName _)
+  }
 
   /** Reset to the classic layout — builds call this before their
     * overwrite so a rebuilt store carries no stale manifest/segments.
@@ -571,11 +667,11 @@ private[graft] object StoreSegments {
         gcSuperseded(spark, dir, comp, keyCol) // clear prior grace debt
         entries(spark, dir, comp).foreach { es =>
           val rows =
-            live.getOrElse(readOnce(spark, dir, comp, keyCol, None))
+            live.getOrElse(read(spark, dir, comp, keyCol))
           val seg = newSegment(spark, dir, comp, keyCol, rows)
           // same refusal as [[compact]]: consolidating to ZERO live rows
           // would publish an all-superseded manifest no read can satisfy
-          // (require(live.nonEmpty) in readOnce) — fail loudly BEFORE the
+          // (require(live.nonEmpty) in liveEntries) — fail loudly BEFORE the
           // flip, store unchanged
           require(seg.nonEmpty,
             s"refusing to vacuum $dir/$comp: no live rows would remain — " +

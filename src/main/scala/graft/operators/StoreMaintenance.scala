@@ -53,8 +53,8 @@ object StoreMaintenance {
   private def maintain(store: Tombstones.Store, maxSegments: Int,
                        maxTombstones: Long): DataFrame = {
     val (spark, dir, f) = (store.spark, store.dir, store.family)
-    val nTomb = StoreFs.tombstoneIds(spark, s"$dir/tombstones", f.idCol)
-      .map(_.count()).getOrElse(0L)
+    val nTomb = StoreFs.tombstoneIds(spark, s"$dir/tombstones", f.idCol,
+      store.tombSchema).size.toLong
     val nLegs = f.components.map { c =>
       StoreSegments.entries(spark, dir, c.name)
         .map(_.count(!_.dropAll).toLong).getOrElse(1L)

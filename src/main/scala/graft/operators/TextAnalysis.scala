@@ -679,9 +679,11 @@ object TextAnalysis {
         .repartition(math.min(buckets,
           df.sparkSession.sparkContext.defaultParallelism),
           col("bucket")))
-    // a rebuild returns to the classic layout: no stale segment manifests
+    // a rebuild returns to the classic layout: no stale segment manifests,
+    // and no tombstones — they name ids of the store being replaced
     Seq("postings", "terms", "stats", "docs")
       .foreach(c => StoreSegments.reset(df.sparkSession, dir, c))
+    StoreFs.delete(df.sparkSession, s"$dir/tombstones")
     // materialize the shared caches ONCE (computing postings evaluates dl
     // too), then overlap the four component writes — they are independent
     // (different directories) and each now reads the cache, so the wall
@@ -778,9 +780,9 @@ object TextAnalysis {
     *    unchanged;
     *  - NEGATIVE df rows per (term, bucket) touched by the deleted docs —
     *    search's per-term df sum absorbs them the same way;
-    *  - the tombstone ids themselves, which [[searchTextIndex]]
-    *    anti-joins (broadcast — tombstones stay small because
-    *    [[compactTextIndex]] exists to drain them).
+    *  - the tombstone ids themselves, which [[searchTextIndex]] hides
+    *    with a driver-constant filter ([[StoreFs.hideIds]] — tombstones
+    *    stay small because [[compactTextIndex]] exists to drain them).
     *
     * The merged answer is bit-identical to a from-scratch build over the
     * surviving docs (gated: q131). Cost: one pruned read of the deleted
@@ -957,13 +959,9 @@ object TextAnalysis {
     require(phrase.nonEmpty && phrase.forall(_.nonEmpty),
       s"phrase must be non-empty terms: $phrase")
     val wanted = phrase.map(termBucketOf(_, buckets)).distinct
-    val pos0 = StoreSegments.read(spark, dir, "positions", "bucket")
+    val pos = liveRows(spark, dir, "positions")
       .filter(col("bucket").isin(wanted: _*))
       .filter(col("term").isin(phrase.distinct: _*))
-    val pos =
-      StoreFs.tombstoneIds(spark, s"$dir/tombstones", "doc_id")
-        .map(t => pos0.join(broadcast(t), Seq("doc_id"), "left_anti"))
-        .getOrElse(pos0)
     val slots = phrase.zipWithIndex.map { case (t, i) =>
       pos.filter(col("term") === t)
         .select(col("doc_id"),
@@ -1004,27 +1002,22 @@ object TextAnalysis {
     */
   def textIndexAudit(spark: org.apache.spark.sql.SparkSession,
                      dir: String): DataFrame = {
-    val tombIds =
-      StoreFs.tombstoneIds(spark, s"$dir/tombstones", "doc_id")
-        .getOrElse(spark.emptyDataFrame
-          .withColumn("doc_id", lit(null).cast("long")).limit(0))
-    val nTomb = tombIds.count()
-    // ONE schema inference for the audit (r16 job diet): docs/ infers,
-    // its doc_id field types the postings read; terms/stats are static
+    // docs/ is typed by its footer; its doc_id field types the postings
+    // and tombstone reads; terms/stats are static
     val docsBase = StoreSegments.read(spark, dir, "docs", "dbucket")
     val docId = docsBase.schema("doc_id")
+    val tombIds = StoreFs.tombstoneIds(spark, s"$dir/tombstones", "doc_id",
+      Comp.tombstones(docId))
     // the postings and docs subtrees each feed TWO branches of the one
     // returned plan (df inventory + orphan check resp. live totals +
     // orphan check) — persist so the single audit action scans each
     // component once, not twice (r15; the CacheScope idiom: the caller's
     // clearCache / withCaches scope owns the release)
-    val postings = CacheScope.persisted(
+    val postings = CacheScope.persisted(StoreFs.hideIds(
       StoreSegments.read(spark, dir, "postings", "bucket",
-          schema = Some(Comp.postings(docId)))
-        .join(broadcast(tombIds), Seq("doc_id"), "left_anti"))
+        schema = Some(Comp.postings(docId))), "doc_id", tombIds))
     val docs = CacheScope.persisted(
-      docsBase
-        .join(broadcast(tombIds), Seq("doc_id"), "left_anti"))
+      StoreFs.hideIds(docsBase, "doc_id", tombIds))
     val dfStored = StoreSegments.read(spark, dir, "terms", "bucket",
         schema = Some(Comp.terms))
       .groupBy("term").agg(sum("df").cast("long").as("df_stored"))
@@ -1055,7 +1048,7 @@ object TextAnalysis {
         (col("stats_docs") === col("n_docs")).as("stats_docs_match"),
         (col("stats_dl") === col("sum_dl")).as("stats_dl_match"),
         col("n_orphan_postings"),
-        lit(nTomb).cast("long").as("n_tombstones"))
+        lit(tombIds.size.toLong).as("n_tombstones"))
   }
 
   /** The md5 term bucket shared by build and search — the pruning key. */
@@ -1171,46 +1164,38 @@ object TextAnalysis {
     require(terms.nonEmpty, "need at least one query term")
     require(k >= 1, s"k must be >= 1: $k")
     val wanted = terms.map(termBucketOf(_, buckets)).distinct
-    // merge segment rows: totals sum exactly (Longs), and avgdl derives
-    // with the IDENTICAL `sum · 1.0 / count` expression shape bm25Search
-    // uses, so a one-segment index and an appended one score the same
-    val stats = StoreSegments.read(spark, dir, "stats", "",
-        schema = Some(Comp.stats))
-      .agg(sum("n_docs").cast("long").as("n_docs"),
-        sum("sum_dl").cast("long").as("sum_dl"))
-      .withColumn("avgdl", col("sum_dl") * lit(1.0) / col("n_docs"))
+    // the corpus totals enter the plan as literals; avgdl derives with the
+    // IDENTICAL `sum · 1.0 / count` expression shape bm25Search uses, so a
+    // one-segment index and an appended one score the same
+    val (nDocs, sumDl) = corpusTotals(spark, dir)
+    val avgdl = sumDl * lit(1.0) / nDocs
     val dfreq = StoreSegments.read(spark, dir, "terms", "bucket",
         schema = Some(Comp.terms))
       .filter(col("bucket").isin(wanted: _*))
       .filter(col("term").isin(terms: _*))
       .groupBy("term").agg(sum("df").cast("long").as("df"))
-    val qt0 = StoreSegments.read(spark, dir, "postings", "bucket")
+    // tombstoned docs are invisible to scoring (liveRows' driver-constant
+    // filter — tombstones stay delete-batch-sized because compactTextIndex
+    // drains them); df and the totals need nothing here, their segment
+    // sums already absorb the delete's negative rows
+    val qt1 = liveRows(spark, dir, "postings")
       .filter(col("bucket").isin(wanted: _*))
       .filter(col("term").isin(terms: _*))
-    // tombstoned docs are invisible to scoring (broadcast anti-join —
-    // tombstones stay delete-batch-sized because compactTextIndex drains
-    // them); df and stats need nothing here, their segment sums already
-    // absorb the delete's negative rows
-    val qt1 =
-      StoreFs.tombstoneIds(spark, s"$dir/tombstones", "doc_id")
-        .map(t => qt0.join(broadcast(t), Seq("doc_id"), "left_anti"))
-        .getOrElse(qt0)
     // eligibility BEFORE scoring/rank (filtered-retrieval semantics) —
     // one semi-join with NO broadcast hint (the allowed set is
     // caller-supplied and unbounded; AQE broadcasts a small one and
-    // shuffle-semi-joins a huge one); df/stats above stay global by design
+    // shuffle-semi-joins a huge one); df and the totals stay global
     val qt = allowed match {
       case Some(a) => qt1.join(
         a.select(col(a.columns.head).as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi")
       case None => qt1
     }
-    val idf = log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))
+    val idf = log((nDocs - col("df") + lit(0.5)) / (col("df") + lit(0.5))
       + lit(1.0))
     val tf = (col("cnt") * (lit(k1) + lit(1.0))) /
-      (col("cnt") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl")))
+      (col("cnt") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / avgdl))
     qt.join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
       .withColumn("micro", round(idf * tf * lit(1e6)).cast("long"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_terms_hit"),
@@ -1223,6 +1208,34 @@ object TextAnalysis {
               else lit(true))
       .orderBy(col("bm25_micro").desc, col("doc_id"))
       .limit(k)
+  }
+
+  /** A search's live rows of the doc-keyed component `comp` (postings or
+    * positions): [[StoreSegments.live]] under the declared layout, its
+    * doc_id typed by the component's footer.
+    */
+  private def liveRows(spark: org.apache.spark.sql.SparkSession, dir: String,
+                       comp: String): DataFrame =
+    StoreSegments.live(spark, dir, comp, "bucket", "doc_id",
+      declare = f => Comp.of(comp, f("doc_id")),
+      tombSchema = s => Comp.tombstones(s("doc_id")))
+
+  /** The corpus totals (`n_docs`, `sum_dl`) summed over the stats
+    * segments, as Long literals (null on a store with no stats row): a
+    * bounded driver value, reused while the stats component is unchanged
+    * ([[StoreFs.frozen]]), so a warm search runs no aggregate or broadcast
+    * for them.
+    */
+  private def corpusTotals(spark: org.apache.spark.sql.SparkSession,
+                           dir: String): (Column, Column) = {
+    val r = StoreFs.frozen(spark, "text corpus totals",
+        StoreSegments.paths(dir, "stats")) {
+      StoreFs.retryTornReads() {
+        StoreSegments.read(spark, dir, "stats", "", schema = Some(Comp.stats))
+          .agg(sum("n_docs").cast("long"), sum("sum_dl").cast("long")).head
+      }
+    }
+    (lit(r.get(0)).cast("long"), lit(r.get(1)).cast("long"))
   }
 
   /** In-engine QUALITY-CLASSIFIER TRAINING — full-batch logistic

@@ -117,13 +117,12 @@ class StoreTornReadSpec extends SparkTestBase {
     assert(parts.nonEmpty)
     def read(pause: Int => Unit) =
       StoreFs.tombstoneIds(spark, s"$dir/tombstones", "id",
-        schema = Some(tombstoneSchema), pause = pause)
-        .map(_.as[Long].collect().toSet)
-    assert(read(StoreFs.retryPause).contains(Set(4L, 5L)))
+        schema = tombstoneSchema, pause = pause).toSet
+    assert(read(StoreFs.retryPause) == Set(4L, 5L))
 
     val good = parts.map(p => p -> staleCrc(p))
     val pauses = new AtomicInteger
-    assert(read(repairOnFirstRetry(good, pauses)).contains(Set(4L, 5L)))
+    assert(read(repairOnFirstRetry(good, pauses)) == Set(4L, 5L))
     assert(pauses.get == 1)
 
     parts.foreach(staleCrc)
