@@ -94,7 +94,7 @@ object GraftTableFunctions {
       val terms = str("graft_bm25_search", args(1))
         .split("\\s+").filter(_.nonEmpty).toSeq
       val k = int("graft_bm25_search", args(2))
-      val buckets = if (args.length == 4) int("graft_bm25_search", args(3)) else 64
+      val buckets = if (args.length == 4) int("graft_bm25_search", args(3)) else 0
       graft.operators.TextAnalysis
         .searchTextIndex(active, dir, terms, k = k, buckets = buckets)
         .queryExecution.analyzed
@@ -112,7 +112,7 @@ object GraftTableFunctions {
             .split("\\s+").filter(_.nonEmpty).toSeq,
           view("graft_bm25_filtered", args(3)),
           k = int("graft_bm25_filtered", args(2)),
-          buckets = if (args.length == 5) int("graft_bm25_filtered", args(4)) else 64)
+          buckets = if (args.length == 5) int("graft_bm25_filtered", args(4)) else 0)
         .queryExecution.analyzed
     }),
     // graft_ivf_search(indexDir, queriesParquet, k, nprobe) — the query
@@ -187,7 +187,7 @@ object GraftTableFunctions {
       val dir = str("graft_phrase_search", args.head)
       val phrase = str("graft_phrase_search", args(1))
         .split("\\s+").filter(_.nonEmpty).toSeq
-      val buckets = if (args.length == 3) int("graft_phrase_search", args(2)) else 64
+      val buckets = if (args.length == 3) int("graft_phrase_search", args(2)) else 0
       graft.operators.TextAnalysis
         .phraseSearchIndex(active, dir, phrase, buckets)
         .queryExecution.analyzed
@@ -431,7 +431,7 @@ object GraftTableFunctions {
           view("graft_text_index_append", args(1)),
           str("graft_text_index_append", args(2)),
           str("graft_text_index_append", args(3)),
-          buckets = if (args.length == 5) int("graft_text_index_append", args(4)) else 64)
+          buckets = if (args.length == 5) int("graft_text_index_append", args(4)) else 0)
       }
     }),
     // graft_text_index_delete(dir, idsView, idCol[, buckets])
@@ -444,7 +444,7 @@ object GraftTableFunctions {
           str("graft_text_index_delete", args.head),
           view("graft_text_index_delete", args(1)),
           str("graft_text_index_delete", args(2)),
-          buckets = if (args.length == 4) int("graft_text_index_delete", args(3)) else 64)
+          buckets = if (args.length == 4) int("graft_text_index_delete", args(3)) else 0)
       }
     }),
     // graft_text_index_compact(dir[, buckets])
@@ -454,7 +454,7 @@ object GraftTableFunctions {
       StoreVerb.ok("text_index_compact", str("graft_text_index_compact", args.head)) {
         graft.operators.TextAnalysis.compactTextIndex(active,
           str("graft_text_index_compact", args.head),
-          buckets = if (args.length == 2) int("graft_text_index_compact", args(1)) else 64)
+          buckets = if (args.length == 2) int("graft_text_index_compact", args(1)) else 0)
       }
     }),
     // graft_ivf_build(dir, corpusView, idCol, vecCol[, centStep[, maxCentroids]])
@@ -687,7 +687,7 @@ object GraftTableFunctions {
       StoreVerb.ok("text_index_vacuum", str("graft_text_index_vacuum", args.head)) {
         graft.operators.TextAnalysis.vacuumTextIndex(active,
           str("graft_text_index_vacuum", args.head),
-          buckets = if (args.length == 2) int("graft_text_index_vacuum", args(1)) else 64)
+          buckets = if (args.length == 2) int("graft_text_index_vacuum", args(1)) else 0)
       }
     }),
     // graft_export_audit(path, keyColsCsv, idCol) — delivery-integrity
@@ -780,7 +780,7 @@ object GraftTableFunctions {
           str("graft_text_index_maintain", args.head),
           buckets =
             if (args.length >= 2) int("graft_text_index_maintain", args(1))
-            else 64,
+            else 0,
           maxSegments =
             if (args.length == 4) int("graft_text_index_maintain", args(2))
             else 8,
@@ -810,7 +810,7 @@ object GraftTableFunctions {
           str("graft_text_index_sync", args(5)),
           buckets =
             if (args.length == 7) int("graft_text_index_sync", args(6))
-            else 64)
+            else 0)
       }
     }),
     // graft_ivf_sync / graft_ivfpq_sync(indexDir, storeDir, oldV, newV,
@@ -972,10 +972,10 @@ object GraftTableFunctions {
       }
     }),
     // graft_store_segments(storeDir, component) — segment-layout
-    // observability (graft_store_lock_status's sibling): the manifest's
-    // live directories with their superseded-key counts, or the one
-    // classic-layout row — what an operator reads before deciding a
-    // vacuum is due
+    // observability (graft_store_lock_status's sibling): the store's
+    // newest log entry — one row per live segment of the component with
+    // its superseded-key count and the recorded layout — what an operator
+    // reads before deciding a vacuum is due
     ("graft_store_segments", { args =>
       require(args.length == 2,
         s"graft_store_segments(storeDir, component) got ${args.length} args")
@@ -983,12 +983,10 @@ object GraftTableFunctions {
       val comp = str("graft_store_segments", args(1))
       val sp = active
       import sp.implicits._
-      val rows = graft.operators.StoreSegments.entries(sp, dir, comp) match {
-        case None => Seq((comp, "classic", 0L, false, true))
-        case Some(es) => es.map(e =>
-          (e.rel, "segment", e.excluded.size.toLong, e.dropAll, !e.dropAll))
-      }
-      rows.toDF("path", "layout", "n_superseded_keys", "superseded", "live")
+      val e = graft.operators.StoreSegments.latest(sp, dir)
+      e.segs(comp).map(s => (e.version, s"$comp/seg=${s.id}",
+          s.excluded.size.toLong, e.layout))
+        .toDF("version", "path", "n_superseded_keys", "layout")
         .queryExecution.analyzed
     }),
     // graft_composite_abandon(manifestDir) — the recovery verb: drop a

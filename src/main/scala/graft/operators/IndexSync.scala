@@ -141,9 +141,10 @@ object IndexSync {
     * `(verb, store, action, old_version, new_version, n_added,
     * n_changed, n_removed, compacted)` — `action` is `applied` / `noop`.
     *
-    * Single-scheduler contract: the inner verbs each hold the store's
-    * write lock, and the pending marker (written under the `_sync`
-    * lock) excludes a second concurrent sync — but like
+    * Single-scheduler contract: the inner verbs each commit one log
+    * entry (a racing writer makes one of them fail), and the pending
+    * marker (written under the `_sync` lock) excludes a second concurrent
+    * sync — but like
     * [[StoreMaintenance.maintainTextIndex]], the composition is meant to
     * be fired by ONE scheduler per store.
     */
@@ -151,7 +152,7 @@ object IndexSync {
                                  indexDir: String, storeDir: String,
                                  oldVersion: Long, newVersion: Long,
                                  idCol: String, textCol: String,
-                                 buckets: Int = 64): DataFrame =
+                                 buckets: Int = 0): DataFrame =
     syncStore(spark, indexDir, storeDir, oldVersion, newVersion,
       idCol, contentCol = textCol, verb = "sync_text_index",
       store = () => TextAnalysis.textStore(spark, indexDir, buckets),
@@ -196,7 +197,7 @@ object IndexSync {
   /** The shared sync skeleton: marker discipline, churn diff, and the
     * delete(-and-drain) → drain-if-shadowed → scoped-append composition.
     * `store` opens the index for one [[Tombstones]] verb (each verb gets
-    * a fresh one — a verb's reads must not outlive its write lock); the
+    * a fresh one — a verb reads the entry it commits on top of); the
     * family it declares names the `tombstones/` id column.
     */
   private def syncStore(spark: SparkSession,
@@ -270,7 +271,7 @@ object IndexSync {
         val shadowed = !compacted &&
           Par.described(spark, s"$verb: shadow probe") {
             val s = store()
-            val tomb = StoreFs.tombstoneIds(spark, s"$indexDir/tombstones",
+            val tomb = StoreSegments.tombstoneIds(spark, indexDir, s.entry,
               s.family.idCol, s.tombSchema)
             tomb.nonEmpty && !toAppend.filter(col(idCol).isin(tomb: _*))
               .isEmpty

@@ -4,7 +4,7 @@ package graft.operators
   * the optimization guide's §2.6 lever: actions are only sequential
   * because the driver submits them sequentially. A store verb writing its
   * components (the text index's postings / terms / stats / docs —
-  * different directories, different manifests, no cross-dependency) gains
+  * different segment directories, no cross-dependency) gains
   * twice from overlap: each job's task tail back-fills the others' idle
   * cores, and the per-job DRIVER costs (planning, commit protocol, FS
   * round trips — measured at 30-40% of the store-lifecycle gates' wall in

@@ -434,8 +434,9 @@ object Similarity {
   private[graft] val ivfPqIndex: Tombstones.Family =
     ivfIndex.copy(model = Seq("centroids", "pq_codebook", "pq_meta"))
 
-  /** A vector store opened for one [[Tombstones]] verb; the postings read
-    * infers (raw and PQ payloads differ), once per verb.
+  /** A vector store opened for one [[Tombstones]] verb at its newest log
+    * entry; the postings are typed by their footer (raw and PQ payloads
+    * differ), once per verb.
     */
   private[graft] def ivfStore(sp: SparkSession,
                               root: String): Tombstones.Store =
@@ -443,8 +444,9 @@ object Similarity {
     val spark = sp
     val dir = root
     val family = ivfIndex
+    val entry = StoreSegments.latest(spark, dir)
     private lazy val postings =
-      StoreSegments.read(spark, dir, "postings", "cell")
+      StoreSegments.readAt(spark, dir, entry, "postings", "cell")
     def tombSchema = Model.tombstones
     def read(name: String, key: String): DataFrame = postings
 
@@ -470,34 +472,58 @@ object Similarity {
   def buildIvfIndex(df: DataFrame, idCol: String, vecCol: String,
                     dir: String, centStep: Int = 25,
                     maxCentroids: Int = 4096): Unit =
-      StoreLock.withWriteLock(dir) {
-        Par.described(df.sparkSession, s"ivf build $dir") {
+      Par.described(df.sparkSession, s"ivf build $dir") {
     val cents = sampleCentroids(df, idCol, vecCol, centStep, maxCentroids)
     val sp = df.sparkSession
     import sp.implicits._
-    // a rebuild returns to the classic layout: no stale segment manifest,
-    // and no tombstones — they name ids of the store being replaced
-    StoreSegments.reset(sp, dir, "postings")
-    StoreFs.delete(sp, s"$dir/tombstones")
-    // both writes depend only on the driver-side codebook — independent
-    // directories, overlap them (§2.6; r15)
-    Par.run(
-      () => cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv")
-        .coalesce(1) // bounded by maxCentroids — one small model file
-        .write.mode("overwrite").parquet(s"$dir/centroids"),
-      // CLUSTER by cell before the partitioned write (the text index's
-      // documented partitionBy discipline) with an EXPLICIT partition
-      // count: the count-less repartition(col) form gets AQE-coalesced
-      // to ~2 partitions at the fixture, so one task still serially
-      // opens ~25 parquet writers (the per-file writer init is the cost,
-      // ~20ms each — A/B-measured, r15). min(cells, parallelism) keeps
-      // every writer busy with 1-2 files at any scale.
-      () => ivfAssign(df, idCol, vecCol, cents)
-        .repartition(math.min(cents.size,
-          sp.sparkContext.defaultParallelism), col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/postings"))
-  }}
+    writeVectorStore(sp, dir,
+      // bounded by maxCentroids — one small model file
+      Seq("centroids" ->
+        cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv")),
+      ivfAssign(df, idCol, vecCol, cents), cents.size)
+  }
+
+  /** Commit a vector store over whatever `dir` held: the model frames
+    * (component → one small file each) and the cell-keyed `postings`, as
+    * new segments named by ONE fresh entry — no stale segment and no
+    * tombstone survives a rebuild (they name ids of the store being
+    * replaced). The writes depend only on driver-side codebooks, so they
+    * overlap (§2.6; r15).
+    */
+  private def writeVectorStore(sp: SparkSession, dir: String,
+                               models: Seq[(String, DataFrame)],
+                               postings: DataFrame, cells: Int): Unit =
+    StoreSegments.write(sp, dir, StoreSegments.latestOpt(sp, dir)) { w =>
+      Par.run(models.map { case (c, m) => () => w.plain(c, m.coalesce(1)) } :+
+        (() => w.keyed("postings", "cell", clusterByCell(sp, postings,
+          cells))): _*)
+      Some(w.appendedTo(
+        StoreSegments.Entry(0, 0, positions = false, Map.empty)))
+    }
+
+  /** CLUSTER postings by cell before the partitioned write (the text
+    * index's documented partitionBy discipline) with an EXPLICIT partition
+    * count: the count-less repartition(col) form gets AQE-coalesced to ~2
+    * partitions at the fixture, so one task still serially opens ~25
+    * parquet writers (the per-file writer init is the cost, ~20ms each —
+    * A/B-measured, r15). min(cells, parallelism) keeps every writer busy
+    * with 1-2 files at any scale.
+    */
+  private def clusterByCell(sp: SparkSession, postings: DataFrame,
+                            cells: Int): DataFrame =
+    postings.repartition(math.min(cells, sp.sparkContext.defaultParallelism),
+      col("cell"))
+
+  /** Append a batch's postings as one new segment, committed on `e`; an
+    * empty batch commits nothing.
+    */
+  private def appendPostings(spark: SparkSession, dir: String,
+                             e: StoreSegments.Entry, postings: DataFrame,
+                             cells: Int): Unit =
+    StoreSegments.write(spark, dir, Some(e)) { w =>
+      w.keyed("postings", "cell", clusterByCell(spark, postings, cells))
+      w.added("postings").map(_ => w.appendedTo(e))
+    }
 
   /** INCREMENTAL index maintenance: assign a new `batch` to an EXISTING
     * [[buildIvfIndex]] index's centroids and append its postings — the
@@ -515,18 +541,16 @@ object Similarity {
     *
     * The centroid read is the same bounded driver scalar as everywhere
     * else (≤ `maxCentroids` rows by construction of the build), reused
-    * across appends while the file is unchanged ([[StoreFs.frozen]]).
+    * across appends while the segment is the same ([[StoreFs.frozen]]).
     */
   def appendIvfIndex(spark: SparkSession, dir: String, batch: DataFrame,
                      idCol: String, vecCol: String): Unit =
-      StoreLock.withWriteLock(dir) {
-        Par.described(spark, s"ivf append $dir") {
-    val cents = ivfCentroids(spark, dir)
-    StoreSegments.append(spark, dir, "postings", "cell",
-      ivfAssign(batch, idCol, vecCol, cents)
-        .repartition(math.min(cents.size,
-          spark.sparkContext.defaultParallelism), col("cell")))
-  }}
+      Par.described(spark, s"ivf append $dir") {
+    val e = StoreSegments.latest(spark, dir)
+    val cents = ivfCentroids(spark, dir, e)
+    appendPostings(spark, dir, e, ivfAssign(batch, idCol, vecCol, cents),
+      cents.size)
+  }
 
   /** DELETION from a [[buildIvfIndex]] index — [[
     * graft.operators.TextAnalysis.deleteFromTextIndex]]'s contract for
@@ -566,9 +590,9 @@ object Similarity {
                                  ids: DataFrame, idCol: String): Unit =
     deleteAndCompactIvfIndex(spark, dir, ids, idCol)
 
-  /** VACUUM — the MAJOR compaction: drain tombstones, then consolidate
-    * every live postings segment into one ([[StoreSegments.vacuum]]; a
-    * search unions one scan per segment). Reader-safe (manifest flips);
+  /** VACUUM — the MAJOR compaction: drain tombstones and consolidate
+    * every live postings segment into one ([[Tombstones.vacuum]]; each
+    * segment is more files and more log entry to resolve). One commit;
     * one full postings rewrite, paid on operator decision.
     */
   def vacuumIvfIndex(spark: SparkSession, dir: String): Unit =
@@ -597,16 +621,20 @@ object Similarity {
     * recomputed in SQL).
     */
   def ivfIndexAudit(spark: SparkSession, dir: String): DataFrame = {
-    val tombIds = StoreFs.tombstoneIds(spark, s"$dir/tombstones", "id",
-      Model.tombstones)
+    // a drain deletes the tombstones it drops at once: an audit that
+    // resolved just before it resolves again
+    val (e, tombIds) = StoreFs.retryTornReads() {
+      val e = StoreSegments.latest(spark, dir)
+      (e, StoreSegments.tombstoneIds(spark, dir, e, "id", Model.tombstones))
+    }
     // postings feeds both the per-id inventory and the cell census of
     // the one returned plan — persist so the single audit action scans
     // the postings once (r15; release owned by the caller's clearCache /
     // withCaches scope, the CacheScope idiom)
     val postings = CacheScope.persisted(StoreFs.hideIds(
-      StoreSegments.read(spark, dir, "postings", "cell"), "id", tombIds))
-    val cents = spark.read.schema(Model.centroidIdOnly)
-      .parquet(s"$dir/centroids").select(col("cid"))
+      StoreSegments.readAt(spark, dir, e, "postings", "cell"), "id", tombIds))
+    val cents = StoreSegments.scan(spark, dir, e, "centroids", "",
+      Model.centroidIdOnly)
     val perId = postings.groupBy("id").agg(count(lit(1)).as("n"))
     val inv = perId.agg(count(lit(1)).cast("long").as("n_ids"),
       coalesce(sum("n"), lit(0L)).cast("long").as("n_vectors"),
@@ -680,46 +708,51 @@ object Similarity {
                                  vecCol: String, allow: Option[DataFrame],
                                  k: Int, nprobe: Int): DataFrame = {
     graft.functions.CosineSim.ensureRegistered(spark)
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qv"))
-    val probes = probeCells(q, ivfCentroids(spark, dir), nprobe)
-      .select(col("query_id"), col("qv"), col("cell"))
-    // tombstoned vectors are invisible to search (livePostings' filter —
-    // tombstones stay delete-batch-sized because compactIvfIndex drains
-    // them into physical cell rewrites)
-    val probed = livePostings(spark, dir)
-      .select(col("id").as("neighbor_id"), col("v"), col("cell"))
-      .join(broadcast(probes), "cell")
-    // eligibility AFTER the cell cut (semantics identical — both are
-    // pre-rank filters), no broadcast hint: AQE picks by actual size
-    val eligible = allow.fold(probed)(a => probed.join(
-      a.select(col("id").as("neighbor_id")), Seq("neighbor_id"), "left_semi"))
-    val wTop = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    eligible
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosineFast(col("qv"), col("v")))
-      .withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
+    StoreFs.retryTornReads() {
+      val e = StoreSegments.latest(spark, dir)
+      val q = queries.select(col(idCol).as("query_id"),
+        col(vecCol).cast("array<double>").as("qv"))
+      val probes = probeCells(q, ivfCentroids(spark, dir, e), nprobe)
+        .select(col("query_id"), col("qv"), col("cell"))
+      // tombstoned vectors are invisible to search (livePostings' filter —
+      // tombstones stay delete-batch-sized because compactIvfIndex drains
+      // them into physical cell rewrites)
+      val probed = livePostings(spark, dir, e)
+        .select(col("id").as("neighbor_id"), col("v"), col("cell"))
+        .join(broadcast(probes), "cell")
+      // eligibility AFTER the cell cut (semantics identical — both are
+      // pre-rank filters), no broadcast hint: AQE picks by actual size
+      val eligible = allow.fold(probed)(a => probed.join(
+        a.select(col("id").as("neighbor_id")), Seq("neighbor_id"),
+        "left_semi"))
+      val wTop = Window.partitionBy("query_id")
+        .orderBy(col("cos").desc, col("neighbor_id").asc)
+      eligible
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .withColumn("cos", cosineFast(col("qv"), col("v")))
+        .withColumn("rk", row_number().over(wTop))
+        .filter(col("rk") <= k)
+        .select(col("query_id"), col("neighbor_id"),
+          round(col("cos"), 4).as("cos"))
+    }
   }
 
-  /** A search's live postings of a vector store: [[StoreSegments.live]]
-    * with the `cell` partition declared ([[Model.postings]]) and the
-    * data columns typed by one footer.
+  /** A search's live postings of a vector store at `e`:
+    * [[StoreSegments.live]] with the `cell` partition declared
+    * ([[Model.postings]]) and the data columns typed by one footer.
     */
-  private def livePostings(spark: SparkSession, dir: String): DataFrame =
-    StoreSegments.live(spark, dir, "postings", "cell", "id",
+  private def livePostings(spark: SparkSession, dir: String,
+                           e: StoreSegments.Entry): DataFrame =
+    StoreSegments.live(spark, dir, e, "postings", "cell", "id",
       declare = Model.postings, tombSchema = _ => Model.tombstones)
 
-  /** The IVF codebook of the store at `dir`, reused while the file is
-    * unchanged ([[StoreFs.frozen]]).
+  /** The IVF codebook at `e`, reused while its segment is the same
+    * ([[StoreFs.frozen]]).
     */
-  private def ivfCentroids(spark: SparkSession,
-                           dir: String): Seq[(Long, Array[Double])] =
-    StoreFs.frozen(spark, "ivf centroids",
-      ivfIndex.model.map(c => s"$dir/$c"))(centroidRows(spark, dir))
+  private def ivfCentroids(spark: SparkSession, dir: String,
+                           e: StoreSegments.Entry): Seq[(Long, Array[Double])] =
+    StoreFs.frozen("ivf centroids", dir +: e.ids(ivfIndex.model: _*))(
+      centroidRows(spark, dir, e))
 
   /** Each query's `nprobe` best cells, picked in ONE projection over the
     * codebook carried as a plan literal (≤ maxCentroids·dim doubles):
@@ -1824,8 +1857,7 @@ object Similarity {
                       dir: String, m: Int = 8, ksub: Int = 16,
                       ivfStep: Int = 25, pqStep: Int = 7,
                       maxCentroids: Int = 4096): Unit =
-      StoreLock.withWriteLock(dir) {
-        Par.described(df.sparkSession, s"ivfpq build $dir") {
+      Par.described(df.sparkSession, s"ivfpq build $dir") {
     require(ksub >= 1 && ksub <= 16, s"ksub must be in [1,16]: $ksub")
     require(m >= 1 && m <= 15, s"m must be in [1,15]: $m")
     val sp = df.sparkSession
@@ -1836,51 +1868,39 @@ object Similarity {
     val dim = full.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     import sp.implicits._
-    // a rebuild returns to the classic layout: no stale segment manifest,
-    // and no tombstones — they name ids of the store being replaced
-    StoreSegments.reset(sp, dir, "postings")
-    StoreFs.delete(sp, s"$dir/tombstones")
-    // all four component writes depend only on the two driver-side
-    // codebooks — independent directories, overlap them (§2.6; r15)
-    Par.run(
-      () => cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids"),
-      () => full.zipWithIndex.map { case (cv, j) => (j, cv.toSeq) }
-        .toDF("j", "cv")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_codebook"),
-      () => Seq((m, ksub, dim)).toDF("m", "ksub", "dim")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_meta"),
-      // same explicit-count cell clustering as buildIvfIndex (r15)
-      () => withRes.select(col("id"),
-          pqCodeWord(col("r"), full, m).as("code_word"), col("cell"))
-        .repartition(math.min(cents.size,
-          sp.sparkContext.defaultParallelism), col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/postings"))
-  }}
+    writeVectorStore(sp, dir, Seq(
+      "centroids" ->
+        cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv"),
+      "pq_codebook" -> full.zipWithIndex.map { case (cv, j) => (j, cv.toSeq) }
+        .toDF("j", "cv"),
+      "pq_meta" -> Seq((m, ksub, dim)).toDF("m", "ksub", "dim")),
+      withRes.select(col("id"),
+        pqCodeWord(col("r"), full, m).as("code_word"), col("cell")),
+      cents.size)
+  }
 
   /** The IVF codebook sorted by `cid` — one bounded driver collect,
     * sorted on the driver (an `orderBy` would add a sampling and a
     * shuffle job for ≤ maxCentroids rows).
     */
-  private def centroidRows(spark: SparkSession,
-                           dir: String): Seq[(Long, Array[Double])] = {
-    val cents = spark.read.schema(Model.centroids)
-      .parquet(s"$dir/centroids").collect()
+  private def centroidRows(spark: SparkSession, dir: String,
+                           e: StoreSegments.Entry): Seq[(Long, Array[Double])] = {
+    val cents = StoreSegments.scan(spark, dir, e, "centroids", "",
+        Model.centroids).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).toSeq
     require(cents.nonEmpty, s"no centroids at $dir/centroids — build first")
     cents
   }
 
-  /** Both frozen models + the build shape off disk — the bounded driver
+  /** Both frozen models + the build shape at `e` — the bounded driver
     * reads every IVF-PQ maintenance/search call starts with, reused while
-    * the three model files are unchanged ([[StoreFs.frozen]]).
+    * the three model segments are the same ([[StoreFs.frozen]]).
     */
-  private def readIvfPqModel(spark: SparkSession, dir: String)
+  private def readIvfPqModel(spark: SparkSession, dir: String,
+                             e: StoreSegments.Entry)
       : (Seq[(Long, Array[Double])], Seq[Array[Double]], Int) =
-    StoreFs.frozen(spark, "ivfpq model",
-        ivfPqIndex.model.map(c => s"$dir/$c")) {
+    StoreFs.frozen("ivfpq model", dir +: e.ids(ivfPqIndex.model: _*)) {
       // three INDEPENDENT bounded driver reads (different component
       // files) — overlapped (§2.6, r16): sequentially a cold read is
       // three full job latencies of pure wait on kilobyte files
@@ -1888,13 +1908,13 @@ object Similarity {
       var full: Seq[Array[Double]] = null
       var m = -1
       Par.run(
-        () => cents = centroidRows(spark, dir),
-        () => full = spark.read.schema(Model.pqCodebook)
-          .parquet(s"$dir/pq_codebook").collect()
+        () => cents = centroidRows(spark, dir, e),
+        () => full = StoreSegments.scan(spark, dir, e, "pq_codebook", "",
+            Model.pqCodebook).collect()
           .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
           .sortBy(_._1).map(_._2).toSeq,
-        () => m = spark.read.schema(Model.pqMeta)
-          .parquet(s"$dir/pq_meta").select("m").head.getInt(0))
+        () => m = StoreSegments.scan(spark, dir, e, "pq_meta", "",
+            Model.pqMeta).select("m").head.getInt(0))
       require(full.nonEmpty,
         s"no PQ codebook at $dir/pq_codebook — build first")
       (cents, full, m)
@@ -1911,16 +1931,13 @@ object Similarity {
     */
   def appendIvfPqIndex(spark: SparkSession, dir: String, batch: DataFrame,
                        idCol: String, vecCol: String): Unit =
-      StoreLock.withWriteLock(dir) {
-        Par.described(spark, s"ivfpq append $dir") {
-    val (cents, full, m) = readIvfPqModel(spark, dir)
-    StoreSegments.append(spark, dir, "postings", "cell",
-      ivfResiduals(batch, idCol, vecCol, cents)
-        .select(col("id"), pqCodeWord(col("r"), full, m).as("code_word"),
-          col("cell"))
-        .repartition(math.min(cents.size,
-          spark.sparkContext.defaultParallelism), col("cell")))
-  }}
+      Par.described(spark, s"ivfpq append $dir") {
+    val e = StoreSegments.latest(spark, dir)
+    val (cents, full, m) = readIvfPqModel(spark, dir, e)
+    appendPostings(spark, dir, e, ivfResiduals(batch, idCol, vecCol, cents)
+      .select(col("id"), pqCodeWord(col("r"), full, m).as("code_word"),
+        col("cell")), cents.size)
+  }
 
   /** DELETION from a [[buildIvfPqIndex]] store — the takedown verb for
     * the COMPRESSED index, so a removal request against the store a
@@ -1964,11 +1981,15 @@ object Similarity {
                                    k: Int, nprobe: Int): DataFrame = {
     graft.functions.CosineSim.ensureRegistered(spark)
     graft.functions.GraftExtensions.ensureRegistered(spark, "graft_matvec_dots")
-    val (cents, full, m) = readIvfPqModel(spark, dir)
-    val codes = livePostings(spark, dir).select(col("id").as("neighbor_id"),
-      col("cell").cast("long").as("cell"), col("code_word"))
-    ivfPqScan(codes, queries, idCol, vecCol, cents, full, k, nprobe, m,
-      allow)
+    StoreFs.retryTornReads() {
+      val e = StoreSegments.latest(spark, dir)
+      val (cents, full, m) = readIvfPqModel(spark, dir, e)
+      val codes = livePostings(spark, dir, e).select(
+        col("id").as("neighbor_id"), col("cell").cast("long").as("cell"),
+        col("code_word"))
+      ivfPqScan(codes, queries, idCol, vecCol, cents, full, k, nprobe, m,
+        allow)
+    }
   }
 
   /** Deterministic variance-BALANCING dimension permutation — the

@@ -3,12 +3,12 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 /** Filesystem plumbing shared by the persisted stores (IVF index,
-  * inverted text index, snapshot store): existence probes for optional
-  * components (tombstones), and the delete/replace verbs compaction's
-  * partition swaps are built from. Hadoop `FileSystem`, never
-  * `java.io.File` — the stores' pitch is the production path, and these
-  * must work against an HDFS/S3 root exactly like the writes themselves
-  * (same rule as [[Curation.snapshotVersions]]).
+  * inverted text index, snapshot store): existence probes, small-file
+  * reads and writes, and the delete/replace verbs the zone map's sidecar
+  * swap is built from. Hadoop `FileSystem`, never `java.io.File` — the
+  * stores' pitch is the production path, and these must work against an
+  * HDFS/S3 root exactly like the writes themselves (same rule as
+  * [[Curation.snapshotVersions]]).
   */
 private[graft] object StoreFs {
 
@@ -33,15 +33,10 @@ private[graft] object StoreFs {
   }
 
   /** Atomically-enough swap: drop `dst` if present, then move `src` into
-    * its place. A compacted bucket with NO surviving rows produces no
-    * `src` directory — the delete alone is the correct result (the
-    * bucket ceases to exist, exactly like a from-scratch build without
-    * those rows).
-    *
-    * NOT reader-safe (a reader listing partitions between the delete and
-    * the rename misses the directory) — the partitioned store components
-    * moved OFF this onto [[StoreSegments]]'s manifest flip in r14; this
-    * stays for single-writer temp plumbing.
+    * its place; with no `src` the delete alone is the result. NOT
+    * reader-safe (a reader listing between the delete and the rename
+    * misses the directory) — the index stores publish through
+    * [[StoreSegments]]' log instead; this serves the zone map's sidecar.
     */
   def replace(spark: SparkSession, src: String, dst: String): Unit = {
     val (f, s) = fs(spark, src)
@@ -54,40 +49,6 @@ private[graft] object StoreFs {
     }
   }
 
-  /** ATOMIC single-file replace: the destination transitions old-content →
-    * new-content with no window where it is absent or partial. The
-    * primitive [[StoreSegments]]' manifest flip is built on.
-    *
-    * HDFS and other stores: `FileContext.rename(OVERWRITE)`, which is
-    * namenode-atomic on HDFS. A checksummed FS (the local one) cannot use
-    * it: its `FileContext` OVERWRITE deletes the destination and then
-    * renames, so a reader in between finds no manifest and reads the
-    * classic layout — a silently stale view — and its `FileSystem.rename`
-    * refuses an existing destination. There the raw FS renames, a POSIX
-    * rename(2) that replaces the destination atomically, and the `.crc`
-    * follows in a second rename — so a reader can pair one generation's
-    * bytes with the other's checksum, a torn read it retries
-    * ([[retryTornReads]]).
-    */
-  def atomicReplaceFile(spark: SparkSession, src: String, dst: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val s = new org.apache.hadoop.fs.Path(src)
-    val d = new org.apache.hadoop.fs.Path(dst)
-    d.getFileSystem(conf) match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem =>
-        val raw = c.getRawFileSystem
-        require(raw.rename(s, d), s"rename $src -> $dst failed")
-        val (sCrc, dCrc) = (c.getChecksumFile(s), c.getChecksumFile(d))
-        if (raw.exists(sCrc))
-          require(raw.rename(sCrc, dCrc), s"rename $sCrc -> $dCrc failed")
-        else raw.delete(dCrc, false)
-      case _ =>
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(d.toUri, conf)
-        fc.rename(fc.makeQualified(s), fc.makeQualified(d),
-          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-  }
-
   def writeFile(spark: SparkSession, path: String, content: String): Unit = {
     val (f, p) = fs(spark, path)
     val parent = p.getParent
@@ -95,6 +56,34 @@ private[graft] object StoreFs {
     val out = f.create(p, true)
     try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+  }
+
+  /** Create `path` holding `content` only if no file is there: true when
+    * this call created it. Readers see the whole content or no file. The
+    * local FS writes a hidden temp file and hard-links it into place
+    * (`link(2)` fails on an existing name); other filesystems rename
+    * without overwrite, which HDFS's namenode arbitrates. Never an
+    * exists-then-rename: two callers could both pass the check.
+    */
+  def createExclusive(spark: SparkSession, path: String,
+                      content: String): Boolean = {
+    val (f, p) = fs(spark, path)
+    f.mkdirs(p.getParent)
+    val bytes = content.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val tmpName = s".${p.getName}.${java.util.UUID.randomUUID()}.tmp"
+    if (f.getScheme == "file") {
+      val target = java.nio.file.Paths.get(p.toUri.getPath)
+      val tmp = target.resolveSibling(tmpName)
+      java.nio.file.Files.write(tmp, bytes)
+      try { java.nio.file.Files.createLink(target, tmp); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally java.nio.file.Files.deleteIfExists(tmp)
+    } else {
+      val tmp = new org.apache.hadoop.fs.Path(p.getParent, tmpName)
+      val out = f.create(tmp, false)
+      try out.write(bytes) finally out.close()
+      try f.rename(tmp, p) finally f.delete(tmp, false)
+    }
   }
 
   def readFileUtf8(spark: SparkSession, path: String): String = {
@@ -115,60 +104,35 @@ private[graft] object StoreFs {
     else f.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq
   }
 
+  /** The names of the files directly under `path` (none when absent). */
+  def listFiles(spark: SparkSession, path: String): Seq[String] = {
+    val (f, p) = fs(spark, path)
+    if (!f.exists(p)) Seq.empty
+    else f.listStatus(p).filterNot(_.isDirectory).map(_.getPath.getName).toSeq
+  }
+
   /** Delete a directory's children but keep the directory itself. */
   def deleteContents(spark: SparkSession, path: String): Unit = {
     val (f, p) = fs(spark, path)
     if (f.exists(p)) f.listStatus(p).foreach(s => f.delete(s.getPath, true))
   }
 
-  /** The identity of every file under `paths`, from driver listings:
-    * (qualified path, length, mtime), sorted; an absent path contributes
-    * nothing. A rewrite through Spark always changes it — writers name
-    * each new file uniquely, and a delete drops its entries. A checksummed
-    * FS is listed raw, so a replaced `.crc` counts as a change too (its
-    * listing hides them). Plain `listStatus`: a located listing would
-    * stat each file's permissions, which the local FS does by forking
-    * `ls` per file and fails on a file a concurrent GC removed. A
-    * directory that vanishes while listed contributes nothing, like an
-    * absent one.
-    */
-  private def fileIdentity(spark: SparkSession,
-                           paths: Seq[String]): Seq[(String, Long, Long)] = {
-    def walk(f: org.apache.hadoop.fs.FileSystem,
-             p: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] =
-      (try f.listStatus(p).toSeq
-       catch { case _: java.io.IOException if !f.exists(p) => Nil })
-        .flatMap { s =>
-          if (s.isDirectory) walk(f, s.getPath)
-          else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
-        }
-    paths.flatMap { path =>
-      val (f, p) = fs(spark, path) match {
-        case (c: org.apache.hadoop.fs.ChecksumFileSystem, p) =>
-          (c.getRawFileSystem, p)
-        case other => other
-      }
-      if (f.exists(p)) walk(f, f.makeQualified(p)) else Nil
-    }.sorted
-  }
-
   /** At most this many [[frozen]] values stay on the driver. */
   private val FrozenEntries = 16
 
   private val frozenMemo =
-    new java.util.LinkedHashMap[String, (Seq[(String, Long, Long)], Any)](
-        FrozenEntries, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[
-          String, (Seq[(String, Long, Long)], Any)]): Boolean =
+    new java.util.LinkedHashMap[Seq[String], Any](FrozenEntries, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Seq[String], Any]): Boolean =
         size() > FrozenEntries
     }
 
-  /** A VALIDATED driver memo for a store's frozen components: `read`'s
-    * value (tagged `what`, one per call site and value type) is reused
-    * while every file under `paths` keeps its identity ([[fileIdentity]]:
-    * one listing, no Spark job); any change reads again. The identity is
-    * taken BEFORE the read, so a value read while a writer was mid-flight
-    * is paired with the older identity and re-read on the next call.
+  /** A driver memo for a store's frozen components: `read`'s value
+    * (tagged `what`, one per call site and value type) is reused for as
+    * long as `key` names the same immutable segments — the store root and
+    * the segment ids its log entry lists ([[StoreSegments.Entry]]). A
+    * segment is never rewritten under its id, so an equal key means equal
+    * files, and no listing is needed to tell.
     *
     * Only values bounded by construction belong here: the IVF/IVF-PQ
     * codebooks (≤ maxCentroids·dim and ksub·dim doubles), tombstone id
@@ -178,52 +142,16 @@ private[graft] object StoreFs {
     * beyond [[FrozenEntries]] are dropped. A failed read memoizes nothing.
     * A value is shared by every caller, so none may mutate it.
     */
-  def frozen[T](spark: SparkSession, what: String,
-                paths: Seq[String])(read: => T): T = {
-    val key = (what +: paths).mkString("\n")
-    val id = fileIdentity(spark, paths)
-    frozenMemo.synchronized(Option(frozenMemo.get(key))) match {
-      case Some((`id`, v)) => v.asInstanceOf[T]
-      case _ =>
+  def frozen[T](what: String, key: Seq[String])(read: => T): T = {
+    val k = what +: key
+    frozenMemo.synchronized(Option(frozenMemo.get(k))) match {
+      case Some(v) => v.asInstanceOf[T]
+      case None =>
         val v = read
-        frozenMemo.synchronized(frozenMemo.put(key, (id, v)))
+        frozenMemo.synchronized(frozenMemo.put(k, v))
         v
     }
   }
-
-  /** A store's tombstoned ids, SNAPSHOTTED to the driver: deduplicated
-    * Longs, empty when the store carries none. Tombstones are
-    * delete-batch-bounded by contract (compaction drains them), so the
-    * snapshot is a bounded driver value, and it buys reader safety
-    * against a concurrent compaction CLEARING the files: once captured,
-    * no plan references tombstone files at execution time, and a dir that
-    * vanishes or empties mid-capture resolves to no ids — which is exactly
-    * the correct view, because tombstones only disappear when their rows
-    * became physically unnecessary. Mutating verbs (delete/compact) do
-    * NOT use this: they run under the store write lock, where vanishing
-    * tombstones would be a real corruption to surface. A torn read is
-    * retried ([[retryTornReads]]), never taken for "no tombstones"; the
-    * [[frozen]] listing runs inside the retry too. `schema` is the
-    * tombstone layout the family declares, so a cold read infers nothing.
-    */
-  def tombstoneIds(spark: SparkSession, path: String, idCol: String,
-                   schema: org.apache.spark.sql.types.StructType,
-                   pause: Int => Unit = retryPause): Seq[Long] =
-    retryTornReads(pause) {
-      frozen(spark, s"tombstone ids $idCol", Seq(path)) {
-        if (!exists(spark, path)) Seq.empty[Long]
-        else try {
-          // deduplicated on the driver: the list is bounded, and a
-          // distinct() costs two more jobs under AQE
-          spark.read.schema(schema)
-            .option("ignoreMissingFiles", "true").parquet(path)
-            .select(org.apache.spark.sql.functions.col(idCol).cast("long"))
-            .collect().map(_.getLong(0)).distinct.toSeq
-        } catch {
-          case e: Throwable if isMissingFileError(e) => Seq.empty[Long]
-        }
-      }
-    }
 
   /** `df` without the rows whose `idCol` is one of `ids`: a
     * driver-constant `NOT IN` filter below the scan (an `InSet` past the
@@ -285,41 +213,30 @@ private[graft] object StoreFs {
       throw new IllegalArgumentException(s"no parquet data file under $path")))
       .parquet(path)
 
-  /** Whether a failure is a vanished-file race (a maintenance verb's GC
-    * beat a reader's plan construction) rather than real corruption.
+  /** Whether a failure is a read that lost a file to a concurrent writer
+    * (a GC beat a reader's plan construction, or a sidecar swap was
+    * mid-rename) rather than real corruption.
     */
   def isMissingFileError(t: Throwable): Boolean =
     hasCause(t, classOf[java.io.FileNotFoundException]) ||
       String.valueOf(t.getMessage).contains("FileNotFoundException") ||
       String.valueOf(t.getMessage).contains("PATH_NOT_FOUND")
 
-  /** Whether a failure is a read that raced a writer and is worth
-    * re-resolving: a vanished file, or a torn checksummed read — the local
-    * FS replaces a file and its `.crc` in two steps
-    * ([[atomicReplaceFile]]), so a reader can verify one generation's bytes
-    * against the other's checksum. Verification stays on: a checksum that
-    * still fails after the retries surfaces as the real corruption it is.
-    */
-  def isTornReadError(t: Throwable): Boolean =
-    isMissingFileError(t) ||
-      hasCause(t, classOf[org.apache.hadoop.fs.ChecksumException]) ||
-      String.valueOf(t.getMessage).contains("ChecksumException")
-
-  /** Default pause before retry `n` (1-based): 20, 40, 80, 160 ms — long
-    * enough for a concurrent writer to finish a two-step rename.
-    */
+  /** Default pause before retry `n` (1-based): 20, 40, 80, 160 ms. */
   val retryPause: Int => Unit = n => Thread.sleep(10L << n)
 
-  /** Run a store read, re-running it up to 4 times on a torn read
-    * ([[isTornReadError]]) with `pause(n)` before retry `n`; any other
-    * failure, or a torn read that outlasts the bound, propagates.
+  /** Run a store read, re-running it up to 4 times when it lost a file
+    * to a concurrent writer ([[isMissingFileError]]) with `pause(n)`
+    * before retry `n`: a re-run resolves the store again and reads only
+    * what the newer state names. Any other failure, or a miss that
+    * outlasts the bound, propagates.
     */
   def retryTornReads[T](pause: Int => Unit = retryPause)(read: => T): T = {
     var attempt = 0
     while (true) {
       try return read
       catch {
-        case e: Throwable if attempt < 4 && isTornReadError(e) =>
+        case e: Throwable if attempt < 4 && isMissingFileError(e) =>
           attempt += 1
           pause(attempt)
       }
@@ -332,393 +249,335 @@ private[graft] object StoreFs {
     t != null && (c.isInstance(t) || hasCause(t.getCause, c))
 }
 
-/** READER-SAFE maintenance for the partitioned store components (IVF /
-  * IVF-PQ postings, text-index postings/terms/positions/docs) — the r13
-  * judge's "what's missing #3". The old compaction swapped `cell=`/
-  * `bucket=` directories in place ([[StoreFs.replace]]): a concurrent
-  * search listing partitions mid-swap could miss a cell or fail on a
-  * vanished file. This object is the version-pointer fix, Iceberg's
-  * snapshot idea at store-component scale:
+/** The WRITE-ONCE LOG of an index store (text, IVF, IVF-PQ): every
+  * version of the store is one immutable entry `_log/<v>` naming
   *
-  *  - a component is ONE base directory (what build writes — layout
-  *    unchanged, zero cost until the first maintenance verb needs more)
-  *    plus zero or more immutable SEGMENT directories under
-  *    `<comp>_seg/`;
-  *  - a manifest file `_<comp>_manifest` names the live directories and,
-  *    per directory, the partition keys superseded by newer segments
-  *    (`relpath\tk1,k2,…` — readable in a crash investigation);
-  *  - every reader resolves the manifest (one driver-side read) and
-  *    scans the listed directories, plan-level-filtering the excluded
-  *    keys (a NOT-IN on the partition column — pruned, never scanned);
-  *  - compaction writes the affected keys' survivors as a NEW segment,
-  *    then publishes a new manifest with ONE atomic file flip
-  *    ([[StoreFs.atomicReplaceFile]]). No live directory is touched: a
-  *    reader holding either manifest sees a complete, consistent store.
+  *  - the layout facts verbs and searches read: the bucket count (text)
+  *    and whether positions are stored;
+  *  - every component's live segments, each with the partition keys
+  *    newer segments superseded (the model files are components too);
+  *  - the tombstone segments (component [[Tomb]]).
   *
-  * Superseded data is garbage-collected at the START of the NEXT
-  * maintenance verb (one compaction cycle of grace — a reader must hold
-  * a plan across two compactions to observe a vanished file, the same
-  * contract as Iceberg's expire-snapshots). With no manifest present the
-  * component is exactly the classic directory and every verb falls back
-  * to the classic path, so stores never pay for safety they don't need.
+  * A segment is an immutable directory `<dir>/<comp>/seg=<id>`, written
+  * once under an id unique to the writing attempt and prefixed by the
+  * version the writer started from. Every verb (build, append, delete,
+  * compact, fused delete+compact, vacuum) writes its new segments, then
+  * publishes `v + 1` EXACTLY ONCE with a put-if-absent
+  * ([[StoreFs.createExclusive]]) — the commit, Delta Lake's mutual
+  * exclusion and multi-file atomicity in one step (Armbrust et al., VLDB
+  * 2020). A writer that loses the race, or crashes, leaves only segments
+  * no entry references; a reader resolves the newest entry once and opens
+  * only what it names, so it sees version `v` or `v + 1`, never a mix.
+  * There is no write lock: a loser fails at its commit, naming the store.
+  *
+  * A reader scans each component ONCE however many segments are live:
+  * the segments are `seg=` partitions under one root, so membership and
+  * superseded keys are partition filters ([[scan]]).
+  *
+  * Garbage collection runs after a commit of `N` that lets data go — a
+  * compact, fused delete+compact, vacuum or rebuild; an append or a
+  * delete only adds ([[gc]]): a segment no longer named by entry `N` or
+  * `N - 1` goes when its writer's base version is below `N` (that writer
+  * can no longer commit), and a superseded key directory goes once both
+  * entries exclude it. So what one maintenance verb supersedes lives
+  * until the next one commits, however many appends and deletes come
+  * between: a search planned before a compaction still collects after
+  * them. Drained tombstones are the one exception, deleted by the drain
+  * that drops them: a search or audit holds tombstone ids as plan
+  * literals, and one that has yet to read them loses the file and
+  * resolves again ([[StoreFs.retryTornReads]]).
   */
 private[graft] object StoreSegments {
 
+  import scala.jdk.CollectionConverters._
   import org.apache.spark.sql.DataFrame
-  import org.apache.spark.sql.functions.{col, not}
+  import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+  import org.apache.spark.sql.types.{IntegerType, StringType, StructField,
+    StructType}
 
-  private def manifestPath(dir: String, comp: String) =
-    s"$dir/_${comp}_manifest"
+  /** The tombstone component's name: `<dir>/tombstones/seg=<id>`. */
+  val Tomb = "tombstones"
 
-  /** (relative path, superseded partition keys; `dropAll` = the whole
-    * directory is superseded — serialized as `*`, used by
-    * [[replaceAll]] for non-partitioned components like the text
-    * index's stats).
-    */
-  final case class Entry(rel: String, excluded: Seq[Long],
-                         dropAll: Boolean = false)
+  /** A live segment and its partition keys superseded by newer ones. */
+  final case class Seg(id: String, excluded: Seq[Long] = Nil)
 
-  private def render(entries: Seq[Entry]): String =
-    entries.map(e =>
-      s"${e.rel}\t${if (e.dropAll) "*" else e.excluded.mkString(",")}")
-      .mkString("\n")
-
-  private def parse(content: String): Seq[Entry] =
-    content.linesIterator.filter(_.nonEmpty).map { l =>
-      val parts = l.split("\t", -1)
-      require(parts.length == 2, s"malformed segment manifest line: $l")
-      if (parts(1) == "*") Entry(parts(0), Nil, dropAll = true)
-      else Entry(parts(0),
-        parts(1).split(",").filter(_.nonEmpty).map(_.toLong).toSeq)
-    }.toSeq
-
-  def entries(spark: SparkSession, dir: String,
-              comp: String): Option[Seq[Entry]] =
-    if (StoreFs.exists(spark, manifestPath(dir, comp)))
-      Some(parse(StoreFs.readFileUtf8(spark, manifestPath(dir, comp))))
-    else None
-
-  private def publish(spark: SparkSession, dir: String, comp: String,
-                      es: Seq[Entry]): Unit = {
-    val tmp = manifestPath(dir, comp) + ".tmp"
-    StoreFs.writeFile(spark, tmp, render(es))
-    StoreFs.atomicReplaceFile(spark, tmp, manifestPath(dir, comp))
+  /** One version of a store: its layout facts and live segments. */
+  final case class Entry(version: Long, buckets: Int, positions: Boolean,
+                         comps: Map[String, Seq[Seg]]) {
+    def segs(comp: String): Seq[Seg] = comps.getOrElse(comp, Nil)
+    def has(comp: String): Boolean = segs(comp).nonEmpty
+    def layout: String = s"buckets = $buckets, positions = $positions"
+    /** `comp` with `segs` as its live segments (none drops it). */
+    def set(comp: String, segs: Seq[Seg]): Entry =
+      copy(comps = if (segs.isEmpty) comps - comp else comps.updated(comp, segs))
+    /** The ids of `comps`' live segments, the [[StoreFs.frozen]] key. */
+    def ids(cs: String*): Seq[String] = cs.flatMap(c => segs(c).map(_.id))
+    /** The store's bucket count; a non-zero `asked` must equal it. */
+    def bucketsFor(dir: String, asked: Int): Int = {
+      require(asked == 0 || asked == buckets,
+        s"the store at $dir has layout ($layout); the call asked for " +
+          s"buckets = $asked")
+      buckets
+    }
   }
 
-  /** Read the live component: classic single-dir scan when no manifest
-    * exists; otherwise the union of the manifest's directories with each
-    * one's superseded keys filtered out (partition-pruned, not scanned).
-    *
-    * Plan construction retries torn reads ([[StoreFs.retryTornReads]]): a
-    * reader resolving a manifest just as a maintenance verb GCs the
-    * PREVIOUS cycle's superseded files can lose the footer it types the
-    * read with, and a manifest read during its flip can meet the other
-    * generation's `.crc`. Re-resolving the (already-flipped) manifest
-    * sees only live files — one retry settles it; the bound exists so
-    * real corruption still surfaces.
+  /** Called with (store dir, step) before each segment write
+    * (`write <comp>`), the commit (`commit`) and the garbage collection
+    * after it (`gc`, when the commit lets data go) of a verb, and after a
+    * search or verb resolves its entry (`resolved`): tests stop or pause
+    * a verb or a search there. No-op in production.
     */
-  def read(spark: SparkSession, dir: String, comp: String,
-           keyCol: String,
-           schema: Option[org.apache.spark.sql.types.StructType] = None,
-           pause: Int => Unit = StoreFs.retryPause): DataFrame =
-    StoreFs.retryTornReads(pause) {
-      val live = liveEntries(spark, dir, comp)
-      scan(spark, dir, keyCol, live,
-        schema.getOrElse(dataSchema(spark, dir, keyCol, live)))
-    }
+  @volatile private[graft] var hook: (String, String) => Unit = (_, _) => ()
 
-  /** A SEARCH's view of one component, the resolution every store search
-    * shares: the live segments under the declared layout
-    * `declare(footer schema)` — the footer types the caller's id column —
-    * with the store's tombstoned ids hidden below the scan
-    * ([[StoreFs.hideIds]]; `tombSchema(layout)` types the tombstone
-    * read). Analysis runs no Spark job once the ids are memoized.
-    */
-  def live(spark: SparkSession, dir: String, comp: String, keyCol: String,
-           idCol: String,
-           declare: org.apache.spark.sql.types.StructType =>
-             org.apache.spark.sql.types.StructType,
-           tombSchema: org.apache.spark.sql.types.StructType =>
-             org.apache.spark.sql.types.StructType): DataFrame = {
-    val rows = StoreFs.retryTornReads() {
-      val live = liveEntries(spark, dir, comp)
-      scan(spark, dir, keyCol, live,
-        declare(dataSchema(spark, dir, keyCol, live)))
-    }
-    StoreFs.hideIds(rows, idCol, StoreFs.tombstoneIds(spark,
-      s"$dir/tombstones", idCol, tombSchema(rows.schema)))
+  private def logDir(dir: String) = s"$dir/_log"
+
+  private def render(e: Entry): String =
+    (Seq(s"buckets\t${e.buckets}", s"positions\t${e.positions}") ++
+      e.comps.toSeq.sortBy(_._1).flatMap { case (c, ss) =>
+        ss.map(s => s"seg\t$c\t${s.id}\t${s.excluded.mkString(",")}")
+      } :+ "end").mkString("\n")
+
+  private def parse(dir: String, v: Long, content: String): Entry = {
+    val lines = content.linesIterator.toSeq
+    require(lines.lastOption.contains("end"),
+      s"log entry $v of the store at $dir is incomplete")
+    lines.init.map(_.split("\t", -1).toSeq)
+      .foldLeft(Entry(v, 0, positions = false, Map.empty)) {
+        case (e, Seq("buckets", n)) => e.copy(buckets = n.toInt)
+        case (e, Seq("positions", p)) => e.copy(positions = p.toBoolean)
+        case (e, Seq("seg", c, id, ex)) => e.set(c, e.segs(c) :+
+          Seg(id, ex.split(",").filter(_.nonEmpty).map(_.toLong).toSeq))
+        case (_, l) => throw new IllegalStateException(
+          s"malformed line in log entry $v of the store at $dir: " +
+            l.mkString("\t"))
+      }
   }
 
-  /** Every path a component's live view depends on: the base directory,
-    * its segments and its manifest — what a [[StoreFs.frozen]] value
-    * derived from the component is validated against.
-    */
-  def paths(dir: String, comp: String): Seq[String] =
-    Seq(s"$dir/$comp", s"$dir/${comp}_seg", manifestPath(dir, comp))
+  /** The newest entry of the store at `dir`, None when it has no log. */
+  def latestOpt(spark: SparkSession, dir: String): Option[Entry] =
+    StoreFs.listFiles(spark, logDir(dir))
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
+      .maxOption.map(v => parse(dir, v,
+        StoreFs.readFileUtf8(spark, s"${logDir(dir)}/$v")))
 
-  /** The directories a read unions: the manifest's live entries, or the
-    * classic base directory when there is no manifest.
+  /** [[latestOpt]] of a store that must exist, then the `resolved`
+    * [[hook]]: the entry a search or verb reads.
     */
-  private def liveEntries(spark: SparkSession, dir: String,
-                          comp: String): Seq[Entry] =
-    entries(spark, dir, comp) match {
-      case None => Seq(Entry(comp, Nil))
-      case Some(es) =>
-        val live = es.filterNot(_.dropAll)
-        require(live.nonEmpty, s"empty segment manifest for $dir/$comp")
-        live
-    }
+  def latest(spark: SparkSession, dir: String): Entry = {
+    val e = latestOpt(spark, dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"no store at $dir: its log is empty — build it first"))
+    hook(dir, "resolved")
+    e
+  }
 
-  /** The component's DATA schema (partition columns excluded) from the
-    * footer of its first live data file, superseded keys skipped
-    * ([[StoreFs.footerSchema]]); every segment shares it.
+  /** The live rows of `comp` at `e` under `schema` (data columns, then
+    * the `keyCol` partition; "" for a plain component): ONE scan of the
+    * component root over the live `seg=` directories, each segment's
+    * superseded keys filtered as partitions (pruned, never read).
     */
-  private def dataSchema(spark: SparkSession, dir: String, keyCol: String,
-                         live: Seq[Entry]): org.apache.spark.sql.types.StructType =
-    live.iterator.flatMap(e => StoreFs.footerSchema(spark, s"$dir/${e.rel}",
-        e.excluded.map(k => s"$keyCol=$k").toSet))
+  def scan(spark: SparkSession, dir: String, e: Entry, comp: String,
+           keyCol: String, schema: StructType): DataFrame = {
+    val segs = e.segs(comp)
+    require(segs.nonEmpty,
+      s"the store at $dir has no $comp at version ${e.version} (${e.layout})")
+    val root = s"$dir/$comp"
+    val df = spark.read.schema(schema.add(StructField("seg", StringType)))
+      .option("basePath", root)
+      .parquet(segs.map(s => s"$root/seg=${s.id}"): _*)
+    // the null key's partition (a null id's `dbucket`) is never superseded
+    val superseded = segs.filter(_.excluded.nonEmpty).map(s =>
+      col("seg") === s.id && col(keyCol).isin(s.excluded: _*))
+    (if (superseded.isEmpty) df
+     else df.filter(not(coalesce(superseded.reduce(_ || _), lit(false)))))
+      .select(schema.fieldNames.map(col).toSeq: _*)
+  }
+
+  /** The component's data schema (partition columns excluded) from the
+    * footer of its first live data file, superseded keys skipped; every
+    * segment shares it.
+    */
+  def footerData(spark: SparkSession, dir: String, e: Entry, comp: String,
+                 keyCol: String): StructType =
+    e.segs(comp).iterator.flatMap(s => StoreFs.footerSchema(spark,
+        s"$dir/$comp/seg=${s.id}", s.excluded.map(k => s"$keyCol=$k").toSet))
       .nextOption()
       .getOrElse(throw new IllegalStateException(
-        s"no live data file under $dir in ${live.map(_.rel).mkString(", ")}"))
+        s"no live data file of $comp in the store at $dir"))
 
-  /** The union of the live directories under `schema`, each one's
-    * superseded keys filtered out. A data-only schema leaves the partition
-    * column to discovery on the first leg, whose full schema the rest reuse.
+  /** [[scan]] at `e`, typed by `schema` or by the footer with the
+    * `keyCol` partition declared Int.
     */
-  private def scan(spark: SparkSession, dir: String, keyCol: String,
-                   live: Seq[Entry],
-                   schema0: org.apache.spark.sql.types.StructType): DataFrame = {
-    var schema = schema0
-    live.map { e =>
-      val df = spark.read.schema(schema).parquet(s"$dir/${e.rel}")
-      schema = df.schema
-      if (e.excluded.isEmpty) df
-      else df.filter(not(col(keyCol).isin(e.excluded: _*)))
-    }.reduce(_ unionByName _)
-  }
+  def readAt(spark: SparkSession, dir: String, e: Entry, comp: String,
+             keyCol: String, schema: Option[StructType] = None): DataFrame =
+    scan(spark, dir, e, comp, keyCol, schema.getOrElse {
+      val data = footerData(spark, dir, e, comp, keyCol)
+      if (keyCol.isEmpty) data else data.add(StructField(keyCol, IntegerType))
+    })
 
-  /** Reset to the classic layout — builds call this before their
-    * overwrite so a rebuilt store carries no stale manifest/segments.
-    */
-  def reset(spark: SparkSession, dir: String, comp: String): Unit = {
-    StoreFs.delete(spark, manifestPath(dir, comp))
-    StoreFs.delete(spark, s"$dir/${comp}_seg")
-  }
+  /** [[readAt]] the newest entry. */
+  def read(spark: SparkSession, dir: String, comp: String, keyCol: String,
+           schema: Option[StructType] = None): DataFrame =
+    readAt(spark, dir, latest(spark, dir), comp, keyCol, schema)
 
-  /** Append a batch: the classic `mode(append)` into the base dir when
-    * no manifest exists; with one, a new immutable segment + one atomic
-    * manifest flip (appending files into a dir whose keys are partially
-    * superseded would silently hide the new rows).
+  /** The tombstoned ids at `e`, deduplicated on the driver and memoized by
+    * tombstone segment ([[StoreFs.frozen]]); `schema` is the tombstone
+    * layout the family declares, so no read infers.
     */
-  def append(spark: SparkSession, dir: String, comp: String,
-             keyCol: String, batch: DataFrame): Unit =
-    entries(spark, dir, comp) match {
-      case None =>
-        batch.write.mode("append").partitionBy(keyCol)
-          .parquet(s"$dir/$comp")
-      case Some(es) =>
-        val seg = newSegment(spark, dir, comp, keyCol, batch)
-        seg.foreach(rel => publish(spark, dir, comp, es :+ Entry(rel, Nil)))
+  def tombstoneIds(spark: SparkSession, dir: String, e: Entry, idCol: String,
+                   schema: StructType): Seq[Long] =
+    if (!e.has(Tomb)) Nil
+    else StoreFs.frozen(s"tombstone ids $idCol", dir +: e.ids(Tomb)) {
+      // a distinct() costs two more jobs under AQE; the list is bounded
+      scan(spark, dir, e, Tomb, "", schema)
+        .select(col(idCol).cast("long")).collect().map(_.getLong(0))
+        .distinct.toSeq
     }
 
-  /** [[append]] for a NON-partitioned component (the text index's
-    * stats): classic `mode(append)` without a manifest; a new segment +
-    * flip with one. `knownNonEmpty = true` skips the emptiness probe —
-    * every current caller appends a global-aggregate row (count/sum with
-    * no groupBy: exactly one row by construction), so the probe was a
-    * full extra evaluation of the batch answering a question whose
-    * answer is static (r16 job diet). Pass false for batches that can
-    * genuinely be empty — an empty segment must not reach the manifest.
+  /** A SEARCH's view of one component at `e`: the live rows under
+    * `declare(footer schema)` — the footer types the caller's id column —
+    * with the tombstoned ids hidden below the scan ([[StoreFs.hideIds]];
+    * `tombSchema(layout)` types the tombstone read). Analysis runs no
+    * Spark job once the ids are memoized.
     */
-  def appendPlain(spark: SparkSession, dir: String, comp: String,
-                  batch: DataFrame, knownNonEmpty: Boolean = false): Unit =
-    entries(spark, dir, comp) match {
-      case None =>
-        batch.write.mode("append").parquet(s"$dir/$comp")
-      case Some(es) if knownNonEmpty =>
-        val rel = s"${comp}_seg/s${System.currentTimeMillis()}_${scala.util.Random.nextInt(1 << 20)}"
-        batch.write.parquet(s"$dir/$rel")
-        publish(spark, dir, comp, es :+ Entry(rel, Nil))
-      case Some(es) =>
-        // single evaluation of the batch (r14 judge finding: isEmpty +
-        // write ran the frame twice): persist, probe, write from cache
-        val cached = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (!cached.isEmpty) {
-            val rel = s"${comp}_seg/s${System.currentTimeMillis()}_${scala.util.Random.nextInt(1 << 20)}"
-            cached.write.parquet(s"$dir/$rel")
-            publish(spark, dir, comp, es :+ Entry(rel, Nil))
-          }
-        } finally cached.unpersist(blocking = false)
-    }
-
-  /** Write `df` as a fresh immutable segment dir; returns its relative
-    * path, or None for an empty frame (an empty parquet dir cannot be
-    * re-read — the manifest simply doesn't list one).
-    */
-  private def newSegment(spark: SparkSession, dir: String, comp: String,
-                         keyCol: String, df: DataFrame): Option[String] = {
-    val rel = s"${comp}_seg/s${System.currentTimeMillis()}_${scala.util.Random.nextInt(1 << 20)}"
-    // Write FIRST, decide emptiness from what landed (r16): a zero-row
-    // partitionBy write produces no `key=` subdirectories (only _SUCCESS),
-    // so one driver listing answers the emptiness question that used to
-    // cost a full evaluation of the survivors frame (r14/r15: persist +
-    // isEmpty probe + write-from-cache — two jobs and a cache round trip;
-    // now the frame is evaluated exactly ONCE, by the write). An empty
-    // segment's dir is deleted; the manifest never lists it. A crash
-    // between write and the caller's manifest flip leaves an orphan dir,
-    // same as before — gcSuperseded's unlisted-segment sweep owns those.
-    // explicit partition count (r15): the count-less repartition gets
-    // AQE-coalesced to 1-2 partitions for small survivor frames, and
-    // the write then serializes one parquet-writer init per key dir
-    df.repartition(spark.sparkContext.defaultParallelism, col(keyCol))
-      .write.partitionBy(keyCol)
-      .parquet(s"$dir/$rel")
-    if (StoreFs.listSubdirs(spark, s"$dir/$rel")
-        .exists(_.startsWith(s"$keyCol=")))
-      Some(rel)
-    else {
-      StoreFs.delete(spark, s"$dir/$rel")
-      None
-    }
+  def live(spark: SparkSession, dir: String, e: Entry, comp: String,
+           keyCol: String, idCol: String,
+           declare: StructType => StructType,
+           tombSchema: StructType => StructType): DataFrame = {
+    val rows = scan(spark, dir, e, comp, keyCol,
+      declare(footerData(spark, dir, e, comp, keyCol)))
+    StoreFs.hideIds(rows, idCol,
+      tombstoneIds(spark, dir, e, idCol, tombSchema(rows.schema)))
   }
 
-  /** Reader-safe compaction publish: GC any data superseded by the
-    * PREVIOUS maintenance verb (its grace period ends here), write the
-    * affected keys' survivors as a new segment, and flip the manifest —
-    * every pre-flip reader keeps a complete view of the old version,
-    * every post-flip reader sees exactly the new one.
-    *
-    * Refuses a compaction that would leave the component with NO live
-    * rows (every key excluded, no survivors): an emptied store has no
-    * parquet footers left to infer a schema from, so the next read would
-    * fail with an inscrutable inference error one GC cycle later. The
-    * refusal happens BEFORE the flip — the store keeps its pre-compact
-    * view (tombstones intact), and the operator gets told to drop the
-    * store instead of emptying it. Driver-metadata cost only, and only
-    * on the empty-survivors path.
+  /** The partition directories of segment `s` of `comp` with their keys
+    * (a listing); None for the null key's partition, which no exclusion
+    * names.
     */
-  def compact(spark: SparkSession, dir: String, comp: String,
-              keyCol: String, affected: Seq[Long],
-              survivors: DataFrame): Unit = {
-    gcSuperseded(spark, dir, comp, keyCol)
-    val base = entries(spark, dir, comp)
-      .getOrElse(Seq(Entry(comp, Nil)))
-    val excluded = base.map(e =>
-      if (e.dropAll) e
-      else e.copy(excluded = (e.excluded ++ affected).distinct))
-    val seg = newSegment(spark, dir, comp, keyCol, survivors)
-    if (seg.isEmpty) {
-      val anyLive = excluded.exists { e =>
-        !e.dropAll && {
-          val ex = e.excluded.toSet
-          StoreFs.listSubdirs(spark, s"$dir/${e.rel}")
-            .filter(_.startsWith(s"$keyCol="))
-            .map(_.stripPrefix(s"$keyCol=").toLong)
-            .exists(k => !ex.contains(k))
-        }
+  def keysOf(spark: SparkSession, dir: String, comp: String,
+             s: Seg): Seq[(String, Option[Long])] =
+    StoreFs.listSubdirs(spark, s"$dir/$comp/seg=${s.id}")
+      .flatMap(n => n.split("=", 2) match {
+        case Array(_, k) => Some(n -> k.toLongOption)
+        case _ => None
+      })
+
+  /** ONE verb's write side: segments written under ids unique to this
+    * attempt, then [[commit]]. `base` is the entry the verb read (None
+    * for a build into an empty directory).
+    */
+  final class Writer(val spark: SparkSession, val dir: String,
+                     val base: Option[Entry]) {
+    private val from = base.fold(0L)(_.version)
+    private val segs = new java.util.concurrent.ConcurrentHashMap[String, Seg]()
+
+    private def newSeg(comp: String): (String, String) = {
+      hook(dir, s"write $comp")
+      val id = s"$from-${java.util.UUID.randomUUID().toString.take(13)}"
+      (id, s"$dir/$comp/seg=$id")
+    }
+
+    /** The segment this writer added to `comp` (at most one per verb). */
+    def added(comp: String): Option[Seg] = Option(segs.get(comp))
+
+    /** `e` with every segment this writer added appended to its component. */
+    def appendedTo(e: Entry): Entry =
+      segs.asScala.foldLeft(e) { case (acc, (c, s)) =>
+        acc.set(c, acc.segs(c) :+ s) }
+
+    /** `df` (clustered by `keyCol` by the caller) as a new segment of
+      * `comp`, partitioned by `keyCol` — none when no row landed (a
+      * zero-row partitioned write leaves no `key=` directory, so one
+      * listing answers what a separate emptiness probe would evaluate the
+      * frame for).
+      */
+    def keyed(comp: String, keyCol: String, df: DataFrame): Unit = {
+      val (id, path) = newSeg(comp)
+      df.write.partitionBy(keyCol).parquet(path)
+      if (StoreFs.listSubdirs(spark, path).exists(_.startsWith(s"$keyCol=")))
+        segs.put(comp, Seg(id))
+      else StoreFs.delete(spark, path)
+    }
+
+    /** `df` as a new plain segment of `comp`. */
+    def plain(comp: String, df: DataFrame): Unit = {
+      val (id, path) = newSeg(comp)
+      df.write.parquet(path)
+      segs.put(comp, Seg(id))
+    }
+
+    /** Publish `next` as version base + 1. A lost race fails naming the
+      * store; nothing this writer wrote is referenced.
+      */
+    def commit(next: Entry): Entry = {
+      hook(dir, "commit")
+      val v = from + 1
+      val e = next.copy(version = v)
+      if (!StoreFs.createExclusive(spark, s"${logDir(dir)}/$v", render(e)))
+        throw new IllegalStateException(
+          s"the store at $dir changed under this verb: a concurrent writer " +
+            s"committed version $v first; nothing this verb wrote is " +
+            "referenced — retry it against the new version")
+      // only a commit that drops a segment or supersedes a key collects:
+      // an append or a delete adds, and keeps the previous grace running
+      base.filter(b => b.comps.exists { case (c, ss) =>
+        !ss.forall(e.segs(c).contains) }).foreach { prev =>
+        hook(dir, "gc")
+        gc(spark, dir, prev, e)
       }
-      require(anyLive,
-        s"refusing to compact $dir/$comp: no live rows would remain — " +
-          "a store cannot be emptied by maintenance; drop the store " +
-          "directory instead")
+      e
     }
-    publish(spark, dir, comp,
-      excluded ++ seg.map(rel => Entry(rel, Nil)).toSeq)
   }
 
-  /** Reader-safe WHOLE-component replace (the non-partitioned
-    * components: the text index's stats roll-up): write the replacement
-    * as a new segment, mark every prior directory fully superseded, one
-    * atomic flip. `df` must be non-empty (a component that exists cannot
-    * be replaced by nothing).
+  /** Run one verb's writes against `base` and commit the entry `body`
+    * returns (None: nothing to change, nothing committed). A failure after
+    * another writer has committed is reported as that race, naming the
+    * store; segments a failed attempt wrote are left to [[gc]].
     */
-  def replaceAll(spark: SparkSession, dir: String, comp: String,
-                 df: DataFrame): Unit = {
-    gcSuperseded(spark, dir, comp, keyCol = "")
-    val base = entries(spark, dir, comp)
-      .getOrElse(Seq(Entry(comp, Nil)))
-    val rel = s"${comp}_seg/s${System.currentTimeMillis()}_${scala.util.Random.nextInt(1 << 20)}"
-    df.write.parquet(s"$dir/$rel")
-    publish(spark, dir, comp,
-      base.map(_.copy(excluded = Nil, dropAll = true)) :+ Entry(rel, Nil))
+  def write(spark: SparkSession, dir: String, base: Option[Entry])
+           (body: Writer => Option[Entry]): Unit = {
+    val w = new Writer(spark, dir, base)
+    try body(w).foreach(w.commit)
+    catch {
+      case e: Throwable
+          if !e.isInstanceOf[IllegalStateException] &&
+            latestOpt(spark, dir).map(_.version) != base.map(_.version) =>
+        throw new IllegalStateException(
+          s"the store at $dir changed under this verb: a concurrent writer " +
+            "committed first — retry it against the new version", e)
+    }
   }
 
-  /** VACUUM — the major compaction: consolidate every live row of a
-    * segmented component into ONE fresh segment and mark every prior
-    * directory fully superseded (classic-layout components are already
-    * one directory — no-op). Appends accumulate one segment each; a
-    * reader's plan is a union of that many scans, fine at tens,
-    * pointless at thousands — vacuum resets the segment count to one at
-    * the cost of one full component rewrite, the same trade every
-    * LSM/lakehouse major compaction makes. Reader-safe like compact:
-    * the consolidated segment publishes with one manifest flip, the
-    * superseded directories survive until the next verb's GC. `live` is
-    * the consolidated frame when it is not a plain copy (the text index's
-    * terms net out negative delete rows through their `sum(df) > 0`
-    * merge); without it the live rows are re-read after the GC.
+  /** Collect what entry `next`'s commit let go (a segment `prev` named
+    * that `next` drops or excludes keys of), keeping everything entry
+    * `prev` still names (grace until the next such commit) and every
+    * segment a pending writer may yet commit (its base version is
+    * `next.version`).
     */
-  def vacuum(spark: SparkSession, dir: String, comp: String,
-             keyCol: String, live: Option[DataFrame] = None): Unit =
-    entries(spark, dir, comp) match {
-      case None => () // classic layout — nothing to consolidate
-      case Some(_) =>
-        gcSuperseded(spark, dir, comp, keyCol) // clear prior grace debt
-        entries(spark, dir, comp).foreach { es =>
-          val rows =
-            live.getOrElse(read(spark, dir, comp, keyCol))
-          val seg = newSegment(spark, dir, comp, keyCol, rows)
-          // same refusal as [[compact]]: consolidating to ZERO live rows
-          // would publish an all-superseded manifest no read can satisfy
-          // (require(live.nonEmpty) in liveEntries) — fail loudly BEFORE the
-          // flip, store unchanged
-          require(seg.nonEmpty,
-            s"refusing to vacuum $dir/$comp: no live rows would remain — " +
-              "a store cannot be emptied by maintenance; drop the store " +
-              "directory instead")
-          publish(spark, dir, comp,
-            es.map(_.copy(excluded = Nil, dropAll = true)) ++
-              seg.map(rel => Entry(rel, Nil)).toSeq)
-        }
+  private def gc(spark: SparkSession, dir: String, prev: Entry,
+                 next: Entry): Unit = {
+    val named = Seq(next, prev).flatMap(_.comps.values.flatten).map(_.id).toSet
+    for (c <- next.comps.keySet ++ prev.comps.keySet;
+         n <- StoreFs.listSubdirs(spark, s"$dir/$c")
+         if n.startsWith("seg=")) {
+      val id = n.stripPrefix("seg=")
+      val from = id.takeWhile(_ != '-').toLongOption.getOrElse(Long.MaxValue)
+      if (!named(id) && from < next.version)
+        StoreFs.delete(spark, s"$dir/$c/$n")
     }
-
-  /** Drop data whose grace period expired: the previous verb's
-    * superseded key directories, entries those deletions empty out, and
-    * segment dirs no manifest lists. The BASE dir itself is never
-    * deleted (existence probes and audits key off it) — only its
-    * superseded key subdirectories.
-    */
-  def gcSuperseded(spark: SparkSession, dir: String, comp: String,
-                   keyCol: String): Unit =
-    entries(spark, dir, comp).foreach { es =>
-      val cleaned = es.flatMap { e =>
-        if (e.dropAll) {
-          // fully superseded: segments vanish whole; the BASE dir stays
-          // (existence probes and composite audits key off it) but its
-          // contents go
-          if (e.rel != comp) StoreFs.delete(spark, s"$dir/${e.rel}")
-          else StoreFs.deleteContents(spark, s"$dir/${e.rel}")
-          None
-        } else {
-          e.excluded.foreach(k =>
-            StoreFs.delete(spark, s"$dir/${e.rel}/$keyCol=$k"))
-          val liveKeys = StoreFs
-            .listSubdirs(spark, s"$dir/${e.rel}")
-            .count(_.startsWith(s"$keyCol="))
-          if (liveKeys == 0 && e.excluded.nonEmpty) {
-            if (e.rel != comp) StoreFs.delete(spark, s"$dir/${e.rel}")
-            None
-          } else Some(Entry(e.rel, Nil))
-        }
-      }
-      val listed = cleaned.map(_.rel).toSet
-      StoreFs.listSubdirs(spark, s"$dir/${comp}_seg")
-        .map(n => s"${comp}_seg/$n")
-        .filterNot(listed.contains)
-        .foreach(rel => StoreFs.delete(spark, s"$dir/$rel"))
-      if (cleaned.nonEmpty) publish(spark, dir, comp, cleaned)
-      // all data superseded and gone: back to (an empty) classic layout
-      else StoreFs.delete(spark, manifestPath(dir, comp))
+    for ((c, segs) <- next.comps; s <- segs if s.excluded.nonEmpty) {
+      val before = prev.segs(c).find(_.id == s.id)
+        .fold(Set.empty[Long])(_.excluded.toSet)
+      val gone = s.excluded.toSet.intersect(before)
+      keysOf(spark, dir, c, s).collect {
+        case (n, Some(k)) if gone(k) => n
+      }.foreach(n => StoreFs.delete(spark, s"$dir/$c/seg=${s.id}/$n"))
     }
+    // drained tombstones go now, and their root with the last of them
+    prev.segs(Tomb).filterNot(next.segs(Tomb).contains)
+      .foreach(s => StoreFs.delete(spark, s"$dir/$Tomb/seg=${s.id}"))
+    if (!next.has(Tomb) && StoreFs.listSubdirs(spark, s"$dir/$Tomb").isEmpty &&
+        StoreFs.listFiles(spark, s"$dir/$Tomb").isEmpty)
+      StoreFs.delete(spark, s"$dir/$Tomb")
+  }
 }

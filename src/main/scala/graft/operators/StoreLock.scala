@@ -2,16 +2,21 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 
-/** SINGLE-WRITER enforcement for the persisted stores (text index, IVF,
-  * IVF-PQ, zone map, snapshot store): every mutating verb runs under
-  * [[withWriteLock]], which creates the store's `_lock` file EXCLUSIVELY
-  * (create-if-absent — atomic on HDFS-family filesystems, where the
-  * namenode arbitrates, and on the local scheme via NIO `createFile`)
-  * and deletes it when the verb finishes or throws.
+/** SINGLE-WRITER enforcement for the persisted stores that still lock —
+  * the zone map, the snapshot store, the saved BPE tokenizer, and the
+  * index stores' CDC-sync markers (`<index>/_sync`): every mutating verb
+  * runs under [[withWriteLock]], which creates the store's `_lock` file
+  * EXCLUSIVELY (create-if-absent — atomic on HDFS-family filesystems,
+  * where the namenode arbitrates, and on the local scheme via NIO
+  * `createFile`) and deletes it when the verb finishes or throws.
   *
-  * Why this exists: every store's append path is a read-modify-write of
-  * shared metadata (the zone map merges its `_zones` sidecar, the text
-  * index adds a `stats` row, compaction swaps partition directories).
+  * The text, IVF and IVF-PQ stores take no lock: each verb commits one
+  * entry of their write-once log ([[StoreSegments]]), whose put-if-absent
+  * already fails the second of two racing writers.
+  *
+  * Why this exists: every locked store's append path is a
+  * read-modify-write of shared metadata (the zone map merges its `_zones`
+  * sidecar, a snapshot version claims the next number).
   * Two RACING writers would interleave those silently — the second
   * writer's sidecar overwrite erases the first's counts, and nothing
   * fails until a scan prunes live rows. The reference serializes all

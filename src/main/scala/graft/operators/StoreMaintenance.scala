@@ -9,25 +9,26 @@ import org.apache.spark.sql.types.StructType
   * auto-compaction). One call inspects the store's cheap health signals
   * and applies the SMALLEST sufficient verb:
   *
-  *  - **live directory legs > `maxSegments`** → VACUUM (major
-  *    compaction): every append since the first manifest added a segment,
-  *    and a search plan unions one scan per live leg — fine at tens,
-  *    pointless at thousands ([[StoreSegments.vacuum]]'s contract);
+  *  - **live segments of a component > `maxSegments`** → VACUUM (major
+  *    compaction): every append and delete adds segments; a search still
+  *    scans each component once, but lists every live segment's files
+  *    and resolves a log entry that grows with them — fine at tens,
+  *    pointless at thousands ([[Tombstones.vacuum]]);
   *  - **else tombstoned ids > `maxTombstones`** → COMPACT (minor): drain
   *    the delete queue by rewriting only the affected partitions;
-  *  - **else** → NONE. Maintenance that isn't due costs two driver-side
-  *    manifest reads and one scan of the churn-bounded tombstone dir —
-  *    nothing touches a data path, so the PROBE is as cheap at 100 TB as
-  *    on a fixture. Only the verb it decides to run pays data costs, and
-  *    those are the verbs' own documented bills.
+  *  - **else** → NONE. Maintenance that isn't due costs one log-entry
+  *    read and one scan of the churn-bounded tombstones — nothing touches
+  *    a data path, so the PROBE is as cheap at 100 TB as on a fixture.
+  *    Only the verb it decides to run pays data costs, and those are the
+  *    verbs' own documented bills.
   *
   * Vacuum subsumes compact (the compound vacuum verbs drain tombstones
   * first), so when both thresholds trip one vacuum settles both.
   *
   * Returns a one-row receipt `(store, action, n_tombstones, n_live_legs)`
-  * — the decision and the signals it was made from. The verbs themselves
-  * run under the store write lock; the probe is advisory (the caller IS
-  * the single writer by the lock discipline).
+  * — the decision and the signals it was made from. The verb it runs
+  * commits on top of the entry the probe read, so a writer that commits
+  * in between makes the verb fail, not act on a stale decision.
   *
   * Reference scope note: the reference's SDFS has no compaction to
   * schedule (append-only replicas, `Nimbus.go` placement); this policy
@@ -46,19 +47,15 @@ object StoreMaintenance {
       java.util.List.of(Row(store, action, nTomb, nLegs)), receiptSchema)
 
   /** Probe and maintain one index store. The signals: tombstoned ids (the
-    * family's `tombstones/` id column) and the max live directory legs
-    * across its component table — the union width a reader's plan pays;
-    * a classic-layout (or absent, optional) component is one leg.
+    * family's `tombstones/` id column) and the most live segments of any
+    * component in its table, from the store's newest log entry.
     */
   private def maintain(store: Tombstones.Store, maxSegments: Int,
                        maxTombstones: Long): DataFrame = {
-    val (spark, dir, f) = (store.spark, store.dir, store.family)
-    val nTomb = StoreFs.tombstoneIds(spark, s"$dir/tombstones", f.idCol,
+    val (spark, dir, f, e) = (store.spark, store.dir, store.family, store.entry)
+    val nTomb = StoreSegments.tombstoneIds(spark, dir, e, f.idCol,
       store.tombSchema).size.toLong
-    val nLegs = f.components.map { c =>
-      StoreSegments.entries(spark, dir, c.name)
-        .map(_.count(!_.dropAll).toLong).getOrElse(1L)
-    }.max
+    val nLegs = f.components.map(c => e.segs(c.name).size.toLong).max
     val action =
       if (nLegs > maxSegments) "vacuum"
       else if (nTomb > maxTombstones) "compact"
@@ -129,11 +126,11 @@ object StoreMaintenance {
 
   /** Maintain a [[TextAnalysis.buildTextIndex]] store: stats, terms,
     * postings, docs and (when built) positions — [[TextAnalysis.textIndex]]'s
-    * table. `buckets` is the store's layout constant (the compact/vacuum
-    * verbs need it, exactly as at build time).
+    * table. `buckets`, when non-zero, must equal the store's recorded
+    * bucket count.
     */
   def maintainTextIndex(spark: SparkSession, dir: String,
-                        buckets: Int = 64, maxSegments: Int = 8,
+                        buckets: Int = 0, maxSegments: Int = 8,
                         maxTombstones: Long = 0): DataFrame =
     maintain(TextAnalysis.textStore(spark, dir, buckets), maxSegments,
       maxTombstones)

@@ -630,7 +630,10 @@ object TextAnalysis {
     * every later query from the buckets its terms hash to (partition-
     * pruned scan — the retrieval shape a 100 TB corpus serves queries
     * from; re-scanning text per query is the thing an index exists to
-    * kill). Layout under `dir`:
+    * kill). Layout under `dir` — each component a root of immutable
+    * `seg=<id>` segments, the live ones named by the newest entry of the
+    * store's log `_log/` ([[StoreSegments]]), which also records `buckets`
+    * and whether positions are stored:
     *
     *  - `postings/` — (term, doc_id, cnt, dl), `partitionBy(bucket)`;
     *    `dl` denormalized onto every posting so query time needs no
@@ -655,65 +658,16 @@ object TextAnalysis {
   def buildTextIndex(df: DataFrame, idCol: String, textCol: String,
                      dir: String, buckets: Int = 64,
                      withPositions: Boolean = false): Unit =
-      StoreLock.withWriteLock(dir) {
-        Par.described(df.sparkSession, s"text-index build $dir") {
+      Par.described(df.sparkSession, s"text-index build $dir") {
     require(buckets >= 1, s"buckets must be >= 1: $buckets")
-    if (withPositions) writePositions(df, idCol, textCol, dir, buckets,
-      mode = "overwrite")
-    val dl = CacheScope.persisted(df.select(col(idCol).as("doc_id"),
-      size(array_remove(tokens(col(textCol)), "")).cast("long").as("dl"),
-      tokens(col(textCol)).as("toks")))
-    val postings = CacheScope.persisted(
-      dl.select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
-        .filter(col("term") =!= "")
-        .groupBy("doc_id", "term", "dl").agg(count(lit(1)).as("cnt"))
-        .withColumn("bucket", termBucket(col("term"), buckets))
-        // CLUSTER by bucket before the partitioned write: without this,
-        // every shuffle partition writes a sliver into every bucket dir
-        // (partitions × buckets small files — the classic partitionBy
-        // mistake); clustered, each bucket is one writer's contiguous
-        // output, which is also the layout a pruned read wants. The
-        // partition count is EXPLICIT (r15): the count-less form gets
-        // AQE-coalesced to 1-2 partitions at small inputs, serializing
-        // the per-file parquet-writer inits that dominate these writes.
-        .repartition(math.min(buckets,
-          df.sparkSession.sparkContext.defaultParallelism),
-          col("bucket")))
-    // a rebuild returns to the classic layout: no stale segment manifests,
-    // and no tombstones — they name ids of the store being replaced
-    Seq("postings", "terms", "stats", "docs")
-      .foreach(c => StoreSegments.reset(df.sparkSession, dir, c))
-    StoreFs.delete(df.sparkSession, s"$dir/tombstones")
-    // materialize the shared caches ONCE (computing postings evaluates dl
-    // too), then overlap the four component writes — they are independent
-    // (different directories) and each now reads the cache, so the wall
-    // is one compute + the slowest write instead of four sequential
-    // write+commit latencies (Par's §2.6 overlap; r15)
-    postings.count()
-    Par.run(
-      () => postings.write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$dir/postings"),
-      () => postings.groupBy("term", "bucket").agg(count(lit(1)).as("df"))
-        .repartition(math.min(buckets,
-          df.sparkSession.sparkContext.defaultParallelism), col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$dir/terms"),
-      // corpus constants as RAW TOTALS (n_docs, sum_dl), not a
-      // precomputed avgdl: totals are mergeable — [[appendTextIndex]]
-      // adds a row per segment and search re-derives avgdl from the
-      // exact Long sums, so an appended index keeps bit-identical
-      // IDF/TF arithmetic
-      () => dl.agg(count(lit(1)).cast("long").as("n_docs"),
-          sum("dl").cast("long").as("sum_dl"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats"),
-      () => dl.select(col("doc_id"), col("dl"))
-        .withColumn("dbucket",
-          termBucket(col("doc_id").cast("string"), buckets))
-        .repartition(math.min(buckets,
-          df.sparkSession.sparkContext.defaultParallelism), col("dbucket"))
-        .write.mode("overwrite").partitionBy("dbucket")
-        .parquet(s"$dir/docs"))
-  }}
+    val sp = df.sparkSession
+    // a rebuild commits an entry naming only what it writes: no stale
+    // segments, no positions unless asked, and no tombstones — they name
+    // ids of the store being replaced
+    writeText(sp, dir, StoreSegments.latestOpt(sp, dir),
+      StoreSegments.Entry(0, buckets, withPositions, Map.empty), df, idCol,
+      textCol)
+  }
 
   /** INCREMENTAL text-index maintenance — [[Similarity.appendIvfIndex]]'s
     * contract for the inverted index: a crawl increment appends its
@@ -727,14 +681,34 @@ object TextAnalysis {
     */
   def appendTextIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                       batch: DataFrame, idCol: String, textCol: String,
-                      buckets: Int = 64,
+                      buckets: Int = 0,
                       withPositions: Boolean = false): Unit =
-      StoreLock.withWriteLock(dir) {
-        Par.described(spark, s"text-index append $dir") {
-    require(buckets >= 1, s"buckets must be >= 1: $buckets")
-    if (withPositions) writePositions(batch, idCol, textCol, dir, buckets,
-      mode = "append")
-    val dl = CacheScope.persisted(batch.select(col(idCol).as("doc_id"),
+      Par.described(spark, s"text-index append $dir") {
+    val e = StoreSegments.latest(spark, dir)
+    e.bucketsFor(dir, buckets)
+    require(!withPositions || e.positions,
+      s"the store at $dir has layout (${e.layout}); the call asked for " +
+        "positions")
+    writeText(spark, dir, Some(e), e, batch, idCol, textCol)
+  }
+
+  /** Write `df`'s text-index components under `layout` (its bucket count
+    * and whether positions are stored) as new segments, each added to
+    * `layout`'s own segments, and commit one entry on top of `base`. The
+    * shared caches are materialized ONCE (computing postings evaluates dl
+    * too), then the component writes overlap — independent segments, so
+    * the wall is one compute + the slowest write (Par's §2.6 overlap).
+    */
+  private def writeText(spark: org.apache.spark.sql.SparkSession,
+                        dir: String, base: Option[StoreSegments.Entry],
+                        layout: StoreSegments.Entry, df: DataFrame,
+                        idCol: String, textCol: String): Unit = {
+    val buckets = layout.buckets
+    // the partition count is EXPLICIT (r15): the count-less form gets
+    // AQE-coalesced to 1-2 partitions at small inputs, serializing the
+    // per-file parquet-writer inits that dominate these writes
+    val parts = math.min(buckets, spark.sparkContext.defaultParallelism)
+    val dl = CacheScope.persisted(df.select(col(idCol).as("doc_id"),
       size(array_remove(tokens(col(textCol)), "")).cast("long").as("dl"),
       tokens(col(textCol)).as("toks")))
     val postings = CacheScope.persisted(
@@ -742,30 +716,37 @@ object TextAnalysis {
         .filter(col("term") =!= "")
         .groupBy("doc_id", "term", "dl").agg(count(lit(1)).as("cnt"))
         .withColumn("bucket", termBucket(col("term"), buckets))
-        .repartition(math.min(buckets,
-          spark.sparkContext.defaultParallelism), col("bucket")))
-    // same overlap as the build: one materialization of the shared
-    // caches, then the four independent component appends concurrently
-    // (per-component manifests — no shared state across the forks)
+        // CLUSTER by bucket before the partitioned write: without this,
+        // every shuffle partition writes a sliver into every bucket dir
+        // (partitions × buckets small files — the classic partitionBy
+        // mistake); clustered, each bucket is one writer's contiguous
+        // output, which is also the layout a pruned read wants
+        .repartition(parts, col("bucket")))
     postings.count()
-    Par.run(
-      () => StoreSegments.append(spark, dir, "postings", "bucket",
-        postings),
-      () => StoreSegments.append(spark, dir, "terms", "bucket",
-        postings.groupBy("term", "bucket").agg(count(lit(1)).as("df"))
-          .repartition(math.min(buckets,
-            spark.sparkContext.defaultParallelism), col("bucket"))),
-      () => StoreSegments.appendPlain(spark, dir, "stats",
-        dl.agg(count(lit(1)).cast("long").as("n_docs"),
-            sum("dl").cast("long").as("sum_dl"))
-          .coalesce(1), knownNonEmpty = true),
-      () => StoreSegments.append(spark, dir, "docs", "dbucket",
-        dl.select(col("doc_id"), col("dl"))
-          .withColumn("dbucket",
-            termBucket(col("doc_id").cast("string"), buckets))
-          .repartition(math.min(buckets,
-            spark.sparkContext.defaultParallelism), col("dbucket"))))
-  }}
+    StoreSegments.write(spark, dir, base) { w =>
+      Par.run(Seq[() => Unit](
+        () => w.keyed("postings", "bucket", postings),
+        () => w.keyed("terms", "bucket",
+          postings.groupBy("term", "bucket").agg(count(lit(1)).as("df"))
+            .repartition(parts, col("bucket"))),
+        // corpus constants as RAW TOTALS (n_docs, sum_dl), not a
+        // precomputed avgdl: totals are mergeable — an append adds a row
+        // per segment and search re-derives avgdl from the exact Long
+        // sums, so an appended index keeps bit-identical IDF/TF arithmetic
+        () => w.plain("stats",
+          dl.agg(count(lit(1)).cast("long").as("n_docs"),
+            sum("dl").cast("long").as("sum_dl")).coalesce(1)),
+        () => w.keyed("docs", "dbucket",
+          dl.select(col("doc_id"), col("dl"))
+            .withColumn("dbucket",
+              termBucket(col("doc_id").cast("string"), buckets))
+            .repartition(parts, col("dbucket")))) ++
+        (if (layout.positions) Seq(() => w.keyed("positions", "bucket",
+          positionRows(df, idCol, textCol, buckets, parts)))
+        else Nil): _*)
+      Some(w.appendedTo(layout))
+    }
+  }
 
   /** DELETION from a [[buildTextIndex]] index — the storage verb a crawl
     * pipeline cannot live without (takedowns, robots revocations,
@@ -792,7 +773,7 @@ object TextAnalysis {
     */
   def deleteFromTextIndex(spark: org.apache.spark.sql.SparkSession,
                           dir: String, ids: DataFrame, idCol: String,
-                          buckets: Int = 64): Unit =
+                          buckets: Int = 0): Unit =
     Tombstones.delete(textStore(spark, dir, buckets), ids, idCol,
       drain = false)
 
@@ -803,7 +784,7 @@ object TextAnalysis {
     */
   def deleteAndCompactTextIndex(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, ids: DataFrame, idCol: String,
-                                buckets: Int = 64): Unit =
+                                buckets: Int = 0): Unit =
     Tombstones.delete(textStore(spark, dir, buckets), ids, idCol,
       drain = true)
 
@@ -814,16 +795,16 @@ object TextAnalysis {
     * (spec-asserted). Answers are unchanged (gated: q132 ≡ q131).
     */
   def compactTextIndex(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, buckets: Int = 64): Unit =
+                       dir: String, buckets: Int = 0): Unit =
     Tombstones.compact(textStore(spark, dir, buckets))
 
   /** VACUUM — the MAJOR compaction: drain tombstones, then consolidate
     * each segmented component to one segment; terms net out negative
     * delete rows (the search's `sum(df) > 0` merge), stats collapse to
-    * one total row. Reader-safe: every publish is a manifest flip.
+    * one total row — one commit, like every verb.
     */
   def vacuumTextIndex(spark: org.apache.spark.sql.SparkSession,
-                      dir: String, buckets: Int = 64): Unit =
+                      dir: String, buckets: Int = 0): Unit =
     Tombstones.vacuum(textStore(spark, dir, buckets))
 
   /** The text index's [[Tombstones]] declaration (in the composite
@@ -842,29 +823,32 @@ object TextAnalysis {
         Component("positions", "bucket", DropById, optional = true)))
   }
 
-  /** A text index opened for one [[Tombstones]] verb. `docs/` is the
-    * verb's ONE schema inference (r16 job diet): its doc_id field types
+  /** A text index opened for one [[Tombstones]] verb at its newest log
+    * entry; a non-zero `buckets` must equal the recorded count. `docs/`
+    * is the verb's ONE schema read (r16 job diet): its doc_id field types
     * every other component and the tombstones.
     */
   private[graft] def textStore(sp: org.apache.spark.sql.SparkSession,
                                root: String,
                                buckets: Int): Tombstones.Store =
       new Tombstones.Store {
-    require(buckets >= 1, s"buckets must be >= 1: $buckets")
     val spark = sp
     val dir = root
     val family = textIndex
-    private lazy val docs = StoreSegments.read(spark, dir, "docs", "dbucket")
+    val entry = StoreSegments.latest(spark, dir)
+    private val nb = entry.bucketsFor(dir, buckets)
+    private lazy val docs =
+      StoreSegments.readAt(spark, dir, entry, "docs", "dbucket")
     private lazy val docId = docs.schema("doc_id")
     def tombSchema = Comp.tombstones(docId)
     def read(name: String, key: String): DataFrame =
       if (name == "docs") docs
-      else StoreSegments.read(spark, dir, name, key,
-        schema = Some(Comp.of(name, docId)))
+      else StoreSegments.readAt(spark, dir, entry, name, key,
+        Some(Comp.of(name, docId)))
     override def parts: Int =
-      math.min(buckets, spark.sparkContext.defaultParallelism)
+      math.min(nb, spark.sparkContext.defaultParallelism)
     override def idKey(id: Column): Column =
-      termBucket(id.cast("string"), buckets)
+      termBucket(id.cast("string"), nb)
 
     /** `docs/` → (doc_id, dl) over the ids' own dbuckets, then the
       * postings they touch; negatives: one (−n, −Σdl) stats row and a
@@ -916,26 +900,18 @@ object TextAnalysis {
     * queries consume. Opt-in because positions roughly double the
     * index's write volume (a position per token vs a count per type);
     * an index built without them serves every non-phrase query
-    * identically.
+    * identically. The store's log records the choice, and appends follow
+    * it.
     */
-  private def writePositions(df: DataFrame, idCol: String, textCol: String,
-                             dir: String, buckets: Int,
-                             mode: String): Unit = {
-    val rows = df.select(col(idCol).as("doc_id"),
+  private def positionRows(df: DataFrame, idCol: String, textCol: String,
+                           buckets: Int, parts: Int): DataFrame =
+    df.select(col(idCol).as("doc_id"),
         posexplode(array_remove(tokens(col(textCol)), ""))
           .as(Seq("pos", "term")))
       .groupBy("doc_id", "term")
       .agg(sort_array(collect_list(col("pos").cast("long"))).as("poss"))
       .withColumn("bucket", termBucket(col("term"), buckets))
-      .repartition(math.min(buckets,
-        df.sparkSession.sparkContext.defaultParallelism), col("bucket"))
-    if (mode == "overwrite") {
-      StoreSegments.reset(df.sparkSession, dir, "positions")
-      rows.write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$dir/positions")
-    } else StoreSegments.append(df.sparkSession, dir, "positions",
-      "bucket", rows)
-  }
+      .repartition(parts, col("bucket"))
 
   /** EXACT PHRASE SEARCH over a positions-enabled index: docs where the
     * phrase's terms occur at consecutive positions, with the occurrence
@@ -955,11 +931,22 @@ object TextAnalysis {
     */
   def phraseSearchIndex(spark: org.apache.spark.sql.SparkSession,
                         dir: String, phrase: Seq[String],
-                        buckets: Int = 64): DataFrame = {
+                        buckets: Int = 0): DataFrame = {
     require(phrase.nonEmpty && phrase.forall(_.nonEmpty),
       s"phrase must be non-empty terms: $phrase")
-    val wanted = phrase.map(termBucketOf(_, buckets)).distinct
-    val pos = liveRows(spark, dir, "positions")
+    StoreFs.retryTornReads()(phraseAt(spark, dir,
+      StoreSegments.latest(spark, dir), phrase, buckets))
+  }
+
+  private def phraseAt(spark: org.apache.spark.sql.SparkSession,
+                       dir: String, e: StoreSegments.Entry,
+                       phrase: Seq[String], buckets: Int): DataFrame = {
+    require(e.positions,
+      s"the store at $dir stores no positions (${e.layout}); phrase " +
+        "search needs a store built with withPositions = true")
+    val nb = e.bucketsFor(dir, buckets)
+    val wanted = phrase.map(termBucketOf(_, nb)).distinct
+    val pos = liveRows(spark, dir, e, "positions")
       .filter(col("bucket").isin(wanted: _*))
       .filter(col("term").isin(phrase.distinct: _*))
     val slots = phrase.zipWithIndex.map { case (t, i) =>
@@ -992,7 +979,7 @@ object TextAnalysis {
     *  - `stats_docs_match` / `stats_dl_match` — the stats segments'
     *    exact totals vs the live docs/ table (MUST be true);
     *  - `n_orphan_postings` — postings whose doc has no docs/ row (MUST
-    *    be 0; a crash between component writes would surface here);
+    *    be 0; ids match null-safely, so a null-id doc is no orphan);
     *  - `n_tombstones` — pending physical deletes (compaction's queue).
     *
     * Gated (q147): after build + append + delete, every invariant holds
@@ -1004,22 +991,27 @@ object TextAnalysis {
                      dir: String): DataFrame = {
     // docs/ is typed by its footer; its doc_id field types the postings
     // and tombstone reads; terms/stats are static
-    val docsBase = StoreSegments.read(spark, dir, "docs", "dbucket")
+    // a drain deletes the tombstones it drops at once: an audit that
+    // resolved just before it resolves again
+    val (e, docsBase, tombIds) = StoreFs.retryTornReads() {
+      val e = StoreSegments.latest(spark, dir)
+      val docsBase = StoreSegments.readAt(spark, dir, e, "docs", "dbucket")
+      (e, docsBase, StoreSegments.tombstoneIds(spark, dir, e, "doc_id",
+        Comp.tombstones(docsBase.schema("doc_id"))))
+    }
     val docId = docsBase.schema("doc_id")
-    val tombIds = StoreFs.tombstoneIds(spark, s"$dir/tombstones", "doc_id",
-      Comp.tombstones(docId))
     // the postings and docs subtrees each feed TWO branches of the one
     // returned plan (df inventory + orphan check resp. live totals +
     // orphan check) — persist so the single audit action scans each
     // component once, not twice (r15; the CacheScope idiom: the caller's
     // clearCache / withCaches scope owns the release)
     val postings = CacheScope.persisted(StoreFs.hideIds(
-      StoreSegments.read(spark, dir, "postings", "bucket",
-        schema = Some(Comp.postings(docId))), "doc_id", tombIds))
+      StoreSegments.scan(spark, dir, e, "postings", "bucket",
+        Comp.postings(docId)), "doc_id", tombIds))
     val docs = CacheScope.persisted(
       StoreFs.hideIds(docsBase, "doc_id", tombIds))
-    val dfStored = StoreSegments.read(spark, dir, "terms", "bucket",
-        schema = Some(Comp.terms))
+    val dfStored = StoreSegments.scan(spark, dir, e, "terms", "bucket",
+        Comp.terms)
       .groupBy("term").agg(sum("df").cast("long").as("df_stored"))
       .filter(col("df_stored") =!= 0)
     val dfLive = postings.groupBy("term")
@@ -1034,12 +1026,12 @@ object TextAnalysis {
           .cast("long").as("n_df_mismatch"))
     val live = docs.agg(count(lit(1)).cast("long").as("n_docs"),
       coalesce(sum("dl"), lit(0L)).cast("long").as("sum_dl"))
-    val stats = StoreSegments.read(spark, dir, "stats", "",
-        schema = Some(Comp.stats))
+    val stats = StoreSegments.scan(spark, dir, e, "stats", "", Comp.stats)
       .agg(sum("n_docs").cast("long").as("stats_docs"),
         sum("sum_dl").cast("long").as("stats_dl"))
-    val orphans = postings.select("doc_id").distinct()
-      .join(docs.select("doc_id"), Seq("doc_id"), "left_anti")
+    val orphans = postings.select("doc_id").distinct().as("p")
+      .join(docs.select("doc_id").as("d"),
+        col("p.doc_id") <=> col("d.doc_id"), "left_anti")
       .agg(count(lit(1)).cast("long").as("n_orphan_postings"))
     terms
       .crossJoin(live).crossJoin(stats).crossJoin(orphans)
@@ -1116,7 +1108,7 @@ object TextAnalysis {
   def searchTextIndex(spark: org.apache.spark.sql.SparkSession,
                       dir: String, terms: Seq[String],
                       k1: Double = 1.2, b: Double = 0.75, k: Int = 10,
-                      buckets: Int = 64,
+                      buckets: Int = 0,
                       requireAll: Boolean = false): DataFrame =
     searchTextIndexImpl(spark, dir, terms, None, k1, b, k, buckets,
       requireAll)
@@ -1146,7 +1138,7 @@ object TextAnalysis {
                               dir: String, terms: Seq[String],
                               allowed: DataFrame,
                               k1: Double = 1.2, b: Double = 0.75,
-                              k: Int = 10, buckets: Int = 64,
+                              k: Int = 10, buckets: Int = 0,
                               requireAll: Boolean = false): DataFrame = {
     require(allowed.columns.length == 1,
       s"allowed must be a single-column frame of eligible doc ids; got " +
@@ -1163,14 +1155,25 @@ object TextAnalysis {
                                   requireAll: Boolean): DataFrame = {
     require(terms.nonEmpty, "need at least one query term")
     require(k >= 1, s"k must be >= 1: $k")
-    val wanted = terms.map(termBucketOf(_, buckets)).distinct
+    StoreFs.retryTornReads()(bm25At(spark, dir,
+      StoreSegments.latest(spark, dir), terms, allowed, k1, b, k, buckets,
+      requireAll))
+  }
+
+  /** The BM25 plan over entry `e`: every file it reads is one `e` names. */
+  private def bm25At(spark: org.apache.spark.sql.SparkSession, dir: String,
+                     e: StoreSegments.Entry, terms: Seq[String],
+                     allowed: Option[DataFrame], k1: Double, b: Double,
+                     k: Int, buckets: Int,
+                     requireAll: Boolean): DataFrame = {
+    val wanted = terms.map(termBucketOf(_, e.bucketsFor(dir, buckets))).distinct
     // the corpus totals enter the plan as literals; avgdl derives with the
     // IDENTICAL `sum · 1.0 / count` expression shape bm25Search uses, so a
     // one-segment index and an appended one score the same
-    val (nDocs, sumDl) = corpusTotals(spark, dir)
+    val (nDocs, sumDl) = corpusTotals(spark, dir, e)
     val avgdl = sumDl * lit(1.0) / nDocs
-    val dfreq = StoreSegments.read(spark, dir, "terms", "bucket",
-        schema = Some(Comp.terms))
+    val dfreq = StoreSegments.scan(spark, dir, e, "terms", "bucket",
+        Comp.terms)
       .filter(col("bucket").isin(wanted: _*))
       .filter(col("term").isin(terms: _*))
       .groupBy("term").agg(sum("df").cast("long").as("df"))
@@ -1178,7 +1181,7 @@ object TextAnalysis {
     // filter — tombstones stay delete-batch-sized because compactTextIndex
     // drains them); df and the totals need nothing here, their segment
     // sums already absorb the delete's negative rows
-    val qt1 = liveRows(spark, dir, "postings")
+    val qt1 = liveRows(spark, dir, e, "postings")
       .filter(col("bucket").isin(wanted: _*))
       .filter(col("term").isin(terms: _*))
     // eligibility BEFORE scoring/rank (filtered-retrieval semantics) —
@@ -1211,29 +1214,27 @@ object TextAnalysis {
   }
 
   /** A search's live rows of the doc-keyed component `comp` (postings or
-    * positions): [[StoreSegments.live]] under the declared layout, its
-    * doc_id typed by the component's footer.
+    * positions) at `e`: [[StoreSegments.live]] under the declared layout,
+    * its doc_id typed by the component's footer.
     */
   private def liveRows(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       comp: String): DataFrame =
-    StoreSegments.live(spark, dir, comp, "bucket", "doc_id",
+                       e: StoreSegments.Entry, comp: String): DataFrame =
+    StoreSegments.live(spark, dir, e, comp, "bucket", "doc_id",
       declare = f => Comp.of(comp, f("doc_id")),
       tombSchema = s => Comp.tombstones(s("doc_id")))
 
-  /** The corpus totals (`n_docs`, `sum_dl`) summed over the stats
+  /** The corpus totals (`n_docs`, `sum_dl`) summed over `e`'s stats
     * segments, as Long literals (null on a store with no stats row): a
-    * bounded driver value, reused while the stats component is unchanged
+    * bounded driver value, reused while the stats segments are the same
     * ([[StoreFs.frozen]]), so a warm search runs no aggregate or broadcast
     * for them.
     */
   private def corpusTotals(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): (Column, Column) = {
-    val r = StoreFs.frozen(spark, "text corpus totals",
-        StoreSegments.paths(dir, "stats")) {
-      StoreFs.retryTornReads() {
-        StoreSegments.read(spark, dir, "stats", "", schema = Some(Comp.stats))
-          .agg(sum("n_docs").cast("long"), sum("sum_dl").cast("long")).head
-      }
+                           dir: String,
+                           e: StoreSegments.Entry): (Column, Column) = {
+    val r = StoreFs.frozen("text corpus totals", dir +: e.ids("stats")) {
+      StoreSegments.scan(spark, dir, e, "stats", "", Comp.stats)
+        .agg(sum("n_docs").cast("long"), sum("sum_dl").cast("long")).head
     }
     (lit(r.get(0)).cast("long"), lit(r.get(1)).cast("long"))
   }

@@ -219,10 +219,9 @@ object ZoneMap {
   /** The statistics sidecar as a DataFrame — the pruning decision's input,
     * queryable like any other table. Plan construction retries the
     * vanished-file race (a concurrent append/repair swapping the sidecar
-    * between our listing and footer read — the [[graft.operators
-    * .StoreSegments]] read discipline applied to the one store component
-    * still published by directory swap; the swap window is one rename,
-    * so one retry settles it).
+    * between our listing and footer read — the sidecar is published by
+    * directory swap, whose window is one rename, so one retry settles
+    * it).
     */
   def zoneStats(spark: SparkSession, path: String): DataFrame =
     graft.operators.StoreFs.retryTornReads()(

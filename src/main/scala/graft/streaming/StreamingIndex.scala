@@ -33,12 +33,13 @@ object StreamingIndex {
 
   /** Drain `source` (a streaming frame of documents) to EOF, appending
     * each micro-batch into the [[graft.operators.TextAnalysis
-    * .buildTextIndex]] store at `dir`.
+    * .buildTextIndex]] store at `dir` (a non-zero `buckets` must equal the
+    * store's recorded count).
     */
   def ingestTextIndex(spark: SparkSession, source: DataFrame,
                       checkpoint: String, dir: String,
                       idCol: String, textCol: String,
-                      buckets: Int = 64): Unit =
+                      buckets: Int = 0): Unit =
     BoundedStream.runForeachBatch(source, identity, checkpoint, "append") {
       (batch, id) =>
         val marker = s"$dir/ingested/batch=$id"

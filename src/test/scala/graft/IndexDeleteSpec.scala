@@ -157,7 +157,8 @@ class IndexDeleteSpec extends SparkTestBase {
       .select("neighbor_id").as[Long].collect().toSet
     assert(found2 == found)
     // and the surviving postings still carry (id, code_word, cell)
-    val cols = spark.read.parquet(s"$dir/postings").columns.toSet
+    val cols = graft.operators.StoreSegments.read(spark, dir, "postings",
+      "cell").columns.toSet
     assert(cols == Set("id", "code_word", "cell"))
   }
 

@@ -111,7 +111,9 @@ class SimilaritySpec extends SparkTestBase {
       k = 2, nprobe = 2, centStep = 4)
     assert(rows(fromIndex) == rows(direct) && rows(direct).nonEmpty)
     // the inverted file IS the directory layout: one partition per cell
+    // of the build's one segment
     val cells = new java.io.File(s"$dir/postings").listFiles()
+      .flatMap(_.listFiles())
       .filter(_.getName.startsWith("cell=")).map(_.getName).sorted
     assert(cells.toSeq == Seq("cell=0", "cell=4"))
     // searching with nprobe=1 must read only the probed cell's rows — the

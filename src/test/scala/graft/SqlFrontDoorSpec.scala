@@ -113,23 +113,51 @@ class SqlFrontDoorSpec extends SparkTestBase {
       .orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(search(sqlRoot) == search(scalaRoot) && search(sqlRoot).nonEmpty)
-    // the single-writer lock reaches through the SQL surface too — and
-    // is OBSERVABLE from it (graft_store_lock_status)
+    // the log's one-commit-per-verb race reaches through the SQL surface
+    // too: a writer that commits while a SQL append is in flight makes the
+    // SQL verb fail, naming the store, and leaves only its own commit
+    val version = graft.operators.StoreSegments.latest(spark, sqlRoot).version
+    val raced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    graft.operators.StoreSegments.hook = (d, step) =>
+      if (d == sqlRoot && step == "commit" && raced.compareAndSet(false, true))
+        graft.operators.TextAnalysis.appendTextIndex(spark, sqlRoot,
+          Seq((9L, "quokka")).toDF("doc_id", "text"), "doc_id", "text")
+    val e = try intercept[Exception] {
+      spark.sql(
+        s"SELECT * FROM graft_text_index_append('$sqlRoot', 'wv_docs', 'doc_id', 'text', 8)")
+        .collect()
+    } finally graft.operators.StoreSegments.hook = (_, _) => ()
+    def chain(t: Throwable): Seq[String] =
+      if (t == null) Nil else String.valueOf(t.getMessage) +: chain(t.getCause)
+    assert(chain(e).exists(m => m.contains("concurrent writer") &&
+      m.contains(sqlRoot)), chain(e).mkString(" | "))
+    assert(graft.operators.StoreSegments.latest(spark, sqlRoot).version ==
+      version + 1)
+    assert(graft.operators.TextAnalysis.searchTextIndex(spark, sqlRoot,
+      Seq("quokka")).select("doc_id").as[Long].collect().toSet ==
+      Set(5L, 9L))
+    // the single-writer lock of a store that still takes it (the zone
+    // map) reaches through the SQL surface too — and is OBSERVABLE from
+    // it (graft_store_lock_status)
+    Seq((1L, 10L), (2L, 20L)).toDF("id", "key")
+      .createOrReplaceTempView("wv_keys")
+    val zmRoot = java.nio.file.Files.createTempDirectory("graft-wv-zm").toString
+    spark.sql(
+      s"SELECT * FROM graft_zonemap_write('$zmRoot', 'wv_keys', 'key', 2)")
+      .collect()
     def lockedFromSql = spark.sql(
-      s"SELECT locked FROM graft_store_lock_status('$sqlRoot')")
+      s"SELECT locked FROM graft_store_lock_status('$zmRoot')")
       .head.getBoolean(0)
     assert(!lockedFromSql)
-    graft.operators.StoreLock.withWriteLock(sqlRoot) {
+    graft.operators.StoreLock.withWriteLock(zmRoot) {
       assert(lockedFromSql)
-      val e = intercept[Exception] {
+      val locked = intercept[Exception] {
         spark.sql(
-          s"SELECT * FROM graft_text_index_append('$sqlRoot', 'wv_docs', 'doc_id', 'text', 8)")
+          s"SELECT * FROM graft_zonemap_append('$zmRoot', 'wv_keys', 'key')")
           .collect()
       }
-      def chain(t: Throwable): Seq[String] =
-        if (t == null) Nil else String.valueOf(t.getMessage) +: chain(t.getCause)
-      assert(chain(e).exists(_.contains("concurrent writer")),
-        chain(e).mkString(" | "))
+      assert(chain(locked).exists(_.contains("concurrent writer")),
+        chain(locked).mkString(" | "))
     }
     assert(!lockedFromSql)
   }
@@ -166,7 +194,7 @@ class SqlFrontDoorSpec extends SparkTestBase {
     assert(hits == afterBuild, "EXPLAIN of a prune mutated the store")
   }
 
-  test("graft_store_segments: classic layout reports one row; a compact flips it to a live segment view") {
+  test("graft_store_segments: the log lists a build's one segment; a compact adds one and supersedes keys") {
     import TestSpark.spark.implicits._
     graft.functions.GraftTableFunctions.ensureRegistered(spark)
     val vecs = (0L until 30L).map { i =>
@@ -179,15 +207,18 @@ class SqlFrontDoorSpec extends SparkTestBase {
       root, centStep = 3)
     def seg() = spark.sql(
       s"SELECT * FROM graft_store_segments('$root', 'postings')").collect()
-    val classic = seg()
-    assert(classic.length == 1 && classic.head.getString(1) == "classic")
+    val built = seg()
+    assert(built.length == 1 && built.head.getLong(0) == 1L &&
+      built.head.getString(1).startsWith("postings/seg=") &&
+      built.head.getLong(2) == 0L, built.mkString("; "))
     graft.operators.Similarity.deleteFromIvfIndex(spark, root,
       Seq(1L).toDF("vec_id"), "vec_id")
     graft.operators.Similarity.compactIvfIndex(spark, root)
     val after = seg()
-    assert(after.exists(r => r.getString(1) == "segment" && r.getBoolean(4)),
+    assert(after.length == 2 && after.forall(_.getLong(0) == 3L),
       after.mkString("; "))
-    assert(after.exists(_.getLong(2) > 0), after.mkString("; "))
+    assert(after.exists(r => r.getString(1) == built.head.getString(1) &&
+      r.getLong(2) > 0), after.mkString("; "))
   }
 
   test("maintain TVFs return the DECISION RECEIPT (action + signals), still execution-time and memoized") {

@@ -3,16 +3,17 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
-import org.apache.spark.sql.functions._
-import graft.operators.{Similarity, StoreLock}
+import graft.operators.StoreLock
 import graft.sinks.ZoneMap
 
-/** The persisted stores' single-writer contract, made enforceable: every
+/** The single-writer contract of the stores that still lock (zone map,
+  * snapshot store, BPE model, the index stores' sync markers): every
   * mutating verb runs under [[StoreLock.withWriteLock]], so two
   * concurrent writers SERIALIZE-OR-ABORT — the loser fails loudly at
   * acquisition, before writing a byte, and the store is bit-identical to
   * its pre-attempt state. These tests drive real interleavings with
-  * latches (deterministic, no sleeps-and-hope).
+  * latches (deterministic, no sleeps-and-hope). The index stores commit
+  * through their log instead (StoreLogSpec).
   */
 class StoreLockSpec extends SparkTestBase {
   import TestSpark.spark.implicits._
@@ -99,36 +100,5 @@ class StoreLockSpec extends SparkTestBase {
     val audit = ZoneMap.zoneMapAudit(spark, dir).head
     assert(audit.getAs[Long]("stat_mismatches") == 0L)
     assert(audit.getAs[Long]("misassigned") == 0L)
-  }
-
-  test("a locked IVF store refuses append AND delete AND compact; search stays lock-free") {
-    val dir = tmp("graft-lock-ivf")
-    val vecs = (0L until 30L).map { i =>
-      val base = Array.fill(4)(0.0); base((i % 3).toInt) = 1.0
-      (i, base.toSeq)
-    }.toDF("vec_id", "embedding")
-    Similarity.buildIvfIndex(vecs, "vec_id", "embedding", dir, centStep = 3)
-    StoreLock.withWriteLock(dir) {
-      intercept[IllegalStateException] {
-        Similarity.appendIvfIndex(spark, dir,
-          Seq((100L, Seq(1.0, 0.0, 0.0, 0.0))).toDF("vec_id", "embedding"),
-          "vec_id", "embedding")
-      }
-      intercept[IllegalStateException] {
-        Similarity.deleteFromIvfIndex(spark, dir,
-          Seq(0L).toDF("vec_id"), "vec_id")
-      }
-      intercept[IllegalStateException] {
-        Similarity.compactIvfIndex(spark, dir)
-      }
-      // readers never take the lock: search works mid-write
-      assert(Similarity.searchIvfIndex(spark, dir,
-        vecs.filter(col("vec_id") === 0), "vec_id", "embedding",
-        k = 3, nprobe = 3).count() == 3)
-    }
-    // and the store is exactly its pre-attempt self: no tombstones, no
-    // new postings
-    assert(!graft.operators.StoreFs.exists(spark, s"$dir/tombstones"))
-    assert(spark.read.parquet(s"$dir/postings").count() == 30)
   }
 }

@@ -43,16 +43,14 @@ class StoreMaintenanceSpec extends SparkTestBase {
     val dir = tmp("graft-maint-legs")
     Similarity.buildIvfIndex(vecs(30), "vec_id", "embedding", dir,
       centStep = 3)
-    // force the segmented layout (delete+compact flips the manifest),
-    // then stack appends: each adds a live leg
+    // a drained delete, then stacked appends: each adds a live segment
     Similarity.deleteFromIvfIndex(spark, dir, Seq(0L).toDF("vec_id"), "vec_id")
     Similarity.compactIvfIndex(spark, dir)
     (0 until 3).foreach { i =>
       Similarity.appendIvfIndex(spark, dir,
         vecs(34 + i).filter(col("vec_id") >= 30 + i), "vec_id", "embedding")
     }
-    val legs = StoreSegments.entries(spark, dir, "postings")
-      .get.count(!_.dropAll)
+    val legs = StoreSegments.latest(spark, dir).segs("postings").size
     assert(legs > 2, s"expected stacked legs, got $legs")
     // a tombstone on top: both thresholds trip — ONE vacuum settles both
     Similarity.deleteFromIvfIndex(spark, dir, Seq(1L).toDF("vec_id"), "vec_id")
@@ -61,8 +59,7 @@ class StoreMaintenanceSpec extends SparkTestBase {
     assert(r.getAs[String]("action") == "vacuum")
     assert(r.getAs[Long]("n_live_legs") == legs.toLong)
     assert(!StoreFs.exists(spark, s"$dir/tombstones"))
-    assert(StoreSegments.entries(spark, dir, "postings")
-      .get.count(!_.dropAll) == 1)
+    assert(StoreSegments.latest(spark, dir).segs("postings").size == 1)
     assert(action(StoreMaintenance.maintainIvfIndex(spark, dir,
       maxSegments = 2)) == "none")
     // the maintained store still answers: the deleted ids are gone, the
@@ -120,7 +117,7 @@ class StoreMaintenanceSpec extends SparkTestBase {
       Seq(2L).toDF("doc_id"), "doc_id", buckets = 8)
     assert(action(StoreMaintenance.maintainTextIndex(spark, dir,
       buckets = 8)) == "compact")
-    // appends stack stats/posting segments once the manifest exists
+    // appends stack stats/posting segments
     (0 until 3).foreach { i =>
       TextAnalysis.appendTextIndex(spark, dir,
         Seq(doc(10L + i)).toDF("doc_id", "text"), "doc_id", "text",

@@ -7,10 +7,10 @@ import graft.operators.{Similarity, StoreFs, StoreSegments, TextAnalysis}
   * compaction swapped `cell=`/`bucket=` directories in place, so a
   * concurrent search listing partitions mid-swap could miss a cell or
   * crash on a vanished file. StoreSegments replaces the swap with
-  * immutable segments + ONE atomic manifest flip; superseded data is
-  * GC'd a full maintenance cycle later. The central test: a reader loop
-  * hammering the store WHILE a compact runs never errors and never sees
-  * anything but the (identical, by the tombstone contract) answer.
+  * immutable segments + ONE log entry per verb; superseded data is GC'd
+  * by the next maintenance verb. The central test: a reader loop hammering the
+  * store WHILE a compact runs never errors and never sees anything but
+  * the (identical, by the tombstone contract) answer.
   */
 class StoreSegmentsSpec extends SparkTestBase {
   import spark.implicits._
@@ -80,20 +80,24 @@ class StoreSegmentsSpec extends SparkTestBase {
     Similarity.deleteFromIvfIndex(spark, dir, Seq(1L).toDF("vec_id"), "vec_id")
     val deletedCells = spark.read.parquet(s"$dir/tombstones")
       .select("cell").as[Long].collect().toSet
+    val built = StoreSegments.latest(spark, dir).segs("postings").head
+    val base = s"$dir/postings/seg=${built.id}"
     Similarity.compactIvfIndex(spark, dir)
-    // manifest exists; base still physically holds the superseded cells
-    // (grace), plus a new live segment
-    assert(StoreFs.exists(spark, s"$dir/_postings_manifest"))
+    // the log entry supersedes the deleted cells in the build's segment
+    // and adds a live segment; the build's segment still physically holds
+    // the superseded cells (grace)
+    val segs = StoreSegments.latest(spark, dir).segs("postings")
+    assert(segs.size == 2 && segs.head.id == built.id, segs.toString)
+    assert(segs.head.excluded.toSet == deletedCells, segs.toString)
     deletedCells.foreach { c =>
-      assert(StoreFs.exists(spark, s"$dir/postings/cell=$c"),
+      assert(StoreFs.exists(spark, s"$base/cell=$c"),
         s"superseded cell $c GC'd in the same cycle (grace violated)")
     }
-    assert(StoreFs.listSubdirs(spark, s"$dir/postings_seg").nonEmpty)
     // the NEXT maintenance verb collects the superseded data
     Similarity.deleteFromIvfIndex(spark, dir, Seq(2L).toDF("vec_id"), "vec_id")
     Similarity.compactIvfIndex(spark, dir)
     deletedCells.foreach { c =>
-      assert(!StoreFs.exists(spark, s"$dir/postings/cell=$c"),
+      assert(!StoreFs.exists(spark, s"$base/cell=$c"),
         s"superseded cell $c survived its grace period")
     }
   }
@@ -143,12 +147,14 @@ class StoreSegmentsSpec extends SparkTestBase {
     assert(failures.isEmpty,
       s"concurrent text reader crashed: ${Option(failures.peek())}")
     assert(search() == expected)
-    // rebuild drops manifests and segments — classic layout again
+    // a rebuild's entry names one fresh segment per component and no
+    // tombstones, as a build into an empty directory does
     TextAnalysis.buildTextIndex(docs, "doc_id", "text", dir, buckets = 8)
-    Seq("postings", "terms", "stats", "docs").foreach { c =>
-      assert(!StoreFs.exists(spark, s"$dir/_${c}_manifest"))
-      assert(!StoreFs.exists(spark, s"$dir/${c}_seg"))
-    }
+    val rebuilt = StoreSegments.latest(spark, dir)
+    assert(rebuilt.comps.keySet == Set("postings", "terms", "stats", "docs"),
+      rebuilt.toString)
+    assert(rebuilt.comps.values.forall(ss =>
+      ss.size == 1 && ss.head.excluded.isEmpty), rebuilt.toString)
     assert(search().contains(1L)) // the rebuild restored every doc
   }
 
@@ -161,7 +167,7 @@ class StoreSegmentsSpec extends SparkTestBase {
       "doc_id", "text", dir, buckets = 8)
     TextAnalysis.deleteFromTextIndex(spark, dir,
       Seq(1L).toDF("doc_id"), "doc_id", buckets = 8)
-    TextAnalysis.compactTextIndex(spark, dir, buckets = 8) // manifest born
+    TextAnalysis.compactTextIndex(spark, dir, buckets = 8)
     // three appends = three more postings segments + three stats rows
     (20L until 35L by 5L).foreach { lo =>
       TextAnalysis.appendTextIndex(spark, dir,
@@ -176,13 +182,15 @@ class StoreSegmentsSpec extends SparkTestBase {
     val before = search()
     TextAnalysis.vacuumTextIndex(spark, dir, buckets = 8)
     assert(search() == before) // consolidation changes files, not answers
-    // one more verb GCs the superseded dirs; the component then lists
-    // exactly one live segment per manifest
-    TextAnalysis.vacuumTextIndex(spark, dir, buckets = 8)
+    // the entry then lists exactly one live segment per component, and
+    // a second vacuum has nothing to consolidate
     Seq("postings", "terms", "docs").foreach { c =>
-      val live = StoreSegments.entries(spark, dir, c).get.filterNot(_.dropAll)
+      val live = StoreSegments.latest(spark, dir).segs(c)
       assert(live.size == 1, s"$c: ${live.size} live segments after vacuum")
     }
+    val version = StoreSegments.latest(spark, dir).version
+    TextAnalysis.vacuumTextIndex(spark, dir, buckets = 8)
+    assert(StoreSegments.latest(spark, dir).version == version)
     assert(search() == before)
     // negative df rows are gone: every terms row is positive
     assert(StoreSegments.read(spark, dir, "terms", "bucket")
@@ -195,7 +203,7 @@ class StoreSegmentsSpec extends SparkTestBase {
     Similarity.buildIvfIndex(v.filter(col("vec_id") < 30),
       "vec_id", "embedding", dir, centStep = 3)
     Similarity.deleteFromIvfIndex(spark, dir, Seq(1L).toDF("vec_id"), "vec_id")
-    Similarity.compactIvfIndex(spark, dir) // manifest born
+    Similarity.compactIvfIndex(spark, dir)
     Similarity.appendIvfIndex(spark, dir,
       v.filter(col("vec_id") >= 30), "vec_id", "embedding")
     Similarity.deleteFromIvfIndex(spark, dir, Seq(31L).toDF("vec_id"), "vec_id")
@@ -208,10 +216,9 @@ class StoreSegmentsSpec extends SparkTestBase {
     Similarity.vacuumIvfIndex(spark, dir)
     assert(!StoreFs.exists(spark, s"$dir/tombstones"))
     assert(search() == before)
-    Similarity.vacuumIvfIndex(spark, dir) // GC pass
-    val live = StoreSegments.entries(spark, dir, "postings")
-      .get.filterNot(_.dropAll)
+    val live = StoreSegments.latest(spark, dir).segs("postings")
     assert(live.size == 1, s"${live.size} live segments after vacuum")
+    Similarity.vacuumIvfIndex(spark, dir) // nothing left to consolidate
     assert(search() == before)
   }
 
@@ -220,7 +227,7 @@ class StoreSegmentsSpec extends SparkTestBase {
     // would end with zero live rows — no parquet footer left to infer a
     // schema from, so the next read would die one GC cycle later with an
     // inference error pointing nowhere. The verbs refuse BEFORE the
-    // manifest flip instead: loud, immediate, and the store keeps its
+    // commit instead: loud, immediate, and the store keeps its
     // pre-compact view (search still answers through the tombstone
     // anti-join).
     val dir = tmp("graft-seg-empty")
@@ -363,9 +370,6 @@ class StoreSegmentsSpec extends SparkTestBase {
 
   test("compact evaluates the survivors frame ONCE (r14 judge: probe + write ran it twice)") {
     val dir = tmp("graft-seg-once")
-    // classic component with keys 0..4 so compact has a base to supersede
-    (0L until 20L).map(i => (i, i % 5)).toDF("v", "key")
-      .write.partitionBy("key").parquet(s"$dir/pts")
     // survivors with a SHUFFLE upstream and an eval counter on the map
     // side: the emptiness probe alone runs the whole map stage, so a
     // double evaluation shows as ~2n map-side evals, a cached single
@@ -375,8 +379,12 @@ class StoreSegmentsSpec extends SparkTestBase {
     val survivors = spark.range(0, 500)
       .select(countIt(col("id")).as("v"), (col("id") % 5).as("key"))
       .groupBy("key").agg(sum("v").as("v"))
-    StoreSegments.compact(spark, dir, "pts", "key",
-      affected = Seq(0L, 1L, 2L, 3L, 4L), survivors = survivors)
+    // the segment write every compaction publishes its survivors through
+    StoreSegments.write(spark, dir, None) { w =>
+      w.keyed("pts", "key", survivors)
+      Some(w.appendedTo(
+        StoreSegments.Entry(0, 0, positions = false, Map.empty)))
+    }
     assert(acc.value <= 750,
       s"survivors frame evaluated ~twice: ${acc.value} map-side evals for 500 rows")
     // and the published view is exactly the survivors

@@ -662,8 +662,10 @@ class TextAnalysisSpec extends SparkTestBase {
       Seq("spark", "hash"), k = 10)
     assert(rows(fromIndex) == rows(direct) && rows(direct).nonEmpty)
     assert(!rows(fromIndex).exists(_._1 == 3L))      // no-hit doc absent (contract)
-    // the inverted file IS the directory layout: bucket partitions on disk
+    // the inverted file IS the directory layout: bucket partitions on disk,
+    // under the build's one segment
     val parts = new java.io.File(s"$dir/postings").listFiles()
+      .flatMap(_.listFiles())
       .filter(_.getName.startsWith("bucket=")).map(_.getName)
     assert(parts.nonEmpty)
     // pruned-scan contract: the postings scan carries a bucket partition filter
