@@ -1,6 +1,11 @@
 package graft
 
+import java.net.URI
+
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
+
+import graft.io.{NioLocalFileSystem, NioLocalFs}
 
 /** Session factory for the graft engine — the single place session config
   * lives (Verify, Bench and tests all build their sessions here).
@@ -75,7 +80,25 @@ object GraftSession {
       // isolation buys nothing here.
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // The `file:` scheme sets modes and probes links through java.nio
+      // (graft.io.NioRawLocalFileSystem), for both Hadoop APIs: the
+      // FileSystem one (sinks, store segments, the state store) and the
+      // FileContext one (Spark's checkpoint logs). Without the native
+      // library, stock Hadoop forks `chmod` per created file and `readlink`
+      // per rename probe: ~60 child processes per streaming trigger.
+      // Checksums, renames and bytes on disk are unchanged; hdfs:, s3a:
+      // and the rest keep their own classes.
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NioLocalFs].getName)
       .getOrCreate()
+    // FileSystem's cache is JVM-wide and keyed by scheme and user, not by
+    // conf: a `file:` instance cached before this session, from a conf
+    // without the binding, would be handed back to it. Closing one drops
+    // it from the cache, so the next lookup builds the class the conf names.
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val fs = FileSystem.get(URI.create("file:///"), hadoopConf)
+    if (fs.getClass != FileSystem.getFileSystemClass("file", hadoopConf)) fs.close()
     // Log level ERROR, not WARN. Three consecutive driver rounds stalled
     // mid-sweep at an output-volume-correlated, core-count-independent
     // point (r14: amid the WindowExec WARN flood; r15: at gate 131 with

@@ -610,17 +610,20 @@ object GraftTableFunctions {
           int("graft_snapshot_prune", args(1)))
       }
     }),
-    // graft_store_lock_status(dir) — single-writer lock observability:
-    // whether a store is currently locked, as a 1-row relation, so an
-    // operator can check before queueing a maintenance job from SQL
+    // graft_store_lock_status(dir) — writer observability, as a 1-row
+    // relation an operator checks before queueing a maintenance job from
+    // SQL: whether a lock-taking store (zone map, snapshot) is locked, and
+    // the newest `_log/<v>` of a store that commits through its log
+    // instead (text, IVF, IVF-PQ: never locked; null for the others)
     ("graft_store_lock_status", { args =>
       require(args.length == 1,
         s"graft_store_lock_status(dir) got ${args.length} args")
       val dir = str("graft_store_lock_status", args.head)
       val sp = active
       import sp.implicits._
-      Seq((dir, graft.operators.StoreLock.isLocked(dir)))
-        .toDF("store", "locked")
+      Seq((dir, graft.operators.StoreLock.isLocked(dir),
+          graft.operators.StoreSegments.latestOpt(sp, dir).map(_.version)))
+        .toDF("store", "locked", "log_version")
         .queryExecution.analyzed
     }),
     // graft_sync_status(dir) — CDC-sync observability

@@ -136,6 +136,16 @@ class SqlFrontDoorSpec extends SparkTestBase {
     assert(graft.operators.TextAnalysis.searchTextIndex(spark, sqlRoot,
       Seq("quokka")).select("doc_id").as[Long].collect().toSet ==
       Set(5L, 9L))
+    // a store that commits through its log never locks:
+    // graft_store_lock_status reads its newest version instead
+    (1 to 2).foreach(_ => spark.sql(
+      s"SELECT * FROM graft_text_index_append('$sqlRoot', 'wv_docs', 'doc_id', 'text', 8)")
+      .collect())
+    val textStatus = spark.sql(
+      s"SELECT locked, log_version FROM graft_store_lock_status('$sqlRoot')").head
+    assert(!textStatus.getBoolean(0) && textStatus.getLong(1) == version + 3 &&
+      textStatus.getLong(1) ==
+        graft.operators.StoreSegments.latest(spark, sqlRoot).version)
     // the single-writer lock of a store that still takes it (the zone
     // map) reaches through the SQL surface too — and is OBSERVABLE from
     // it (graft_store_lock_status)
@@ -148,6 +158,9 @@ class SqlFrontDoorSpec extends SparkTestBase {
     def lockedFromSql = spark.sql(
       s"SELECT locked FROM graft_store_lock_status('$zmRoot')")
       .head.getBoolean(0)
+    assert(spark.sql(
+      s"SELECT log_version FROM graft_store_lock_status('$zmRoot')")
+      .head.isNullAt(0))
     assert(!lockedFromSql)
     graft.operators.StoreLock.withWriteLock(zmRoot) {
       assert(lockedFromSql)
