@@ -5,8 +5,8 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream,
+  FileStatus, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -51,10 +51,17 @@ class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
 
 /** The `file:` scheme of the FileContext API: checksummed, over
   * [[NioRawLocalFileSystem]] (`fs.AbstractFileSystem.file.impl`). Hadoop's
-  * `LocalFs` over its own `RawLocalFs`, with the raw file system swapped.
+  * `LocalFs` over its own `RawLocalFs`, with the raw file system swapped,
+  * and one difference: `open(Path)` verifies the `.crc`. `ChecksumFs`
+  * overrides only `open(Path, int)`, so `FileContext.open(path)` — how
+  * Spark reads its offset, commit and state files — fell through
+  * `FilterFs` to the raw stream and read a corrupted file as is.
   */
 class NioLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new NioRawLocalFs(uri, conf))
+    extends ChecksumFs(new NioRawLocalFs(uri, conf)) {
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 /** Hadoop's `RawLocalFs` (whose constructors are package-private) over
   * [[NioRawLocalFileSystem]]: the same scheme, port and server defaults.

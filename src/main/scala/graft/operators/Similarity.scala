@@ -7,6 +7,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.PlanConstant
+
 /** Similarity search over embedding columns (`array<float>`): brute-force
   * cosine top-k as the exact baseline, and a sign-random-projection LSH
   * bucketed variant as the scale path.
@@ -372,9 +374,10 @@ object Similarity {
     * [[ivfTopK]], which recomputes codebook + assignment on every call.
     * Layout: `dir/centroids` (one small parquet, ≤ maxCentroids rows) and
     * `dir/postings` PARTITIONED BY cell — the inverted file realized as
-    * the physical directory layout, so a probe of `nprobe` cells reads
-    * exactly those partitions and the corpus-sized remainder is never
-    * opened (the q84 partition-per-version idea applied to ANN).
+    * the physical directory layout, so a search ([[searchIvfIndex]],
+    * pruned at run time by its probe broadcast) reads only the probed
+    * cells' partitions and the corpus-sized remainder is never opened
+    * (the q84 partition-per-version idea applied to ANN).
     *
     * Scale: the one-time build cost is [[ivfTopK]]'s assignment pass plus
     * a cluster-by-cell write (one exchange — the sort IS the product, the
@@ -657,9 +660,13 @@ object Similarity {
 
   /** Query a [[buildIvfIndex]] index: same probe + rank semantics as
     * [[ivfTopK]] (bit-identical results by construction — gated), but the
-    * corpus side is the on-disk postings list: the broadcast probe join's
-    * cell keys prune the partitioned scan (dynamic partition pruning), so
-    * a query touches `nprobe` cells' files, not the corpus.
+    * corpus side is the on-disk postings list, read only in the probed
+    * cells: the probe side's `pos < nprobe` cut ([[probeCells]]) lets
+    * Spark's `PartitionPruning` rule reuse the probe broadcast as a
+    * dynamic-pruning filter on the postings scan's `cell` partition, with
+    * no extra job. Files read ∝ the distinct probed cells (≤ queries ×
+    * nprobe) × the live segments holding them, not the corpus
+    * (`CellPruningSpec` pins it by the scan's files-read metric).
     */
   def searchIvfIndex(spark: SparkSession, dir: String, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int,
@@ -676,7 +683,8 @@ object Similarity {
     * filter-after-top-k returns fewer than k whenever the filter bites —
     * the classic filtered-ANN bug).
     *
-    * Scale shape: the probe-pruned cell scan is unchanged; the predicate
+    * Scale shape: the probe-pruned cell scan of [[searchIvfIndex]] (files
+    * ∝ probed cells × live segments) is unchanged; the predicate
     * is one UNHINTED semi-join against the allowed-id set, applied AFTER
     * the probe-cell cut so only probed-cell candidates ever reach it. The
     * caller's eligibility set is unbounded by contract ("language = en"
@@ -755,20 +763,28 @@ object Similarity {
       centroidRows(spark, dir, e))
 
   /** Each query's `nprobe` best cells, picked in ONE projection over the
-    * codebook carried as a plan literal (≤ maxCentroids·dim doubles):
-    * every centroid's cosine, sorted by (cosine desc, cid asc) — the order
-    * a per-query probe window ranks by, nulls last — then cut and
-    * exploded. No broadcast of the codebook and no shuffle by query.
+    * codebook carried by reference ([[graft.functions.PlanConstant]],
+    * ≤ maxCentroids·dim doubles, printed as its name and shape): every
+    * centroid's cosine, sorted by (cosine desc, cid asc) — the order a
+    * per-query probe window ranks by, nulls last — then exploded with its
+    * rank and cut at `pos < nprobe`. No broadcast of the codebook and no
+    * shuffle by query. The cut is a Filter on purpose: Spark's
+    * `PartitionPruning` rule prunes a partitioned scan joined on its
+    * partition column only when the other side holds a selective
+    * predicate, and with it a store search's broadcast of these rows
+    * doubles as the dynamic-pruning filter of the `cell=` scan
+    * (`explode(slice(…))`, the same rows, left the scan unpruned).
     * `q` carries (query_id, qv); output: (query_id, qv, cell, cv).
     */
   private def probeCells(q: DataFrame, cents: Seq[(Long, Array[Double])],
                          nprobe: Int): DataFrame = {
-    val book = typedLit(cents.map { case (cid, cv) => (cid, cv.toSeq) })
+    val book = PlanConstant.keyedRows("ivf_codebook", cents)
     val ranked = sort_array(transform(book, c => struct(
       cosineFast(col("qv"), c("_2")).as("pcos"), (-c("_1")).as("ncid"),
       c("_1").as("cid"), c("_2").as("cv"))), asc = false)
     q.select(col("query_id"), col("qv"),
-        explode(slice(ranked, 1, math.max(nprobe, 0))).as("p"))
+        posexplode(ranked).as(Seq("pos", "p")))
+      .filter(col("pos") < nprobe)
       .select(col("query_id"), col("qv"), col("p.cid").as("cell"),
         col("p.cv").as("cv"))
   }
@@ -1619,7 +1635,9 @@ object Similarity {
       .select(col("vec_id"), pqCodeWord(col("v"), full, m).as("code_word"))
   }
 
-  /** A query vector's ADC lookup table against the codebook: an m × ksub
+  /** A query vector's ADC lookup table against the codebook (each
+    * subspace's matrix and norms carried by reference,
+    * [[graft.functions.PlanConstant]]): an m × ksub
     * `array<array<bigint>>` where `lut[s][j] = ⌊(dot(c_j,c_j) −
     * 2·dot(q_s,c_j))·10⁶⌋` — each entry is the subspace-s distance
     * contribution of code j, shifted by the per-query constant `‖q_s‖²`
@@ -1632,8 +1650,9 @@ object Similarity {
     val subs = pqSubspaces(full, m)
     val rows = subs.zipWithIndex.map { case ((cmat, dcc), s) =>
       val dots = call_function("graft_matvec_dots",
-        slice(qv, s * sub + 1, sub), typedLit(cmat), lit(1.0))
-      zip_with(typedLit(dcc), dots,
+        slice(qv, s * sub + 1, sub),
+        PlanConstant.matrix(s"pq_sub$s", cmat.map(_.toArray)), lit(1.0))
+      zip_with(PlanConstant.vector(s"pq_sub${s}_norms", dcc.toArray), dots,
         (c, d) => floor((c - lit(2.0) * d) * lit(1e6)).cast("long"))
     }
     array(rows: _*)
@@ -1964,9 +1983,13 @@ object Similarity {
 
   /** Query a [[buildIvfPqIndex]] index: [[ivfPqTopK]]'s probe + integer-
     * ADC semantics bit-for-bit (gated), but the scan side is the on-disk
-    * 4-byte code file — the broadcast probe join's cell keys prune the
-    * partitioned read to `nprobe` cells, and what those cells' files
-    * yield per candidate is 16 bytes, not a vector. Tombstoned ids
+    * 4-byte code file, pruned as [[searchIvfIndex]]'s is: the probe
+    * broadcast doubles as the dynamic-pruning filter of the `cell=` scan,
+    * so files read ∝ probed cells × live segments, and what those cells'
+    * files yield per candidate is 16 bytes, not a vector. The codebooks
+    * (IVF and the per-subspace LUT matrices) ride by reference
+    * ([[graft.functions.PlanConstant]]), so the plan text names them
+    * instead of printing their doubles. Tombstoned ids
     * ([[deleteFromIvfIndex]] — shared layout) are filtered out exactly
     * as [[searchIvfIndex]] does.
     */
@@ -2091,9 +2114,10 @@ object Similarity {
   /** [[searchIvfIndexFiltered]] for the compressed store: the eligible-id
     * semi-join applied to the probed-cell 4-byte code candidates before
     * the ADC rank window — same pre-rank semantics (k survivors are k
-    * ELIGIBLE survivors), same tombstone filter, ~1/16th the scan
-    * bytes. The eligibility join carries NO broadcast hint (the allowed
-    * set is unbounded by contract — AQE sizes it); tombstones stay a
+    * ELIGIBLE survivors), same tombstone filter, same cell pruning (files
+    * read ∝ probed cells × live segments), ~1/16th the scan bytes. The
+    * eligibility join carries NO broadcast hint (the allowed set is
+    * unbounded by contract — AQE sizes it); tombstones stay a
     * driver-constant filter (bounded by compaction cadence).
     */
   def searchIvfPqIndexFiltered(spark: SparkSession, dir: String,

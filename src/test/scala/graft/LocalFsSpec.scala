@@ -130,20 +130,26 @@ class LocalFsSpec extends SparkTestBase {
     out.write(data); out.close()
     val out2 = fc.create(viaFc, EnumSet.of(CreateFlag.CREATE))
     out2.write(data); out2.close()
-    // read through the FileSystem API, whose reader verifies the .crc
-    // (FileContext's does not, with the stock classes as with these)
-    def read(p: Path): Unit = {
+    // read through both APIs: FileContext.open(path) is how Spark reads
+    // its offset, commit and state files, and it verifies the .crc too
+    // (stock Hadoop's LocalFs hands that call the raw stream)
+    def readFs(p: Path): Unit = {
       val in = fs.open(p)
+      try in.readFully(new Array[Byte](data.length)) finally in.close()
+    }
+    def readFc(p: Path): Unit = {
+      val in = fc.open(p)
       try in.readFully(new Array[Byte](data.length)) finally in.close()
     }
     Seq(viaFs, viaFc).foreach { p =>
       val local = Paths.get(p.toUri.getPath)
       assert(Files.exists(local.resolveSibling(s".${local.getFileName}.crc")), p)
-      read(p) // intact: reads clean
+      readFs(p); readFc(p) // intact: reads clean
       val bytes = Files.readAllBytes(local)
       bytes(1000) = (bytes(1000) ^ 0x01).toByte
       Files.write(local, bytes)
-      intercept[ChecksumException](read(p))
+      intercept[ChecksumException](readFs(p))
+      intercept[ChecksumException](readFc(p))
       assert(Files.exists(local)) // reported, not moved aside
     }
   }
