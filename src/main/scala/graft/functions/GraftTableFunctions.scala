@@ -627,9 +627,9 @@ object GraftTableFunctions {
         .queryExecution.analyzed
     }),
     // graft_sync_status(dir) — CDC-sync observability
-    // (graft_store_lock_status's sibling): the applied version a
-    // scheduler resumes from, and the pending range if a sync crashed
-    // mid-apply — what a scheduled job SELECTs before picking its range
+    // (graft_store_lock_status's sibling): the applied version the newest
+    // log entry records, which a scheduler resumes from — what a
+    // scheduled job SELECTs before picking its range
     ("graft_sync_status", { args =>
       require(args.length == 1,
         s"graft_sync_status(dir) got ${args.length} args")

@@ -54,6 +54,11 @@ object PlanConstant {
   def vector(name: String, v: Array[Double]): Column =
     column(PlanConstant(name, s"${v.length}", row(v), vectorType))
 
+  /** `array<bigint>`, shape `n`. */
+  def longs(name: String, v: Array[Long]): Column =
+    column(PlanConstant(name, s"${v.length}", UnsafeArrayData.fromPrimitiveArray(v),
+      ArrayType(LongType, containsNull = false)))
+
   /** `array<array<double>>`, one element per row, shape `rows x dim`. */
   def matrix(name: String, rows: Seq[Array[Double]]): Column =
     column(PlanConstant(name, s"${rows.size}x${rows.headOption.fold(0)(_.length)}",

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CHURN-PROPORTIONAL index freshness: apply a CDC snapshot-store range
-  * to a persisted search index with the existing maintenance verbs
-  * instead of a rebuild.
+  * to a persisted search index in ONE store pass instead of a rebuild.
   *
   * A crawl pipeline lands document updates as [[Curation.writeSnapshotDelta]]
   * versions; the serving text index must follow. Rebuilding at every drop
@@ -15,47 +14,39 @@ import org.apache.spark.sql.functions._
   *     `(oldVersion, newVersion]` — computed per chain LEG over the
   *     deltas' own touched ids, so a 100 TB corpus with 0.1% churn diffs
   *     at 0.1% cost;
-  *  2. `removed` and `changed` ids leave through ONE [[Tombstones.delete]]
-  *     — the store family's delete verb. With `changed` ids present the
-  *     drain must follow (each would be shadowed by its own tombstone when
-  *     re-appended), so the delete runs with `drain = true`: the deletion
-  *     and any prior tombstones are compacted away in one pass and no
-  *     tombstone is written. A pure removal runs `drain = false`
-  *     (tombstone-append — pruned reads, no rewrite);
-  *  3. otherwise, if an id about to be (re-)appended is still TOMBSTONED —
-  *     a re-birth (deleted in one version, re-added later — `added` in
-  *     the diff) from an earlier sync — [[Tombstones.compact]] drains the
-  *     tombstones first. The search-time tombstone filter is absolute
-  *     on the id (`TextAnalysis.searchTextIndexImpl` — a tombstone
-  *     shadows NEW postings too), so the drain is what makes re-adding an
-  *     id sound; it rewrites only the tombstone-touched buckets/cells, so
-  *     this too tracks churn's footprint, not the corpus;
-  *  4. `added` and `changed` docs' NEW content enters through
-  *     [[TextAnalysis.appendTextIndex]], reconstructed at `newVersion`
-  *     SCOPED to those ids (the same hand-pushed per-leg semi-join the
-  *     diff uses — the corpus is never re-read).
+  *  2. ONE [[Tombstones.sync]] pass deletes the `removed` and `changed`
+  *     ids and appends the `added` and `changed` docs' NEW content,
+  *     reconstructed at `newVersion` SCOPED to those ids (the same
+  *     hand-pushed per-leg semi-join the diff uses — the corpus is never
+  *     re-read). The search-time tombstone filter is absolute on the id (a
+  *     tombstone shadows NEW postings too), so the pass DRAINS — the
+  *     deletion and every prior tombstone compacted away, no tombstone
+  *     written — when an id is `changed` (its own delete would shadow it)
+  *     or an `added` id is still tombstoned by an earlier sync (a
+  *     re-birth). The drain rewrites only the tombstone-touched
+  *     buckets/cells, so it too tracks churn's footprint. A pure removal
+  *     appends tombstones (pruned reads, no rewrite).
   *
   * The synced index answers bit-identically to a from-scratch
   * [[TextAnalysis.buildTextIndex]] over the corpus reconstructed at
   * `newVersion` (gated: q236 hash-equals the from-scratch BM25 oracle).
   *
-  * '''Range discipline''' (the scheduled-job contract, same spirit as
-  * [[StoreMaintenance]]): the index carries an `_sync/applied` marker
-  * naming the last version applied. A re-fired range whose `newVersion`
-  * is already applied is a clean no-op (`action = "noop"`); a range that
-  * neither starts at the applied version nor is covered by it is REFUSED
-  * (a gap would silently serve stale docs forever). The first sync —
-  * no marker — trusts the caller's `oldVersion` (the version the index
-  * was built from) and records it.
+  * '''One commit per sync''': the pass writes its segments, then commits
+  * ONE [[StoreSegments]] log entry that also records `txn sync →
+  * newVersion`, by put-if-absent. A crash anywhere leaves the index at
+  * its pre-sync version with the old applied version, and re-running the
+  * range applies it. Of two syncs racing on one range, one commits and
+  * the other fails naming the store (or, started after that commit,
+  * reads `noop`); nothing the loser wrote is referenced.
   *
-  * '''Crash consistency''': an `_sync/pending` marker is written before
-  * the first mutation and replaced by the applied marker after the last
-  * ([[Composite]]'s begin/commit discipline, applied to one store's
-  * multi-verb transition). Steps 2-3 are replay-safe (delete anti-joins
-  * prior tombstones; compaction is idempotent) but step 4 is an append —
-  * replaying it would double-count postings — so a sync that finds a
-  * PENDING marker refuses loudly: the operator restores or rebuilds the
-  * index at a known version and clears the marker with [[abandonSync]].
+  * '''Range discipline''' (the scheduled-job contract, same spirit as
+  * [[StoreMaintenance]]): a re-fired range whose `newVersion` the newest
+  * entry already records is a clean no-op (`action = "noop"`); a range
+  * that neither starts at the applied version nor is covered by it is
+  * REFUSED (a gap would silently serve stale docs forever). The first
+  * sync — no `txn sync` in the entry; a rebuild starts with none —
+  * trusts the caller's `oldVersion` (the version the index was built
+  * from).
   *
   * Reference seam: the reference's SDFS clients re-`put` whole objects on
   * every update (`daemon/daemon.go:136-675` version counters); its
@@ -72,81 +63,29 @@ object IndexSync {
         "n_added BIGINT NOT NULL, n_changed BIGINT NOT NULL, " +
         "n_removed BIGINT NOT NULL, compacted BOOLEAN NOT NULL")
 
-  private def pendingPath(indexDir: String) = s"$indexDir/_sync/pending"
-  private def appliedPath(indexDir: String) = s"$indexDir/_sync/applied"
-  private def syncLockDir(indexDir: String) = s"$indexDir/_sync"
+  /** The log source a sync records its applied version under. */
+  private val Source = "sync"
 
-  /** The last snapshot version applied to `indexDir` by a completed
-    * sync, if any — the scheduler's resume point.
+  /** The last snapshot version applied to `indexDir` by a sync, if any —
+    * the scheduler's resume point, read from the newest log entry.
     */
   def appliedVersion(spark: SparkSession, indexDir: String): Option[Long] =
-    if (StoreFs.exists(spark, appliedPath(indexDir)))
-      Some(StoreFs.readFileUtf8(spark, appliedPath(indexDir)).trim.toLong)
-    else None
-
-  /** The pending marker's (oldVersion, newVersion) range, if a sync is
-    * mid-apply or crashed — the operator's first read in a recovery.
-    */
-  def pendingRange(spark: SparkSession,
-                   indexDir: String): Option[(Long, Long)] =
-    if (!StoreFs.exists(spark, pendingPath(indexDir))) None
-    else {
-      val parts = StoreFs.readFileUtf8(spark, pendingPath(indexDir))
-        .trim.split("\t")
-      Some((parts(0).toLong, parts(1).toLong))
-    }
+    StoreSegments.latestOpt(spark, indexDir).flatMap(_.txn.get(Source))
 
   /** Sync observability as a one-row DataFrame (`graft_sync_status`'s
-    * body): the applied version a scheduler resumes from, and the
-    * pending range if a sync crashed mid-apply (null-valued columns when
-    * absent). [[StoreLock.isLocked]]'s treatment, for the sync markers.
+    * body): the applied version a scheduler resumes from, null before the
+    * first sync.
     */
   def syncStatus(spark: SparkSession, indexDir: String): DataFrame = {
-    val applied = appliedVersion(spark, indexDir)
-    val pending = pendingRange(spark, indexDir)
-    val row = org.apache.spark.sql.Row(indexDir,
-      applied.map(java.lang.Long.valueOf).orNull,
-      pending.isDefined,
-      pending.map(p => java.lang.Long.valueOf(p._1)).orNull,
-      pending.map(p => java.lang.Long.valueOf(p._2)).orNull)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("store",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("applied_version",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("pending",
-        org.apache.spark.sql.types.BooleanType, nullable = false),
-      org.apache.spark.sql.types.StructField("pending_old",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("pending_new",
-        org.apache.spark.sql.types.LongType, nullable = true)))
-    spark.createDataFrame(
-      java.util.Collections.singletonList(row), schema)
-  }
-
-  /** Clear a crashed sync's pending marker — the documented recovery
-    * verb, to be run AFTER restoring or rebuilding the index at
-    * `rebuiltAtVersion` (which becomes the new applied marker).
-    */
-  def abandonSync(spark: SparkSession, indexDir: String,
-                  rebuiltAtVersion: Long): Unit =
-      StoreLock.withWriteLock(syncLockDir(indexDir)) {
-    StoreFs.writeFile(spark, appliedPath(indexDir),
-      rebuiltAtVersion.toString)
-    StoreFs.delete(spark, pendingPath(indexDir))
+    import spark.implicits._
+    Seq((indexDir, appliedVersion(spark, indexDir)))
+      .toDF("store", "applied_version")
   }
 
   /** Apply snapshot-store range `(oldVersion, newVersion]` of `storeDir`
     * to the text index at `indexDir`. Returns a one-row receipt
     * `(verb, store, action, old_version, new_version, n_added,
     * n_changed, n_removed, compacted)` — `action` is `applied` / `noop`.
-    *
-    * Single-scheduler contract: the inner verbs each commit one log
-    * entry (a racing writer makes one of them fail), and the pending
-    * marker (written under the `_sync` lock) excludes a second concurrent
-    * sync — but like
-    * [[StoreMaintenance.maintainTextIndex]], the composition is meant to
-    * be fired by ONE scheduler per store.
     */
   def syncTextIndexFromSnapshots(spark: SparkSession,
                                  indexDir: String, storeDir: String,
@@ -155,10 +94,7 @@ object IndexSync {
                                  buckets: Int = 0): DataFrame =
     syncStore(spark, indexDir, storeDir, oldVersion, newVersion,
       idCol, contentCol = textCol, verb = "sync_text_index",
-      store = () => TextAnalysis.textStore(spark, indexDir, buckets),
-      append = batch =>
-        TextAnalysis.appendTextIndex(spark, indexDir, batch, idCol,
-          textCol, buckets))
+      TextAnalysis.textStore(spark, indexDir, buckets))
 
   /** [[syncTextIndexFromSnapshots]] for the IVF vector store — the RAG
     * stack's other member follows the same snapshot store (the content
@@ -176,9 +112,7 @@ object IndexSync {
                                 idCol: String, vecCol: String): DataFrame =
     syncStore(spark, indexDir, storeDir, oldVersion, newVersion,
       idCol, contentCol = vecCol, verb = "sync_ivf_index",
-      store = () => Similarity.ivfStore(spark, indexDir),
-      append = batch =>
-        Similarity.appendIvfIndex(spark, indexDir, batch, idCol, vecCol))
+      Similarity.ivfStore(spark, indexDir))
 
   /** [[syncIvfIndexFromSnapshots]] for the IVF-PQ store (frozen coarse
     * codebook AND frozen PQ sub-codebooks — the append/delete/compact
@@ -190,22 +124,18 @@ object IndexSync {
                                   idCol: String, vecCol: String): DataFrame =
     syncStore(spark, indexDir, storeDir, oldVersion, newVersion,
       idCol, contentCol = vecCol, verb = "sync_ivfpq_index",
-      store = () => Similarity.ivfStore(spark, indexDir),
-      append = batch =>
-        Similarity.appendIvfPqIndex(spark, indexDir, batch, idCol, vecCol))
+      Similarity.ivfStore(spark, indexDir))
 
-  /** The shared sync skeleton: marker discipline, churn diff, and the
-    * delete(-and-drain) → drain-if-shadowed → scoped-append composition.
-    * `store` opens the index for one [[Tombstones]] verb (each verb gets
-    * a fresh one — a verb reads the entry it commits on top of); the
-    * family it declares names the `tombstones/` id column.
+  /** The shared sync skeleton: range discipline against the entry's
+    * `txn sync`, churn diff, then the one delete-and-append pass. `store`
+    * opens the index once: the pass reads and commits on top of the entry
+    * the range was checked against.
     */
   private def syncStore(spark: SparkSession,
                         indexDir: String, storeDir: String,
                         oldVersion: Long, newVersion: Long,
                         idCol: String, contentCol: String, verb: String,
-                        store: () => Tombstones.Store,
-                        append: DataFrame => Unit): DataFrame = {
+                        store: => Tombstones.Store): DataFrame = {
     require(newVersion > oldVersion,
       s"$verb needs oldVersion < newVersion: $oldVersion >= $newVersion")
     def receipt(action: String, nAdded: Long, nChanged: Long,
@@ -213,31 +143,17 @@ object IndexSync {
       spark.createDataFrame(java.util.List.of(Row(verb, indexDir, action,
         oldVersion, newVersion, nAdded, nChanged, nRemoved, compacted)),
         receiptSchema)
-    // marker transition under the _sync lock: decide, then either bail
-    // (noop/refuse) or claim the range with the pending marker before
-    // any mutation
-    val decided = StoreLock.withWriteLock(syncLockDir(indexDir)) {
-      if (StoreFs.exists(spark, pendingPath(indexDir)))
-        throw new IllegalStateException(
-          s"index '$indexDir' has a PENDING sync " +
-            s"(${StoreFs.readFileUtf8(spark, pendingPath(indexDir)).trim})" +
-            " — a prior sync crashed mid-apply and the index may hold a " +
-            "partial range; rebuild or restore it at a known version, " +
-            "then IndexSync.abandonSync to clear the marker")
-      appliedVersion(spark, indexDir) match {
-        case Some(v) if newVersion <= v => "noop"
-        case Some(v) if oldVersion != v =>
-          throw new IllegalArgumentException(
-            s"sync range ($oldVersion, $newVersion] does not start at " +
-              s"index '$indexDir''s applied version $v — a gap would " +
-              s"serve stale docs silently; sync from $v")
-        case _ =>
-          StoreFs.writeFile(spark, pendingPath(indexDir),
-            s"$oldVersion\t$newVersion")
-          "apply"
-      }
+    val s = store
+    s.entry.txn.get(Source) match {
+      case Some(v) if newVersion <= v =>
+        return receipt("noop", 0L, 0L, 0L, compacted = false)
+      case Some(v) if oldVersion != v =>
+        throw new IllegalArgumentException(
+          s"sync range ($oldVersion, $newVersion] does not start at " +
+            s"index '$indexDir''s applied version $v — a gap would " +
+            s"serve stale docs silently; sync from $v")
+      case _ =>
     }
-    if (decided == "noop") return receipt("noop", 0L, 0L, 0L, compacted = false)
     CacheScope.withCaches {
       val diff = CacheScope.persisted(Curation.diffSnapshotsAt(
         spark, storeDir, oldVersion, newVersion, idCol, contentCol))
@@ -248,48 +164,26 @@ object IndexSync {
       val nAdded = counts.getOrElse("added", 0L)
       val nChanged = counts.getOrElse("changed", 0L)
       val nRemoved = counts.getOrElse("removed", 0L)
-      // nChanged > 0 guarantees the drain must follow the delete (every
-      // `changed` id is about to be re-appended and would be shadowed by
-      // its own tombstone), so the delete drains in the same pass — the
-      // intermediate tombstone component is never written or read back
-      // (r16 job-count diet)
-      var compacted = nChanged > 0
-      if (nChanged + nRemoved > 0)
-        Tombstones.delete(store(),
-          diff.filter(col("status").isin("changed", "removed"))
-            .select(col("id").as(idCol)), idCol, drain = compacted)
-      if (nAdded + nChanged > 0) {
-        val toAppend = diff.filter(col("status").isin("added", "changed"))
-          .select(col("id").as(idCol))
-        // drain tombstones iff one would shadow a (re-)appended id —
-        // the smallest sufficient verb, StoreMaintenance's rule. The
-        // fused path above already drained every tombstone when
-        // nChanged > 0, so the semi-join probe only runs for the
-        // pure-addition case, where a re-birth could still hit an old
-        // tombstone (r15: skips the probe's two jobs on every
-        // churn-with-changes sync)
-        val shadowed = !compacted &&
-          Par.described(spark, s"$verb: shadow probe") {
-            val s = store()
-            val tomb = StoreSegments.tombstoneIds(spark, indexDir, s.entry,
-              s.family.idCol, s.tombSchema)
-            tomb.nonEmpty && !toAppend.filter(col(idCol).isin(tomb: _*))
-              .isEmpty
-          }
-        if (shadowed) {
-          Tombstones.compact(store())
-          compacted = true
+      def ids(status: String*): DataFrame =
+        diff.filter(col("status").isin(status: _*)).select(col("id").as(idCol))
+      // drain iff a tombstone would shadow a (re-)appended id — every
+      // changed id meets its own; an added one may meet an earlier sync's
+      // — the smallest sufficient pass, StoreMaintenance's rule. The probe
+      // runs only for pure additions (r15: two jobs saved otherwise)
+      val drain = nChanged > 0 || nAdded > 0 &&
+        Par.described(spark, s"$verb: shadow probe") {
+          val tomb = StoreSegments.tombstoneIds(spark, indexDir, s.entry,
+            s.family.idCol, s.tombSchema)
+          tomb.nonEmpty && !ids("added").filter(col(idCol).isin(tomb: _*))
+            .isEmpty
         }
-        Par.described(spark, s"$verb: scoped append") {
-          append(Curation.readSnapshotAt(spark, storeDir, newVersion,
-            idCol, scope = toAppend))
-        }
-      }
-      StoreLock.withWriteLock(syncLockDir(indexDir)) {
-        StoreFs.writeFile(spark, appliedPath(indexDir), newVersion.toString)
-        StoreFs.delete(spark, pendingPath(indexDir))
-      }
-      receipt("applied", nAdded, nChanged, nRemoved, compacted)
+      Tombstones.sync(s,
+        Option.when(nChanged + nRemoved > 0)(ids("changed", "removed") -> idCol),
+        Option.when(nAdded + nChanged > 0)(Tombstones.Batch(
+          Curation.readSnapshotAt(spark, storeDir, newVersion, idCol,
+            scope = ids("added", "changed")), idCol, contentCol)),
+        drain, Source -> newVersion)
+      receipt("applied", nAdded, nChanged, nRemoved, drain)
     }
   }
 }

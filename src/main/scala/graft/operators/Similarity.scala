@@ -179,24 +179,25 @@ object Similarity {
     * assigned MAP-SIDE to its highest-cosine centroid, so assignment adds
     * NO shuffle of the corpus.
     *
-    * The codebook is shipped as DATA, not syntax: ONE `typedLit` matrix
-    * literal (a single expression node holding an `ArrayData`, a reference
-    * object in generated code) consumed by the codegen'd
+    * The codebook is shipped as DATA, not syntax: ONE matrix carried by
+    * reference ([[graft.functions.PlanConstant]] — a single expression
+    * node holding an `ArrayData`, printed as its name and shape) consumed
+    * by the codegen'd
     * [[graft.functions.ArgMaxCosine]] vec×matrix argmax — so the plan is
     * O(1) in the number of centroids and stays whole-stage-codegen'd at the
     * documented `maxCentroids = 4096` cap (the earlier per-centroid
     * literal-expression form was ~262k plan nodes at that cap, past Janino
     * limits). Tie-break is unchanged: first-max, toward the lower centroid
     * index; the cell-id lookup (`get`) is 0-based on a second one-node
-    * id-array literal.
+    * id array.
     */
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String,
                 centroids: Seq[(Long, Array[Double])]): DataFrame = {
     require(centroids.nonEmpty, "ivfAssign needs at least one centroid")
     graft.functions.GraftExtensions.ensureRegistered(df.sparkSession, "graft_argmax_cosine")
     val v = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-    val codebook = typedLit(centroids.map(_._2.toSeq))
-    val cellIds = typedLit(centroids.map(_._1))
+    val codebook = PlanConstant.matrix("ivf_codebook", centroids.map(_._2))
+    val cellIds = PlanConstant.longs("ivf_cells", centroids.map(_._1).toArray)
     v.withColumn("cell",
         get(cellIds, call_function("graft_argmax_cosine", col("v"), codebook)))
       .select(col("id"), col("v"), col("cell"))
@@ -434,24 +435,61 @@ object Similarity {
     components = Seq(
       Tombstones.Component("postings", "cell", Tombstones.DropById)))
 
-  private[graft] val ivfPqIndex: Tombstones.Family =
-    ivfIndex.copy(model = Seq("centroids", "pq_codebook", "pq_meta"))
+  private[graft] val ivfPqIndex: Tombstones.Family = ivfIndex.copy(
+    label = "ivfpq", model = Seq("centroids", "pq_codebook", "pq_meta"))
 
   /** A vector store opened for one [[Tombstones]] verb at its newest log
-    * entry; the postings are typed by their footer (raw and PQ payloads
-    * differ), once per verb.
+    * entry (IVF-PQ when it holds a PQ codebook).
     */
   private[graft] def ivfStore(sp: SparkSession,
-                              root: String): Tombstones.Store =
-      new Tombstones.Store {
-    val spark = sp
-    val dir = root
-    val family = ivfIndex
-    val entry = StoreSegments.latest(spark, dir)
+                              root: String): Tombstones.Store = {
+    val e = StoreSegments.latest(sp, root)
+    if (e.has("pq_codebook"))
+      new VectorStore(sp, root, e, Some(e), ivfPqIndex, Nil, {
+        val (cents, full, m) = readIvfPqModel(sp, root, e)
+        VecModel(cents, Some(full -> m))
+      })
+    else new VectorStore(sp, root, e, Some(e), ivfIndex, Nil,
+      VecModel(ivfCentroids(sp, root, e), None))
+  }
+
+  /** The frozen model a batch is assigned (and PQ-encoded) against: the
+    * IVF codebook, and a compressed store's PQ codebook and subspace count.
+    */
+  private final case class VecModel(cents: Seq[(Long, Array[Double])],
+                                    pq: Option[(Seq[Array[Double]], Int)])
+
+  /** A vector store at `entry` (a build's: empty, with `seed` its model
+    * files). The postings are typed by their footer (raw and PQ payloads
+    * differ), once per verb; the model is read on first use.
+    */
+  private final class VectorStore(val spark: SparkSession, val dir: String,
+                                  val entry: StoreSegments.Entry,
+                                  override val base: Option[StoreSegments.Entry],
+                                  val family: Tombstones.Family,
+                                  seed: Seq[(String, DataFrame)],
+                                  readModel: => VecModel)
+      extends Tombstones.Store {
+    private lazy val model = readModel
     private lazy val postings =
       StoreSegments.readAt(spark, dir, entry, "postings", "cell")
     def tombSchema = Model.tombstones
     def read(name: String, key: String): DataFrame = postings
+
+    /** The model files (a build's), then the batch's postings: (id, v)
+      * or (id, code_word), cell-keyed.
+      */
+    def rows(batch: DataFrame, idCol: String,
+             vecCol: String): Seq[(String, DataFrame)] = {
+      val cents = model.cents
+      val post = model.pq.fold(ivfAssign(batch, idCol, vecCol, cents)) {
+        case (full, m) => ivfResiduals(batch, idCol, vecCol, cents)
+          .select(col("id"), pqCodeWord(col("r"), full, m).as("code_word"),
+            col("cell"))
+      }
+      seed.map { case (c, m) => c -> m.coalesce(1) } :+
+        ("postings" -> clusterByCell(spark, post, cents.size))
+    }
 
     /** postings → (id, cell), which are also the tombstone rows. */
     def resolve(ids: DataFrame, idCol: String,
@@ -467,6 +505,23 @@ object Similarity {
     }
   }
 
+  /** Commit a vector store over whatever `dir` held: the model files and
+    * the batch's cell-keyed postings, as new segments named by ONE fresh
+    * entry — no stale segment and no tombstone survives a rebuild (they
+    * name ids of the store being replaced). The writes depend only on
+    * driver-side codebooks, so they overlap (§2.6; r15).
+    */
+  private def buildVectorStore(df: DataFrame, idCol: String, vecCol: String,
+                               dir: String, family: Tombstones.Family,
+                               model: VecModel,
+                               files: Seq[(String, DataFrame)]): Unit = {
+    val sp = df.sparkSession
+    Tombstones.build(new VectorStore(sp, dir,
+      StoreSegments.Entry(0, 0, positions = false, Map.empty),
+      StoreSegments.latestOpt(sp, dir), family, files, model),
+      Tombstones.Batch(df, idCol, vecCol))
+  }
+
   def buildIvfIndexAdaptive(df: DataFrame, idCol: String, vecCol: String,
                             dir: String, maxCentroids: Int = 4096): Unit =
     buildIvfIndex(df, idCol, vecCol, dir,
@@ -479,30 +534,11 @@ object Similarity {
     val cents = sampleCentroids(df, idCol, vecCol, centStep, maxCentroids)
     val sp = df.sparkSession
     import sp.implicits._
-    writeVectorStore(sp, dir,
+    buildVectorStore(df, idCol, vecCol, dir, ivfIndex, VecModel(cents, None),
       // bounded by maxCentroids — one small model file
       Seq("centroids" ->
-        cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv")),
-      ivfAssign(df, idCol, vecCol, cents), cents.size)
+        cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv")))
   }
-
-  /** Commit a vector store over whatever `dir` held: the model frames
-    * (component → one small file each) and the cell-keyed `postings`, as
-    * new segments named by ONE fresh entry — no stale segment and no
-    * tombstone survives a rebuild (they name ids of the store being
-    * replaced). The writes depend only on driver-side codebooks, so they
-    * overlap (§2.6; r15).
-    */
-  private def writeVectorStore(sp: SparkSession, dir: String,
-                               models: Seq[(String, DataFrame)],
-                               postings: DataFrame, cells: Int): Unit =
-    StoreSegments.write(sp, dir, StoreSegments.latestOpt(sp, dir)) { w =>
-      Par.run(models.map { case (c, m) => () => w.plain(c, m.coalesce(1)) } :+
-        (() => w.keyed("postings", "cell", clusterByCell(sp, postings,
-          cells))): _*)
-      Some(w.appendedTo(
-        StoreSegments.Entry(0, 0, positions = false, Map.empty)))
-    }
 
   /** CLUSTER postings by cell before the partitioned write (the text
     * index's documented partitionBy discipline) with an EXPLICIT partition
@@ -516,17 +552,6 @@ object Similarity {
                             cells: Int): DataFrame =
     postings.repartition(math.min(cells, sp.sparkContext.defaultParallelism),
       col("cell"))
-
-  /** Append a batch's postings as one new segment, committed on `e`; an
-    * empty batch commits nothing.
-    */
-  private def appendPostings(spark: SparkSession, dir: String,
-                             e: StoreSegments.Entry, postings: DataFrame,
-                             cells: Int): Unit =
-    StoreSegments.write(spark, dir, Some(e)) { w =>
-      w.keyed("postings", "cell", clusterByCell(spark, postings, cells))
-      w.added("postings").map(_ => w.appendedTo(e))
-    }
 
   /** INCREMENTAL index maintenance: assign a new `batch` to an EXISTING
     * [[buildIvfIndex]] index's centroids and append its postings — the
@@ -548,12 +573,8 @@ object Similarity {
     */
   def appendIvfIndex(spark: SparkSession, dir: String, batch: DataFrame,
                      idCol: String, vecCol: String): Unit =
-      Par.described(spark, s"ivf append $dir") {
-    val e = StoreSegments.latest(spark, dir)
-    val cents = ivfCentroids(spark, dir, e)
-    appendPostings(spark, dir, e, ivfAssign(batch, idCol, vecCol, cents),
-      cents.size)
-  }
+    Tombstones.append(ivfStore(spark, dir),
+      Tombstones.Batch(batch, idCol, vecCol))
 
   /** DELETION from a [[buildIvfIndex]] index — [[
     * graft.operators.TextAnalysis.deleteFromTextIndex]]'s contract for
@@ -1577,13 +1598,15 @@ object Similarity {
     * `j` is the nearest-centroid code without ever materializing the
     * per-row self-dot. The centroid dots ride through the codegen'd
     * `graft_matvec_dots` kernel (matrix as ONE literal); the combination
-    * `c − 2·d` is the exact expression shape the oracle evaluates.
+    * `c − 2·d` is the exact expression shape the oracle evaluates. The
+    * matrix and the norms are carried by reference, as [[pqLut]]'s are.
     */
   private def pqScores(v: Column, s: Int, sub: Int,
                        cmat: Seq[Seq[Double]], dcc: Seq[Double]): Column = {
-    val dots = call_function("graft_matvec_dots",
-      slice(v, s * sub + 1, sub), typedLit(cmat), lit(1.0))
-    zip_with(typedLit(dcc), dots, (c, d) => c - lit(2.0) * d)
+    val dots = call_function("graft_matvec_dots", slice(v, s * sub + 1, sub),
+      PlanConstant.matrix(s"pq_sub$s", cmat.map(_.toArray)), lit(1.0))
+    zip_with(PlanConstant.vector(s"pq_sub${s}_norms", dcc.toArray), dots,
+      (c, d) => c - lit(2.0) * d)
   }
 
   /** The packed PQ code word of one vector: subspace `s`'s 4-bit code in
@@ -1887,15 +1910,13 @@ object Similarity {
     val dim = full.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     import sp.implicits._
-    writeVectorStore(sp, dir, Seq(
-      "centroids" ->
-        cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv"),
-      "pq_codebook" -> full.zipWithIndex.map { case (cv, j) => (j, cv.toSeq) }
-        .toDF("j", "cv"),
-      "pq_meta" -> Seq((m, ksub, dim)).toDF("m", "ksub", "dim")),
-      withRes.select(col("id"),
-        pqCodeWord(col("r"), full, m).as("code_word"), col("cell")),
-      cents.size)
+    buildVectorStore(df, idCol, vecCol, dir, ivfPqIndex,
+      VecModel(cents, Some(full -> m)), Seq(
+        "centroids" ->
+          cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv"),
+        "pq_codebook" -> full.zipWithIndex
+          .map { case (cv, j) => (j, cv.toSeq) }.toDF("j", "cv"),
+        "pq_meta" -> Seq((m, ksub, dim)).toDF("m", "ksub", "dim")))
   }
 
   /** The IVF codebook sorted by `cid` — one bounded driver collect,
@@ -1950,12 +1971,16 @@ object Similarity {
     */
   def appendIvfPqIndex(spark: SparkSession, dir: String, batch: DataFrame,
                        idCol: String, vecCol: String): Unit =
-      Par.described(spark, s"ivfpq append $dir") {
-    val e = StoreSegments.latest(spark, dir)
-    val (cents, full, m) = readIvfPqModel(spark, dir, e)
-    appendPostings(spark, dir, e, ivfResiduals(batch, idCol, vecCol, cents)
-      .select(col("id"), pqCodeWord(col("r"), full, m).as("code_word"),
-        col("cell")), cents.size)
+    Tombstones.append(ivfPqStore(spark, dir),
+      Tombstones.Batch(batch, idCol, vecCol))
+
+  /** [[ivfStore]] of a store that must be IVF-PQ. */
+  private[graft] def ivfPqStore(sp: SparkSession,
+                                root: String): Tombstones.Store = {
+    val s = ivfStore(sp, root)
+    require(s.family == ivfPqIndex, s"the store at $root is not an IVF-PQ " +
+      "store: its log entry names no pq_codebook")
+    s
   }
 
   /** DELETION from a [[buildIvfPqIndex]] store — the takedown verb for

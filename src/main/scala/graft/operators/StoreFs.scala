@@ -111,12 +111,6 @@ private[graft] object StoreFs {
     else f.listStatus(p).filterNot(_.isDirectory).map(_.getPath.getName).toSeq
   }
 
-  /** Delete a directory's children but keep the directory itself. */
-  def deleteContents(spark: SparkSession, path: String): Unit = {
-    val (f, p) = fs(spark, path)
-    if (f.exists(p)) f.listStatus(p).foreach(s => f.delete(s.getPath, true))
-  }
-
   /** At most this many [[frozen]] values stay on the driver. */
   private val FrozenEntries = 16
 
@@ -256,13 +250,18 @@ private[graft] object StoreFs {
   *    and whether positions are stored;
   *  - every component's live segments, each with the partition keys
   *    newer segments superseded (the model files are components too);
-  *  - the tombstone segments (component [[Tomb]]).
+  *  - the tombstone segments (component [[Tomb]]);
+  *  - `txn`: per source (a CDC sync, a streaming checkpoint) the last
+  *    version of it applied — Delta's `SetTransaction`. Every verb carries
+  *    it forward and a rebuild starts with none; a verb given
+  *    `(source, v)` commits `v` in the same put-if-absent as its segments,
+  *    so a replayed version finds itself recorded and commits nothing.
   *
   * A segment is an immutable directory `<dir>/<comp>/seg=<id>`, written
   * once under an id unique to the writing attempt and prefixed by the
   * version the writer started from. Every verb (build, append, delete,
-  * compact, fused delete+compact, vacuum) writes its new segments, then
-  * publishes `v + 1` EXACTLY ONCE with a put-if-absent
+  * compact, fused delete+compact, sync, vacuum) writes its new segments,
+  * then publishes `v + 1` EXACTLY ONCE with a put-if-absent
   * ([[StoreFs.createExclusive]]) — the commit, Delta Lake's mutual
   * exclusion and multi-file atomicity in one step (Armbrust et al., VLDB
   * 2020). A writer that loses the race, or crashes, leaves only segments
@@ -289,7 +288,6 @@ private[graft] object StoreFs {
   */
 private[graft] object StoreSegments {
 
-  import scala.jdk.CollectionConverters._
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions.{coalesce, col, lit, not}
   import org.apache.spark.sql.types.{IntegerType, StringType, StructField,
@@ -301,9 +299,12 @@ private[graft] object StoreSegments {
   /** A live segment and its partition keys superseded by newer ones. */
   final case class Seg(id: String, excluded: Seq[Long] = Nil)
 
-  /** One version of a store: its layout facts and live segments. */
+  /** One version of a store: its layout facts, live segments and the
+    * last version applied per source.
+    */
   final case class Entry(version: Long, buckets: Int, positions: Boolean,
-                         comps: Map[String, Seq[Seg]]) {
+                         comps: Map[String, Seq[Seg]],
+                         txn: Map[String, Long] = Map.empty) {
     def segs(comp: String): Seq[Seg] = comps.getOrElse(comp, Nil)
     def has(comp: String): Boolean = segs(comp).nonEmpty
     def layout: String = s"buckets = $buckets, positions = $positions"
@@ -335,7 +336,10 @@ private[graft] object StoreSegments {
     (Seq(s"buckets\t${e.buckets}", s"positions\t${e.positions}") ++
       e.comps.toSeq.sortBy(_._1).flatMap { case (c, ss) =>
         ss.map(s => s"seg\t$c\t${s.id}\t${s.excluded.mkString(",")}")
-      } :+ "end").mkString("\n")
+      } ++ e.txn.toSeq.sorted.map { case (src, v) =>
+        require(!src.exists("\t\n".contains(_)), s"log source name '$src'")
+        s"txn\t$src\t$v" } :+
+      "end").mkString("\n")
 
   private def parse(dir: String, v: Long, content: String): Entry = {
     val lines = content.linesIterator.toSeq
@@ -347,6 +351,8 @@ private[graft] object StoreSegments {
         case (e, Seq("positions", p)) => e.copy(positions = p.toBoolean)
         case (e, Seq("seg", c, id, ex)) => e.set(c, e.segs(c) :+
           Seg(id, ex.split(",").filter(_.nonEmpty).map(_.toLong).toSeq))
+        case (e, Seq("txn", src, n)) =>
+          e.copy(txn = e.txn.updated(src, n.toLong))
         case (_, l) => throw new IllegalStateException(
           s"malformed line in log entry $v of the store at $dir: " +
             l.mkString("\t"))
@@ -469,7 +475,6 @@ private[graft] object StoreSegments {
   final class Writer(val spark: SparkSession, val dir: String,
                      val base: Option[Entry]) {
     private val from = base.fold(0L)(_.version)
-    private val segs = new java.util.concurrent.ConcurrentHashMap[String, Seg]()
 
     private def newSeg(comp: String): (String, String) = {
       hook(dir, s"write $comp")
@@ -477,33 +482,25 @@ private[graft] object StoreSegments {
       (id, s"$dir/$comp/seg=$id")
     }
 
-    /** The segment this writer added to `comp` (at most one per verb). */
-    def added(comp: String): Option[Seg] = Option(segs.get(comp))
-
-    /** `e` with every segment this writer added appended to its component. */
-    def appendedTo(e: Entry): Entry =
-      segs.asScala.foldLeft(e) { case (acc, (c, s)) =>
-        acc.set(c, acc.segs(c) :+ s) }
-
     /** `df` (clustered by `keyCol` by the caller) as a new segment of
       * `comp`, partitioned by `keyCol` — none when no row landed (a
       * zero-row partitioned write leaves no `key=` directory, so one
       * listing answers what a separate emptiness probe would evaluate the
       * frame for).
       */
-    def keyed(comp: String, keyCol: String, df: DataFrame): Unit = {
+    def keyed(comp: String, keyCol: String, df: DataFrame): Option[Seg] = {
       val (id, path) = newSeg(comp)
       df.write.partitionBy(keyCol).parquet(path)
       if (StoreFs.listSubdirs(spark, path).exists(_.startsWith(s"$keyCol=")))
-        segs.put(comp, Seg(id))
-      else StoreFs.delete(spark, path)
+        Some(Seg(id))
+      else { StoreFs.delete(spark, path); None }
     }
 
     /** `df` as a new plain segment of `comp`. */
-    def plain(comp: String, df: DataFrame): Unit = {
+    def plain(comp: String, df: DataFrame): Seg = {
       val (id, path) = newSeg(comp)
       df.write.parquet(path)
-      segs.put(comp, Seg(id))
+      Seg(id)
     }
 
     /** Publish `next` as version base + 1. A lost race fails naming the

@@ -3,16 +3,15 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 
 /** SINGLE-WRITER enforcement for the persisted stores that still lock —
-  * the zone map, the snapshot store, the saved BPE tokenizer, and the
-  * index stores' CDC-sync markers (`<index>/_sync`): every mutating verb
-  * runs under [[withWriteLock]], which creates the store's `_lock` file
+  * the zone map, the snapshot store and the saved BPE tokenizer: every
+  * mutating verb runs under [[withWriteLock]], which creates the store's `_lock` file
   * EXCLUSIVELY (create-if-absent — atomic on HDFS-family filesystems,
   * where the namenode arbitrates, and on the local scheme via NIO
   * `createFile`) and deletes it when the verb finishes or throws.
   *
-  * The text, IVF and IVF-PQ stores take no lock: each verb commits one
-  * entry of their write-once log ([[StoreSegments]]), whose put-if-absent
-  * already fails the second of two racing writers.
+  * The text, IVF and IVF-PQ stores take no lock: each verb, and each CDC
+  * sync, commits one entry of their write-once log ([[StoreSegments]]),
+  * whose put-if-absent already fails the second of two racing writers.
   *
   * Why this exists: every locked store's append path is a
   * read-modify-write of shared metadata (the zone map merges its `_zones`

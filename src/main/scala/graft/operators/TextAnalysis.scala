@@ -657,16 +657,16 @@ object TextAnalysis {
     */
   def buildTextIndex(df: DataFrame, idCol: String, textCol: String,
                      dir: String, buckets: Int = 64,
-                     withPositions: Boolean = false): Unit =
-      Par.described(df.sparkSession, s"text-index build $dir") {
+                     withPositions: Boolean = false): Unit = {
     require(buckets >= 1, s"buckets must be >= 1: $buckets")
     val sp = df.sparkSession
     // a rebuild commits an entry naming only what it writes: no stale
     // segments, no positions unless asked, and no tombstones — they name
     // ids of the store being replaced
-    writeText(sp, dir, StoreSegments.latestOpt(sp, dir),
-      StoreSegments.Entry(0, buckets, withPositions, Map.empty), df, idCol,
-      textCol)
+    Tombstones.build(new TextStore(sp, dir,
+      StoreSegments.Entry(0, buckets, withPositions, Map.empty),
+      StoreSegments.latestOpt(sp, dir)),
+      Tombstones.Batch(df, idCol, textCol))
   }
 
   /** INCREMENTAL text-index maintenance — [[Similarity.appendIvfIndex]]'s
@@ -682,70 +682,12 @@ object TextAnalysis {
   def appendTextIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                       batch: DataFrame, idCol: String, textCol: String,
                       buckets: Int = 0,
-                      withPositions: Boolean = false): Unit =
-      Par.described(spark, s"text-index append $dir") {
-    val e = StoreSegments.latest(spark, dir)
-    e.bucketsFor(dir, buckets)
-    require(!withPositions || e.positions,
-      s"the store at $dir has layout (${e.layout}); the call asked for " +
-        "positions")
-    writeText(spark, dir, Some(e), e, batch, idCol, textCol)
-  }
-
-  /** Write `df`'s text-index components under `layout` (its bucket count
-    * and whether positions are stored) as new segments, each added to
-    * `layout`'s own segments, and commit one entry on top of `base`. The
-    * shared caches are materialized ONCE (computing postings evaluates dl
-    * too), then the component writes overlap — independent segments, so
-    * the wall is one compute + the slowest write (Par's §2.6 overlap).
-    */
-  private def writeText(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, base: Option[StoreSegments.Entry],
-                        layout: StoreSegments.Entry, df: DataFrame,
-                        idCol: String, textCol: String): Unit = {
-    val buckets = layout.buckets
-    // the partition count is EXPLICIT (r15): the count-less form gets
-    // AQE-coalesced to 1-2 partitions at small inputs, serializing the
-    // per-file parquet-writer inits that dominate these writes
-    val parts = math.min(buckets, spark.sparkContext.defaultParallelism)
-    val dl = CacheScope.persisted(df.select(col(idCol).as("doc_id"),
-      size(array_remove(tokens(col(textCol)), "")).cast("long").as("dl"),
-      tokens(col(textCol)).as("toks")))
-    val postings = CacheScope.persisted(
-      dl.select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
-        .filter(col("term") =!= "")
-        .groupBy("doc_id", "term", "dl").agg(count(lit(1)).as("cnt"))
-        .withColumn("bucket", termBucket(col("term"), buckets))
-        // CLUSTER by bucket before the partitioned write: without this,
-        // every shuffle partition writes a sliver into every bucket dir
-        // (partitions × buckets small files — the classic partitionBy
-        // mistake); clustered, each bucket is one writer's contiguous
-        // output, which is also the layout a pruned read wants
-        .repartition(parts, col("bucket")))
-    postings.count()
-    StoreSegments.write(spark, dir, base) { w =>
-      Par.run(Seq[() => Unit](
-        () => w.keyed("postings", "bucket", postings),
-        () => w.keyed("terms", "bucket",
-          postings.groupBy("term", "bucket").agg(count(lit(1)).as("df"))
-            .repartition(parts, col("bucket"))),
-        // corpus constants as RAW TOTALS (n_docs, sum_dl), not a
-        // precomputed avgdl: totals are mergeable — an append adds a row
-        // per segment and search re-derives avgdl from the exact Long
-        // sums, so an appended index keeps bit-identical IDF/TF arithmetic
-        () => w.plain("stats",
-          dl.agg(count(lit(1)).cast("long").as("n_docs"),
-            sum("dl").cast("long").as("sum_dl")).coalesce(1)),
-        () => w.keyed("docs", "dbucket",
-          dl.select(col("doc_id"), col("dl"))
-            .withColumn("dbucket",
-              termBucket(col("doc_id").cast("string"), buckets))
-            .repartition(parts, col("dbucket")))) ++
-        (if (layout.positions) Seq(() => w.keyed("positions", "bucket",
-          positionRows(df, idCol, textCol, buckets, parts)))
-        else Nil): _*)
-      Some(w.appendedTo(layout))
-    }
+                      withPositions: Boolean = false): Unit = {
+    val s = textStore(spark, dir, buckets)
+    require(!withPositions || s.entry.positions,
+      s"the store at $dir has layout (${s.entry.layout}); the call asked " +
+        "for positions")
+    Tombstones.append(s, Tombstones.Batch(batch, idCol, textCol))
   }
 
   /** DELETION from a [[buildTextIndex]] index — the storage verb a crawl
@@ -824,19 +766,27 @@ object TextAnalysis {
   }
 
   /** A text index opened for one [[Tombstones]] verb at its newest log
-    * entry; a non-zero `buckets` must equal the recorded count. `docs/`
-    * is the verb's ONE schema read (r16 job diet): its doc_id field types
-    * every other component and the tombstones.
+    * entry; a non-zero `buckets` must equal the recorded count.
     */
   private[graft] def textStore(sp: org.apache.spark.sql.SparkSession,
                                root: String,
-                               buckets: Int): Tombstones.Store =
-      new Tombstones.Store {
-    val spark = sp
-    val dir = root
+                               buckets: Int): Tombstones.Store = {
+    val e = StoreSegments.latest(sp, root)
+    e.bucketsFor(root, buckets)
+    new TextStore(sp, root, e, Some(e))
+  }
+
+  /** A text index at `entry` (a build's: the new layout alone). `docs/`
+    * is a verb's ONE schema read (r16 job diet): its doc_id field types
+    * every other component and the tombstones.
+    */
+  private final class TextStore(val spark: org.apache.spark.sql.SparkSession,
+                                val dir: String,
+                                val entry: StoreSegments.Entry,
+                                override val base: Option[StoreSegments.Entry])
+      extends Tombstones.Store {
     val family = textIndex
-    val entry = StoreSegments.latest(spark, dir)
-    private val nb = entry.bucketsFor(dir, buckets)
+    private val nb = entry.buckets
     private lazy val docs =
       StoreSegments.readAt(spark, dir, entry, "docs", "dbucket")
     private lazy val docId = docs.schema("doc_id")
@@ -845,10 +795,54 @@ object TextAnalysis {
       if (name == "docs") docs
       else StoreSegments.readAt(spark, dir, entry, name, key,
         Some(Comp.of(name, docId)))
+    // the partition count is EXPLICIT (r15): the count-less form gets
+    // AQE-coalesced to 1-2 partitions at small inputs, serializing the
+    // per-file parquet-writer inits that dominate these writes
     override def parts: Int =
       math.min(nb, spark.sparkContext.defaultParallelism)
     override def idKey(id: Column): Column =
       termBucket(id.cast("string"), nb)
+
+    /** Every component's rows of `df`, the positions when the layout
+      * stores them. The shared caches are materialized ONCE (computing
+      * postings evaluates dl too) before the writes overlap — the wall is
+      * one compute + the slowest write (Par's §2.6 overlap).
+      */
+    def rows(df: DataFrame, idCol: String,
+             textCol: String): Seq[(String, DataFrame)] = {
+      val dl = CacheScope.persisted(df.select(col(idCol).as("doc_id"),
+        size(array_remove(tokens(col(textCol)), "")).cast("long").as("dl"),
+        tokens(col(textCol)).as("toks")))
+      val postings = CacheScope.persisted(
+        dl.select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
+          .filter(col("term") =!= "")
+          .groupBy("doc_id", "term", "dl").agg(count(lit(1)).as("cnt"))
+          .withColumn("bucket", termBucket(col("term"), nb))
+          // CLUSTER by bucket before the partitioned write: without this,
+          // every shuffle partition writes a sliver into every bucket dir
+          // (partitions × buckets small files — the classic partitionBy
+          // mistake); clustered, each bucket is one writer's contiguous
+          // output, which is also the layout a pruned read wants
+          .repartition(parts, col("bucket")))
+      postings.count()
+      Seq(
+        "postings" -> postings,
+        "terms" -> postings.groupBy("term", "bucket")
+          .agg(count(lit(1)).as("df")).repartition(parts, col("bucket")),
+        // corpus constants as RAW TOTALS (n_docs, sum_dl), not a
+        // precomputed avgdl: totals are mergeable — an append adds a row
+        // per segment and search re-derives avgdl from the exact Long
+        // sums, so an appended index keeps bit-identical IDF/TF arithmetic
+        "stats" -> dl.agg(count(lit(1)).cast("long").as("n_docs"),
+          sum("dl").cast("long").as("sum_dl")).coalesce(1),
+        "docs" -> dl.select(col("doc_id"), col("dl"))
+          .withColumn("dbucket",
+            termBucket(col("doc_id").cast("string"), nb))
+          .repartition(parts, col("dbucket"))) ++
+        (if (entry.positions)
+          Seq("positions" -> positionRows(df, idCol, textCol, nb, parts))
+        else Nil)
+    }
 
     /** `docs/` → (doc_id, dl) over the ids' own dbuckets, then the
       * postings they touch; negatives: one (−n, −Σdl) stats row and a

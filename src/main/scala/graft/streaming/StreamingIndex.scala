@@ -11,25 +11,45 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rebuild and no driver materialization — the executors write postings
   * directly, exactly like the batch append.
   *
-  * At-least-once handling: `foreachBatch` replays a batchId after a
-  * crash between the write and the checkpoint commit, and a segment
-  * APPEND is not naturally idempotent (the replay would double the
-  * batch's postings and stats). So each processed batchId leaves a
-  * marker directory under `dir/ingested/`, and a replayed id is skipped
-  * — the standard processed-batch bookkeeping for non-idempotent
-  * foreachBatch sinks. The marker lands AFTER the append completes, so
-  * the remaining failure window is append-finished-marker-unwritten:
-  * strictly narrower than no bookkeeping, and the recovery is
-  * re-running compaction-grade dedup on the affected segment — a
-  * documented trade, not a silent one.
+  * EXACTLY-ONCE into the three index stores (text, IVF, IVF-PQ):
+  * `foreachBatch` replays a batchId after a crash between the store write
+  * and the checkpoint commit, and a segment APPEND is not idempotent (a
+  * replay would double the batch's postings and stats). So each batch's
+  * append commits, in the SAME log entry as its segments, `txn
+  * stream:<qualified checkpoint path> → batchId` ([[graft.operators
+  * .StoreSegments]]; Delta's txn app-id/version, Spark's file-sink
+  * `_spark_metadata`): a replayed id finds itself recorded and commits
+  * nothing, and a crash before that commit leaves no referenced segment.
   *
-  * Gated: q140 (text) / q141 (IVF) — build on the standing half, stream
-  * the increment through micro-batch appends, and the searched answer
-  * must hash-equal the from-scratch oracle over the full corpus, i.e.
-  * the streaming ingest is indistinguishable from the batch append it
-  * replays per micro-batch.
+  * The zone map and the snapshot store have no log yet, so
+  * [[ingestZoneMap]] and [[ingestSnapshotDeltas]] keep their
+  * processed-batch marker directories (written after the store write,
+  * with the residual window each documents).
+  *
+  * Gated: q140 (text) / q141 (IVF) / q163 (IVF-PQ) — build on the
+  * standing half, stream the increment through micro-batch appends, and
+  * the searched answer must hash-equal the from-scratch oracle over the
+  * full corpus, i.e. the streaming ingest is indistinguishable from the
+  * batch append it replays per micro-batch.
   */
 object StreamingIndex {
+
+  import graft.operators.{Similarity, TextAnalysis, Tombstones}
+
+  /** Drain `source` into the store `open` opens per micro-batch, each
+    * batch's append recording its id under the checkpoint's source name.
+    */
+  private def ingest(spark: SparkSession, source: DataFrame,
+                     checkpoint: String, open: () => Tombstones.Store,
+                     idCol: String, contentCol: String): Unit = {
+    val cp = new org.apache.hadoop.fs.Path(checkpoint)
+    val name = "stream:" + cp.getFileSystem(
+      spark.sparkContext.hadoopConfiguration).makeQualified(cp)
+    BoundedStream.runForeachBatch(source, identity, checkpoint, "append") {
+      (batch, id) => Tombstones.append(open(),
+        Tombstones.Batch(batch, idCol, contentCol), Some(name -> id))
+    }
+  }
 
   /** Drain `source` (a streaming frame of documents) to EOF, appending
     * each micro-batch into the [[graft.operators.TextAnalysis
@@ -40,15 +60,8 @@ object StreamingIndex {
                       checkpoint: String, dir: String,
                       idCol: String, textCol: String,
                       buckets: Int = 0): Unit =
-    BoundedStream.runForeachBatch(source, identity, checkpoint, "append") {
-      (batch, id) =>
-        val marker = s"$dir/ingested/batch=$id"
-        if (!graft.operators.StoreFs.exists(spark, marker)) {
-          graft.operators.TextAnalysis
-            .appendTextIndex(spark, dir, batch, idCol, textCol, buckets)
-          graft.operators.StoreFs.mkdirs(spark, marker)
-        }
-    }
+    ingest(spark, source, checkpoint,
+      () => TextAnalysis.textStore(spark, dir, buckets), idCol, textCol)
 
   /** [[ingestTextIndex]] for the IVF vector index: each micro-batch of
     * (id, vector) rows assigns against the frozen codebook and appends
@@ -58,15 +71,8 @@ object StreamingIndex {
   def ingestIvfIndex(spark: SparkSession, source: DataFrame,
                      checkpoint: String, dir: String,
                      idCol: String, vecCol: String): Unit =
-    BoundedStream.runForeachBatch(source, identity, checkpoint, "append") {
-      (batch, id) =>
-        val marker = s"$dir/ingested/batch=$id"
-        if (!graft.operators.StoreFs.exists(spark, marker)) {
-          graft.operators.Similarity
-            .appendIvfIndex(spark, dir, batch, idCol, vecCol)
-          graft.operators.StoreFs.mkdirs(spark, marker)
-        }
-    }
+    ingest(spark, source, checkpoint,
+      () => Similarity.ivfStore(spark, dir), idCol, vecCol)
 
   /** [[ingestIvfIndex]] for the COMPRESSED store: each micro-batch
     * encodes its residuals against both frozen codebooks and appends
@@ -79,27 +85,20 @@ object StreamingIndex {
   def ingestIvfPqIndex(spark: SparkSession, source: DataFrame,
                        checkpoint: String, dir: String,
                        idCol: String, vecCol: String): Unit =
-    BoundedStream.runForeachBatch(source, identity, checkpoint, "append") {
-      (batch, id) =>
-        val marker = s"$dir/ingested/batch=$id"
-        if (!graft.operators.StoreFs.exists(spark, marker)) {
-          graft.operators.Similarity
-            .appendIvfPqIndex(spark, dir, batch, idCol, vecCol)
-          graft.operators.StoreFs.mkdirs(spark, marker)
-        }
-    }
+    ingest(spark, source, checkpoint,
+      () => Similarity.ivfPqStore(spark, dir), idCol, vecCol)
 
   /** [[ingestTextIndex]] for the ZONE-MAP layout store: each micro-batch
     * assigns against the store's frozen `_meta` bounds and appends into
     * the zone directories ([[graft.sinks.ZoneMap.appendZoneMapped]] per
     * trigger) — the live-ingest form of a zone-clustered 100 TB table,
-    * with the same processed-batch markers (an append that replays after
-    * its marker landed would double the batch's rows AND inflate the
-    * sidecar counts). Same residual window as the header documents: a
-    * crash INSIDE the append (files written, marker not) still replays
-    * dirty — strictly narrower than no bookkeeping, recovered by
-    * re-deriving the sidecar from the data (zoneMapAudit flags the
-    * mismatch), a documented trade, not a silent one.
+    * with processed-batch markers (an append that replays after its
+    * marker landed would double the batch's rows AND inflate the sidecar
+    * counts). The residual window: a crash INSIDE the append (files
+    * written, marker not) still replays dirty — strictly narrower than no
+    * bookkeeping, recovered by re-deriving the sidecar from the data
+    * (zoneMapAudit flags the mismatch), a documented trade, not a silent
+    * one; the zone map has no log to commit the batch id with.
     */
   def ingestZoneMap(spark: SparkSession, source: DataFrame,
                     checkpoint: String, dir: String,
@@ -122,8 +121,9 @@ object StreamingIndex {
     * column. Deltas cost ∝ the trigger's churn, reconstruction stays the
     * ONE window of [[graft.operators.Curation.readSnapshotAt]], and
     * retention ([[graft.operators.Curation.pruneSnapshots]]) sweeps the
-    * ingested history like any hand-written chain. Same processed-batch
-    * markers as every ingest here, plus CRASH-REPLAY recovery: a replay
+    * ingested history like any hand-written chain. Processed-batch
+    * markers as [[ingestZoneMap]]'s (the snapshot store has no log),
+    * plus CRASH-REPLAY recovery: a replay
     * that finds a versioned delta dir without its marker (the previous
     * attempt died between write and marker, or mid-write with a
     * half-delta) drops the partial dir and rewrites it from the

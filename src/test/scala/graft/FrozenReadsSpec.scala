@@ -225,7 +225,8 @@ class FrozenReadsSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", 1).parquet(arrivals)
     val streamed = modelReads(s, jobsDuring(StreamingIndex.ingestIvfPqIndex(
       spark, src, ckpt, s, "vec_id", "embedding")))
-    val triggers = new java.io.File(s"$s/ingested").listFiles().length
+    val triggers = new java.io.File(s"$ckpt/commits").list()
+      .count(_.forall(_.isDigit))
     assert(triggers >= 3, s"$triggers triggers")
     assert(streamed == first, s"$streamed model-read jobs over $triggers " +
       s"triggers; one cold read is $first")

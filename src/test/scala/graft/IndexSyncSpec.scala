@@ -1,14 +1,18 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
-import graft.operators.{Curation, IndexSync, Similarity, StoreFs, TextAnalysis}
+import graft.operators.{Curation, IndexSync, Similarity, StoreFs,
+  StoreSegments, TextAnalysis}
 
 /** CDC-driven index freshness ([[graft.operators.IndexSync]]): the
   * rebuild-equivalence half is oracle-gated (q236 hash-equals the
   * from-scratch BM25 oracle over the reconstruction); these tests pin
   * the pieces a fixture-parquet oracle can't — the cross-sync re-birth
   * (the tombstone-shadow hazard), the range discipline (noop / gap
-  * refusal), and the crash markers (pending refusal + abandon).
+  * refusal), and the one commit per sync (a kill at any write leaves the
+  * old version, a replay commits nothing, racing syncs commit once).
   */
 class IndexSyncSpec extends SparkTestBase {
   import spark.implicits._
@@ -133,51 +137,158 @@ class IndexSyncSpec extends SparkTestBase {
     assert(hits(idx, "revised") == Set(1L, 2L))
   }
 
-  test("crash markers: a pending sync refuses until abandoned; abandon records the rebuild version") {
-    val store = tmp("graft-crash-store")
-    val idx = tmp("graft-crash-idx")
-    Curation.writeSnapshot(v1, store, version = 1)
-    Curation.writeSnapshotDelta(spark, store, version = 2,
-      upserts = docs(2L -> "bravo revised common"),
-      deleteIds = spark.emptyDataset[Long].toDF("doc_id"), idCol = "doc_id")
-    TextAnalysis.buildTextIndex(
-      Curation.readSnapshotAt(spark, store, 1, "doc_id"),
-      "doc_id", "text", idx, buckets = 4)
-    // a crashed sync left its pending marker
-    StoreFs.writeFile(spark, s"$idx/_sync/pending", "1\t2")
-    val e = intercept[IllegalStateException] {
-      IndexSync.syncTextIndexFromSnapshots(spark, idx, store,
-        1, 2, "doc_id", "text", buckets = 4)
-    }
-    assert(e.getMessage.contains("PENDING"))
-    // observability: the status TVF names the crashed range
+  /** A byte copy of the directory at a fresh path. */
+  private def copyOf(root: String): String = {
+    val src = java.nio.file.Paths.get(root)
+    val dst = java.nio.file.Paths.get(tmp("graft-sync-copy"))
+    val walk = java.nio.file.Files.walk(src)
+    try walk.iterator().asScala.toSeq.foreach { f =>
+      val to = dst.resolve(src.relativize(f).toString)
+      if (java.nio.file.Files.isDirectory(f))
+        java.nio.file.Files.createDirectories(to)
+      else java.nio.file.Files.copy(f, to)
+    } finally walk.close()
+    dst.toString
+  }
+
+  /** Run `body` with `h` as the store hook. */
+  private def hooked[T](h: (String, String) => Unit)(body: => T): T = {
+    StoreSegments.hook = h
+    try body finally StoreSegments.hook = (_, _) => ()
+  }
+
+  private def logEntries(idx: String): Int =
+    StoreFs.listFiles(spark, s"$idx/_log").count(_.forall(_.isDigit))
+
+  private def scores(idx: String): Set[(Long, Long)] =
+    TextAnalysis.searchTextIndex(spark, idx,
+        Seq("common", "revised", "golf", "alpha"), k = 50, buckets = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+
+  private def applied(idx: String): Option[Long] = {
     graft.functions.GraftTableFunctions.ensureRegistered(spark)
     val st = spark.sql(s"SELECT * FROM graft_sync_status('$idx')")
       .collect().head
-    assert(st.getAs[Boolean]("pending"))
-    assert(st.isNullAt(st.fieldIndex("applied_version")))
-    assert(st.getAs[Long]("pending_old") == 1L &&
-      st.getAs[Long]("pending_new") == 2L)
-    // operator rebuilds at v2 and abandons the marker
-    StoreFs.deleteContents(spark, idx)
-    TextAnalysis.buildTextIndex(
-      Curation.readSnapshotAt(spark, store, 2, "doc_id"),
-      "doc_id", "text", idx, buckets = 4)
-    IndexSync.abandonSync(spark, idx, rebuiltAtVersion = 2)
-    assert(IndexSync.appliedVersion(spark, idx).contains(2L))
-    assert(!StoreFs.exists(spark, s"$idx/_sync/pending"))
-    val st2 = spark.sql(s"SELECT * FROM graft_sync_status('$idx')")
-      .collect().head
-    assert(!st2.getAs[Boolean]("pending"))
-    assert(st2.getAs[Long]("applied_version") == 2L)
-    // and the next range syncs normally
+    assert(st.schema.fieldNames.toSeq == Seq("store", "applied_version"))
+    Option(st.get(1)).map(_.asInstanceOf[Long])
+  }
+
+  /** v1 = [[v1]]; v2 changes 2 and removes 4; v3 changes 1, removes 5,
+    * adds 7 — a range whose sync drains and appends. The index is built
+    * at v1 and synced to v2.
+    */
+  private def syncedToV2(tag: String): (String, String) = {
+    val store = tmp(s"graft-$tag-store")
+    val idx = tmp(s"graft-$tag-idx")
+    Curation.writeSnapshot(v1, store, version = 1)
+    Curation.writeSnapshotDelta(spark, store, version = 2,
+      upserts = docs(2L -> "bravo revised common"),
+      deleteIds = Seq(4L).toDF("doc_id"), idCol = "doc_id")
     Curation.writeSnapshotDelta(spark, store, version = 3,
-      upserts = docs(6L -> "foxtrot common"),
+      upserts = docs(1L -> "alpha revised common", 7L -> "golf common"),
+      deleteIds = Seq(5L).toDF("doc_id"), idCol = "doc_id")
+    TextAnalysis.buildTextIndex(
+      Curation.readSnapshotAt(spark, store, 1, "doc_id"),
+      "doc_id", "text", idx, buckets = 4)
+    sync(idx, store, 1, 2)
+    (store, idx)
+  }
+
+  private def sync(idx: String, store: String, from: Long,
+                   to: Long): String =
+    IndexSync.syncTextIndexFromSnapshots(spark, idx, store, from, to,
+      "doc_id", "text", buckets = 4).collect().head.getAs[String]("action")
+
+  private final class KillPoint extends RuntimeException("kill point")
+
+  private def isPoint(step: String) =
+    step.startsWith("write") || step == "commit"
+
+  test("sync crash: a sync killed at any segment write or its commit " +
+      "leaves the pre-sync version and applied version; re-running the " +
+      "range applies it and equals a from-scratch build") {
+    val (store, idx) = syncedToV2("sync-crash")
+    val fresh = tmp("graft-sync-crash-fresh")
+    TextAnalysis.buildTextIndex(
+      Curation.readSnapshotAt(spark, store, 3, "doc_id"),
+      "doc_id", "text", fresh, buckets = 4)
+    val before = scores(idx)
+    val clean = copyOf(idx)
+    val points = new java.util.concurrent.atomic.AtomicInteger
+    hooked((d, step) => if (d == clean && isPoint(step))
+      points.incrementAndGet())(assert(sync(clean, store, 2, 3) == "applied"))
+    // the drain's and the append's segment writes, then the commit
+    assert(points.get >= 3, s"${points.get} kill points")
+    for (k <- 0 until points.get) {
+      val d = copyOf(idx)
+      val v = StoreSegments.latest(spark, d).version
+      val seen = new java.util.concurrent.atomic.AtomicInteger
+      val e = intercept[Throwable](hooked((dd, step) => if (dd == d &&
+          isPoint(step) && seen.getAndIncrement() == k)
+        throw new KillPoint)(sync(d, store, 2, 3)))
+      assert(e.isInstanceOf[KillPoint], s"@$k: $e")
+      spark.catalog.clearCache()
+      assert(StoreSegments.latest(spark, d).version == v, s"@$k")
+      assert(applied(d).contains(2L), s"@$k")
+      assert(scores(d) == before, s"@$k: not the pre-sync version")
+      assert(sync(d, store, 2, 3) == "applied", s"@$k")
+      assert(applied(d).contains(3L), s"@$k")
+      assert(scores(d) == scores(fresh), s"@$k: the re-run differs")
+    }
+  }
+
+  test("sync commit count: one applied sync adds exactly one log entry, " +
+      "a replayed range none, a zero-churn range one") {
+    val (store, idx) = syncedToV2("sync-count")
+    // build + the (1, 2] sync
+    assert(logEntries(idx) == 2)
+    assert(sync(idx, store, 2, 3) == "applied")
+    assert(logEntries(idx) == 3)
+    assert(sync(idx, store, 2, 3) == "noop")
+    assert(sync(idx, store, 1, 3) == "noop")
+    assert(logEntries(idx) == 3)
+    Curation.writeSnapshotDelta(spark, store, version = 4,
+      upserts = spark.emptyDataset[(Long, String)].toDF("doc_id", "text"),
       deleteIds = spark.emptyDataset[Long].toDF("doc_id"), idCol = "doc_id")
-    assert(IndexSync.syncTextIndexFromSnapshots(spark, idx, store,
-      2, 3, "doc_id", "text", buckets = 4)
-      .collect().head.getAs[String]("action") == "applied")
-    assert(hits(idx, "foxtrot") == Set(6L))
+    val segs = StoreSegments.latest(spark, idx).comps
+    assert(sync(idx, store, 3, 4) == "applied")
+    assert(logEntries(idx) == 4)
+    assert(StoreSegments.latest(spark, idx).comps == segs)
+    assert(applied(idx).contains(4L))
+  }
+
+  test("racing syncs of one range: one applies, the other fails naming " +
+      "the store or reads noop; the store equals the winner's result") {
+    val (store, idx) = syncedToV2("sync-race")
+    val solo = copyOf(idx)
+    assert(sync(solo, store, 2, 3) == "applied")
+    // both resolve the same entry before either goes on
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val arrivals = new java.util.concurrent.atomic.AtomicInteger
+    val outcomes = try hooked((d, step) => if (d == idx &&
+        step == "resolved" && arrivals.getAndIncrement() < 2)
+      barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)) {
+      Seq.fill(2)(pool.submit(new java.util.concurrent.Callable[
+          scala.util.Try[String]] {
+        def call() = scala.util.Try(sync(idx, store, 2, 3))
+      })).map(_.get())
+    } finally pool.shutdown()
+    assert(outcomes.count(_.toOption.contains("applied")) == 1,
+      outcomes.toString)
+    outcomes.filterNot(_.toOption.contains("applied")).foreach {
+      case scala.util.Success(a) => assert(a == "noop")
+      case scala.util.Failure(e) =>
+        def messages(t: Throwable): Seq[String] =
+          if (t == null) Nil else String.valueOf(t.getMessage) +:
+            messages(t.getCause)
+        assert(messages(e).exists(_.contains(idx)), e.toString)
+    }
+    assert(logEntries(idx) == logEntries(solo))
+    assert(applied(idx).contains(3L))
+    assert(scores(idx) == scores(solo))
+    assert(TextAnalysis.textIndexAudit(spark, idx).collect().toSeq ==
+      TextAnalysis.textIndexAudit(spark, solo).collect().toSeq)
   }
 
   // one-hot direction per id (id % 3) + a small id-proportional tail, so

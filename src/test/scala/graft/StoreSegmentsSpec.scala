@@ -381,9 +381,8 @@ class StoreSegmentsSpec extends SparkTestBase {
       .groupBy("key").agg(sum("v").as("v"))
     // the segment write every compaction publishes its survivors through
     StoreSegments.write(spark, dir, None) { w =>
-      w.keyed("pts", "key", survivors)
-      Some(w.appendedTo(
-        StoreSegments.Entry(0, 0, positions = false, Map.empty)))
+      w.keyed("pts", "key", survivors).map(seg => StoreSegments.Entry(0, 0,
+        positions = false, Map("pts" -> Seq(seg))))
     }
     assert(acc.value <= 750,
       s"survivors frame evaluated ~twice: ${acc.value} map-side evals for 500 rows")

@@ -1,17 +1,99 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.TextAnalysis
+import graft.operators.{Similarity, StoreSegments, TextAnalysis}
 import graft.streaming.StreamingIndex
 
 /** Streaming index maintenance beyond the q140/q141 oracle gates: the
   * bookkeeping claims — restart on a completed checkpoint ingests
-  * nothing twice, per-trigger segments land one marker each.
+  * nothing twice, each micro-batch commits one log entry recording its
+  * batch id, and a batch replayed after a lost checkpoint commit commits
+  * nothing.
   */
 class StreamingIndexSpec extends SparkTestBase {
   import TestSpark.spark.implicits._
 
-  test("ingestTextIndex: completed-run restart is a no-op; one marker per batch") {
+  private def logVersion(dir: String): Long =
+    StoreSegments.latest(spark, dir).version
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Ingest `arrivals` (one file per trigger) into the store at `root`
+    * through `ingest`, then drop what a crash right after the last
+    * batch's store commit would not have written — the checkpoint's commit
+    * of that batch, and any bookkeeping beside the log (an `ingested/`
+    * marker tree) — and restart: the replayed batch must commit nothing.
+    */
+  private def replayLast(root: String, arrivals: DataFrame,
+                         ingest: (DataFrame, String) => Unit): Unit = {
+    arrivals.repartition(2).write.parquet(s"$root/arrivals")
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-replay-ck")
+      .toString
+    def src = spark.readStream
+      .schema(spark.read.parquet(s"$root/arrivals").schema)
+      .option("maxFilesPerTrigger", 1).parquet(s"$root/arrivals")
+    ingest(src, ckpt)
+    val v = logVersion(root)
+    val commits = new java.io.File(s"$ckpt/commits")
+    val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    assert(last == 1L)
+    new java.io.File(commits, s"$last").delete()
+    new java.io.File(commits, s".$last.crc").delete()
+    org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(s"$root/ingested"))
+    ingest(src, ckpt)
+    assert(new java.io.File(commits, s"$last").exists(), "no replay ran")
+    assert(logVersion(root) == v, "the replayed batch committed")
+  }
+
+  test("a batch replayed after a lost checkpoint commit commits nothing: " +
+      "text and IVF-PQ equal a one-shot build (search and audit)") {
+    val base = Seq((0L, "spark hash window"), (2L, "hash join"))
+      .toDF("doc_id", "text")
+    val arrivals = Seq((1L, "spark window stream"), (3L, "window state"))
+      .toDF("doc_id", "text")
+    val text = java.nio.file.Files.createTempDirectory("graft-rtext").toString
+    TextAnalysis.buildTextIndex(base, "doc_id", "text", text, buckets = 8)
+    replayLast(text, arrivals, (src, ckpt) => StreamingIndex.ingestTextIndex(
+      spark, src, ckpt, text, "doc_id", "text", 8))
+    val oneShot = java.nio.file.Files.createTempDirectory("graft-rtext1")
+      .toString
+    TextAnalysis.buildTextIndex(base.unionByName(arrivals), "doc_id", "text",
+      oneShot, buckets = 8)
+    def search(d: String) = rows(TextAnalysis.searchTextIndex(spark, d,
+      Seq("spark", "window", "hash", "state"), k = 10))
+    assert(search(text) == search(oneShot))
+    assert(rows(TextAnalysis.textIndexAudit(spark, text)) ==
+      rows(TextAnalysis.textIndexAudit(spark, oneShot)))
+
+    // the frozen codebooks make "one-shot" a build plus one append
+    val vecs = Seq(
+      (0L, Array(1.0, 0.0, 1.0, 0.0)), (2L, Array(0.9, 0.1, 0.9, 0.1)),
+      (3L, Array(0.0, 1.0, 0.0, 1.0)), (6L, Array(0.1, 0.9, 0.1, 0.9)))
+      .toDF("vec_id", "embedding")
+    val more = Seq((1L, Array(0.95, 0.05, 0.95, 0.05)),
+      (5L, Array(0.05, 0.95, 0.05, 0.95))).toDF("vec_id", "embedding")
+    def built() = {
+      val d = java.nio.file.Files.createTempDirectory("graft-rpq").toString
+      Similarity.buildIvfPqIndex(vecs, "vec_id", "embedding", d,
+        m = 2, ksub = 4, ivfStep = 3, pqStep = 1)
+      d
+    }
+    val pq = built()
+    replayLast(pq, more, (src, ckpt) => StreamingIndex.ingestIvfPqIndex(
+      spark, src, ckpt, pq, "vec_id", "embedding"))
+    val pqOneShot = built()
+    Similarity.appendIvfPqIndex(spark, pqOneShot, more, "vec_id", "embedding")
+    def knn(d: String) = rows(Similarity.searchIvfPqIndex(spark, d, vecs,
+      "vec_id", "embedding", k = 6, nprobe = 3))
+    assert(knn(pq) == knn(pqOneShot))
+    assert(rows(Similarity.ivfIndexAudit(spark, pq)) ==
+      rows(Similarity.ivfIndexAudit(spark, pqOneShot)))
+  }
+
+  test("ingestTextIndex: completed-run restart is a no-op; one log entry per batch records its id") {
     val root = java.nio.file.Files.createTempDirectory("graft-sidx").toString
     val base = Seq((0L, "spark hash window"), (2L, "hash join"))
       .toDF("doc_id", "text")
@@ -24,15 +106,18 @@ class StreamingIndexSpec extends SparkTestBase {
       .schema(spark.read.parquet(s"$root/arrivals").schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$root/arrivals")
     StreamingIndex.ingestTextIndex(spark, src, ckpt, root, "doc_id", "text", 8)
-    // one marker per micro-batch (2 files, 1 per trigger)
-    val markers = new java.io.File(s"$root/ingested").listFiles()
-      .map(_.getName).sorted.toSeq
-    assert(markers == Seq("batch=0", "batch=1"), markers.toString)
+    // one log entry per micro-batch (2 files, 1 per trigger) after the
+    // build's, each recording its batch id under the checkpoint's name
+    assert(logVersion(root) == 3L)
+    assert(StoreSegments.latest(spark, root).txn ==
+      Map(s"stream:file:$ckpt" -> 1L))
+    assert(!new java.io.File(s"$root/ingested").exists())
     val stats = spark.read.parquet(s"$root/stats")
       .agg(sum("n_docs"), sum("sum_dl")).collect()(0)
     assert(stats.getLong(0) == 4)
     // restart on the completed checkpoint: nothing replays, stats hold
     StreamingIndex.ingestTextIndex(spark, src, ckpt, root, "doc_id", "text", 8)
+    assert(logVersion(root) == 3L)
     val stats2 = spark.read.parquet(s"$root/stats")
       .agg(sum("n_docs"), sum("sum_dl")).collect()(0)
     assert(stats == stats2)
@@ -44,7 +129,6 @@ class StreamingIndexSpec extends SparkTestBase {
   }
 
   test("ingestIvfPqIndex: streamed codes searchable; restart a no-op") {
-    import graft.operators.Similarity
     val root = java.nio.file.Files.createTempDirectory("graft-spq").toString
     val base = Seq(
       (0L, Array(1.0f, 0.0f, 1.0f, 0.0f)), (2L, Array(0.9f, 0.1f, 0.9f, 0.1f)),
