@@ -112,9 +112,8 @@ object GraftSession {
     // gates further; the durable fix is bounding TOTAL log volume, so the
     // run's output is the per-gate JSON lines plus genuine errors. All the
     // silenced WARNs are known-false alarms on this engine's paths
-    // (bounded ≤k-row global windows, intentional re-cache probes, _meta/
-    // _zones sidecar dirs next to parquet, hint fallbacks on outer joins,
-    // AQE-under-streaming notes).
+    // (bounded ≤k-row global windows, intentional re-cache probes, hint
+    // fallbacks on outer joins, AQE-under-streaming notes).
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }

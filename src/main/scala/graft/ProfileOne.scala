@@ -8,8 +8,9 @@ import scala.collection.mutable
   * measure-first tool for the store-lifecycle gates, whose cost at the
   * bench fixture is the NUMBER of sequential jobs × per-job latency, not
   * data volume (documents = 5000 rows at sf0.1). Prints a table sorted by
-  * job start plus the total in-job wall vs end-to-end wall — the gap is
-  * driver-side work (planning, FS round trips, commit protocol).
+  * job start plus the time some job was running (the union of the job
+  * intervals) vs end-to-end wall — the gap is driver-side work (planning,
+  * FS round trips, commit protocol).
   */
 object ProfileOne {
   def main(args: Array[String]): Unit = {
@@ -50,7 +51,11 @@ object ProfileOne {
     val wall = (System.nanoTime() - t0) / 1e9
     Thread.sleep(500) // let the listener bus drain the last job-end events
     val js = jobs.synchronized(jobs.values.toSeq.sortBy(_.start))
-    val inJob = js.map(j => math.max(0L, j.end - j.start)).sum / 1e3
+    // the union of the job intervals: jobs Par.run overlaps count once
+    val inJob = js.map(j => (j.start, math.max(j.start, j.end)))
+      .foldLeft((0L, Long.MinValue)) { case ((sum, reach), (s, e)) =>
+        (sum + math.max(0L, e - math.max(s, reach)), math.max(reach, e))
+      }._1 / 1e3
     println(f"[profile] $name: wall ${wall}%.2fs, ${js.size} jobs, " +
       f"in-job ${inJob}%.2fs, driver-side gap ${wall - inJob}%.2fs")
     var prevEnd = 0L

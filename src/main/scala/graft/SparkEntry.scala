@@ -3665,7 +3665,7 @@ object SparkEntry {
 
     // Streaming zone-map ingest (q140/q141's recipe for the layout
     // store): build on the even orderkeys, stream the odd half through
-    // per-trigger appendZoneMapped against the frozen _meta bounds, and
+    // per-trigger appendZoneMapped against the frozen bounds, and
     // the pruned range scan over the grown store must still equal the
     // plain filter over the full table.
     "q193_stream_zonemap" -> ((s, dir) => {

@@ -610,24 +610,8 @@ object GraftTableFunctions {
           int("graft_snapshot_prune", args(1)))
       }
     }),
-    // graft_store_lock_status(dir) — writer observability, as a 1-row
-    // relation an operator checks before queueing a maintenance job from
-    // SQL: whether a lock-taking store (zone map, snapshot) is locked, and
-    // the newest `_log/<v>` of a store that commits through its log
-    // instead (text, IVF, IVF-PQ: never locked; null for the others)
-    ("graft_store_lock_status", { args =>
-      require(args.length == 1,
-        s"graft_store_lock_status(dir) got ${args.length} args")
-      val dir = str("graft_store_lock_status", args.head)
-      val sp = active
-      import sp.implicits._
-      Seq((dir, graft.operators.StoreLock.isLocked(dir),
-          graft.operators.StoreSegments.latestOpt(sp, dir).map(_.version)))
-        .toDF("store", "locked", "log_version")
-        .queryExecution.analyzed
-    }),
     // graft_sync_status(dir) — CDC-sync observability
-    // (graft_store_lock_status's sibling): the applied version the newest
+    // (graft_store_segments' sibling): the applied version the newest
     // log entry records, which a scheduler resumes from — what a
     // scheduled job SELECTs before picking its range
     ("graft_sync_status", { args =>
@@ -975,7 +959,7 @@ object GraftTableFunctions {
       }
     }),
     // graft_store_segments(storeDir, component) — segment-layout
-    // observability (graft_store_lock_status's sibling): the store's
+    // observability: the store's
     // newest log entry — one row per live segment of the component with
     // its superseded-key count and the recorded layout — what an operator
     // reads before deciding a vacuum is due

@@ -365,32 +365,36 @@ object Bpe {
     * downstream job (token budgets, packing plans, encode) loads the
     * FROZEN model instead of retraining per job (a retrain changes token
     * counts under every consumer's feet; the tokenizer is a versioned
-    * artifact in a real pipeline, exactly like the IVF codebook). Layout:
+    * artifact in a real pipeline, exactly like the IVF codebook). The
+    * store is a write-once log ([[StoreSegments]]) whose entry names three
+    * plain segments, so a save (or re-save) is ONE commit and a load sees
+    * one model whole:
     *
-    *  - `dir/merges` (rank, left, right, merged, pair_freq) — the learned
+    *  - `merges` (rank, left, right, merged, pair_freq) — the learned
     *    merge list in rank order (one small file);
-    *  - `dir/vocab`  (w, freq, syms) — the word→symbols apply table
+    *  - `vocab`  (w, freq, syms) — the word→symbols apply table
     *    ([[segment]]'s frame; Heaps-sublinear in corpus size);
-    *  - `dir/meta`   (num_merges, byte_level) — one row, so a loader
+    *  - `meta`   (num_merges, byte_level) — one row, so a loader
     *    never has to guess the training mode.
     */
   def saveTokenizer(df: DataFrame, textCol: String, dir: String,
                     numMerges: Int, minFreq: Long = 2L,
                     driverVocabCap: Long = DefaultDriverVocabCap,
                     tokenizer: Column => Column = TextAnalysis.tokens,
-                    byteLevel: Boolean = false): Unit =
-      StoreLock.withWriteLock(dir) {
+                    byteLevel: Boolean = false): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
     val (merges, vocab) = trainInternal(df, textCol, numMerges, minFreq,
       driverVocabCap, None, tokenizer, byteLevel)
-    merges.zipWithIndex
-      .map { case ((a, b, f), i) => (i.toLong, a, b, a + b, f) }
-      .toDF("rank", "left", "right", "merged", "pair_freq")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/merges")
-    vocab.write.mode("overwrite").parquet(s"$dir/vocab")
-    Seq((numMerges, byteLevel)).toDF("num_merges", "byte_level")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    StoreSegments.write(spark, dir, StoreSegments.latestOpt(spark, dir)) { w =>
+      Some(StoreSegments.Entry(0, 0, positions = false, Map(
+        "merges" -> Seq(w.plain("merges", merges.zipWithIndex
+          .map { case ((a, b, f), i) => (i.toLong, a, b, a + b, f) }
+          .toDF("rank", "left", "right", "merged", "pair_freq").coalesce(1))),
+        "vocab" -> Seq(w.plain("vocab", vocab)),
+        "meta" -> Seq(w.plain("meta", Seq((numMerges, byteLevel))
+          .toDF("num_merges", "byte_level").coalesce(1))))))
+    }
   }
 
   /** The frozen apply table off disk — feeds [[tokenizeCorpus]] /
@@ -398,37 +402,25 @@ object Bpe {
     */
   def loadVocab(spark: org.apache.spark.sql.SparkSession,
                 dir: String): DataFrame =
-    spark.read.parquet(s"$dir/vocab")
+    StoreSegments.read(spark, dir, "vocab", "")
 
   /** The frozen merge list off disk, in rank order. Layout pinned by
-    * [[saveTokenizer]], so the read supplies the schema instead of
-    * paying a footer-sampling inference job (r16 job diet).
+    * [[saveTokenizer]], so the read supplies the schema.
     */
   def loadMerges(spark: org.apache.spark.sql.SparkSession,
                  dir: String): DataFrame =
-    spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("rank",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("left",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("right",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("merged",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("pair_freq",
-          org.apache.spark.sql.types.LongType))))
-      .parquet(s"$dir/merges").orderBy("rank")
+    StoreSegments.read(spark, dir, "merges", "",
+      Some(org.apache.spark.sql.types.StructType.fromDDL(
+        "rank BIGINT, `left` STRING, `right` STRING, merged STRING, " +
+          "pair_freq BIGINT")))
+      .orderBy("rank")
 
   /** The store's training mode: (numMerges, byteLevel). */
   def loadTokenizerMeta(spark: org.apache.spark.sql.SparkSession,
                         dir: String): (Int, Boolean) = {
-    val r = spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("num_merges",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("byte_level",
-          org.apache.spark.sql.types.BooleanType))))
-      .parquet(s"$dir/meta")
-      .select("num_merges", "byte_level").head
+    val r = StoreSegments.read(spark, dir, "meta", "",
+      Some(org.apache.spark.sql.types.StructType.fromDDL(
+        "num_merges INT, byte_level BOOLEAN"))).head
     (r.getInt(0), r.getBoolean(1))
   }
 

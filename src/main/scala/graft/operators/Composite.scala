@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - [[begin]] declares the composition: a `_composite/pending` file
   *    under the manifest dir listing every member store (name, dir,
   *    required components) BEFORE any member build starts;
-  *  - the member builds run (each store's own verbs, own locks);
+  *  - the member builds run (each store's own verbs, own commits);
   *  - [[commit]] replaces the pending marker with `_composite/committed`
   *    — one driver-side file create, the atomic "all builds landed" bit.
   *

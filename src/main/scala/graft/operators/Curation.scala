@@ -440,29 +440,59 @@ object Curation {
   // CurationSpec). [[corpusDiff]] is the pairwise audit between any two
   // versions; q84 puts the whole plane — write, discovery, pruned read,
   // diff — under q72's oracle hash.
+  //
+  // Each version directory is its own commit: a writer fills a hidden
+  // attempt directory (`_attempt-<uuid>`: a leading `_` and no `=`, so
+  // Spark's file index skips it), then publishes it with a no-overwrite
+  // rename ([[StoreFs.renameExclusive]]). A reader sees a version whole
+  // or not at all; of two writers of one version, the second loses at
+  // the rename, naming the store and the version, and publishes nothing;
+  // a crashed writer leaves only its attempt directory, which no reader
+  // opens. The caller numbers the versions, so the directory itself is
+  // the put-if-absent — the layout (`version=N`, `_delta/version=N`)
+  // carries partition pruning, and no log is needed beside it.
 
   /** Append corpus state as snapshot `version` under `rootDir` — the
     * reference's versioned `put`. A version is immutable once written:
-    * re-putting an existing version fails (`errorifexists`), matching the
-    * counter semantics where every put gets a NEW version.
+    * re-putting an existing version fails, matching the counter
+    * semantics where every put gets a NEW version.
     */
   def writeSnapshot(df: DataFrame, rootDir: String, version: Long): Unit =
-      StoreLock.withWriteLock(rootDir) {
-    writeSnapshotUnlocked(df, rootDir, version)
-  }
+    if (!putSnapshot(df, rootDir, version))
+      throw taken(rootDir, s"version $version")
 
-  /** [[writeSnapshot]] body for callers ALREADY holding the store's write
-    * lock ([[StoreMaintenance.maintainSnapshotStore]] holds it across its
-    * probe + write so two scheduled firings can't both decide 'compact' —
-    * the lock is not reentrant, so the locked wrapper can't be nested).
-    */
-  private[graft] def writeSnapshotUnlocked(df: DataFrame, rootDir: String,
-                                           version: Long): Unit = {
+  /** [[writeSnapshot]], false when `version` was already published. */
+  private[graft] def putSnapshot(df: DataFrame, rootDir: String,
+                                 version: Long): Boolean = {
     require(version >= 0, s"version must be >= 0: $version")
     Par.described(df.sparkSession, s"snapshot write v$version $rootDir") {
-      df.write.mode("errorifexists").parquet(s"$rootDir/version=$version")
+      publish(df.sparkSession, rootDir, rootDir, version)(df.write.parquet)
     }
   }
+
+  /** Write a version into a fresh attempt directory under `parent` with
+    * `write`, then publish it as `parent/version=<version>`: false when
+    * that name was taken first. A failed or losing attempt deletes its
+    * directory; only a process that dies mid-write leaves one behind.
+    */
+  private def publish(spark: org.apache.spark.sql.SparkSession,
+                      rootDir: String, parent: String, version: Long)
+                     (write: String => Unit): Boolean = {
+    val attempt = s"$parent/_attempt-${java.util.UUID.randomUUID()}"
+    val published =
+      try {
+        write(attempt)
+        StoreSegments.hook(rootDir, "commit")
+        StoreFs.renameExclusive(spark, attempt, s"$parent/version=$version")
+      } catch { case t: Throwable => StoreFs.delete(spark, attempt); throw t }
+    if (!published) StoreFs.delete(spark, attempt)
+    published
+  }
+
+  private def taken(rootDir: String, what: String) =
+    new IllegalStateException(s"the snapshot store at $rootDir already " +
+      s"has $what: a concurrent writer published it first; nothing this " +
+      "write made is published")
 
   /** The versions present under `rootDir`, ascending — `ls-versions`.
     * Directory-listing only (no data read), like the reference's counter
@@ -530,8 +560,7 @@ object Curation {
     * means.
     */
   def pruneSnapshots(rootDir: String, keepLast: Int,
-                     conf: Option[org.apache.hadoop.conf.Configuration] = None): Seq[Long] =
-      StoreLock.withWriteLock(rootDir, conf) {
+                     conf: Option[org.apache.hadoop.conf.Configuration] = None): Seq[Long] = {
     require(keepLast >= 1, s"keepLast must be >= 1: $keepLast")
     val versions = snapshotVersions(rootDir, conf)
     val doomed = versions.dropRight(keepLast)
@@ -573,7 +602,8 @@ object Curation {
 
   /** DELTA-CHAIN writes for the snapshot store: version `v` stored as
     * only WHAT CHANGED — an upsert frame (full rows) and a delete-id
-    * frame — instead of [[writeSnapshot]]'s full copy. At 100 TB a daily
+    * frame, published together as `_delta/version=v` — instead of
+    * [[writeSnapshot]]'s full copy. At 100 TB a daily
     * full snapshot is a 100 TB write; a delta is ∝ the day's churn, which
     * is the entire point of CDC-shaped storage. [[readSnapshotAt]]
     * reconstructs any version by folding the chain over the newest full
@@ -587,8 +617,7 @@ object Curation {
                          rootDir: String, version: Long,
                          upserts: DataFrame, deleteIds: DataFrame,
                          idCol: String): Unit =
-      StoreLock.withWriteLock(rootDir) {
-        Par.described(spark, s"snapshot delta v$version $rootDir") {
+      Par.described(spark, s"snapshot delta v$version $rootDir") {
     require(version >= 1, s"delta version must be >= 1: $version")
     // BOTH write-time invariants in ONE job (was two — a join-count for
     // upsert∩delete clashes plus a groupBy-count for duplicate upsert
@@ -617,12 +646,12 @@ object Curation {
       s"version $version upserts contain duplicate ids — ambiguous merge")
     // the two component writes are independent (different directories) —
     // overlap them (Par contract: nothing shared, caches not involved)
-    Par.run(
-      () => upserts.write.mode("errorifexists")
-        .parquet(s"$rootDir/_delta/version=$version/upserts"),
-      () => deleteIds.select(col(idCol)).write.mode("errorifexists")
-        .parquet(s"$rootDir/_delta/version=$version/deletes"))
-  }}
+    val published = publish(spark, rootDir, s"$rootDir/_delta", version) { a =>
+      Par.run(() => upserts.write.parquet(s"$a/upserts"),
+        () => deleteIds.select(col(idCol)).write.parquet(s"$a/deletes"))
+    }
+    if (!published) throw taken(rootDir, s"delta version $version")
+  }
 
   /** Delta versions present under the store, ascending. */
   def deltaVersions(rootDir: String,

@@ -2,13 +2,17 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Filesystem plumbing shared by the persisted stores (IVF index,
-  * inverted text index, snapshot store): existence probes, small-file
-  * reads and writes, and the delete/replace verbs the zone map's sidecar
-  * swap is built from. Hadoop `FileSystem`, never `java.io.File` — the
-  * stores' pitch is the production path, and these must work against an
-  * HDFS/S3 root exactly like the writes themselves (same rule as
-  * [[Curation.snapshotVersions]]).
+/** Filesystem plumbing shared by the persisted stores: existence probes,
+  * small-file reads and writes, and the two put-if-absent primitives every
+  * store commits through — [[createExclusive]] publishes a log entry
+  * ([[StoreSegments]]: the text, IVF, IVF-PQ, zone-map and tokenizer
+  * stores), [[renameExclusive]] publishes a snapshot version directory
+  * ([[Curation.writeSnapshot]]). One commit rule for all of them: write
+  * under a name unique to the attempt, then make ONE put-if-absent that
+  * a second writer loses, naming the store. No store takes a lock.
+  * Hadoop `FileSystem`, never `java.io.File` — the stores' pitch is the
+  * production path, and these must work against an HDFS/S3 root exactly
+  * like the writes themselves (same rule as [[Curation.snapshotVersions]]).
   */
 private[graft] object StoreFs {
 
@@ -25,28 +29,6 @@ private[graft] object StoreFs {
   def delete(spark: SparkSession, path: String): Unit = {
     val (f, p) = fs(spark, path)
     if (f.exists(p)) f.delete(p, true)
-  }
-
-  def mkdirs(spark: SparkSession, path: String): Unit = {
-    val (f, p) = fs(spark, path)
-    f.mkdirs(p)
-  }
-
-  /** Atomically-enough swap: drop `dst` if present, then move `src` into
-    * its place; with no `src` the delete alone is the result. NOT
-    * reader-safe (a reader listing between the delete and the rename
-    * misses the directory) — the index stores publish through
-    * [[StoreSegments]]' log instead; this serves the zone map's sidecar.
-    */
-  def replace(spark: SparkSession, src: String, dst: String): Unit = {
-    val (f, s) = fs(spark, src)
-    val d = new org.apache.hadoop.fs.Path(dst)
-    if (f.exists(d)) f.delete(d, true)
-    if (f.exists(s)) {
-      val parent = d.getParent
-      if (parent != null && !f.exists(parent)) f.mkdirs(parent)
-      require(f.rename(s, d), s"rename $src -> $dst failed")
-    }
   }
 
   def writeFile(spark: SparkSession, path: String, content: String): Unit = {
@@ -84,6 +66,38 @@ private[graft] object StoreFs {
       try out.write(bytes) finally out.close()
       try f.rename(tmp, p) finally f.delete(tmp, false)
     }
+  }
+
+  /** Rename directory `src` to `dst` only if nothing is at `dst`: true
+    * when this call published it. Readers see the whole directory or
+    * none. The local FS moves with NIO `ATOMIC_MOVE` (`rename(2)` fails
+    * on a non-empty target); other filesystems use `FileContext.rename`
+    * without overwrite, which HDFS's namenode arbitrates. Never
+    * `FileSystem.rename`: onto an existing directory it returns true and
+    * moves `src` INSIDE it.
+    */
+  def renameExclusive(spark: SparkSession, src: String,
+                      dst: String): Boolean = {
+    val (f, s) = fs(spark, src)
+    val d = new org.apache.hadoop.fs.Path(dst)
+    if (f.getScheme == "file") {
+      val target = java.nio.file.Paths.get(d.toUri.getPath)
+      try {
+        java.nio.file.Files.move(java.nio.file.Paths.get(s.toUri.getPath),
+          target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        true
+      } catch {
+        // EEXIST or ENOTEMPTY, by filesystem
+        case _: java.nio.file.FileSystemException
+            if java.nio.file.Files.exists(target) => false
+      }
+    } else
+      try {
+        org.apache.hadoop.fs.FileContext.getFileContext(f.getUri,
+            spark.sparkContext.hadoopConfiguration)
+          .rename(s, d, org.apache.hadoop.fs.Options.Rename.NONE)
+        true
+      } catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
   }
 
   def readFileUtf8(spark: SparkSession, path: String): String = {
@@ -208,8 +222,7 @@ private[graft] object StoreFs {
       .parquet(path)
 
   /** Whether a failure is a read that lost a file to a concurrent writer
-    * (a GC beat a reader's plan construction, or a sidecar swap was
-    * mid-rename) rather than real corruption.
+    * (a GC beat a reader's plan construction) rather than real corruption.
     */
   def isMissingFileError(t: Throwable): Boolean =
     hasCause(t, classOf[java.io.FileNotFoundException]) ||
@@ -243,11 +256,13 @@ private[graft] object StoreFs {
     t != null && (c.isInstance(t) || hasCause(t.getCause, c))
 }
 
-/** The WRITE-ONCE LOG of an index store (text, IVF, IVF-PQ): every
-  * version of the store is one immutable entry `_log/<v>` naming
+/** The WRITE-ONCE LOG of a store (the text, IVF and IVF-PQ indexes, the
+  * zone map, the BPE tokenizer): every version of the store is one
+  * immutable entry `_log/<v>` naming
   *
   *  - the layout facts verbs and searches read: the bucket count (text)
-  *    and whether positions are stored;
+  *    and whether positions are stored; any other store fact as a
+  *    `fact` line (the zone map's frozen bounds);
   *  - every component's live segments, each with the partition keys
   *    newer segments superseded (the model files are components too);
   *  - the tombstone segments (component [[Tomb]]);
@@ -260,7 +275,8 @@ private[graft] object StoreFs {
   * A segment is an immutable directory `<dir>/<comp>/seg=<id>`, written
   * once under an id unique to the writing attempt and prefixed by the
   * version the writer started from. Every verb (build, append, delete,
-  * compact, fused delete+compact, sync, vacuum) writes its new segments,
+  * compact, fused delete+compact, sync, vacuum; a zone-map write, append
+  * or sidecar repair; a tokenizer save) writes its new segments,
   * then publishes `v + 1` EXACTLY ONCE with a put-if-absent
   * ([[StoreFs.createExclusive]]) — the commit, Delta Lake's mutual
   * exclusion and multi-file atomicity in one step (Armbrust et al., VLDB
@@ -299,12 +315,13 @@ private[graft] object StoreSegments {
   /** A live segment and its partition keys superseded by newer ones. */
   final case class Seg(id: String, excluded: Seq[Long] = Nil)
 
-  /** One version of a store: its layout facts, live segments and the
-    * last version applied per source.
+  /** One version of a store: its layout facts, live segments, the last
+    * version applied per source and its other facts by name.
     */
   final case class Entry(version: Long, buckets: Int, positions: Boolean,
                          comps: Map[String, Seq[Seg]],
-                         txn: Map[String, Long] = Map.empty) {
+                         txn: Map[String, Long] = Map.empty,
+                         facts: Map[String, String] = Map.empty) {
     def segs(comp: String): Seq[Seg] = comps.getOrElse(comp, Nil)
     def has(comp: String): Boolean = segs(comp).nonEmpty
     def layout: String = s"buckets = $buckets, positions = $positions"
@@ -323,23 +340,30 @@ private[graft] object StoreSegments {
   }
 
   /** Called with (store dir, step) before each segment write
-    * (`write <comp>`), the commit (`commit`) and the garbage collection
-    * after it (`gc`, when the commit lets data go) of a verb, and after a
-    * search or verb resolves its entry (`resolved`): tests stop or pause
-    * a verb or a search there. No-op in production.
+    * (`write <comp>`), the commit (`commit`; a snapshot version's publish
+    * too) and the garbage collection after it (`gc`, when the commit lets
+    * data go) of a verb, and after a search or verb resolves its entry
+    * (`resolved`): tests stop or pause a verb or a search there. No-op in
+    * production.
     */
   @volatile private[graft] var hook: (String, String) => Unit = (_, _) => ()
 
   private def logDir(dir: String) = s"$dir/_log"
 
-  private def render(e: Entry): String =
+  private def render(e: Entry): String = {
+    def field(what: String, v: String) = {
+      require(!v.exists("\t\n".contains(_)), s"log $what '$v'")
+      v
+    }
     (Seq(s"buckets\t${e.buckets}", s"positions\t${e.positions}") ++
       e.comps.toSeq.sortBy(_._1).flatMap { case (c, ss) =>
         ss.map(s => s"seg\t$c\t${s.id}\t${s.excluded.mkString(",")}")
       } ++ e.txn.toSeq.sorted.map { case (src, v) =>
-        require(!src.exists("\t\n".contains(_)), s"log source name '$src'")
-        s"txn\t$src\t$v" } :+
+        s"txn\t${field("source name", src)}\t$v" } ++
+      e.facts.toSeq.sorted.map { case (n, v) =>
+        s"fact\t${field("fact name", n)}\t${field("fact value", v)}" } :+
       "end").mkString("\n")
+  }
 
   private def parse(dir: String, v: Long, content: String): Entry = {
     val lines = content.linesIterator.toSeq
@@ -353,6 +377,7 @@ private[graft] object StoreSegments {
           Seg(id, ex.split(",").filter(_.nonEmpty).map(_.toLong).toSeq))
         case (e, Seq("txn", src, n)) =>
           e.copy(txn = e.txn.updated(src, n.toLong))
+        case (e, Seq("fact", n, v)) => e.copy(facts = e.facts.updated(n, v))
         case (_, l) => throw new IllegalStateException(
           s"malformed line in log entry $v of the store at $dir: " +
             l.mkString("\t"))

@@ -94,6 +94,8 @@ object StoreMaintenance {
     * again. The probe is a directory listing; the verb it may run costs
     * one reconstruction + one full write — reconstruction cost is WHY
     * the policy exists (it grows with chain length, and this bounds it).
+    * Of two firings that probe the same chain, the one whose publish of
+    * `newest + 1` loses reports `none`: the other compacted.
     *
     * Receipt: `(store, action ∈ compact|none, n_tombstones = chain
     * length, n_live_legs = chain + 1 base)` — the same shape as the
@@ -101,27 +103,18 @@ object StoreMaintenance {
     */
   def maintainSnapshotStore(spark: SparkSession, rootDir: String,
                             idCol: String,
-                            maxChain: Int = 8): DataFrame =
-      // Probe + write under ONE write-lock acquisition (r14 advice): two
-      // scheduled firings could otherwise both probe the same chain, both
-      // decide 'compact', and the loser abort on writeSnapshot's
-      // errorifexists instead of the idempotent no-op the cron pitch
-      // promises. With the chain length re-read inside the lock, the
-      // second firing sees the winner's fresh compaction point and
-      // cleanly decides 'none'.
-      StoreLock.withWriteLock(rootDir) {
+                            maxChain: Int = 8): DataFrame = {
     val fulls = Curation.snapshotVersions(rootDir)
     require(fulls.nonEmpty, s"no full snapshot under $rootDir — write first")
     val newestFull = fulls.max
     val deltas = Curation.deltaVersions(rootDir).filter(_ > newestFull)
     val newest = (newestFull +: deltas).max
     val chain = deltas.size.toLong
-    val action = if (chain > maxChain) "compact" else "none"
-    if (action == "compact")
-      Curation.writeSnapshotUnlocked(
-        Curation.readSnapshotAt(spark, rootDir, newest, idCol),
-        rootDir, version = newest + 1)
-    receipt(spark, rootDir, action, chain, chain + 1)
+    val compacted = chain > maxChain && Curation.putSnapshot(
+      Curation.readSnapshotAt(spark, rootDir, newest, idCol),
+      rootDir, version = newest + 1)
+    receipt(spark, rootDir, if (compacted) "compact" else "none", chain,
+      chain + 1)
   }
 
   /** Maintain a [[TextAnalysis.buildTextIndex]] store: stats, terms,

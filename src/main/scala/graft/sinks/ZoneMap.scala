@@ -2,6 +2,8 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.{StoreFs, StoreSegments}
+import graft.operators.StoreSegments.{Entry, Seg}
 
 /** Zone-map data-skipping store: a table written in key-range ZONES with a
   * tiny min/max/count statistics sidecar, and a read path that consults the
@@ -23,13 +25,22 @@ import org.apache.spark.sql.functions._
   * re-derives every zone id bit-for-bit (the q181 oracle does). Bounds come
   * from one broadcast aggregation row, never a driver scalar.
   *
+  * Layout: a write-once log ([[graft.operators.StoreSegments]]). `data` is
+  * a component of `zone`-keyed segments, one per write or append; the
+  * sidecar is one plain `zones` segment (≤ [[MaxZones]] rows) that every
+  * write, append and repair rewrites; the frozen assignment bounds are the
+  * entry's facts (`min_k`, `max_k`, `zones`, `key_col`). Each verb commits
+  * its data and its sidecar in ONE entry, so a reader never sees rows the
+  * sidecar does not cover, and of two racing appends the second loses at
+  * its commit, naming the store.
+  *
   * Scale shape: the write is one bounds agg + one hive-partitioned write
   * (the shuffle a layout rewrite pays by definition) + one read-back pass
   * over the written files for the sidecar (consistency by construction —
-  * see [[writeZoneMapped]]); the sidecar is ≤ `zones` rows. The read side's zone list is a driver collect BOUNDED
-  * by `zones` (≤ [[MaxZones]] — the boundaries-≤-numParts discipline), and
-  * the data scan carries the zone `isin` as a partition filter plus the
-  * exact key predicate pushed to parquet row groups.
+  * see [[writeZoneMapped]]). The read side's zone list is a driver collect
+  * BOUNDED by `zones` (≤ [[MaxZones]] — the boundaries-≤-numParts
+  * discipline), and the data scan carries the zone `isin` as a partition
+  * filter plus the exact key predicate pushed to parquet row groups.
   */
 object ZoneMap {
 
@@ -39,20 +50,9 @@ object ZoneMap {
     */
   val MaxZones = 4096
 
-  /** KNOWN sidecar schemas (r16 job diet — the store-wide discipline): a
-    * schema-less spark.read.parquet pays one footer-sampling driver job
-    * per call, and every scan/append/audit consults these two fixed-layout
-    * sidecars. `data/` stays inferred — its columns are the caller's.
+  /** The sidecar's fixed layout: a known schema, so no read of it infers.
+    * `data/` is typed by its footer — its columns are the caller's.
     */
-  private val MetaSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("_min_k",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("_max_k",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("zones",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("key_col",
-      org.apache.spark.sql.types.StringType)))
   private val ZonesSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("zone",
       org.apache.spark.sql.types.LongType),
@@ -62,6 +62,31 @@ object ZoneMap {
       org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("n_rows",
       org.apache.spark.sql.types.LongType)))
+
+  /** The assignment bounds a build freezes for the store's lifetime. */
+  private final case class Bounds(minK: Long, maxK: Long, zones: Int,
+                                  keyCol: String) {
+    def facts: Map[String, String] = Map("min_k" -> minK.toString,
+      "max_k" -> maxK.toString, "zones" -> zones.toString, "key_col" -> keyCol)
+    /** The zone of each row of `df` by its `key` column; a null key has
+      * no range and would land in the hive default partition, silently
+      * vanishing from every range scan — it fails the write instead
+      * (raise_error costs nothing on the non-null path).
+      */
+    def assign(df: DataFrame, key: String): DataFrame =
+      df.withColumn("zone",
+        when(col(key).isNull,
+          raise_error(lit(s"ZoneMap: null $key cannot be zone-mapped")))
+          .otherwise(zoneOf(col(key).cast("long"), lit(minK), lit(maxK),
+            zones)))
+  }
+
+  private def bounds(dir: String, e: Entry): Bounds = {
+    def fact(n: String) = e.facts.getOrElse(n, throw new IllegalStateException(
+      s"the store at $dir records no zone-map bounds at version ${e.version}"))
+    Bounds(fact("min_k").toLong, fact("max_k").toLong, fact("zones").toInt,
+      fact("key_col"))
+  }
 
   /** Exact-integer zone id of a long `key` given inclusive global bounds:
     * an APPENDED key outside the frozen build bounds is clamped to the
@@ -97,146 +122,121 @@ object ZoneMap {
       .cast("long")
   }
 
-  /** Write `df` zone-partitioned by long column `keyCol` under `path`:
-    * `path/data/zone=<z>/…` plus the `path/_zones` sidecar
-    * (zone, min_key, max_key, n_rows). Null keys are rejected up front —
-    * a null has no range and would silently vanish from every range scan.
-    */
-  def writeZoneMapped(df: DataFrame, path: String, keyCol: String,
-                      zones: Int): Unit =
-      graft.operators.StoreLock.withWriteLock(path) {
-    require(zones >= 1 && zones <= MaxZones,
-      s"zones must be in [1, $MaxZones]: $zones")
-    val bRow = df.agg(min(col(keyCol)).cast("long").as("_min_k"),
-      max(col(keyCol)).cast("long").as("_max_k")).head
-    // min/max of ZERO rows is null: a store built from an empty frame
-    // would carry null _meta bounds that NPE every later append/audit —
-    // fail the build here with the real reason instead
-    require(!bRow.isNullAt(0) && !bRow.isNullAt(1),
-      s"ZoneMap: empty input (or all-null $keyCol) cannot be zone-mapped")
-    val (minK, maxK) = (bRow.getLong(0), bRow.getLong(1))
-    val zoned = df
-      .withColumn("zone",
-        // a null key has no range: it would land in the hive default
-        // partition and silently vanish from every range scan — fail the
-        // write instead (raise_error costs nothing on the non-null path)
-        when(col(keyCol).isNull,
-          raise_error(lit(s"ZoneMap: null $keyCol cannot be zone-mapped")))
-          .otherwise(
-            zoneOf(col(keyCol).cast("long"), lit(minK), lit(maxK), zones)))
-    // CLUSTER by zone before the partitioned write (the store-wide
-    // partitionBy discipline, r15): unclustered, every scan task writes
-    // a sliver into every zone dir (tasks x zones small files; at the
-    // fixture a single task serially creating every zone's file)
-    zoned.repartition(math.min(zones,
-        df.sparkSession.sparkContext.defaultParallelism), col("zone"))
-      .write.mode("overwrite").partitionBy("zone")
-      .parquet(s"$path/data")
-    // sidecar from the WRITTEN files, not a recompute of the input: a
-    // non-deterministic source frame could otherwise disagree with what
-    // landed on disk — the silently-pruning-live-rows corruption
-    // zoneMapAudit names as the one unrecoverable failure
-    df.sparkSession.read.parquet(s"$path/data")
-      .groupBy(col("zone").cast("long").as("zone"))
+  /** Per-zone (zone, min_key, max_key, n_rows) of zoned rows. */
+  private def stats(zoned: DataFrame, keyCol: String): DataFrame =
+    zoned.groupBy(col("zone").cast("long").as("zone"))
       .agg(min(col(keyCol)).cast("long").as("min_key"),
         max(col(keyCol)).cast("long").as("max_key"),
         count(lit(1)).as("n_rows"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_zones")
-    // assignment bounds, FROZEN for the store's lifetime — appends assign
-    // against these, like the IVF stores' frozen codebooks
-    val sp = df.sparkSession
-    import sp.implicits._
-    Seq((minK, maxK, zones, keyCol))
-      .toDF("_min_k", "_max_k", "zones", "key_col").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_meta")
+
+  /** The rows of `data` at `e`, zone as an Int partition column. */
+  private def dataAt(spark: SparkSession, dir: String, e: Entry): DataFrame =
+    StoreSegments.readAt(spark, dir, e, "data", "zone")
+
+  private def statsAt(spark: SparkSession, dir: String, e: Entry): DataFrame =
+    StoreSegments.scan(spark, dir, e, "zones", "", ZonesSchema)
+
+  /** `zoned` as a new `data` segment, CLUSTERED by zone first (the
+    * store-wide partitionBy discipline, r15): unclustered, every task
+    * writes a sliver into every zone dir (tasks × zones small files).
+    */
+  private def writeData(w: StoreSegments.Writer, zoned: DataFrame,
+                        zones: Int): Option[Seg] =
+    w.keyed("data", "zone", zoned.repartition(math.min(zones,
+      w.spark.sparkContext.defaultParallelism), col("zone")))
+
+  /** Write `df` zone-partitioned by long column `keyCol` as the store at
+    * `path` (a new version when one is there): the data segment, the
+    * `zones` sidecar (zone, min_key, max_key, n_rows) and the bounds in
+    * one entry. Null keys are rejected up front — a null has no range and
+    * would silently vanish from every range scan.
+    */
+  def writeZoneMapped(df: DataFrame, path: String, keyCol: String,
+                      zones: Int): Unit = {
+    require(zones >= 1 && zones <= MaxZones,
+      s"zones must be in [1, $MaxZones]: $zones")
+    val spark = df.sparkSession
+    val bRow = df.agg(min(col(keyCol)).cast("long").as("_min_k"),
+      max(col(keyCol)).cast("long").as("_max_k")).head
+    // min/max of ZERO rows is null: a store built from an empty frame
+    // would carry no bounds to assign appends against — fail the build
+    // here with the real reason instead
+    require(!bRow.isNullAt(0) && !bRow.isNullAt(1),
+      s"ZoneMap: empty input (or all-null $keyCol) cannot be zone-mapped")
+    val b = Bounds(bRow.getLong(0), bRow.getLong(1), zones, keyCol)
+    StoreSegments.write(spark, path, StoreSegments.latestOpt(spark, path)) { w =>
+      val e = Entry(0, 0, positions = false,
+        Map("data" -> writeData(w, b.assign(df, keyCol), zones).toSeq),
+        facts = b.facts)
+      // sidecar from the WRITTEN files, not a recompute of the input: a
+      // non-deterministic source frame could otherwise disagree with what
+      // landed on disk — the silently-pruning-live-rows corruption
+      // zoneMapAudit names as the one unrecoverable failure
+      Some(e.set("zones", Seq(w.plain("zones",
+        stats(dataAt(spark, path, e), keyCol).coalesce(1)))))
+    }
   }
 
   /** INCREMENTAL append: assign the batch against the store's FROZEN
-    * build bounds (`_meta` — the q111/q125 frozen-model discipline: an
-    * append must cost ∝ batch and must not re-zone already-written
-    * files), append its rows into the existing zone directories, and
-    * MERGE the sidecar (min/max widen, counts add). Keys outside the
-    * frozen range clamp into the edge zones, whose sidecar rows widen to
-    * cover them — every key stays findable; a drifted key distribution
-    * degrades edge-zone pruning, never correctness, and the sidecar makes
-    * the drift measurable (the rebuild decision, like
+    * build bounds (the q111/q125 frozen-model discipline: an append must
+    * cost ∝ batch and must not re-zone already-written files), write its
+    * rows as a new data segment, and MERGE the sidecar (min/max widen,
+    * counts add) into the same entry. Keys outside the frozen range clamp
+    * into the edge zones, whose sidecar rows widen to cover them — every
+    * key stays findable; a drifted key distribution degrades edge-zone
+    * pruning, never correctness, and the sidecar makes the drift
+    * measurable (the rebuild decision, like
     * [[graft.operators.Similarity.cellOccupancy]] for codebooks).
     */
   def appendZoneMapped(spark: SparkSession, path: String, batch: DataFrame,
                        keyCol: String): Unit =
-      graft.operators.StoreLock.withWriteLock(path) {
-    val meta = spark.read.schema(MetaSchema).parquet(s"$path/_meta").head
-    val (minK, maxK, zones) =
-      (meta.getLong(0), meta.getLong(1), meta.getInt(2))
-    // PERSIST the zoned batch before anything reads it: the data write
-    // and the sidecar stats below must see the SAME rows — a
-    // non-deterministic batch frame re-evaluated for the stats would
-    // otherwise disagree with what landed on disk, the
-    // silently-pruning-live-rows corruption zoneMapAudit names as the
-    // one unrecoverable failure (writeZoneMapped rebuilds its sidecar
-    // from the written files; an append must stay ∝ batch, so it pins
-    // the batch instead of rescanning the store)
-    val zoned = batch
-      .withColumn("zone",
-        when(col(keyCol).isNull,
-          raise_error(lit(s"ZoneMap: null $keyCol cannot be zone-mapped")))
-          .otherwise(zoneOf(col(keyCol).cast("long"), lit(minK), lit(maxK),
-            zones)))
-      .persist()
-    try {
-      zoned.repartition(math.min(zones,
-          spark.sparkContext.defaultParallelism), col("zone"))
-        .write.mode("append").partitionBy("zone").parquet(s"$path/data")
-      val batchStats = zoned.groupBy("zone")
-        .agg(min(col(keyCol)).cast("long").as("min_key"),
-          max(col(keyCol)).cast("long").as("max_key"),
-          count(lit(1)).as("n_rows"))
-      val merged = zoneStats(spark, path).unionByName(batchStats)
+    append(spark, path, batch, keyCol, None)
+
+  /** [[appendZoneMapped]] recording `txn` in its entry; a `txn` the
+    * store already records (a replayed stream batch) commits nothing.
+    */
+  private[graft] def append(spark: SparkSession, path: String,
+                            batch: DataFrame, keyCol: String,
+                            txn: Option[(String, Long)]): Unit = {
+    val e = StoreSegments.latest(spark, path)
+    if (txn.exists { case (src, v) => e.txn.get(src).exists(_ >= v) }) return
+    val b = bounds(path, e)
+    // PERSIST the zoned batch: the data write and the sidecar stats must
+    // see the SAME rows — a non-deterministic batch re-evaluated for the
+    // stats would disagree with what landed on disk (writeZoneMapped
+    // derives its sidecar from the written files; an append stays ∝
+    // batch, so it pins the batch instead of rescanning the store)
+    val zoned = b.assign(batch, keyCol).persist()
+    try StoreSegments.write(spark, path, Some(e)) { w =>
+      val data = writeData(w, zoned, b.zones)
+      val merged = statsAt(spark, path, e).unionByName(stats(zoned, keyCol))
         .groupBy("zone")
         .agg(min("min_key").as("min_key"), max("max_key").as("max_key"),
           sum("n_rows").as("n_rows"))
-        .coalesce(1)
-      // materialize BEFORE touching the sidecar being read
       val rows = merged.collect()   // bounded: ≤ zones ≤ MaxZones rows
-      // the new sidecar lands complete at a temp path, then SWAPS in —
-      // the sidecar is never observable half-written. The residual crash
-      // window (data appended, swap not reached) leaves the old sidecar:
-      // appended rows are then under-counted/pruned until zoneMapAudit
-      // (stat_mismatches > 0) flags the store — detectable, and repaired
-      // by re-deriving the sidecar from the data files; a crash INSIDE
-      // the swap can at worst leave the sidecar missing (loud), never
-      // wrong.
-      val tmp = s"$path/_zones_tmp"
-      graft.operators.StoreFs.delete(spark, tmp)
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toSeq, 1), merged.schema)
-        .write.mode("overwrite").parquet(tmp)
-      graft.operators.StoreFs.replace(spark, tmp, s"$path/_zones")
+      Some(e.set("data", e.segs("data") ++ data)
+        .set("zones", Seq(w.plain("zones", spark.createDataFrame(
+          spark.sparkContext.parallelize(rows.toSeq, 1), merged.schema))))
+        .copy(txn = e.txn ++ txn))
     } finally zoned.unpersist()
   }
 
   /** The statistics sidecar as a DataFrame — the pruning decision's input,
-    * queryable like any other table. Plan construction retries the
-    * vanished-file race (a concurrent append/repair swapping the sidecar
-    * between our listing and footer read — the sidecar is published by
-    * directory swap, whose window is one rename, so one retry settles
-    * it).
+    * queryable like any other table.
     */
   def zoneStats(spark: SparkSession, path: String): DataFrame =
-    graft.operators.StoreFs.retryTornReads()(
-      spark.read.schema(ZonesSchema).parquet(s"$path/_zones"))
+    statsAt(spark, path, StoreSegments.latest(spark, path))
 
   /** The store's fsck: every invariant the scan path depends on, checked
-    * against the actual data and reported as ONE row — the q147/q149
-    * treatment for the layout store. Checks:
+    * against the actual data of one entry and reported as ONE row — the
+    * q147/q149 treatment for the layout store. Checks:
     *
     *  - the sidecar's per-zone (min_key, max_key, n_rows) equal the data's
     *    actual per-zone aggregates (`stat_mismatches` — a wrong sidecar
     *    min/max silently prunes live rows, the one unrecoverable failure);
     *  - sidecar and data agree on the zone SET (`zone_mismatch` counts
     *    zones present on one side only);
-    *  - every row sits in the zone the frozen `_meta` bounds assign it
+    *  - every row sits in the zone the frozen bounds assign it
     *    (`misassigned` — clamp included, so appended out-of-range rows
     *    audit clean in their edge zones).
     *
@@ -245,22 +245,21 @@ object ZoneMap {
     * misassigned).
     */
   def zoneMapAudit(spark: SparkSession, path: String): DataFrame = {
-    val meta = spark.read.schema(MetaSchema).parquet(s"$path/_meta").head
-    val (minK, maxK, zones, keyCol) =
-      (meta.getLong(0), meta.getLong(1), meta.getInt(2), meta.getString(3))
-    val data = spark.read.parquet(s"$path/data")
+    val e = StoreSegments.latest(spark, path)
+    val b = bounds(path, e)
+    val data = dataAt(spark, path, e)
       .withColumn("expect_zone",
-        zoneOf(col(keyCol).cast("long"), lit(minK), lit(maxK), zones))
+        zoneOf(col(b.keyCol).cast("long"), lit(b.minK), lit(b.maxK), b.zones))
     val actual = data.groupBy("zone")
-      .agg(min(col(keyCol)).cast("long").as("a_min"),
-        max(col(keyCol)).cast("long").as("a_max"),
+      .agg(min(col(b.keyCol)).cast("long").as("a_min"),
+        max(col(b.keyCol)).cast("long").as("a_max"),
         count(lit(1)).as("a_rows"),
         sum(when(col("expect_zone") =!= col("zone"), 1L).otherwise(0L))
           .as("a_misassigned"))
-    val joined = zoneStats(spark, path)
+    val joined = statsAt(spark, path, e)
       .join(actual, Seq("zone"), "full_outer")
     joined.agg(
-        lit(zones.toLong).as("zones_meta"),
+        lit(b.zones.toLong).as("zones_meta"),
         count(col("min_key")).as("zones_sidecar"),
         count(col("a_rows")).as("zones_data"),
         coalesce(sum("a_rows"), lit(0L)).as("n_rows"),
@@ -273,33 +272,21 @@ object ZoneMap {
         coalesce(sum("a_misassigned"), lit(0L)).as("misassigned"))
   }
 
-  /** REPAIR the statistics sidecar from the data files — the recovery
-    * verb for the one failure [[zoneMapAudit]] can detect but the store
-    * cannot heal by itself: a crash inside [[appendZoneMapped]]'s window
-    * (data appended, sidecar swap not reached) leaves sidecar counts
-    * that disagree with disk and a scan that silently prunes live rows.
-    * The repair is [[writeZoneMapped]]'s own sidecar derivation — one
-    * full pass over `data/` grouped by zone, swapped in via temp-path +
-    * rename — so `audit → stat_mismatches > 0 → rebuildZoneSidecar →
-    * audit clean` is the complete documented recovery loop (spec-gated
-    * in ZoneMapSpec with an injected stale sidecar). Deliberately a
-    * separate verb, not an auto-heal: a full data scan is the cost the
-    * append path exists to avoid, and the operator should see the audit
-    * evidence before paying it.
+  /** REPAIR the statistics sidecar from the data files: one full pass
+    * over the live data grouped by zone — [[writeZoneMapped]]'s own
+    * derivation — committed as a new entry. A verb's data and sidecar
+    * commit together, so only damage from outside the store's verbs (a
+    * file written into a live segment by hand) leaves the sidecar wrong;
+    * `audit → stat_mismatches > 0 → rebuildZoneSidecar → audit clean` is
+    * the recovery loop (ZoneMapSpec). A separate verb, not an auto-heal:
+    * a full data scan is the cost the append path exists to avoid.
     */
-  def rebuildZoneSidecar(spark: SparkSession, path: String): Unit =
-      graft.operators.StoreLock.withWriteLock(path) {
-    val keyCol = spark.read.schema(MetaSchema).parquet(s"$path/_meta").head.getString(3)
-    val tmp = s"$path/_zones_tmp"
-    graft.operators.StoreFs.delete(spark, tmp)
-    spark.read.parquet(s"$path/data")
-      .groupBy(col("zone").cast("long").as("zone"))
-      .agg(min(col(keyCol)).cast("long").as("min_key"),
-        max(col(keyCol)).cast("long").as("max_key"),
-        count(lit(1)).as("n_rows"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(tmp)
-    graft.operators.StoreFs.replace(spark, tmp, s"$path/_zones")
+  def rebuildZoneSidecar(spark: SparkSession, path: String): Unit = {
+    val e = StoreSegments.latest(spark, path)
+    StoreSegments.write(spark, path, Some(e)) { w =>
+      Some(e.set("zones", Seq(w.plain("zones",
+        stats(dataAt(spark, path, e), bounds(path, e).keyCol).coalesce(1)))))
+    }
   }
 
   /** Range scan `lo ≤ key ≤ hi` (inclusive) that reads ONLY zones whose
@@ -311,16 +298,15 @@ object ZoneMap {
     * zone covers cost zero data files.
     */
   def scanRange(spark: SparkSession, path: String, keyCol: String,
-                lo: Long, hi: Long): DataFrame = {
-    // the sidecar consult re-plans AND re-collects on a vanished-file
-    // race (the swap window is one rename — one retry settles it)
-    val zs = graft.operators.StoreFs.retryTornReads() {
-      zoneStats(spark, path)
+                lo: Long, hi: Long): DataFrame =
+    // the sidecar consult collects: a GC that beat it re-resolves
+    StoreFs.retryTornReads() {
+      val e = StoreSegments.latest(spark, path)
+      val zs = statsAt(spark, path, e)
         .filter(col("max_key") >= lo && col("min_key") <= hi)
         .select("zone").collect().map(_.getLong(0))
+      dataAt(spark, path, e)
+        .filter(col("zone").isin(zs.toSeq: _*))
+        .filter(col(keyCol) >= lo && col(keyCol) <= hi)
     }
-    spark.read.parquet(s"$path/data")
-      .filter(col("zone").isin(zs.toSeq: _*))
-      .filter(col(keyCol) >= lo && col(keyCol) <= hi)
-  }
 }

@@ -11,20 +11,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rebuild and no driver materialization — the executors write postings
   * directly, exactly like the batch append.
   *
-  * EXACTLY-ONCE into the three index stores (text, IVF, IVF-PQ):
-  * `foreachBatch` replays a batchId after a crash between the store write
-  * and the checkpoint commit, and a segment APPEND is not idempotent (a
-  * replay would double the batch's postings and stats). So each batch's
-  * append commits, in the SAME log entry as its segments, `txn
-  * stream:<qualified checkpoint path> → batchId` ([[graft.operators
-  * .StoreSegments]]; Delta's txn app-id/version, Spark's file-sink
-  * `_spark_metadata`): a replayed id finds itself recorded and commits
-  * nothing, and a crash before that commit leaves no referenced segment.
+  * EXACTLY-ONCE into every store: `foreachBatch` replays a batchId after
+  * a crash between the store write and the checkpoint commit, and an
+  * APPEND is not idempotent (a replay would double the batch's rows). So
+  * a batch's bookkeeping is its commit and nothing more:
   *
-  * The zone map and the snapshot store have no log yet, so
-  * [[ingestZoneMap]] and [[ingestSnapshotDeltas]] keep their
-  * processed-batch marker directories (written after the store write,
-  * with the residual window each documents).
+  *  - the text, IVF, IVF-PQ and zone-map stores commit, in the SAME log
+  *    entry as the batch's segments, `txn stream:<qualified checkpoint
+  *    path> → batchId` ([[graft.operators.StoreSegments]]; Delta's txn
+  *    app-id/version, Spark's file-sink `_spark_metadata`): a replayed id
+  *    finds itself recorded and commits nothing;
+  *  - the snapshot store numbers its delta versions by batch id, and a
+  *    version directory is published once ([[graft.operators.Curation
+  *    .writeSnapshot]]): a replayed id finds its version published and
+  *    writes nothing.
+  *
+  * A crash before the commit leaves nothing any reader opens.
   *
   * Gated: q140 (text) / q141 (IVF) / q163 (IVF-PQ) — build on the
   * standing half, stream the increment through micro-batch appends, and
@@ -36,20 +38,28 @@ object StreamingIndex {
 
   import graft.operators.{Similarity, TextAnalysis, Tombstones}
 
-  /** Drain `source` into the store `open` opens per micro-batch, each
-    * batch's append recording its id under the checkpoint's source name.
+  /** Drain `source` to EOF, applying each micro-batch with its txn:
+    * the checkpoint's source name and the batch id.
     */
-  private def ingest(spark: SparkSession, source: DataFrame,
-                     checkpoint: String, open: () => Tombstones.Store,
-                     idCol: String, contentCol: String): Unit = {
+  private def drain(spark: SparkSession, source: DataFrame,
+                    checkpoint: String)
+                   (apply: (DataFrame, (String, Long)) => Unit): Unit = {
     val cp = new org.apache.hadoop.fs.Path(checkpoint)
     val name = "stream:" + cp.getFileSystem(
       spark.sparkContext.hadoopConfiguration).makeQualified(cp)
     BoundedStream.runForeachBatch(source, identity, checkpoint, "append") {
-      (batch, id) => Tombstones.append(open(),
-        Tombstones.Batch(batch, idCol, contentCol), Some(name -> id))
+      (batch, id) => apply(batch, name -> id)
     }
   }
+
+  /** Drain `source` into the index store `open` opens per micro-batch. */
+  private def ingest(spark: SparkSession, source: DataFrame,
+                     checkpoint: String, open: () => Tombstones.Store,
+                     idCol: String, contentCol: String): Unit =
+    drain(spark, source, checkpoint) { (batch, txn) =>
+      Tombstones.append(open(), Tombstones.Batch(batch, idCol, contentCol),
+        Some(txn))
+    }
 
   /** Drain `source` (a streaming frame of documents) to EOF, appending
     * each micro-batch into the [[graft.operators.TextAnalysis
@@ -89,27 +99,16 @@ object StreamingIndex {
       () => Similarity.ivfPqStore(spark, dir), idCol, vecCol)
 
   /** [[ingestTextIndex]] for the ZONE-MAP layout store: each micro-batch
-    * assigns against the store's frozen `_meta` bounds and appends into
-    * the zone directories ([[graft.sinks.ZoneMap.appendZoneMapped]] per
-    * trigger) — the live-ingest form of a zone-clustered 100 TB table,
-    * with processed-batch markers (an append that replays after its
-    * marker landed would double the batch's rows AND inflate the sidecar
-    * counts). The residual window: a crash INSIDE the append (files
-    * written, marker not) still replays dirty — strictly narrower than no
-    * bookkeeping, recovered by re-deriving the sidecar from the data
-    * (zoneMapAudit flags the mismatch), a documented trade, not a silent
-    * one; the zone map has no log to commit the batch id with.
+    * assigns against the store's frozen bounds and commits its rows and
+    * merged sidecar with its txn in one entry ([[graft.sinks.ZoneMap
+    * .appendZoneMapped]] per trigger) — the live-ingest form of a
+    * zone-clustered 100 TB table.
     */
   def ingestZoneMap(spark: SparkSession, source: DataFrame,
                     checkpoint: String, dir: String,
                     keyCol: String): Unit =
-    BoundedStream.runForeachBatch(source, identity, checkpoint, "append") {
-      (batch, id) =>
-        val marker = s"$dir/ingested/batch=$id"
-        if (!graft.operators.StoreFs.exists(spark, marker)) {
-          graft.sinks.ZoneMap.appendZoneMapped(spark, dir, batch, keyCol)
-          graft.operators.StoreFs.mkdirs(spark, marker)
-        }
+    drain(spark, source, checkpoint) { (batch, txn) =>
+      graft.sinks.ZoneMap.append(spark, dir, batch, keyCol, Some(txn))
     }
 
   /** Streaming CDC ingest into the SNAPSHOT store — the fifth persisted
@@ -121,16 +120,11 @@ object StreamingIndex {
     * column. Deltas cost ∝ the trigger's churn, reconstruction stays the
     * ONE window of [[graft.operators.Curation.readSnapshotAt]], and
     * retention ([[graft.operators.Curation.pruneSnapshots]]) sweeps the
-    * ingested history like any hand-written chain. Processed-batch
-    * markers as [[ingestZoneMap]]'s (the snapshot store has no log),
-    * plus CRASH-REPLAY recovery: a replay
-    * that finds a versioned delta dir without its marker (the previous
-    * attempt died between write and marker, or mid-write with a
-    * half-delta) drops the partial dir and rewrites it from the
-    * identical replayed batch — without this, the delta's
-    * `errorifexists` would kill the stream permanently on restart.
+    * ingested history like any hand-written chain. A replayed batch
+    * whose version is already published writes nothing; an attempt that
+    * crashed before publishing left only its hidden attempt directory.
     * Gated: q215 (reconstruction over the streamed chain ≡ the
-    * one-merge oracle) + the replay case in StreamingIndexSpec.
+    * one-merge oracle) + the replay cases in StreamingIndexSpec.
     */
   def ingestSnapshotDeltas(spark: SparkSession, source: DataFrame,
                            checkpoint: String, rootDir: String,
@@ -138,26 +132,14 @@ object StreamingIndex {
                            startVersion: Long): Unit =
     BoundedStream.runForeachBatch(source, identity, checkpoint, "append") {
       (batch, id) =>
-        val marker = s"$rootDir/_delta_ingested/batch=$id"
-        if (!graft.operators.StoreFs.exists(spark, marker)) {
-          import org.apache.spark.sql.functions.col
-          // CRASH-REPLAY recovery: no marker but an existing delta dir
-          // means the previous attempt died between the delta write and
-          // the marker — or mid-write, leaving a half-delta (upserts
-          // without deletes) that breaks readSnapshotAt. foreachBatch
-          // replays the SAME batch id with the SAME rows, so dropping
-          // the partial dir and rewriting is exact, and turns what would
-          // be a permanent errorifexists stream-kill into the clean
-          // no-op the marker contract promises.
-          val deltaDir = s"$rootDir/_delta/version=${startVersion + id}"
-          if (graft.operators.StoreFs.exists(spark, deltaDir))
-            graft.operators.StoreFs.delete(spark, deltaDir)
+        import org.apache.spark.sql.functions.col
+        val v = startVersion + id
+        if (!graft.operators.StoreFs.exists(spark,
+            s"$rootDir/_delta/version=$v"))
           graft.operators.Curation.writeSnapshotDelta(spark, rootDir,
-            version = startVersion + id,
+            version = v,
             upserts = batch.filter(col(opCol) === "u").drop(opCol),
             deleteIds = batch.filter(col(opCol) === "d").select(col(idCol)),
             idCol = idCol)
-          graft.operators.StoreFs.mkdirs(spark, marker)
-        }
     }
 }

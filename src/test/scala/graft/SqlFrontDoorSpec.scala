@@ -136,43 +136,42 @@ class SqlFrontDoorSpec extends SparkTestBase {
     assert(graft.operators.TextAnalysis.searchTextIndex(spark, sqlRoot,
       Seq("quokka")).select("doc_id").as[Long].collect().toSet ==
       Set(5L, 9L))
-    // a store that commits through its log never locks:
-    // graft_store_lock_status reads its newest version instead
+    // the log's version is observable from SQL: every entry's segments
+    // carry it (graft_store_segments)
     (1 to 2).foreach(_ => spark.sql(
       s"SELECT * FROM graft_text_index_append('$sqlRoot', 'wv_docs', 'doc_id', 'text', 8)")
       .collect())
-    val textStatus = spark.sql(
-      s"SELECT locked, log_version FROM graft_store_lock_status('$sqlRoot')").head
-    assert(!textStatus.getBoolean(0) && textStatus.getLong(1) == version + 3 &&
-      textStatus.getLong(1) ==
-        graft.operators.StoreSegments.latest(spark, sqlRoot).version)
-    // the single-writer lock of a store that still takes it (the zone
-    // map) reaches through the SQL surface too — and is OBSERVABLE from
-    // it (graft_store_lock_status)
+    val logVersions = spark.sql(
+      s"SELECT DISTINCT version FROM graft_store_segments('$sqlRoot', 'postings')")
+      .collect().map(_.getLong(0)).toSeq
+    assert(logVersions == Seq(version + 3) && logVersions.head ==
+      graft.operators.StoreSegments.latest(spark, sqlRoot).version)
+    // the zone map commits through its log too: a writer that commits
+    // while a SQL zone-map append is in flight makes the SQL verb fail,
+    // naming the store, and leaves only its own commit
     Seq((1L, 10L), (2L, 20L)).toDF("id", "key")
       .createOrReplaceTempView("wv_keys")
     val zmRoot = java.nio.file.Files.createTempDirectory("graft-wv-zm").toString
     spark.sql(
       s"SELECT * FROM graft_zonemap_write('$zmRoot', 'wv_keys', 'key', 2)")
       .collect()
-    def lockedFromSql = spark.sql(
-      s"SELECT locked FROM graft_store_lock_status('$zmRoot')")
-      .head.getBoolean(0)
-    assert(spark.sql(
-      s"SELECT log_version FROM graft_store_lock_status('$zmRoot')")
-      .head.isNullAt(0))
-    assert(!lockedFromSql)
-    graft.operators.StoreLock.withWriteLock(zmRoot) {
-      assert(lockedFromSql)
-      val locked = intercept[Exception] {
-        spark.sql(
-          s"SELECT * FROM graft_zonemap_append('$zmRoot', 'wv_keys', 'key')")
-          .collect()
-      }
-      assert(chain(locked).exists(_.contains("concurrent writer")),
-        chain(locked).mkString(" | "))
-    }
-    assert(!lockedFromSql)
+    val zmVersion = graft.operators.StoreSegments.latest(spark, zmRoot).version
+    val zmRaced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    graft.operators.StoreSegments.hook = (d, step) =>
+      if (d == zmRoot && step == "commit" && zmRaced.compareAndSet(false, true))
+        graft.sinks.ZoneMap.appendZoneMapped(spark, zmRoot,
+          Seq((3L, 15L)).toDF("id", "key"), "key")
+    val lost = try intercept[Exception] {
+      spark.sql(
+        s"SELECT * FROM graft_zonemap_append('$zmRoot', 'wv_keys', 'key')")
+        .collect()
+    } finally graft.operators.StoreSegments.hook = (_, _) => ()
+    assert(chain(lost).exists(m => m.contains("concurrent writer") &&
+      m.contains(zmRoot)), chain(lost).mkString(" | "))
+    assert(graft.operators.StoreSegments.latest(spark, zmRoot).version ==
+      zmVersion + 1)
+    assert(graft.sinks.ZoneMap.scanRange(spark, zmRoot, "key", 0L, 100L)
+      .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
 
   test("write-verb TVFs mutate at EXECUTION, not analysis: EXPLAIN is side-effect-free, collect writes once") {

@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Similarity, StoreSegments, TextAnalysis}
 import graft.streaming.StreamingIndex
 
-/** Streaming index maintenance beyond the q140/q141 oracle gates: the
+/** Streaming store maintenance beyond the q140/q141 oracle gates: the
   * bookkeeping claims — restart on a completed checkpoint ingests
   * nothing twice, each micro-batch commits one log entry recording its
   * batch id, and a batch replayed after a lost checkpoint commit commits
-  * nothing.
+  * nothing (text, IVF-PQ, zone map; the snapshot store's version
+  * directory).
   */
 class StreamingIndexSpec extends SparkTestBase {
   import TestSpark.spark.implicits._
@@ -23,11 +24,13 @@ class StreamingIndexSpec extends SparkTestBase {
   /** Ingest `arrivals` (one file per trigger) into the store at `root`
     * through `ingest`, then drop what a crash right after the last
     * batch's store commit would not have written — the checkpoint's commit
-    * of that batch, and any bookkeeping beside the log (an `ingested/`
-    * marker tree) — and restart: the replayed batch must commit nothing.
+    * of that batch — and restart: the replayed batch must commit nothing
+    * (`state`, the log version by default, must not move).
     */
   private def replayLast(root: String, arrivals: DataFrame,
-                         ingest: (DataFrame, String) => Unit): Unit = {
+                         ingest: (DataFrame, String) => Unit,
+                         state: () => Any = null): Unit = {
+    val now = Option(state).getOrElse(() => logVersion(root))
     arrivals.repartition(2).write.parquet(s"$root/arrivals")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-replay-ck")
       .toString
@@ -35,17 +38,15 @@ class StreamingIndexSpec extends SparkTestBase {
       .schema(spark.read.parquet(s"$root/arrivals").schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$root/arrivals")
     ingest(src, ckpt)
-    val v = logVersion(root)
+    val v = now()
     val commits = new java.io.File(s"$ckpt/commits")
     val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
     assert(last == 1L)
     new java.io.File(commits, s"$last").delete()
     new java.io.File(commits, s".$last.crc").delete()
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"$root/ingested"))
     ingest(src, ckpt)
     assert(new java.io.File(commits, s"$last").exists(), "no replay ran")
-    assert(logVersion(root) == v, "the replayed batch committed")
+    assert(now() == v, "the replayed batch committed")
   }
 
   test("a batch replayed after a lost checkpoint commit commits nothing: " +
@@ -161,31 +162,88 @@ class StreamingIndexSpec extends SparkTestBase {
     assert(hits.contains(1L), hits.toString)
   }
 
-  test("ingestSnapshotDeltas: a half-written delta without its marker is dropped and rewritten on replay") {
+  test("ingestZoneMap: a replayed batch commits nothing") {
+    import graft.sinks.ZoneMap
+    val base = (0L until 40L).map(k => (k, k * 5)).toDF("id", "key")
+    val arrivals = Seq((100L, 7L), (101L, 333L), (102L, 120L), (103L, -4L))
+      .toDF("id", "key")
+    val root = java.nio.file.Files.createTempDirectory("graft-rzm").toString
+    ZoneMap.writeZoneMapped(base, root, "key", zones = 4)
+    replayLast(root, arrivals, (src, ckpt) =>
+      StreamingIndex.ingestZoneMap(spark, src, ckpt, root, "key"))
+    // two batches, two entries after the build's, the last batch recorded
+    assert(logVersion(root) == 3L)
+    assert(StoreSegments.latest(spark, root).txn.values.toSeq == Seq(1L))
+    val oneShot = java.nio.file.Files.createTempDirectory("graft-rzm1")
+      .toString
+    ZoneMap.writeZoneMapped(base, oneShot, "key", zones = 4)
+    ZoneMap.appendZoneMapped(spark, oneShot, arrivals, "key")
+    def stats(d: String) = rows(ZoneMap.zoneStats(spark, d))
+    def scan(d: String) = rows(ZoneMap.scanRange(spark, d, "key", -10L, 400L)
+      .select("id", "key"))
+    assert(stats(root) == stats(oneShot))
+    assert(scan(root) == scan(oneShot) && scan(root).size == 44)
+    assert(rows(ZoneMap.zoneMapAudit(spark, root)) ==
+      rows(ZoneMap.zoneMapAudit(spark, oneShot)))
+  }
+
+  test("ingestSnapshotDeltas: a replay writes nothing") {
+    import graft.operators.Curation
+    val base = Seq((0L, "a"), (1L, "b"), (2L, "c")).toDF("doc_id", "text")
+    val changes = Seq((1L, "b2", "u"), (2L, "", "d"), (5L, "e", "u"),
+      (0L, "", "d")).toDF("doc_id", "text", "op")
+    val root = java.nio.file.Files.createTempDirectory("graft-rsnap").toString
+    Curation.writeSnapshot(base, root, version = 1)
+    // every file under the store but the stream's input, with its mtime
+    def files(): Map[String, Long] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(root)).map(f => f.getPath -> f.lastModified())
+        .filterNot(_._1.contains("/arrivals")).toMap
+    }
+    replayLast(root, changes, (src, ckpt) =>
+      StreamingIndex.ingestSnapshotDeltas(spark, src, ckpt, root, "doc_id",
+        "op", startVersion = 2), files _)
+    assert(Curation.deltaVersions(root) == Seq(2L, 3L))
+    // a one-shot write: the base and every change in one delta
+    val oneShot = java.nio.file.Files.createTempDirectory("graft-rsnap1")
+      .toString
+    Curation.writeSnapshot(base, oneShot, version = 1)
+    Curation.writeSnapshotDelta(spark, oneShot, 2,
+      changes.filter(col("op") === "u").drop("op"),
+      changes.filter(col("op") === "d").select("doc_id"), "doc_id")
+    assert(rows(Curation.readSnapshotAt(spark, root, 3, "doc_id")) ==
+      rows(Curation.readSnapshotAt(spark, oneShot, 2, "doc_id")))
+  }
+
+  test("ingestSnapshotDeltas: a crashed attempt stays unread") {
     import graft.operators.Curation
     val root = java.nio.file.Files.createTempDirectory("graft-sdelta").toString
     val base = Seq((0L, "a"), (1L, "b"), (2L, "c")).toDF("doc_id", "text")
     Curation.writeSnapshot(base, root, version = 1)
     val changes = Seq((1L, "b2", "u"), (2L, "", "d"))
       .toDF("doc_id", "text", "op")
-    changes.coalesce(1).write.parquet(s"$root/arrivals")
-    // simulate the crash window: the previous attempt wrote the UPSERTS
-    // half of delta version=2 and died before deletes and marker — the
-    // exact state the r13 advisory flagged as a permanent stream-kill
-    // (writeSnapshotDelta is errorifexists) and a readSnapshotAt breaker
+    val arrivals = java.nio.file.Files.createTempDirectory("graft-sdelta-in")
+      .toString + "/arrivals"
+    changes.coalesce(1).write.parquet(arrivals)
+    // what a writer that died before its publish leaves: a half-written
+    // attempt directory of delta version=2 (upserts, no deletes) and of a
+    // full version. Its name hides it from every reader, so the stream
+    // publishes version=2 over it and no reconstruction ever reads it.
     Seq((1L, "stale-half-write")).toDF("doc_id", "text")
-      .write.parquet(s"$root/_delta/version=2/upserts")
+      .write.parquet(s"$root/_delta/_attempt-crashed/upserts")
+    Seq((7L, "stale-full")).toDF("doc_id", "text")
+      .write.parquet(s"$root/_attempt-crashed")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-sdelta-ck").toString
-    val src = spark.readStream
-      .schema(spark.read.parquet(s"$root/arrivals").schema)
-      .parquet(s"$root/arrivals")
-    // must NOT die on errorifexists: the partial dir is detected (no
-    // marker) and replaced by the replayed batch
+    val src = spark.readStream.schema(changes.schema).parquet(arrivals)
     StreamingIndex.ingestSnapshotDeltas(spark, src, ckpt, root,
       "doc_id", "op", startVersion = 2)
     val got = Curation.readSnapshotAt(spark, root, version = 2, idCol = "doc_id")
       .select("doc_id", "text").orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(got == Seq((0L, "a"), (1L, "b2")), got.toString)
+    assert(Curation.snapshotVersions(root) == Seq(1L))
+    assert(rows(Curation.readSnapshots(spark, root, lastN = 5)
+      .select("doc_id", "text")) == rows(base))
   }
 }

@@ -1,13 +1,19 @@
 package graft
 
-import graft.operators.{Similarity, TextAnalysis}
+import graft.operators.{Bpe, Curation, Similarity, StoreMaintenance,
+  TextAnalysis}
+import graft.sinks.ZoneMap
 
-/** Spark jobs per store write verb (test scope — not shipped):
+/** Spark jobs per store verb (test scope — not shipped):
   * `Test/runMain graft.VerbJobs` builds SearchJobsSpec's three stores —
   * text (8 buckets, positions), IVF and IVF-PQ over ids 0..29, appends
-  * 30..39, deletes {3, 4, 31} — and prints one `[verb-jobs] <store> <verb>
-  * <jobs>` line per call, counted by a listener. The counts repeat run to
-  * run; compare two checkouts line by line.
+  * 30..39, deletes {3, 4, 31} — then a zone map (write 300 keys in 8
+  * zones, append 40, audit), a snapshot store (full of docs 0..29, a
+  * delta, a maintain that compacts, a prune to one full) and a tokenizer
+  * store (save 8 merges, load merges + vocab + meta). It prints one
+  * `[verb-jobs] <store> <verb> <jobs>` line per call, counted by a
+  * listener. The counts repeat run to run; compare two checkouts line by
+  * line.
   */
 object VerbJobs {
   def main(args: Array[String]): Unit = {
@@ -59,6 +65,32 @@ object VerbJobs {
       vecs(30L until 40L), "vec_id", "embedding"))
     count("ivfpq", "delete")(Similarity.deleteFromIvfPqIndex(spark, pq,
       dead.toDF("vec_id"), "vec_id"))
+    def keyed(ids: Seq[Long]) = ids.map(i => (i, i * 37 % 1000))
+      .toDF("id", "key")
+    val zm = tmp("verb-jobs-zonemap")
+    count("zonemap", "write")(ZoneMap.writeZoneMapped(keyed(0L until 300L),
+      zm, "key", zones = 8))
+    count("zonemap", "append")(ZoneMap.appendZoneMapped(spark, zm,
+      keyed(300L until 340L), "key"))
+    count("zonemap", "audit")(ZoneMap.zoneMapAudit(spark, zm).collect())
+    val snap = tmp("verb-jobs-snapshot")
+    count("snapshot", "write")(Curation.writeSnapshot(docs(0L until 30L),
+      snap, 1))
+    count("snapshot", "delta")(Curation.writeSnapshotDelta(spark, snap, 2,
+      docs(30L until 40L), Seq(3L, 4L).toDF("doc_id"), "doc_id"))
+    Curation.writeSnapshotDelta(spark, snap, 3, docs(40L until 45L),
+      Seq.empty[Long].toDF("doc_id"), "doc_id")
+    count("snapshot", "maintain")(StoreMaintenance.maintainSnapshotStore(
+      spark, snap, "doc_id", maxChain = 1).collect())
+    count("snapshot", "prune")(Curation.pruneSnapshots(snap, keepLast = 1))
+    val bpe = tmp("verb-jobs-tokenizer")
+    count("tokenizer", "save")(Bpe.saveTokenizer(docs(0L until 40L), "text",
+      bpe, numMerges = 8))
+    count("tokenizer", "load") {
+      Bpe.loadMerges(spark, bpe).collect()
+      Bpe.loadVocab(spark, bpe).collect()
+      Bpe.loadTokenizerMeta(spark, bpe)
+    }
     spark.stop()
   }
 }

@@ -149,21 +149,28 @@ class ZoneMapSpec extends SparkTestBase {
   }
 
   test("stale-sidecar corruption: audit detects, rebuildZoneSidecar heals, scan recovers") {
-    // inject the documented crash window (data appended, sidecar swap not
-    // reached): a raw data-file append behind the store's back. key 60
-    // honestly belongs to zone 2 (60·4 div 100) so assignment audits
-    // clean — only the sidecar stats are stale.
+    // a verb commits its data and sidecar together, so the damage comes
+    // from outside the store's verbs: a raw data file written into the
+    // LIVE data segment behind the store's back. key 60 honestly belongs
+    // to zone 2 (60·4 div 100) so assignment audits clean — only the
+    // sidecar stats are stale.
     val dir = store(Seq(0L, 10L, 25L, 50L, 75L, 99L), zones = 4)
+    val live = graft.operators.StoreSegments.latest(spark, dir)
+      .segs("data").head.id
     Seq((100L, 60L, 2L)).toDF("id", "key", "zone")
-      .write.mode("append").partitionBy("zone").parquet(s"$dir/data")
+      .write.mode("append").partitionBy("zone")
+      .parquet(s"$dir/data/seg=$live")
     // the failure is REAL: zone 2's sidecar says [50, 50], so a scan for
     // the appended key prunes the zone and silently loses the live row
     assert(ZoneMap.scanRange(spark, dir, "key", 55L, 70L).count() == 0)
     val bad = ZoneMap.zoneMapAudit(spark, dir).head
     assert(bad.getAs[Long]("stat_mismatches") >= 1L)
     assert(bad.getAs[Long]("misassigned") == 0L)
-    // the recovery loop: rebuild the sidecar from the data files
+    // the recovery loop: rebuild the sidecar from the data files (one
+    // log commit)
+    val v = graft.operators.StoreSegments.latest(spark, dir).version
     ZoneMap.rebuildZoneSidecar(spark, dir)
+    assert(graft.operators.StoreSegments.latest(spark, dir).version == v + 1)
     val good = ZoneMap.zoneMapAudit(spark, dir).head
     assert(good.getAs[Long]("stat_mismatches") == 0L)
     assert(good.getAs[Long]("zone_mismatch") == 0L)
