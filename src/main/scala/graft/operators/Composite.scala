@@ -100,13 +100,16 @@ object Composite {
     require(members.nonEmpty, "a composition needs at least one member")
     require(members.map(_.name).distinct.size == members.size,
       s"duplicate member names: ${members.map(_.name).mkString(", ")}")
-    if (StoreFs.exists(spark, s"$manifestDir/$PendingName"))
-      throw new IllegalStateException(
-        s"composite build at $manifestDir is already pending — a prior " +
-          "build crashed or is in flight; run Composite.audit, then " +
-          "Composite.abandon(dir) before beginning again")
+    val pending = s"$manifestDir/$PendingName"
+    def alreadyPending = new IllegalStateException(
+      s"composite build at $manifestDir is already pending — a prior " +
+        "build crashed or is in flight; run Composite.audit, then " +
+        "Composite.abandon(dir) before beginning again")
+    if (StoreFs.exists(spark, pending)) throw alreadyPending
     StoreFs.delete(spark, s"$manifestDir/$CommittedName")
-    StoreFs.writeFile(spark, s"$manifestDir/$PendingName", render(members))
+    // put-if-absent: of two racing begins, one publishes and one refuses
+    if (!StoreFs.createExclusive(spark, pending, render(members)))
+      throw alreadyPending
   }
 
   /** Mark the composition complete: every member build landed. Verifies

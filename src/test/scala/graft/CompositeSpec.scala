@@ -179,4 +179,29 @@ class CompositeSpec extends SparkTestBase {
       Composite.parseMembersSpec(" ; ")
     }
   }
+
+  test("racing begins: of two begins released together, exactly one publishes") {
+    import scala.jdk.CollectionConverters._
+    // a check-then-write race can come out right in one round by luck,
+    // so race several rounds
+    (1 to 20).foreach { round =>
+      val root = tmp("graft-comp-race")
+      val members = Composite.ragMembers(s"$root/t", s"$root/v")
+      val gate = new java.util.concurrent.CyclicBarrier(2)
+      val results =
+        new java.util.concurrent.ConcurrentLinkedQueue[scala.util.Try[Unit]]
+      val racers = (1 to 2).map(_ => new Thread(() => {
+        gate.await()
+        results.add(scala.util.Try(Composite.begin(spark, root, members)))
+      }))
+      racers.foreach(_.start())
+      racers.foreach(_.join())
+      val outcomes = results.asScala.toSeq
+      assert(outcomes.count(_.isSuccess) == 1, s"round $round: $outcomes")
+      assert(outcomes.exists {
+        case scala.util.Failure(e) => e.getMessage.contains("already pending")
+        case _ => false
+      }, s"round $round: $outcomes")
+    }
+  }
 }
